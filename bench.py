@@ -88,7 +88,6 @@ def box_noise_probe() -> dict:
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Default corpus = 8x page replication (40k pages at sf0.1): large
     # enough that per-task scheduling overhead (~0.2-0.35 s/task on this
     # virtualized box) amortizes against real kernel work and pages/sec
@@ -158,8 +157,10 @@ def main():
         zipf_histogram,
         zonal_stats_join,
     )
-    from rust_geo_booleanop_spark.plans import get_spark
+    from rust_geo_booleanop_spark.plans import get_spark, local_cpus
     from rust_geo_booleanop_spark.sources import build_documents
+
+    cpus = str(local_cpus())
 
     import __spark_entry__ as entrymod
 

@@ -13,6 +13,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> int:
+    """Cores for local[N]: $SPARK_GRAFT_CPUS, else the cores this process
+    may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "rust-geo-booleanop-spark",
     master: str | None = None,
@@ -20,8 +26,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+        master = os.environ.get("SPARK_MASTER", f"local[{local_cpus()}]")
 
     if shuffle_partitions is None:
         # Match parallelism to cores in local mode; a cluster submit would

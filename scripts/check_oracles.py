@@ -54,7 +54,7 @@ def main():
     import __spark_entry__ as entrymod
     from rust_geo_booleanop_spark.plans import get_spark
 
-    spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=16)
+    spark = get_spark(app_name="oracle-check")  # local[SPARK_GRAFT_CPUS or cores]
 
     con = duckdb.connect()
     for t in TABLES:

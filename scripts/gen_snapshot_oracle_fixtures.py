@@ -41,7 +41,7 @@ def main():
     import __spark_entry__ as entrymod
     from rust_geo_booleanop_spark.plans import get_spark
 
-    # Deliberately NOT the gate's config (local[8]/16 shuffle partitions):
+    # Deliberately NOT the gate's config (local[N]/2N shuffle partitions):
     # a different topology here makes the gate comparison a real
     # cross-partitioning determinism check, not a same-config replay.
     spark = get_spark(

@@ -305,3 +305,12 @@ def test_run_generated_dataset_cli(tmp_path):
     expect = boolean_op(a, b, "xor")
     got = geometry_to_multipolygon(feats[2]["geometry"])
     assert got == expect
+
+
+def test_local_cpus_defaults_to_usable_cores(monkeypatch):
+    from rust_geo_booleanop_spark.plans import local_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert local_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cpus() == 3
