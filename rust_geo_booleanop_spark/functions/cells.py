@@ -63,6 +63,21 @@ def cell_bounds(cell_id: int):
     return ix * size, iy * size, (ix + 1) * size, (iy + 1) * size
 
 
+def cell_bounds_expr(cell_id):
+    """JVM Column twin of `cell_bounds`: the four double Columns (xmin,
+    ymin, xmax, ymax) of a long cell-id Column, NULL for a NULL id. Bit
+    for bit the Python values: every index converts to double exactly and
+    the cell size is a power of two, so `ix * size` is the same product
+    on both sides."""
+    from pyspark.sql import functions as F
+
+    mask = F.lit((1 << 29) - 1)
+    size = F.lit(LEVEL0_SIZE) / F.pow(F.lit(2.0), F.shiftrightunsigned(cell_id, 58))
+    ix = F.shiftrightunsigned(cell_id, 29).bitwiseAND(mask) - F.lit(_OFFSET)
+    iy = cell_id.bitwiseAND(mask) - F.lit(_OFFSET)
+    return ix * size, iy * size, (ix + 1) * size, (iy + 1) * size
+
+
 def parent_cell(cell_id: int, parent_level: int) -> int:
     level, ix, iy = decode_cell(cell_id)
     shift = level - parent_level

@@ -1,8 +1,9 @@
 """Pure-Python Martinez-Rueda-Feito polygon boolean-op kernel.
 
 Fixture-exact reimplementation of the semantics of
-21re/rust-geo-booleanop (/root/reference/lib/src/boolean/) — runs inside
-Arrow-batched pandas UDFs on Spark; never row-at-a-time per Spark row.
+21re/rust-geo-booleanop (its lib/src/boolean/) — runs over Arrow batches
+in Spark's Python workers (operators/boolean_join.py::kernel_map); never
+row-at-a-time per Spark row.
 """
 
 from .booleanop import (
@@ -25,9 +26,7 @@ from .geojson import (
 )
 from .predicates import signed_area, segment_intersection
 from .f32 import boolean_op_f32, quantize_multipolygon_f32
-from .pairs import pair_boolean_ops_python, resolve_pair_runner, resolve_bbox_fn
-
-import os as _os
+from .pairs import pair_boolean_ops_python, resolve_bbox_fn, resolve_native, resolve_pair_runner
 
 
 def resolve_boolean_op(engine: str | None = None):
@@ -43,27 +42,9 @@ def resolve_boolean_op(engine: str | None = None):
     tests/test_native_kernel.py. `boolean_op` itself stays pure Python:
     it is the semantic reference the fixture suite graded from round 1.
     """
-    eng = engine or _os.environ.get("SPARK_GRAFT_KERNEL", "auto")
-    if eng not in ("auto", "native", "python"):
-        # A typo like SPARK_GRAFT_KERNEL=pyton silently running the native
-        # kernel would be the opposite of the operator's intent.
-        raise ValueError(
-            f"unknown kernel engine {eng!r}: expected 'auto', 'native', or 'python'"
-        )
-    if eng == "python":
-        return boolean_op
-    native_mod = None
-    try:
-        from . import native as native_mod  # compile-on-first-import
-    except Exception:
-        native_mod = None
-    if native_mod is not None and native_mod.NATIVE_AVAILABLE:
-        return native_mod.boolean_op_native
-    if eng == "native":
-        raise RuntimeError(
-            "SPARK_GRAFT_KERNEL=native but the C kernel is unavailable"
-        )
-    return boolean_op
+    native_mod = resolve_native(engine)
+    return boolean_op if native_mod is None else native_mod.boolean_op_native
+
 
 __all__ = [
     "boolean_op",

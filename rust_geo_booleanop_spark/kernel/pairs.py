@@ -14,8 +14,9 @@ executes per candidate pair. Two engines, byte-identical outputs:
   case the resolver's wrapper falls back to the Python composition so odd
   inputs keep their original behavior (including exception types).
 
-`resolve_pair_runner` mirrors `kernel.resolve_boolean_op`'s engine
-selection ($SPARK_GRAFT_KERNEL = auto | native | python, validated).
+`resolve_native` is the one engine selection ($SPARK_GRAFT_KERNEL = auto |
+native | python, validated) behind `resolve_pair_runner`, `resolve_bbox_fn`
+and `kernel.resolve_boolean_op`.
 Byte-identity across engines is pinned by tests/test_native_pairs.py.
 """
 
@@ -54,45 +55,56 @@ def pair_boolean_ops_python(s_json, c_json, ops, boolean_op_fn=None):
     return rows
 
 
-def resolve_pair_runner(engine: str | None = None):
-    """Pick the pair-runner implementation for the kernel stage hot path.
-
-    Same contract as resolve_boolean_op: 'auto' (default) uses the full-C
-    pair runner when available (falling back per-pair to the Python
-    composition over the native sweep when the C parser declines an
-    input); 'python' forces the pure-Python reference path; 'native'
-    requires the C kernel.
-    """
+def resolve_native(engine: str | None = None):
+    """The engine selection shared by every resolver: validate `engine`
+    (or $SPARK_GRAFT_KERNEL) as 'auto' (default), 'native' or 'python' and
+    return the loaded C kernel module, or None for the pure-Python path.
+    'native' raises when the C kernel cannot be built or loaded."""
     eng = engine or _os.environ.get("SPARK_GRAFT_KERNEL", "auto")
     if eng not in ("auto", "native", "python"):
+        # A typo like SPARK_GRAFT_KERNEL=pyton silently running the native
+        # kernel would be the opposite of the operator's intent.
         raise ValueError(
             f"unknown kernel engine {eng!r}: expected 'auto', 'native', or 'python'"
         )
     if eng == "python":
-        return pair_boolean_ops_python
-    native_mod = None
+        return None
     try:
         from . import native as native_mod  # compile-on-first-import
     except Exception:
         native_mod = None
     if native_mod is not None and native_mod.NATIVE_AVAILABLE:
-        native_pair = native_mod.pair_boolean_ops_native
-        native_sweep = native_mod.boolean_op_native
-
-        def runner(s_json, c_json, ops):
-            rows = native_pair(s_json, c_json, ops)
-            if rows is None:  # strict-subset miss: Python marshalling path
-                return pair_boolean_ops_python(
-                    s_json, c_json, ops, boolean_op_fn=native_sweep
-                )
-            return rows
-
-        return runner
+        return native_mod
     if eng == "native":
         raise RuntimeError(
             "SPARK_GRAFT_KERNEL=native but the C kernel is unavailable"
         )
-    return pair_boolean_ops_python
+    return None
+
+
+def resolve_pair_runner(engine: str | None = None):
+    """Pick the pair-runner implementation for the kernel stage hot path.
+
+    'auto' (default) uses the full-C pair runner when available (falling
+    back per-pair to the Python composition over the native sweep when
+    the C parser declines an input); 'python' forces the pure-Python
+    reference path; 'native' requires the C kernel.
+    """
+    native_mod = resolve_native(engine)
+    if native_mod is None:
+        return pair_boolean_ops_python
+    native_pair = native_mod.pair_boolean_ops_native
+    native_sweep = native_mod.boolean_op_native
+
+    def runner(s_json, c_json, ops):
+        rows = native_pair(s_json, c_json, ops)
+        if rows is None:  # strict-subset miss: Python marshalling path
+            return pair_boolean_ops_python(
+                s_json, c_json, ops, boolean_op_fn=native_sweep
+            )
+        return rows
+
+    return runner
 
 
 def resolve_bbox_fn(engine: str | None = None):
@@ -103,35 +115,20 @@ def resolve_bbox_fn(engine: str | None = None):
     per-string when the C parser declines, so error behavior on malformed
     geometry is identical to the Python path.
     """
-    eng = engine or _os.environ.get("SPARK_GRAFT_KERNEL", "auto")
-    if eng not in ("auto", "native", "python"):
-        raise ValueError(
-            f"unknown kernel engine {eng!r}: expected 'auto', 'native', or 'python'"
-        )
 
     def python_bbox(geom_json):
         return multipolygon_bbox(parse_multipolygon(geom_json))
 
-    if eng == "python":
+    native_mod = resolve_native(engine)
+    if native_mod is None:
         return python_bbox
-    native_mod = None
-    try:
-        from . import native as native_mod
-    except Exception:
-        native_mod = None
-    if native_mod is not None and native_mod.NATIVE_AVAILABLE:
-        native_bbox = native_mod.parse_bbox_native
+    native_bbox = native_mod.parse_bbox_native
 
-        def bbox_fn(geom_json):
-            bb = native_bbox(geom_json)
-            return bb if bb is not None else python_bbox(geom_json)
+    def bbox_fn(geom_json):
+        bb = native_bbox(geom_json)
+        return bb if bb is not None else python_bbox(geom_json)
 
-        return bbox_fn
-    if eng == "native":
-        raise RuntimeError(
-            "SPARK_GRAFT_KERNEL=native but the C kernel is unavailable"
-        )
-    return python_bbox
+    return bbox_fn
 
 
 __all__ = [

@@ -2,8 +2,12 @@
 
 Relational shell: subjects ⋈ clippings on case_id (one shuffle; AQE handles
 skew and coalescing), then the Martinez-Rueda kernel runs over Arrow
-batches via mapInPandas — thousands of geometry pairs per Python worker
-call, never per-row Python.
+batches via `kernel_map` — thousands of geometry pairs per Python worker
+call, never per-row Python. `kernel_map` is the one kernel stage: the
+boolean ops here and the tile clip, area-weight clip and region
+normalization of operators/tiling.py all go through it, and the
+streaming pair completion (streaming/boolean.py) builds its rows with
+the same `pair_rows` function.
 
 Reference semantics: the four ops of lib/src/boolean/mod.rs:21-50, with
 diff_ba = diff with swapped operands (tests/src/helper.rs:35-43).
@@ -11,20 +15,29 @@ diff_ba = diff with swapped operands (tests/src/helper.rs:35-43).
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator, Sequence
 
-import pandas as pd
-from pyspark.sql import DataFrame
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
+from ..kernel.geojson import serialize_multipolygon
 from ..kernel.pairs import resolve_pair_runner
 
 DEFAULT_OPS = ("intersection", "union", "diff", "xor")
 
-BOOLEAN_RESULTS_SCHEMA = (
-    "case_id long, subject_url string, clipping_url string, op string, "
-    "result_json string, n_polys int, "
+# The columns `kernel_map` appends to the carried ones: one row per op.
+KERNEL_RESULT_SCHEMA = (
+    "op string, result_json string, n_polys int, "
     "xmin double, ymin double, xmax double, ymax double, status string"
+)
+
+BOOLEAN_RESULTS_SCHEMA = (
+    "case_id long, subject_url string, clipping_url string, " + KERNEL_RESULT_SCHEMA
 )
 
 
@@ -140,58 +153,97 @@ def pair_candidates_salted(
     )
 
 
-RESULT_ROW_KEYS = (
-    "case_id", "subject_url", "clipping_url", "op",
-    "result_json", "n_polys", "xmin", "ymin", "xmax", "ymax", "status",
-)
+def bbox_square_json(x0: float, y0: float, x1: float, y1: float) -> str:
+    """Serialized 1-polygon multipolygon of a bbox rectangle (repr
+    round-trips exactly, so parsing it yields the same doubles). Shared
+    with the g03/g20 oracle-fixture generator."""
+    return serialize_multipolygon(
+        [[[(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]]]
+    )
 
 
-def new_result_rows() -> dict:
-    """Empty column-dict matching BOOLEAN_RESULTS_SCHEMA — the single
-    marshalling definition shared by the batch kernel stage below and the
-    streaming pair completion (streaming/boolean.py), so a schema change
-    cannot silently diverge the two paths."""
-    return {k: [] for k in RESULT_ROW_KEYS}
+def pair_rows(pair_run, s_json, c_json, ops) -> list:
+    """One pair's kernel payloads, one per op: (op, result_json, n_polys,
+    xmin, ymin, xmax, ymax, status). A NULL operand makes no kernel call;
+    its rows carry the op and NULL everywhere else."""
+    if s_json is None or c_json is None:
+        return [(op,) + (None,) * 7 for op in ops]
+    return pair_run(s_json, c_json, ops)
 
 
-def append_pair_results(rows: dict, pair_run, case_id, s_url, c_url, s_json, c_json, ops):
-    """Run one (subject, clipping) pair through `pair_run` and append the
-    per-op result rows to the `new_result_rows()` column-dict."""
-    for op, result_json, n_polys, xmin, ymin, xmax, ymax, status in (
-        pair_run(s_json, c_json, ops)
-    ):
-        rows["case_id"].append(case_id)
-        rows["subject_url"].append(s_url)
-        rows["clipping_url"].append(c_url)
-        rows["op"].append(op)
-        rows["result_json"].append(result_json)
-        rows["n_polys"].append(n_polys)
-        rows["xmin"].append(xmin)
-        rows["ymin"].append(ymin)
-        rows["xmax"].append(xmax)
-        rows["ymax"].append(ymax)
-        rows["status"].append(status)
+def _to_list(col: pa.Array) -> list:
+    """`col.to_pylist()`, NULLs included, through NumPy: several times
+    faster for strings and ~20x for doubles on pyarrow 16."""
+    values = col.to_numpy(zero_copy_only=False).tolist()
+    if col.null_count:
+        for i in np.flatnonzero(col.is_null().to_numpy(zero_copy_only=False)):
+            values[i] = None
+    return values
 
 
-def _make_kernel_batches(ops: Sequence[str]):
-    def kernel_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Resolved inside the Spark Python worker (after fork): the full-C
-        # pair runner (parse once, sweep per op, serialize in C — byte-
-        # identical, see kernel/pairs.py) when available, bit-identical
-        # pure-Python composition otherwise.
+def kernel_map(
+    df: DataFrame,
+    subject: str,
+    clipping: str | Sequence[Column],
+    ops: Sequence[str],
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """The kernel stage: run `ops` on every (subject, clipping) row of `df`
+    over Arrow batches (mapInArrow) and emit one row per (input row, op):
+    the `carry` columns, then KERNEL_RESULT_SCHEMA.
+
+    `subject` names a GeoJSON column. `clipping` names a GeoJSON column
+    or is four double columns (xmin, ymin, xmax, ymax) of a rectangle,
+    computed in the JVM and serialized in the worker with a per-task
+    memo (tile squares repeat across rows). A NULL operand (or a NULL
+    rectangle bound) makes no kernel call; see `pair_rows`.
+
+    A NaN bbox (empty or limit_exceeded result) reaches Spark as NULL.
+    Carried names must not clash with the result columns.
+    """
+    ops = tuple(ops)
+    is_rect = not isinstance(clipping, str)
+    operands = [subject] + (list(clipping) if is_rect else [clipping])
+    inp = df.select(
+        *carry,
+        *(
+            (F.col(c) if isinstance(c, str) else c).alias(f"_operand{i}")
+            for i, c in enumerate(operands)
+        ),
+    )
+    result = StructType.fromDDL(KERNEL_RESULT_SCHEMA)
+    schema = StructType([inp.schema[c] for c in carry] + result.fields)
+    result_types = [f.type for f in to_arrow_schema(result)]
+    n_carry = len(carry)
+
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # resolved inside the Python worker (after fork): the full-C pair
+        # runner when available, the byte-identical Python one otherwise
         pair_run = resolve_pair_runner()
-        for pdf in batches:
-            rows = new_result_rows()
-            for case_id, s_url, c_url, s_json, c_json in zip(
-                pdf["case_id"], pdf["subject_url"], pdf["clipping_url"],
-                pdf["subject_json"], pdf["clipping_json"],
-            ):
-                append_pair_results(
-                    rows, pair_run, case_id, s_url, c_url, s_json, c_json, ops
-                )
-            yield pd.DataFrame(rows)
+        square = functools.lru_cache(maxsize=1 << 14)(bbox_square_json)
+        for batch in it:
+            cols = [_to_list(c) for c in batch.columns[n_carry:]]
+            clips = (
+                [None if None in r else square(*r) for r in zip(*cols[1:])]
+                if is_rect
+                else cols[1]
+            )
+            rows = [
+                row
+                for s_json, c_json in zip(cols[0], clips)
+                for row in pair_rows(pair_run, s_json, c_json, ops)
+            ]
+            take = pa.array(np.repeat(np.arange(batch.num_rows), len(ops)))
+            arrays = [batch.column(i).take(take) for i in range(n_carry)]
+            # from_pandas: a NaN bbox (empty result) becomes NULL
+            result_cols = list(zip(*rows)) or [()] * len(result_types)
+            arrays += [
+                pa.array(col, type=t, from_pandas=True)
+                for col, t in zip(result_cols, result_types)
+            ]
+            yield pa.RecordBatch.from_arrays(arrays, names=schema.names)
 
-    return kernel_batches
+    return inp.mapInArrow(batches, schema)
 
 
 def apply_boolean_ops(
@@ -210,7 +262,10 @@ def apply_boolean_ops(
         from .spatial_join import ensure_parallelism
 
         pairs = ensure_parallelism(pairs)
-    return pairs.mapInPandas(_make_kernel_batches(tuple(ops)), schema=BOOLEAN_RESULTS_SCHEMA)
+    return kernel_map(
+        pairs, "subject_json", "clipping_json", ops,
+        carry=("case_id", "subject_url", "clipping_url"),
+    )
 
 
 def boolean_pipeline(geoms: DataFrame, ops: Sequence[str] = DEFAULT_OPS) -> DataFrame:

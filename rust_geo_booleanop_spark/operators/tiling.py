@@ -9,21 +9,19 @@ Plan shape (round 4): the covering-cell array is a pure JVM column
 expression (`cover_cells_column`: sequence/transform/flatten + bit-shift
 encode inside whole-stage codegen) followed by a JVM explode — tile
 assignment costs zero Python worker round-trips; only the kernel clip
-runs in Python workers over Arrow batches.
+runs in Python workers over Arrow batches, through the shared kernel
+stage `boolean_join.kernel_map` with the tile square as a JVM-computed
+rectangle operand.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from ..functions.cells import cell_bounds
-from ..kernel.geojson import serialize_multipolygon
-from ..kernel.pairs import resolve_pair_runner
+from ..functions.cells import cell_bounds, cell_bounds_expr
+from .boolean_join import bbox_square_json, kernel_map
 
 DEFAULT_TILE_LEVEL = 4
 
@@ -128,156 +126,51 @@ def tile_pyramid(
     )
 
 
-_CLIP_SCHEMA = (
-    "tile_id long, url string, op string, clipped_json string, n_polys int, "
-    "status string"
-)
-
-
 def tile_square_json(tid: int) -> str:
-    """Serialized 1-polygon multipolygon of a tile's square (repr
-    round-trips exactly, so parsing the serialized square yields the same
-    doubles cell_bounds produced). Shared with the g03 oracle-fixture
-    generator (scripts/gen_geo_oracle_fixtures.py)."""
-    x0, y0, x1, y1 = cell_bounds(tid)
-    return serialize_multipolygon(
-        [[[(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]]]
-    )
-
-
-def _clip_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # Full-C pair lifecycle when available (kernel/pairs.py), Python
-    # composition otherwise — byte-identical clip results either way.
-    # Tile squares repeat heavily across rows: serialize each once.
-    pair_run = resolve_pair_runner()
-    tile_json_cache: dict = {}
-
-    def cached_tile_json(tid: int) -> str:
-        tj = tile_json_cache.get(tid)
-        if tj is None:
-            tj = tile_json_cache[tid] = tile_square_json(tid)
-        return tj
-
-    for pdf in batches:
-        out = {
-            "tile_id": [], "url": [], "op": [],
-            "clipped_json": [], "n_polys": [], "status": [],
-        }
-        for tile_id, url, op, geom_json in zip(
-            pdf["tile_id"], pdf["url"], pdf["op"], pdf["geom_json"]
-        ):
-            if tile_id is None or pd.isna(tile_id):
-                # untiled row (empty / limit_exceeded upstream): pass through
-                out["tile_id"].append(None)
-                out["url"].append(url)
-                out["op"].append(op)
-                out["clipped_json"].append("")
-                out["n_polys"].append(0)
-                out["status"].append("untiled")
-                continue
-            (_, gj, n, _, _, _, _, status), = pair_run(
-                geom_json, cached_tile_json(int(tile_id)), ("intersection",)
-            )
-            if status != "ok":
-                # degenerate re-ingested geometry: degrade the row, never
-                # the stage (same contract as the boolean-op stage) —
-                # clipped_json stays "" for limit rows, as before
-                gj, n = "", 0
-            out["tile_id"].append(int(tile_id))
-            out["url"].append(url)
-            out["op"].append(op)
-            out["clipped_json"].append(gj)
-            out["n_polys"].append(n)
-            out["status"].append(status)
-        yield pd.DataFrame(out)
+    """Serialized 1-polygon multipolygon of a tile's square — the operand
+    `clip_to_tiles` builds from `cell_bounds_expr`. Shared with the g03
+    oracle-fixture generator (scripts/gen_geo_oracle_fixtures.py)."""
+    return bbox_square_json(*cell_bounds(tid))
 
 
 def clip_to_tiles(tiled: DataFrame, geom_col: str = "result_json", url_col: str = "subject_url") -> DataFrame:
-    """Clip each geometry to its assigned tile square (kernel intersection)."""
+    """Clip each geometry to its assigned tile square (kernel intersection).
+
+    A row with NULL tile_id (empty / limit_exceeded upstream) makes no
+    kernel call and passes through as status 'untiled'; a degenerate
+    re-ingested geometry degrades its row, never the stage. Rows whose
+    status is not 'ok' keep clipped_json '' and n_polys 0."""
     prepared = tiled.select(
-        F.col("tile_id"),
+        "tile_id",
         F.col(url_col).alias("url"),
-        F.col("op"),
+        F.col("op").alias("source_op"),
         F.col(geom_col).alias("geom_json"),
     )
-    return prepared.mapInPandas(_clip_batches, schema=_CLIP_SCHEMA)
-
-
-_WEIGHT_CLIP_SCHEMA = (
-    "case_id long, tile_id long, clipped_json string, status string"
-)
-
-
-def _weight_clip_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    pair_run = resolve_pair_runner()
-    tile_json_cache: dict = {}
-
-    def cached_tile_json(tid: int) -> str:
-        tj = tile_json_cache.get(tid)
-        if tj is None:
-            tj = tile_json_cache[tid] = tile_square_json(tid)
-        return tj
-
-    for pdf in batches:
-        out = {"case_id": [], "tile_id": [], "clipped_json": [], "status": []}
-        for case_id, tile_id, geom_json in zip(
-            pdf["case_id"], pdf["tile_id"], pdf["geom_json"]
-        ):
-            (_, gj, _n, _, _, _, _, status), = pair_run(
-                geom_json, cached_tile_json(int(tile_id)), ("intersection",)
-            )
-            out["case_id"].append(case_id)
-            out["tile_id"].append(int(tile_id))
-            out["clipped_json"].append(gj if status == "ok" else "")
-            out["status"].append(status)
-        yield pd.DataFrame(out)
-
-
-def bbox_square_json(x0: float, y0: float, x1: float, y1: float) -> str:
-    """Serialized 1-polygon multipolygon of a bbox rectangle (repr
-    round-trips exactly). Shared with the g20 oracle-fixture generator."""
-    return serialize_multipolygon(
-        [[[(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]]]
+    clipped = kernel_map(
+        prepared, "geom_json", cell_bounds_expr(F.col("tile_id")), ("intersection",),
+        carry=("tile_id", "url", "source_op"),
+    )
+    ok = F.col("status") == "ok"
+    return clipped.select(
+        "tile_id",
+        "url",
+        F.col("source_op").alias("op"),
+        F.when(ok, F.col("result_json")).otherwise("").alias("clipped_json"),
+        F.when(ok, F.col("n_polys")).otherwise(0).alias("n_polys"),
+        F.when(F.col("tile_id").isNull(), "untiled").otherwise(F.col("status")).alias("status"),
     )
 
 
-_REGION_AREA_SCHEMA = "case_id long, normalized_json string, status string"
-
-
-_NORMALIZE_PAD = 1.0  # see _region_normalize_batches
-
-
-def _region_normalize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # kernel-normalize each geometry by intersecting it with a rectangle
-    # STRICTLY larger than its bbox: self-overlaps dissolve to even-odd
-    # semantics and holes land in their structural [exterior, holes...]
-    # slots. The pad is essential — a rectangle exactly equal to the bbox
-    # shares boundary with the geometry's extreme edges (the Martinez
-    # degenerate edge-overlap class: a bbox-tangent holed rectangle comes
-    # back with its hole as a separate exterior polygon). Padded edges
-    # lie strictly outside the bbox, so no geometry point can touch
-    # them — clean containment clipping, which is always safe.
-    pair_run = resolve_pair_runner()
-    for pdf in batches:
-        out = {"case_id": [], "normalized_json": [], "status": []}
-        for case_id, geom_json, x0, y0, x1, y1 in zip(
-            pdf["case_id"], pdf["geom_json"],
-            pdf["xmin"], pdf["ymin"], pdf["xmax"], pdf["ymax"],
-        ):
-            (_, gj, _n, _, _, _, _, status), = pair_run(
-                geom_json,
-                bbox_square_json(
-                    float(x0) - _NORMALIZE_PAD,
-                    float(y0) - _NORMALIZE_PAD,
-                    float(x1) + _NORMALIZE_PAD,
-                    float(y1) + _NORMALIZE_PAD,
-                ),
-                ("intersection",),
-            )
-            out["case_id"].append(case_id)
-            out["normalized_json"].append(gj if status == "ok" else "")
-            out["status"].append(status)
-        yield pd.DataFrame(out)
+# Normalization pads the bbox rectangle: kernel-normalize each geometry by
+# intersecting it with a rectangle STRICTLY larger than its bbox, so
+# self-overlaps dissolve to even-odd semantics and holes land in their
+# structural [exterior, holes...] slots. The pad is essential — a
+# rectangle exactly equal to the bbox shares boundary with the geometry's
+# extreme edges (the Martinez degenerate edge-overlap class: a
+# bbox-tangent holed rectangle comes back with its hole as a separate
+# exterior polygon). Padded edges lie strictly outside the bbox, so no
+# geometry point can touch them — clean containment clipping.
+_NORMALIZE_PAD = 1.0
 
 
 def tile_area_weights(
@@ -306,7 +199,7 @@ def tile_area_weights(
 
     100 TB shape: tile cover is the pure-JVM cover-cells expression
     (explode is map-side), the kernel clip + the per-case normalization
-    are mapInPandas stages with per-batch tile-square memoization,
+    are `kernel_map` stages with JVM-computed rectangle operands,
     areas are codegen folds, and the per-case region area joins back on
     case_id — no collect, no cross-tile shuffle beyond the one agg-free
     equi-join. `geoms` is consumed twice (clip branch + denominator
@@ -328,20 +221,26 @@ def tile_area_weights(
             )
         ).alias("tile_id"),
     )
-    clipped = tiled.select("case_id", "tile_id", "geom_json").mapInPandas(
-        _weight_clip_batches, schema=_WEIGHT_CLIP_SCHEMA
-    )
-    clip_area = clipped.filter(F.col("status") == "ok").select(
+    ok = F.col("status") == "ok"
+    clip_area = kernel_map(
+        tiled, "geom_json", cell_bounds_expr(F.col("tile_id")), ("intersection",),
+        carry=("case_id", "tile_id"),
+    ).filter(ok).select(
         "case_id",
         "tile_id",
-        region_area_column("clipped_json").alias("clip_area"),
+        region_area_column("result_json").alias("clip_area"),
     )
-    normalized = geoms.select(
-        "case_id", "geom_json", "xmin", "ymin", "xmax", "ymax"
-    ).mapInPandas(_region_normalize_batches, schema=_REGION_AREA_SCHEMA)
-    geom_area = normalized.filter(F.col("status") == "ok").select(
+    padded = (
+        F.col("xmin") - _NORMALIZE_PAD,
+        F.col("ymin") - _NORMALIZE_PAD,
+        F.col("xmax") + _NORMALIZE_PAD,
+        F.col("ymax") + _NORMALIZE_PAD,
+    )
+    geom_area = kernel_map(
+        geoms, "geom_json", padded, ("intersection",), carry=("case_id",)
+    ).filter(ok).select(
         "case_id",
-        region_area_column("normalized_json").alias("geom_area"),
+        region_area_column("result_json").alias("geom_area"),
     )
     return (
         clip_area.join(geom_area, "case_id")

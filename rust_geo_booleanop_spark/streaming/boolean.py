@@ -17,8 +17,8 @@ pairs with a custom stateful operator instead:
   cover expression as batch (stateless, streams unchanged).
 
 Emitted rows are byte-identical to the batch pipeline's (pinned by
-test, via the SAME `append_pair_results` marshalling helper the batch
-kernel stage uses): the streaming engine adds pair completion, not new
+test, via the SAME `pair_rows` function the batch kernel stage
+`kernel_map` uses): the streaming engine adds pair completion, not new
 geometry semantics. Duplicate sides of an already-complete case are
 ignored (first-seen wins) — the corpus contract is one subject + one
 clipping per case url. Completion leaves an O(1) `done` tombstone in
@@ -35,29 +35,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.boolean_join import (
-    BOOLEAN_RESULTS_SCHEMA,
-    DEFAULT_OPS,
-    append_pair_results,
-    new_result_rows,
-)
+from ..kernel.pairs import resolve_pair_runner
+from ..operators.boolean_join import BOOLEAN_RESULTS_SCHEMA, DEFAULT_OPS, pair_rows
 
 _PAIR_STATE_SCHEMA = (
     "s_url string, s_json string, c_url string, c_json string, done boolean"
 )
-
-# worker-process-local memo: resolve the kernel pair runner once per
-# Python worker, not once per (case_id) state group per micro-batch
-_RUNNER_CACHE: dict = {}
-
-
-def _cached_pair_runner():
-    runner = _RUNNER_CACHE.get("runner")
-    if runner is None:
-        from ..kernel.pairs import resolve_pair_runner
-
-        runner = _RUNNER_CACHE["runner"] = resolve_pair_runner()
-    return runner
+_RESULT_COLUMNS = [field.split()[0] for field in BOOLEAN_RESULTS_SCHEMA.split(",")]
 
 
 def _make_pair_fn(ops):
@@ -84,11 +68,13 @@ def _make_pair_fn(ops):
         if s_json and c_json:
             # tombstone: geometry dropped, only the done flag survives
             state.update(("", "", "", "", True))
-            rows = new_result_rows()
-            append_pair_results(
-                rows, _cached_pair_runner(), case_id, s_url, c_url, s_json, c_json, ops
+            yield pd.DataFrame(
+                [
+                    (case_id, s_url, c_url) + tuple(row)
+                    for row in pair_rows(resolve_pair_runner(), s_json, c_json, ops)
+                ],
+                columns=_RESULT_COLUMNS,
             )
-            yield pd.DataFrame(rows)
         else:
             # half-open case: park the seen side in state and emit nothing
             state.update((s_url, s_json, c_url, c_json, False))

@@ -1,0 +1,95 @@
+"""The kernel stage's marshalling contract (`boolean_join.kernel_map`).
+
+Hand-built rows pin what Spark sees at the Python-worker boundary: a
+NaN bbox arrives as NULL, a NULL operand makes no kernel call, and tile
+ids keep all 64 bits next to NULL rows in the same Arrow batch.
+"""
+
+import json
+
+from rust_geo_booleanop_spark.functions.cells import cell_size
+from rust_geo_booleanop_spark.kernel.pairs import pair_boolean_ops_python
+from rust_geo_booleanop_spark.operators import (
+    apply_boolean_ops,
+    assign_tiles,
+    clip_to_tiles,
+    tile_area_weights,
+)
+from rust_geo_booleanop_spark.operators.tiling import tile_square_json
+
+EMPTY = '{"type":"MultiPolygon","coordinates":[]}'
+
+
+def _square(x0, y0, x1, y1):
+    return json.dumps(
+        {
+            "type": "MultiPolygon",
+            "coordinates": [[[[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]]],
+        }
+    )
+
+
+def test_disjoint_pair_has_null_bbox(spark):
+    pairs = spark.createDataFrame(
+        [(1, "s", "c", _square(0, 0, 1, 1), _square(5, 5, 6, 6))],
+        "case_id long, subject_url string, clipping_url string, "
+        "subject_json string, clipping_json string",
+    )
+    rows = {
+        r.op: r for r in apply_boolean_ops(pairs, ops=("intersection", "union")).collect()
+    }
+    inter = rows["intersection"]
+    assert (inter.case_id, inter.subject_url, inter.clipping_url) == (1, "s", "c")
+    assert (inter.result_json, inter.n_polys, inter.status) == (EMPTY, 0, "ok")
+    # NULL, not NaN: the empty result's NaN bbox is masked at the boundary
+    assert (inter.xmin, inter.ymin, inter.xmax, inter.ymax) == (None, None, None, None)
+    union = rows["union"]
+    assert union.n_polys == 2 and union.status == "ok"
+    assert (union.xmin, union.ymin, union.xmax, union.ymax) == (0.0, 0.0, 6.0, 6.0)
+
+
+def test_clip_to_tiles_untiled_row_and_exact_tile_ids(spark):
+    # level-7 tile ids need more than 53 bits; the NULL-bbox row shares
+    # their Arrow batch (one partition), where a float64 detour of the
+    # tile_id column would round them to a neighbouring tile
+    geom = _square(40.0, 40.0, 70.0, 70.0)
+    results = spark.createDataFrame(
+        [
+            ("u0", "intersection", EMPTY, None, None, None, None),
+            ("u1", "union", geom, 40.0, 40.0, 70.0, 70.0),
+        ],
+        "subject_url string, op string, result_json string, "
+        "xmin double, ymin double, xmax double, ymax double",
+    ).coalesce(1)
+    rows = clip_to_tiles(assign_tiles(results, level=7)).collect()
+    untiled = [r for r in rows if r.url == "u0"]
+    assert [tuple(r) for r in untiled] == [(None, "u0", "intersection", "", 0, "untiled")]
+    tiled = sorted((r for r in rows if r.url == "u1"), key=lambda r: r.tile_id)
+    assert len(tiled) == 4 and len({r.tile_id for r in tiled}) == 4
+    for r in tiled:
+        ((_, gj, n, *_, status),) = pair_boolean_ops_python(
+            geom, tile_square_json(r.tile_id), ("intersection",)
+        )
+        assert (r.op, r.clipped_json, r.n_polys, r.status) == ("union", gj, n, status)
+        assert r.n_polys == 1
+
+
+def test_tile_area_weights_straddling_square(spark):
+    sz = cell_size(4)
+    x0, x1, y0, y1 = 0.75 * sz, 1.25 * sz, 0.25 * sz, 0.75 * sz
+    geoms = spark.createDataFrame(
+        [
+            (7, _square(x0, y0, x1, y1), x0, y0, x1, y1),
+            # a NULL bbox covers no tile and normalizes to nothing
+            (8, _square(x0, y0, x1, y1), None, None, None, None),
+        ],
+        "case_id long, geom_json string, xmin double, ymin double, "
+        "xmax double, ymax double",
+    )
+    rows = sorted(tuple(r) for r in tile_area_weights(geoms, level=4).collect())
+    area = (x1 - x0) * (y1 - y0)
+    left, right = [r[1] for r in rows]
+    assert rows == [
+        (7, left, area / 2, area, 0.5),
+        (7, right, area / 2, area, 0.5),
+    ]

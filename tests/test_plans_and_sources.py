@@ -41,13 +41,21 @@ class TestPlanShapes:
         assert "BroadcastHashJoin" in plan
 
     def test_kernel_stage_is_arrow_batched(self, spark):
-        from rust_geo_booleanop_spark.operators import boolean_pipeline, extract_geometries
+        from rust_geo_booleanop_spark.operators import (
+            assign_tiles,
+            boolean_pipeline,
+            clip_to_tiles,
+            extract_geometries,
+            tile_area_weights,
+        )
         from rust_geo_booleanop_spark.sources import build_documents
 
-        df = boolean_pipeline(extract_geometries(build_documents(spark, TESTDATA)))
-        plan = plan_str(df)
-        assert "MapInPandas" in plan  # Arrow-batched Python, not row UDFs
-        assert "BatchEvalPython" not in plan  # no row-at-a-time Python
+        geoms = extract_geometries(build_documents(spark, TESTDATA))
+        results = boolean_pipeline(geoms)
+        for df in (results, clip_to_tiles(assign_tiles(results)), tile_area_weights(geoms)):
+            plan = plan_str(df)
+            assert "MapInArrow" in plan  # Arrow-batched Python, not row UDFs
+            assert "BatchEvalPython" not in plan  # no row-at-a-time Python
 
     def test_bucketed_join_needs_no_exchange(self, spark, tmp_path):
         """Bucketed tables co-locate join keys at WRITE time: a big-big
@@ -188,7 +196,7 @@ class TestCompactGeojsonWriter:
 def test_flagship_plan_scans_documents_once(spark):
     """The round-3 single-pass pair join: the full flagship plan must hold
     exactly ONE parquet scan of the documents table and ONE extraction +
-    ONE synthesis + ONE kernel MapInPandas (3 total) — the pre-round-3
+    ONE synthesis MapInPandas + ONE kernel MapInArrow — the pre-round-3
     self-join shape planned the scan and extraction twice, doubling the
     most expensive scan+parse stage at 100 TB."""
     from rust_geo_booleanop_spark.operators import (
@@ -202,7 +210,8 @@ def test_flagship_plan_scans_documents_once(spark):
     tiled = assign_tiles(boolean_pipeline(extract_geometries(docs)))
     plan = tiled._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
-    assert plan.count("MapInPandas") == 3  # synthesis, extraction, kernel
+    assert plan.count("MapInPandas") == 2  # synthesis, extraction
+    assert plan.count("MapInArrow") == 1  # kernel
 
 
 class TestTileAreaWeights:
