@@ -6497,29 +6497,22 @@ def _h24_type_diversity(spark, sf_dir):
 
 def _h25_daily_new_users(spark, sf_dir):
     """Daily actives, new users, and the cumulative distinct-user curve.
-    The cumulative count is a prefix sum over the BOUNDED per-day
-    new-user relation computed with a broadcast theta join (h16's
-    no-window pattern) — never a window over users."""
+    Each active day is theta-joined to the BOUNDED per-day new-user
+    relation on first-day <= day (broadcast, h16's no-window pattern —
+    never a window over users): the sum is the running total, carried
+    forward across days with no new users, and the same-day term is
+    n_new. Every active day has a user whose first day is <= it, so the
+    inner join keeps every day and cum_users is never NULL."""
     e = _t(spark, sf_dir, "events")
     days = e.select(F.to_date("ts").alias("d"), "user_id")
     active = days.groupBy("d").agg(F.countDistinct("user_id").alias("n_active"))
     first = days.groupBy("user_id").agg(F.min("d").alias("fd"))
-    new = first.groupBy(F.col("fd").alias("d")).agg(
-        F.count(F.lit(1)).alias("n_new")
-    )
-    prior = new.select(F.col("d").alias("pd"), F.col("n_new").alias("pn"))
-    cum = (
-        new.join(F.broadcast(prior), F.col("pd") <= F.col("d"))
-        .groupBy("d", "n_new")
-        .agg(F.sum("pn").alias("cum_users"))
-    )
-    return active.join(
-        cum.select("d", "n_new", "cum_users"), on="d", how="left"
-    ).select(
-        "d",
-        "n_active",
-        F.coalesce(F.col("n_new"), F.lit(0)).alias("n_new"),
-        "cum_users",
+    new = first.groupBy(F.col("fd").alias("nd")).agg(F.count(F.lit(1)).alias("pn"))
+    same_day = F.when(F.col("nd") == F.col("d"), F.col("pn")).otherwise(0)
+    return (
+        active.join(F.broadcast(new), F.col("nd") <= F.col("d"))
+        .groupBy("d", "n_active")
+        .agg(F.sum(same_day).alias("n_new"), F.sum("pn").alias("cum_users"))
     )
 
 
@@ -7479,22 +7472,23 @@ STAGED_ORACLE_SQL: dict[str, str] = {
         SELECT n_types, CAST(COUNT(*) AS BIGINT) AS n_users
         FROM per GROUP BY n_types
     """,
-    # h25: prefix sum over the bounded per-day new-user relation via a
-    # theta join (the h16 no-window pattern on both sides).
+    # h25: active days theta-joined to the bounded per-day new-user
+    # relation (the h16 no-window pattern on both sides); the running
+    # total carries forward over days with no new users.
     "h25_daily_new_users": """
         WITH days AS (SELECT CAST(ts AS DATE) AS d, user_id FROM events),
         active AS (
             SELECT d, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_active
             FROM days GROUP BY d),
         first AS (SELECT user_id, MIN(d) AS fd FROM days GROUP BY user_id),
-        nw AS (SELECT fd AS d, CAST(COUNT(*) AS BIGINT) AS n_new
-               FROM first GROUP BY fd),
-        cum AS (
-            SELECT a.d, a.n_new, CAST(SUM(b.n_new) AS BIGINT) AS cum_users
-            FROM nw a JOIN nw b ON b.d <= a.d GROUP BY a.d, a.n_new)
-        SELECT active.d, n_active,
-               COALESCE(cum.n_new, 0) AS n_new, cum.cum_users
-        FROM active LEFT JOIN cum ON active.d = cum.d
+        nw AS (SELECT fd AS nd, CAST(COUNT(*) AS BIGINT) AS pn
+               FROM first GROUP BY fd)
+        SELECT a.d, a.n_active,
+               CAST(SUM(CASE WHEN nw.nd = a.d THEN nw.pn ELSE 0 END) AS BIGINT)
+                   AS n_new,
+               CAST(SUM(nw.pn) AS BIGINT) AS cum_users
+        FROM active a JOIN nw ON nw.nd <= a.d
+        GROUP BY a.d, a.n_active
     """,
     "h26_top2_share": """
         WITH per AS (

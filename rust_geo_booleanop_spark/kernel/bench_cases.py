@@ -4,9 +4,10 @@ The reference benches eight kernel cases
 (/root/reference/tests/benches/benchmark.rs:18-81): hole_hole/union,
 many_rects/union, states_source/union, issue96/intersection,
 issue96/union, random_triangles/xor, grid/xor, asia/union,
-circles_vs_rects/xor. This module rebuilds the same cases for the Python
-kernel so per-case perf is tracked round-over-round alongside the engine
-bench.
+circles_vs_rects/xor. This module rebuilds the same cases as kernel
+inputs: the native-vs-Python parity tests run every case, and
+scripts/run_generated_dataset.py writes the generated pairs as GeoJSON.
+Kernel timing is tracked by perfbench's traced `kernel.*` metrics.
 
 Generators are re-expressed from the reference's
 tests/src/data_generators.rs:34-141 (grid of centered rects, nested
@@ -17,18 +18,17 @@ so the coordinates differ while the shape class, counts, and coordinate
 ranges match — documented divergence, deterministic run-to-run here.
 
 The fixture-backed cases load the reference's own GeoJSON operands
-read-only; cases whose fixture is absent are skipped (reported as null).
+read-only; a loader whose fixture is absent returns None and callers
+skip that case.
 """
 
 from __future__ import annotations
 
 import math
 import os
-import time
 
 import numpy as np
 
-from .booleanop import boolean_op
 from .geojson import load_fixture
 
 REFERENCE_FIXTURES = "/root/reference/tests/fixtures"
@@ -143,28 +143,3 @@ CRITERION_CASES = [
     ("circles_vs_rects/xor", generate_circles_vs_rects, "xor"),
 ]
 
-
-def run_criterion_cases(iters: int = 2, op_fn=None) -> dict[str, float | None]:
-    """Best-of-`iters` wall seconds per criterion case (load/generation cost
-    excluded, matching criterion's iter_batched). Missing fixtures -> None.
-
-    `op_fn` selects the kernel implementation (default: the pure-Python
-    reference kernel, comparable with rounds 1-2; pass
-    `kernel.resolve_boolean_op()` to measure the engine-active kernel)."""
-    fn = op_fn or boolean_op
-    out: dict[str, float | None] = {}
-    for name, make, op in CRITERION_CASES:
-        operands = make()
-        if operands is None:
-            out[name] = None
-            continue
-        subject, clipping = operands
-        best = None
-        for _ in range(max(1, iters)):
-            t0 = time.perf_counter()
-            fn(subject, clipping, op)
-            dt = time.perf_counter() - t0
-            if best is None or dt < best:
-                best = dt
-        out[name] = round(best, 4)
-    return out

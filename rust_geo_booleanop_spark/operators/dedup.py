@@ -294,9 +294,9 @@ def minhash_candidates(
     (normalized_text_key over COALESCE(text,'')) and bands ONE
     representative per class, then re-expands: within-class pairs are
     emitted directly (identical signatures collide by construction) and
-    cross-class pairs expand through class membership. This is
-    PAIR-SET-IDENTICAL to the unvalved path on any corpus — equal class
-    key ⇒ equal \\W+ token sequence (the key only erases case and
+    cross-class pairs expand through class membership. Within the two
+    limits below this is PAIR-SET-IDENTICAL to the unvalved path — equal
+    class key ⇒ equal \\W+ token sequence (the key only erases case and
     whitespace, which the tokenizer erases too) ⇒ equal signature ⇒
     equal band hashes — while the probabilistic self-join runs over
     distinct classes only and the B-way band multiplication + distinct()
@@ -305,7 +305,20 @@ def minhash_candidates(
     hot-band class — DISTINCT texts whose signatures still collide in
     one band — is bounded by the opt-in `max_band_df` (drop band buckets
     whose class frequency exceeds it, an explicit recall trade mirroring
-    ngram_jaccard_pairs' max_df; default None = exact LSH semantics)."""
+    ngram_jaccard_pairs' max_df; default None = exact LSH semantics).
+
+    Two limits of that identity:
+    - `max_band_df` counts exact-dup CLASSES per bucket under
+      `collapse_exact` but DOCUMENTS without it, so one threshold drops
+      different buckets on the two paths: the pair sets are identical
+      only at `max_band_df=None`.
+    - equal key ⇒ equal signature assumes ASCII text, or at least text
+      on which Spark's lower() and Python's str.lower() agree and whose
+      key-erased whitespace the \\W+ tokenizer also splits on. The key
+      is built in the JVM and the signature in Python, and outside ASCII
+      the two runtimes' case mappings are not guaranteed to agree, so
+      two texts could share a key yet tokenize differently. d01 relies
+      on its ASCII corpus for the same reason."""
     if bands < 1 or num_perm % bands != 0:
         # bands > num_perm would give rows=0: every band chunk becomes
         # the empty byte string, every document collides in every band,
@@ -345,9 +358,11 @@ def minhash_candidates(
 
     def _drop_hot_bands(banded: DataFrame) -> DataFrame:
         """Opt-in band-frequency valve (ngram max_df pattern): anti-join
-        away band buckets held by more than max_band_df distinct
-        signatures — a documented recall trade for corpora where
-        distinct texts still funnel into one bucket."""
+        away band buckets held by more than max_band_df rows — exact-dup
+        classes under collapse_exact, documents without it, so the two
+        paths' pair sets agree only when the valve is off. A documented
+        recall trade for corpora where distinct texts still funnel into
+        one bucket."""
         if max_band_df is None:
             return banded
         hot = (

@@ -1,6 +1,6 @@
 """SparkSession construction with scale-oriented defaults.
 
-One place for engine conf so tests, bench, and the driver contract all run
+One place for engine conf so tests, perfbench, and the driver contract all run
 with the same plan-shaping knobs: AQE (runtime re-plan + skew join), Arrow
 batching for the Python kernel, sensible shuffle parallelism for local[N]
 (on a real cluster these come from spark-submit conf instead).

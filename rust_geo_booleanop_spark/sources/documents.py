@@ -85,7 +85,8 @@ def build_documents(spark, sf_dir: str, replicate: int = 1):
 
     `replicate > 1` fans each base row out into N distinct pages (disjoint
     case spaces via an even doc_id offset, so subject/clipping parity and
-    pairing survive) — used to scale the bench corpus deterministically.
+    pairing survive) — `scripts/job_boolean_tiling.py --replicate` uses it
+    to scale the corpus deterministically.
     """
     base = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text", "lang")
     if replicate > 1:

@@ -87,8 +87,8 @@ def main():
         ("h04_vocab_stats", "vocabulary stats: token explode -> (lang, token) map-side-partial hash agg -> tiny per-lang rollup - never a raw-token distinct"),
         ("d10_edit_pairs", "edit-verified near-dup pairs: df-bounded window-key blocking evaluated ONCE (in-row bounded pair expansion, no self-join), DISTINCT id pairs BEFORE text re-fetch, length-gap lower-bound prune, thresholded JVM levenshtein - O(k*len) verify only on candidates"),
         ("h06_zipf_histogram", "Zipf frequency histogram: token explode -> map-side-partial token hash agg -> exact base-2 digit bucket (conv, no floating log) -> ~64-row rollup"),
-        ("g19_iou", "IoU per case: ONE kernel MapInPandas (intersection+union rows), JVM region-area fold, hash-agg pivot on case_id - no self-join, no Python past the kernel"),
-        ("g20_tile_weights", "tile area weights: JVM cover-cells explode -> kernel-clip MapInPandas -> codegen region-area folds on both branches -> one case_id equi-join; denominator is a per-geometry kernel pass (deterministic, not a shuffle-order sum)"),
+        ("g19_iou", "IoU per case: ONE kernel MapInArrow (intersection+union rows), JVM region-area fold, hash-agg pivot on case_id - no self-join, no Python past the kernel"),
+        ("g20_tile_weights", "tile area weights: JVM cover-cells explode -> kernel-clip MapInArrow -> codegen region-area folds on both branches -> one case_id equi-join; denominator is a per-geometry kernel pass (deterministic, not a shuffle-order sum)"),
         ("d12_containment_pairs", "containment/quote detection: distinct-window relation evaluated once, df-bounded in-row pair expansion, map-side-partial shared-count agg, per-doc counts joined onto the small pair relation"),
         ("g21_shape_stats", "shape statistics: region-area/centroid/perimeter as pure-JVM higher-order-function folds in one codegen stage over the geometry column - no shuffle, no Python"),
         ("h07_hll_sketch", "HLL sketch: token explode -> map-side-partial MAX over at most 2^p register groups - constant-size shuffle regardless of corpus size"),
@@ -134,8 +134,9 @@ def main():
         "Generated by `python scripts/explain_plans.py` (sf=%s). What to look\n"
         "for: `PushedFilters`/`ReadSchema` at FileScans (pushdown + pruning),\n"
         "`BroadcastHashJoin` on dim joins, `WholeStageCodegen` spans around\n"
-        "JVM expressions, and `ArrowEvalPython`/`MapInPandas` appearing only\n"
-        "at the geometry/text kernel stages.\n" % sf_dir
+        "JVM expressions, and Python appearing only at the geometry/text\n"
+        "stages: `ArrowEvalPython`/`MapInPandas` for extraction and text work,\n"
+        "`MapInArrow` for every boolean-kernel stage.\n" % sf_dir
     )
     for name, why in picks:
         df = qs[name](spark, sf_dir)

@@ -436,6 +436,50 @@ class TestGiniIdentity:
         assert gini > 0.7
 
 
+class TestDailyNewUsers:
+    """h25's cumulative distinct-user curve carries forward over a day
+    with no new users, on the Spark side and in its DuckDB oracle."""
+
+    def test_running_total_carries_over_day_without_new_users(self, spark, tmp_path):
+        import datetime
+
+        import duckdb
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        import __spark_entry__ as entry
+
+        # day 1: users 1, 2 (new); day 2: user 1 only (returning);
+        # day 3: user 2 (returning) and user 3 (new)
+        visits = [(1, 1), (1, 2), (2, 1), (3, 2), (3, 3)]
+        ts = [datetime.datetime(2024, 1, day, 12) for day, _ in visits]
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array(range(len(visits)), pa.int64()),
+                    "ts": pa.array(ts, pa.timestamp("us")),
+                    "user_id": pa.array([u for _, u in visits], pa.int64()),
+                }
+            ),
+            tmp_path / "events.parquet",
+        )
+        want = [
+            (datetime.date(2024, 1, 1), 2, 2, 2),
+            (datetime.date(2024, 1, 2), 1, 0, 2),
+            (datetime.date(2024, 1, 3), 2, 1, 3),
+        ]
+        df = entry.STAGED_QUERIES["h25_daily_new_users"](spark, str(tmp_path))
+        assert df.columns == ["d", "n_active", "n_new", "cum_users"]
+        assert sorted(tuple(r) for r in df.collect()) == want
+
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')"
+        )
+        sql = entry.STAGED_ORACLE_SQL["h25_daily_new_users"]
+        assert sorted(con.execute(sql).fetchall()) == want
+
+
 class TestWeightedMedian:
     def _run(self, spark, rows):
         from rust_geo_booleanop_spark.operators import weighted_median
