@@ -17,6 +17,18 @@ Python workers build it once. Anything failing (no gcc, sandbox without
 exec) degrades to NATIVE_AVAILABLE = False and callers fall back to the
 pure-Python kernel — behavior, not just results, stays identical.
 
+Three entry points run whole (subject, clipping) pairs as GeoJSON in and
+GeoJSON + bbox + status out: `pair_boolean_ops_native` (one pair),
+`pair_boolean_ops_batch_native` (one Arrow batch in ONE C call — the
+Spark kernel stage's hot path) and the bbox-only `parse_bbox_native`.
+The batch entry reads the Arrow string buffers in place, parses a
+subject again only when its bytes differ from the previous row's (tile
+clips repeat a geometry over consecutive rows), builds rectangle
+clippings straight from their four doubles, and returns the result JSON
+as one C buffer that Arrow wraps without a copy. Rows it declines (and
+whole batches it cannot return) rerun on the per-row path, see
+`kernel.pairs.resolve_batch_runner`.
+
 Engine selection for the Spark operators lives in
 `kernel.resolve_boolean_op` (env: SPARK_GRAFT_KERNEL=auto|native|python).
 """
@@ -38,6 +50,7 @@ from ctypes import (
     c_void_p,
 )
 from fractions import Fraction
+from typing import NamedTuple
 
 from ..booleanop import (
     DIFFERENCE,
@@ -259,6 +272,18 @@ def _load_one(f32: bool, coord_ctype, result_struct):
         ]
         lib.mz_pair_free.restype = None
         lib.mz_pair_free.argtypes = [POINTER(_MzOpOut), c_int32]
+        lib.mz_pair_run_batch.restype = c_int32
+        lib.mz_pair_run_batch.argtypes = [
+            c_int64, c_void_p,  # n rows, per-row NULL flags (uint8)
+            c_void_p, c_void_p,  # subject int64 offsets, data
+            c_void_p, c_void_p,  # clipping int64 offsets (or NULL), data
+            c_void_p,  # n x 4 float64 rectangles (or NULL)
+            POINTER(c_int32), c_int32, c_int64,  # op codes, n_ops, max bytes
+            c_void_p, c_void_p, c_void_p, c_void_p, c_void_p,  # per-row/slot outs
+            POINTER(c_void_p), POINTER(c_int64),  # JSON buffer, parse counts
+        ]
+        lib.mz_buf_free.restype = None
+        lib.mz_buf_free.argtypes = [c_void_p]
         lib.mz_parse_bbox.restype = c_int32
         lib.mz_parse_bbox.argtypes = [ctypes.c_char_p, c_int64, POINTER(c_double)]
         lib.mz_repr_double.restype = c_int32
@@ -500,6 +525,133 @@ def pair_boolean_ops_native(s_json: str, c_json: str, ops):
     return rows
 
 
+# result_json carries int32 Arrow offsets: a batch whose JSON would pass
+# this many bytes is returned as None and reruns row by row.
+_MAX_BATCH_BYTES = 2**31 - 1
+_ROW_DECLINED = 2  # mz_pair_run_batch row_state: 0 ran, 1 NULL operand
+
+
+class BatchResult(NamedTuple):
+    columns: list  # the eight payload columns, len(ops) rows per input row
+    declined: list  # input rows the C parser declined (their slots are NULL)
+    parses: tuple  # (subject, clipping) parse counts
+
+
+class _CBuffer:
+    """Owns one buffer malloc'd by mz_pair_run_batch and frees it when
+    the Arrow buffer wrapping it (the `base` of pa.foreign_buffer) dies."""
+
+    __slots__ = ("ptr", "_free")
+
+    def __init__(self, ptr):
+        self.ptr = ptr
+        self._free = _LIB.mz_buf_free
+
+    def __del__(self):
+        self._free(self.ptr)
+
+
+def _string_operand(col):
+    """(int64 value offsets from the slice offset on, data address) of an
+    Arrow string or large_string column."""
+    import numpy as np
+    import pyarrow as pa
+
+    if pa.types.is_large_string(col.type):
+        width = np.int64
+    elif pa.types.is_string(col.type):
+        width = np.int32
+    else:
+        raise TypeError(f"GeoJSON operand must be a string column, got {col.type}")
+    if not len(col):  # an empty column may carry no offsets buffer at all
+        return np.zeros(1, np.int64), None
+    _, offsets, data = col.buffers()
+    offsets = np.frombuffer(offsets, width, col.offset + len(col) + 1)[col.offset :]
+    return offsets.astype(np.int64), (data.address if data is not None else None)
+
+
+def pair_boolean_ops_batch_native(subject, clipping, ops):
+    """All `ops` of every row of one Arrow batch in ONE C call
+    (mz_pair_run_batch): a subject is parsed once per run of equal
+    consecutive rows, a rectangle clipping is built from its four doubles.
+
+    `subject` is an Arrow string (or large_string) column of GeoJSON;
+    `clipping` is another, or four float64 columns (xmin, ymin, xmax,
+    ymax) of a rectangle. Returns a BatchResult whose `columns` equal
+    `pairs.payload_columns` over `pair_rows(resolve_pair_runner(), ...)`
+    except on the `declined` rows (NULL slots: a string outside the
+    strict subset or a non-finite rectangle bound), which the caller
+    reruns on the per-row path. A NULL operand gives the op and NULLs.
+    Returns None — rerun the batch row by row — for an unknown op, an
+    output past `_MAX_BATCH_BYTES` or an allocation failure.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if _LIB is None:  # pragma: no cover - guarded by NATIVE_AVAILABLE
+        raise RuntimeError("native kernel not available")
+    if any(op not in PAIR_OP_CODES for op in ops):
+        return None  # the per-row path raises the usual ValueError
+    n, k = len(subject), len(ops)
+    is_rect = not isinstance(clipping, pa.Array)
+    null = subject.is_null()
+    for col in clipping if is_rect else (clipping,):
+        null = pc.or_(null, col.is_null())
+    null = np.ascontiguousarray(null.to_numpy(zero_copy_only=False), np.uint8)
+    s_offsets, s_data = _string_operand(subject)
+    if is_rect:
+        rects = np.ascontiguousarray(
+            np.column_stack([c.to_numpy(zero_copy_only=False) for c in clipping]),
+            np.float64,
+        ).reshape(n, 4)
+        c_offsets = c_data = None
+        rects_ptr = rects.ctypes.data
+    else:
+        c_offsets, c_data = _string_operand(clipping)
+        rects_ptr = None
+    m = n * k
+    row_state = np.zeros(n, np.int8)
+    offsets = np.zeros(m + 1, np.int32)
+    n_polys = np.zeros(m, np.int32)
+    bbox = np.empty((m, 4), np.float64)
+    status = np.zeros(m, np.int8)
+    codes = (c_int32 * max(k, 1))(*(PAIR_OP_CODES[op] for op in ops))
+    json_ptr = c_void_p()
+    parses = (c_int64 * 2)()
+    st = _LIB.mz_pair_run_batch(
+        n, null.ctypes.data,
+        s_offsets.ctypes.data, s_data,
+        None if c_offsets is None else c_offsets.ctypes.data, c_data,
+        rects_ptr, codes, k, _MAX_BATCH_BYTES,
+        row_state.ctypes.data, offsets.ctypes.data, n_polys.ctypes.data,
+        bbox.ctypes.data, status.ctypes.data, ctypes.byref(json_ptr), parses,
+    )
+    if st != 0:
+        return None
+    json_data = pa.foreign_buffer(
+        json_ptr.value, int(offsets[-1]), base=_CBuffer(json_ptr.value)
+    )
+    ran = np.repeat(row_state == 0, k)
+    n_null = m - int(np.count_nonzero(ran))
+    validity = pa.py_buffer(np.packbits(ran, bitorder="little")) if n_null else None
+    not_ran = ~ran
+    columns = [
+        pa.array(list(ops), pa.string()).take(np.tile(np.arange(k), n)),
+        pa.StringArray.from_buffers(
+            m, pa.py_buffer(offsets), json_data, validity, n_null
+        ),
+        pa.array(n_polys, pa.int32(), mask=not_ran),
+        *(pa.array(bbox[:, j], pa.float64(), from_pandas=True) for j in range(4)),
+        # indexed by the C status code: MZ_OK 0, MZ_LIMIT 2
+        pa.array(["ok", None, "limit_exceeded"]).take(
+            pa.array(status, mask=not_ran)
+        ),
+    ]
+    declined = np.flatnonzero(row_state == _ROW_DECLINED).tolist()
+    return BatchResult(columns, declined, (parses[0], parses[1]))
+
+
 def parse_bbox_native(geom_json: str):
     """(xmin, ymin, xmax, ymax) of a GeoJSON geometry string, or None when
     the C parser declines (caller falls back to parse_multipolygon +
@@ -535,6 +687,8 @@ __all__ = [
     "boolean_op_native",
     "boolean_op_f32_native",
     "pair_boolean_ops_native",
+    "pair_boolean_ops_batch_native",
+    "BatchResult",
     "parse_bbox_native",
     "repr_double_native",
     "PAIR_OP_CODES",

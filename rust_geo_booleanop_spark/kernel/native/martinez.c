@@ -1227,10 +1227,18 @@ MartinezResult *martinez_boolean_op(
 /*    wrapper falls back to the reference marshalling, so behavior on   */
 /*    odd inputs — including which exception is raised — is unchanged.  */
 /*                                                                      */
+/* Two entry points share one per-op body (mz_op_run: sweep, then the  */
+/* one serializer): mz_pair_run runs one pair, mz_pair_run_batch one    */
+/* Arrow batch of pairs — string operands parsed once per run of equal  */
+/* consecutive rows (a last-row cache), rectangle clippings built from  */
+/* their four doubles without any JSON. The batch entry is the Spark    */
+/* kernel stage's hot path; mz_pair_run serves streaming and declines.  */
+/*                                                                      */
 /* GIL: ctypes releases the GIL around the foreign call; the Python     */
 /* C-API calls here require it, so the entry points re-acquire it with  */
-/* PyGILState_Ensure for their whole body. Spark Python workers are     */
-/* single-threaded, so this costs ~100ns and blocks nothing.           */
+/* PyGILState_Ensure for their whole body — once per batch for          */
+/* mz_pair_run_batch. Spark Python workers are single-threaded, so this */
+/* costs ~100ns and blocks nothing.                                     */
 /* ==================================================================== */
 
 #include <dlfcn.h>
@@ -1785,6 +1793,78 @@ void mz_pair_free(MzOpOut *outs, int32_t n_ops) {
 
 #define MZ_OPC_DIFF_BA 4
 
+/* The one op body both entry points share: sweep op code `opc` (0..3,
+ * or MZ_OPC_DIFF_BA) over parsed operands and append its GeoJSON to b.
+ * Returns MZ_OK (then *status is MZ_OK or MZ_LIMIT, bb4 NaN when the
+ * result is empty), MZ_UNSUPPORTED for a bad op code, or MZ_OOM. */
+static int32_t mz_op_run(const MzGeom *S, const MzGeom *C, int32_t opc,
+                         StrBuf *b, int32_t *status, int32_t *n_polys,
+                         double *bb4) {
+    const MzGeom *a = S, *bg = C;
+    int32_t mop = opc;
+    if (mop == MZ_OPC_DIFF_BA) { /* diff with swapped operands */
+        a = C;
+        bg = S;
+        mop = OP_DIFFERENCE;
+    } else if (mop < 0 || mop > 3) {
+        return MZ_UNSUPPORTED;
+    }
+    MartinezResult *r = martinez_boolean_op(
+        a->coords, a->ring_np, (int32_t)a->nrings, a->poly_nr,
+        (int32_t)a->npolys, bg->coords, bg->ring_np, (int32_t)bg->nrings,
+        bg->poly_nr, (int32_t)bg->npolys, mop);
+    if (!r) return MZ_OOM;
+    MzBb bb;
+    mz_bb_init(&bb);
+    int32_t npolys = 0;
+    *status = MZ_OK;
+    int ok = SB_LIT(b, "{\"type\":\"MultiPolygon\",\"coordinates\":[");
+    if (ok) {
+        if (r->status == STATUS_OK) {
+            ok = mz_sb_result(b, r, &bb, &npolys);
+        } else if (r->status == STATUS_TRIVIAL) {
+            int first = 1;
+            if (mop == OP_DIFFERENCE) {
+                ok = mz_sb_geom_polys(b, a, &first, &bb);
+                npolys = (int32_t)a->npolys;
+            } else if (mop != OP_INTERSECTION) { /* union / xor */
+                ok = mz_sb_geom_polys(b, a, &first, &bb) &&
+                     mz_sb_geom_polys(b, bg, &first, &bb);
+                npolys = (int32_t)(a->npolys + bg->npolys);
+            } /* intersection: empty */
+        } else if (r->status == STATUS_LIMIT) {
+            *status = MZ_LIMIT; /* empty result, row survives */
+        } else {
+            ok = 0;
+        }
+    }
+    if (ok) ok = SB_LIT(b, "]}");
+    martinez_free(r);
+    if (!ok) return MZ_OOM;
+    *n_polys = npolys;
+    if (npolys > 0) {
+        bb4[0] = bb.xmin;
+        bb4[1] = bb.ymin;
+        bb4[2] = bb.xmax;
+        bb4[3] = bb.ymax;
+    } else {
+        bb4[0] = bb4[1] = bb4[2] = bb4[3] = NAN;
+    }
+    return MZ_OK;
+}
+
+/* Parse one operand under the GIL. A PyOS_string_to_double error on a
+ * token our scanner admitted is cleared and declines the operand, so
+ * the Python parser produces the real exception. */
+static int32_t mz_parse_operand(const char *s, int64_t len, MzGeom *g) {
+    int st = mz_parse_geometry(s, len, g);
+    if (g_py.err_occurred()) {
+        g_py.err_clear();
+        if (st == MZ_OK) st = MZ_UNSUPPORTED;
+    }
+    return st == MZ_OK ? MZ_OK : (st == MZ_OOM ? MZ_OOM : MZ_UNSUPPORTED);
+}
+
 /* Run every op of a (subject, clipping) pair: parse both geometries
  * once, sweep per op, serialize per op. Returns MZ_OK (per-op statuses
  * in outs), MZ_UNSUPPORTED (caller must use the Python path; outs
@@ -1798,82 +1878,22 @@ int32_t mz_pair_run(const char *s_json, int64_t s_len, const char *c_json,
     MzGeom S, C;
     memset(&S, 0, sizeof(S));
     memset(&C, 0, sizeof(C));
-    int st = mz_parse_geometry(s_json, s_len, &S);
-    if (st == MZ_OK) st = mz_parse_geometry(c_json, c_len, &C);
-    if (g_py.err_occurred()) {
-        /* a PyOS_string_to_double error on a token our scanner admitted:
-         * clear it and let the Python parser produce the real exception */
-        g_py.err_clear();
-        if (st == MZ_OK) st = MZ_UNSUPPORTED;
-    }
-    if (st != MZ_OK) {
-        mz_geom_free(&S);
-        mz_geom_free(&C);
-        g_py.gil_release(gil);
-        return st == MZ_OOM ? MZ_OOM : MZ_UNSUPPORTED;
-    }
-
-    int32_t ret = MZ_OK;
+    int32_t ret = mz_parse_operand(s_json, s_len, &S);
+    if (ret == MZ_OK) ret = mz_parse_operand(c_json, c_len, &C);
     for (int32_t i = 0; i < n_ops && ret == MZ_OK; i++) {
-        const MzGeom *a = &S, *bg = &C;
-        int32_t mop = ops[i];
-        if (mop == MZ_OPC_DIFF_BA) { /* diff with swapped operands */
-            a = &C;
-            bg = &S;
-            mop = OP_DIFFERENCE;
-        } else if (mop < 0 || mop > 3) {
-            ret = MZ_UNSUPPORTED;
-            break;
-        }
-        MartinezResult *r = martinez_boolean_op(
-            a->coords, a->ring_np, (int32_t)a->nrings, a->poly_nr,
-            (int32_t)a->npolys, bg->coords, bg->ring_np, (int32_t)bg->nrings,
-            bg->poly_nr, (int32_t)bg->npolys, mop);
-        if (!r) {
-            ret = MZ_OOM;
-            break;
-        }
         StrBuf sb;
         memset(&sb, 0, sizeof(sb));
-        MzBb bb;
-        mz_bb_init(&bb);
-        int32_t npolys = 0;
-        int ok = SB_LIT(&sb, "{\"type\":\"MultiPolygon\",\"coordinates\":[");
-        if (ok) {
-            if (r->status == STATUS_OK) {
-                ok = mz_sb_result(&sb, r, &bb, &npolys);
-            } else if (r->status == STATUS_TRIVIAL) {
-                int first = 1;
-                if (mop == OP_DIFFERENCE) {
-                    ok = mz_sb_geom_polys(&sb, a, &first, &bb);
-                    npolys = (int32_t)a->npolys;
-                } else if (mop != OP_INTERSECTION) { /* union / xor */
-                    ok = mz_sb_geom_polys(&sb, a, &first, &bb) &&
-                         mz_sb_geom_polys(&sb, bg, &first, &bb);
-                    npolys = (int32_t)(a->npolys + bg->npolys);
-                } /* intersection: empty */
-            } else if (r->status == STATUS_LIMIT) {
-                outs[i].status = MZ_LIMIT; /* empty result, row survives */
-            } else {
-                ok = 0;
-            }
-        }
-        if (ok) ok = SB_LIT(&sb, "]}");
-        martinez_free(r);
-        if (!ok) {
+        double bb4[4];
+        ret = mz_op_run(&S, &C, ops[i], &sb, &outs[i].status,
+                        &outs[i].n_polys, bb4);
+        if (ret != MZ_OK) {
             free(sb.p);
-            ret = MZ_OOM;
             break;
         }
-        outs[i].n_polys = npolys;
-        if (npolys > 0) {
-            outs[i].xmin = bb.xmin;
-            outs[i].ymin = bb.ymin;
-            outs[i].xmax = bb.xmax;
-            outs[i].ymax = bb.ymax;
-        } else {
-            outs[i].xmin = outs[i].ymin = outs[i].xmax = outs[i].ymax = NAN;
-        }
+        outs[i].xmin = bb4[0];
+        outs[i].ymin = bb4[1];
+        outs[i].xmax = bb4[2];
+        outs[i].ymax = bb4[3];
         outs[i].json = sb.p;
         outs[i].json_len = sb.n;
     }
@@ -1885,6 +1905,151 @@ int32_t mz_pair_run(const char *s_json, int64_t s_len, const char *c_json,
     return ret;
 }
 
+/* ---------------- batch entry: one call per Arrow batch ---------------- */
+/*                                                                      */
+/* mz_pair_run_batch runs every op of n rows in one foreign call (one    */
+/* GIL acquisition). Operands arrive as Arrow string columns: int64      */
+/* value offsets (already shifted by the array's slice offset) into the */
+/* data buffer. The clipping is either a second such column or, when    */
+/* c_offsets is NULL, an n x 4 float64 rectangle array (xmin, ymin,     */
+/* xmax, ymax) built straight into the closed 5-point ring that         */
+/* kernel/pairs.bbox_square_json writes — repr round-trips exactly, so   */
+/* these are the doubles the parser would return. A non-finite bound    */
+/* declines the row.                                                    */
+/*                                                                      */
+/* Each operand keeps a last-row cache: a string operand is parsed      */
+/* again only when its bytes differ from the previous row's (length     */
+/* check + memcmp). assign_tiles emits a geometry's tiles as            */
+/* consecutive rows, so tile clips parse each geometry once.            */
+/*                                                                      */
+/* Per row, row_state gets MZ_ROW_RAN, MZ_ROW_NULL (null[i] set: no     */
+/* kernel call) or MZ_ROW_DECLINED (an operand outside the strict       */
+/* subset: the caller reruns that row on the Python path). Per (row,    */
+/* op), slot i * n_ops + k gets status/n_polys/bbox and its JSON at     */
+/* out_offsets[slot] .. out_offsets[slot + 1] in one contiguous buffer  */
+/* (*out_json, free with mz_buf_free). NULL and declined rows get empty */
+/* JSON, n_polys 0, NaN bbox. Returns MZ_OK, MZ_OOM, or MZ_OVERFLOW     */
+/* when the JSON would pass max_bytes (int32 Arrow offsets): nothing    */
+/* is returned then, and the caller reruns the batch row by row.        */
+
+#define MZ_OVERFLOW 5
+#define MZ_ROW_RAN 0
+#define MZ_ROW_NULL 1
+#define MZ_ROW_DECLINED 2
+
+typedef struct {
+    const char *key; /* bytes of the cached operand (NULL: empty cache) */
+    int64_t len;
+    int32_t st; /* parse result for those bytes */
+    MzGeom g;
+} MzCached;
+
+static int32_t mz_cached_parse(MzCached *c, const char *s, int64_t len,
+                               int64_t *n_parses) {
+    if (c->key && c->len == len && memcmp(c->key, s, (size_t)len) == 0)
+        return c->st;
+    mz_geom_free(&c->g);
+    c->key = 0;
+    c->st = mz_parse_operand(s, len, &c->g);
+    if (c->st == MZ_OOM) return MZ_OOM; /* never cache a failed allocation */
+    c->key = s;
+    c->len = len;
+    (*n_parses)++;
+    return c->st;
+}
+
+/* The rectangle ring [(x0,y0),(x1,y0),(x1,y1),(x0,y1),(x0,y0)]. */
+static int32_t mz_rect_geom(const double *r4, MzGeom *g) {
+    if (!g->coords && !mz_geom_init(g)) return MZ_OOM;
+    const double x0 = r4[0], y0 = r4[1], x1 = r4[2], y1 = r4[3];
+    const double ring[10] = {x0, y0, x1, y0, x1, y1, x0, y1, x0, y0};
+    memcpy(g->coords, ring, sizeof(ring)); /* init capacity is 8 points */
+    g->npts = 5;
+    g->ring_np[0] = 5;
+    g->nrings = 1;
+    g->poly_nr[0] = 1;
+    g->npolys = 1;
+    return MZ_OK;
+}
+
+void mz_buf_free(void *p) { free(p); }
+
+int32_t mz_pair_run_batch(int64_t n, const uint8_t *null,
+                          const int64_t *s_offsets, const char *s_data,
+                          const int64_t *c_offsets, const char *c_data,
+                          const double *rects, const int32_t *ops,
+                          int32_t n_ops, int64_t max_bytes,
+                          int8_t *row_state, int32_t *out_offsets,
+                          int32_t *out_n_polys, double *out_bbox,
+                          int8_t *out_status, char **out_json,
+                          int64_t *out_parses) {
+    *out_json = 0;
+    out_parses[0] = out_parses[1] = 0;
+    if (!mz_pyapi_init()) return MZ_UNSUPPORTED;
+    int gil = g_py.gil_ensure();
+    MzCached S, C;
+    memset(&S, 0, sizeof(S));
+    memset(&C, 0, sizeof(C));
+    StrBuf sb;
+    memset(&sb, 0, sizeof(sb));
+    int32_t ret = sb_need(&sb, 1) ? MZ_OK : MZ_OOM; /* never a NULL buffer */
+    out_offsets[0] = 0;
+    for (int64_t i = 0; i < n && ret == MZ_OK; i++) {
+        int32_t st = MZ_OK;
+        if (null[i]) {
+            row_state[i] = MZ_ROW_NULL;
+        } else {
+            st = mz_cached_parse(&S, s_data + s_offsets[i],
+                                 s_offsets[i + 1] - s_offsets[i], &out_parses[0]);
+            if (st == MZ_OK && c_offsets) {
+                st = mz_cached_parse(&C, c_data + c_offsets[i],
+                                     c_offsets[i + 1] - c_offsets[i],
+                                     &out_parses[1]);
+            } else if (st == MZ_OK) {
+                const double *r4 = rects + 4 * i;
+                if (isfinite(r4[0]) && isfinite(r4[1]) && isfinite(r4[2]) &&
+                    isfinite(r4[3])) {
+                    st = mz_rect_geom(r4, &C.g);
+                } else {
+                    st = MZ_UNSUPPORTED;
+                }
+            }
+            if (st == MZ_OOM) {
+                ret = MZ_OOM;
+                break;
+            }
+            row_state[i] = st == MZ_OK ? MZ_ROW_RAN : MZ_ROW_DECLINED;
+        }
+        for (int32_t k = 0; k < n_ops; k++) {
+            int64_t slot = i * n_ops + k;
+            int32_t status = MZ_OK, npolys = 0;
+            double *bb4 = out_bbox + 4 * slot;
+            if (row_state[i] == MZ_ROW_RAN) {
+                ret = mz_op_run(&S.g, &C.g, ops[k], &sb, &status, &npolys, bb4);
+                if (ret != MZ_OK) break;
+                if (sb.n > max_bytes) {
+                    ret = MZ_OVERFLOW;
+                    break;
+                }
+            } else {
+                bb4[0] = bb4[1] = bb4[2] = bb4[3] = NAN;
+            }
+            out_status[slot] = (int8_t)status;
+            out_n_polys[slot] = npolys;
+            out_offsets[slot + 1] = (int32_t)sb.n;
+        }
+    }
+    mz_geom_free(&S.g);
+    mz_geom_free(&C.g);
+    g_py.gil_release(gil);
+    if (ret != MZ_OK) {
+        free(sb.p);
+        return ret;
+    }
+    *out_json = sb.p;
+    return MZ_OK;
+}
+
 /* Parse + bbox only (extraction stage fast path: geojson.parse_multipolygon
  * + multipolygon_bbox without building Python objects). out4 gets
  * (inf, inf, -inf, -inf) for a geometry with no points — exactly
@@ -1894,11 +2059,7 @@ int32_t mz_parse_bbox(const char *s_json, int64_t s_len, double *out4) {
     int gil = g_py.gil_ensure();
     MzGeom g;
     memset(&g, 0, sizeof(g));
-    int st = mz_parse_geometry(s_json, s_len, &g);
-    if (g_py.err_occurred()) {
-        g_py.err_clear();
-        if (st == MZ_OK) st = MZ_UNSUPPORTED;
-    }
+    int32_t st = mz_parse_operand(s_json, s_len, &g);
     if (st == MZ_OK) {
         MzBb bb;
         mz_bb_init(&bb);
@@ -1911,7 +2072,7 @@ int32_t mz_parse_bbox(const char *s_json, int64_t s_len, double *out4) {
     }
     mz_geom_free(&g);
     g_py.gil_release(gil);
-    return st == MZ_OK ? MZ_OK : (st == MZ_OOM ? MZ_OOM : MZ_UNSUPPORTED);
+    return st;
 }
 
 /* Repr/parse probes for the differential tests (format one double /

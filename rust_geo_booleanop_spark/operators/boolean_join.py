@@ -5,9 +5,11 @@ skew and coalescing), then the Martinez-Rueda kernel runs over Arrow
 batches via `kernel_map` — thousands of geometry pairs per Python worker
 call, never per-row Python. `kernel_map` is the one kernel stage: the
 boolean ops here and the tile clip, area-weight clip and region
-normalization of operators/tiling.py all go through it, and the
+normalization of operators/tiling.py all go through it. With the native
+kernel each Arrow batch is one C call (`resolve_batch_runner`); the
 streaming pair completion (streaming/boolean.py) builds its rows with
-the same `pair_rows` function.
+`pair_rows`, the per-row form of the same contract (both in
+kernel/pairs.py).
 
 Reference semantics: the four ops of lib/src/boolean/mod.rs:21-50, with
 diff_ba = diff with swapped operands (tests/src/helper.rs:35-43).
@@ -15,18 +17,15 @@ diff_ba = diff with swapped operands (tests/src/helper.rs:35-43).
 
 from __future__ import annotations
 
-import functools
 from typing import Iterator, Sequence
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from ..kernel.geojson import serialize_multipolygon
-from ..kernel.pairs import resolve_pair_runner
+from ..kernel.pairs import resolve_batch_runner
 
 DEFAULT_OPS = ("intersection", "union", "diff", "xor")
 
@@ -153,34 +152,6 @@ def pair_candidates_salted(
     )
 
 
-def bbox_square_json(x0: float, y0: float, x1: float, y1: float) -> str:
-    """Serialized 1-polygon multipolygon of a bbox rectangle (repr
-    round-trips exactly, so parsing it yields the same doubles). Shared
-    with the g03/g20 oracle-fixture generator."""
-    return serialize_multipolygon(
-        [[[(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]]]
-    )
-
-
-def pair_rows(pair_run, s_json, c_json, ops) -> list:
-    """One pair's kernel payloads, one per op: (op, result_json, n_polys,
-    xmin, ymin, xmax, ymax, status). A NULL operand makes no kernel call;
-    its rows carry the op and NULL everywhere else."""
-    if s_json is None or c_json is None:
-        return [(op,) + (None,) * 7 for op in ops]
-    return pair_run(s_json, c_json, ops)
-
-
-def _to_list(col: pa.Array) -> list:
-    """`col.to_pylist()`, NULLs included, through NumPy: several times
-    faster for strings and ~20x for doubles on pyarrow 16."""
-    values = col.to_numpy(zero_copy_only=False).tolist()
-    if col.null_count:
-        for i in np.flatnonzero(col.is_null().to_numpy(zero_copy_only=False)):
-            values[i] = None
-    return values
-
-
 def kernel_map(
     df: DataFrame,
     subject: str,
@@ -194,9 +165,12 @@ def kernel_map(
 
     `subject` names a GeoJSON column. `clipping` names a GeoJSON column
     or is four double columns (xmin, ymin, xmax, ymax) of a rectangle,
-    computed in the JVM and serialized in the worker with a per-task
-    memo (tile squares repeat across rows). A NULL operand (or a NULL
-    rectangle bound) makes no kernel call; see `pair_rows`.
+    computed in the JVM. Each batch is one call of the engine's batch
+    runner (`kernel.pairs.resolve_batch_runner`): with the native kernel
+    one C call, which parses a subject once per run of equal consecutive
+    rows and builds rectangle clippings straight from their doubles. A
+    NULL operand (or a NULL rectangle bound) makes no kernel call; see
+    `kernel.pairs.pair_rows`.
 
     A NaN bbox (empty or limit_exceeded result) reaches Spark as NULL.
     Carried names must not clash with the result columns.
@@ -213,35 +187,17 @@ def kernel_map(
     )
     result = StructType.fromDDL(KERNEL_RESULT_SCHEMA)
     schema = StructType([inp.schema[c] for c in carry] + result.fields)
-    result_types = [f.type for f in to_arrow_schema(result)]
     n_carry = len(carry)
 
     def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # resolved inside the Python worker (after fork): the full-C pair
-        # runner when available, the byte-identical Python one otherwise
-        pair_run = resolve_pair_runner()
-        square = functools.lru_cache(maxsize=1 << 14)(bbox_square_json)
+        # resolved inside the Python worker (after fork)
+        run = resolve_batch_runner()
         for batch in it:
-            cols = [_to_list(c) for c in batch.columns[n_carry:]]
-            clips = (
-                [None if None in r else square(*r) for r in zip(*cols[1:])]
-                if is_rect
-                else cols[1]
-            )
-            rows = [
-                row
-                for s_json, c_json in zip(cols[0], clips)
-                for row in pair_rows(pair_run, s_json, c_json, ops)
-            ]
+            operands = batch.columns[n_carry:]
+            payload = run(operands[0], operands[1:] if is_rect else operands[1], ops)
             take = pa.array(np.repeat(np.arange(batch.num_rows), len(ops)))
             arrays = [batch.column(i).take(take) for i in range(n_carry)]
-            # from_pandas: a NaN bbox (empty result) becomes NULL
-            result_cols = list(zip(*rows)) or [()] * len(result_types)
-            arrays += [
-                pa.array(col, type=t, from_pandas=True)
-                for col, t in zip(result_cols, result_types)
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=schema.names)
+            yield pa.RecordBatch.from_arrays(arrays + payload, names=schema.names)
 
     return inp.mapInArrow(batches, schema)
 

@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from ..functions.cells import cell_bounds, cell_bounds_expr
-from .boolean_join import bbox_square_json, kernel_map
+from ..kernel.pairs import bbox_square_json
+from .boolean_join import kernel_map
 
 DEFAULT_TILE_LEVEL = 4
 

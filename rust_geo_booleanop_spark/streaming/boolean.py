@@ -17,8 +17,8 @@ pairs with a custom stateful operator instead:
   cover expression as batch (stateless, streams unchanged).
 
 Emitted rows are byte-identical to the batch pipeline's (pinned by
-test, via the SAME `pair_rows` function the batch kernel stage
-`kernel_map` uses): the streaming engine adds pair completion, not new
+test, via `kernel.pairs.pair_rows`, the per-row form of the batch kernel
+stage's contract): the streaming engine adds pair completion, not new
 geometry semantics. Duplicate sides of an already-complete case are
 ignored (first-seen wins) — the corpus contract is one subject + one
 clipping per case url. Completion leaves an O(1) `done` tombstone in
@@ -35,8 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..kernel.pairs import resolve_pair_runner
-from ..operators.boolean_join import BOOLEAN_RESULTS_SCHEMA, DEFAULT_OPS, pair_rows
+from ..kernel.pairs import pair_rows, resolve_pair_runner
+from ..operators.boolean_join import BOOLEAN_RESULTS_SCHEMA, DEFAULT_OPS
 
 _PAIR_STATE_SCHEMA = (
     "s_url string, s_json string, c_url string, c_json string, done boolean"

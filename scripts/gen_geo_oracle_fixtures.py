@@ -588,13 +588,13 @@ def g20_weight_rows(case_ids):
     (the Spark side filters them identically); the weight division and
     the apportionment multiply are recomputed in SQL."""
     from rust_geo_booleanop_spark.functions.cells import bbox_cover_cells
-    from rust_geo_booleanop_spark.kernel.pairs import pair_boolean_ops_python
+    from rust_geo_booleanop_spark.kernel.pairs import (
+        bbox_square_json,
+        pair_boolean_ops_python,
+    )
     from rust_geo_booleanop_spark.kernel.geojson import serialize_multipolygon
     from rust_geo_booleanop_spark.operators.measures import region_area_python
-    from rust_geo_booleanop_spark.operators.tiling import (
-        bbox_square_json,
-        tile_square_json,
-    )
+    from rust_geo_booleanop_spark.operators.tiling import tile_square_json
     from rust_geo_booleanop_spark.sources.corpus import case_geometry
 
     rows = []

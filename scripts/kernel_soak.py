@@ -19,7 +19,7 @@ with coincident boundaries). For every case x operation it requires:
     operands can self-overlap, where even-odd fill makes naive
     per-ring shoelace sums the wrong measure, so they are excluded.
 
-Usage: python scripts/kernel_soak.py [n_cases] [seed0]
+Usage: python scripts/kernel_soak.py [n_cases] [seed0] [kernel|pairs|f32]
 Exit 0 = no divergence. Any divergence prints the repro seed and fails.
 """
 
@@ -258,8 +258,16 @@ def run_pairs(n_cases=500, seed0=1):
     marshalling path (GeoJSON bytes in, GeoJSON bytes + bbox + status
     rows out). The C runner parses/serializes through CPython's own
     float routines, so rows must match the Python runner BYTE-exactly:
-    same result_json strings, same bbox doubles, same statuses."""
+    same result_json strings, same bbox doubles, same statuses.
+
+    Each case also runs through the batch entry as one Arrow batch of
+    rows (s, c), (s, c), (c, s) — an operand-cache hit, then a miss —
+    whose rows must equal the Python runner's at the Arrow boundary
+    (NaN bbox as NULL)."""
+    import pyarrow as pa
+
     from rust_geo_booleanop_spark.kernel import serialize_multipolygon
+    from rust_geo_booleanop_spark.kernel.native import pair_boolean_ops_batch_native
     from rust_geo_booleanop_spark.kernel.pairs import (
         pair_boolean_ops_python,
         resolve_pair_runner,
@@ -268,6 +276,10 @@ def run_pairs(n_cases=500, seed0=1):
     native_pairs = resolve_pair_runner("native")
     if native_pairs is pair_boolean_ops_python:
         raise SystemExit("native pair runner unavailable")
+
+    def _arrow_row(row):
+        return tuple(None if isinstance(v, float) and v != v else v for v in row)
+
     ran = limits = 0
     for c in range(n_cases):
         seed = seed0 + c
@@ -294,11 +306,30 @@ def run_pairs(n_cases=500, seed0=1):
                     f"py={pr[2:]} nat={nr[2:]} json_eq={pr[1] == nr[1]}"
                 )
         limits += sum(1 for r in py_rows if r[7] == "limit_exceeded")
+
+        swapped = pair_boolean_ops_python(c_json, s_json, OPS)
+        batch = pair_boolean_ops_batch_native(
+            pa.array([s_json, s_json, c_json]), pa.array([c_json, c_json, s_json]), OPS
+        )
+        parses = 1 if s_json == c_json else 2
+        if batch is None or batch.declined or batch.parses != (parses, parses):
+            raise SystemExit(f"BATCH ENTRY FAILED seed={seed}: {batch and batch[1:]}")
+        want = [_arrow_row(r) for r in py_rows + py_rows + swapped]
+        got = list(zip(*(col.to_pylist() for col in batch.columns)))
+        if len(got) != len(want):
+            raise SystemExit(f"BATCH ROW COUNT seed={seed}: {len(got)} != {len(want)}")
+        for w, g in zip(want, got):
+            if w != g:
+                raise SystemExit(
+                    f"BATCH-ROW DIVERGENCE seed={seed} op={w[0]}: "
+                    f"py={w[2:]} batch={g[2:]} json_eq={w[1] == g[1]}"
+                )
+        ran += 3 * len(OPS)
         if (c + 1) % 200 == 0:
             print(f"  pairs {c + 1}/{n_cases}, {ran} op-rows, "
                   f"{limits} limit rows", flush=True)
-    print(f"pair soak clean: {n_cases} cases, {ran} op-rows byte-exact, "
-          f"{limits} agreed-limit rows")
+    print(f"pair soak clean: {n_cases} cases, {ran} op-rows byte-exact "
+          f"(per-row and batch entry), {limits} agreed-limit rows")
 
 
 def run_f32(n_cases=500, seed0=1):

@@ -1,8 +1,10 @@
 """The kernel stage's marshalling contract (`boolean_join.kernel_map`).
 
 Hand-built rows pin what Spark sees at the Python-worker boundary: a
-NaN bbox arrives as NULL, a NULL operand makes no kernel call, and tile
-ids keep all 64 bits next to NULL rows in the same Arrow batch.
+NaN bbox arrives as NULL, a NULL operand makes no kernel call, tile ids
+keep all 64 bits next to NULL rows in the same Arrow batch, and the
+batch C entry's subject cache and rectangle operands give every tile
+clip the bytes of the per-row Python runner.
 """
 
 import json
@@ -72,6 +74,54 @@ def test_clip_to_tiles_untiled_row_and_exact_tile_ids(spark):
         )
         assert (r.op, r.clipped_json, r.n_polys, r.status) == ("union", gj, n, status)
         assert r.n_polys == 1
+
+
+def test_clip_to_tiles_many_tiles_per_geometry_match_python(spark):
+    # one Arrow batch: a geometry over >= 6 level-6 tiles (consecutive
+    # rows share its subject), an untiled row, then a second geometry
+    sz = cell_size(6)
+    tri = json.dumps(
+        {
+            "type": "Polygon",
+            "coordinates": [
+                [[0.1 * sz, 0.2 * sz], [2.9 * sz, 0.1 * sz], [1.3 * sz, 1.9 * sz], [0.1 * sz, 0.2 * sz]]
+            ],
+        }
+    )
+    holed = json.dumps(
+        {
+            "type": "MultiPolygon",
+            "coordinates": [
+                [
+                    [[3.5 * sz, 0.5 * sz], [4.5 * sz, 0.5 * sz], [4.5 * sz, 1.5 * sz], [3.5 * sz, 1.5 * sz], [3.5 * sz, 0.5 * sz]],
+                    [[3.9 * sz, 0.9 * sz], [4.1 * sz, 0.9 * sz], [4.1 * sz, 1.1 * sz], [3.9 * sz, 1.1 * sz], [3.9 * sz, 0.9 * sz]],
+                ]
+            ],
+        }
+    )
+    results = spark.createDataFrame(
+        [
+            ("u0", "union", tri, 0.1 * sz, 0.1 * sz, 2.9 * sz, 1.9 * sz),
+            ("u1", "intersection", EMPTY, None, None, None, None),
+            ("u2", "xor", holed, 3.5 * sz, 0.5 * sz, 4.5 * sz, 1.5 * sz),
+        ],
+        "subject_url string, op string, result_json string, "
+        "xmin double, ymin double, xmax double, ymax double",
+    ).coalesce(1)
+    rows = clip_to_tiles(assign_tiles(results, level=6)).collect()
+    assert [tuple(r) for r in rows if r.url == "u1"] == [
+        (None, "u1", "intersection", "", 0, "untiled")
+    ]
+    geoms = {"u0": tri, "u2": holed}
+    tiles = {u: [r for r in rows if r.url == u] for u in geoms}
+    assert len(tiles["u0"]) >= 6 and len(tiles["u2"]) == 4
+    for url, geom in geoms.items():
+        for r in tiles[url]:
+            ((_, gj, n, *_, status),) = pair_boolean_ops_python(
+                geom, tile_square_json(r.tile_id), ("intersection",)
+            )
+            assert (r.clipped_json, r.n_polys, r.status) == (gj, n, status)
+    assert sum(r.n_polys for r in tiles["u0"]) >= 6
 
 
 def test_tile_area_weights_straddling_square(spark):

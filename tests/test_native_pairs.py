@@ -12,6 +12,10 @@ dlsym); this file is the tripwire for that construction.
 Inputs outside the strict GeoJSON subset must DECLINE (return None) so
 the wrapper falls back to the Python path and error behavior on malformed
 geometry is unchanged.
+
+The batch entry (`pair_boolean_ops_batch_native`, one C call per Arrow
+batch with a last-row operand cache and rectangle operands) must give,
+row by row, what the per-row runner gives through `pair_rows`.
 """
 
 import glob
@@ -20,6 +24,7 @@ import math
 import random
 import struct
 
+import pyarrow as pa
 import pytest
 
 from rust_geo_booleanop_spark.kernel import boolean_op
@@ -30,13 +35,19 @@ from rust_geo_booleanop_spark.kernel.geojson import (
 )
 from rust_geo_booleanop_spark.kernel.native import NATIVE_AVAILABLE
 from rust_geo_booleanop_spark.kernel.pairs import (
+    bbox_square_json,
     pair_boolean_ops_python,
+    pair_rows,
+    payload_columns,
+    resolve_batch_runner,
     resolve_bbox_fn,
     resolve_pair_runner,
 )
 
 if NATIVE_AVAILABLE:
+    from rust_geo_booleanop_spark.kernel import native
     from rust_geo_booleanop_spark.kernel.native import (
+        pair_boolean_ops_batch_native,
         pair_boolean_ops_native,
         parse_bbox_native,
         repr_double_native,
@@ -215,6 +226,10 @@ def test_parse_bbox_native_parity():
 def test_unknown_op_raises_like_python():
     with pytest.raises(ValueError, match="unknown operation"):
         pair_boolean_ops_native(SQUARE, SQUARE, ("intersection", "frobnicate"))
+    col = pa.array([SQUARE])
+    assert pair_boolean_ops_batch_native(col, col, ("frobnicate",)) is None
+    with pytest.raises(ValueError, match="unknown operation"):
+        resolve_batch_runner()(col, col, ("intersection", "frobnicate"))
 
 
 def test_resolver_engine_selection(monkeypatch):
@@ -260,3 +275,153 @@ def test_pair_runner_differential_soak_sample():
     spec.loader.exec_module(soak)
     seed0 = int(os.environ.get("SPARK_GRAFT_SOAK_SEED0", "777001"))
     soak.run_pairs(n_cases=40, seed0=seed0)
+
+
+# --- batch entry: one C call per Arrow batch -------------------------------
+
+SHIFTED = '{"type":"Polygon","coordinates":[[[1,1],[3,1],[3,2.5],[1,3],[1,1]]]}'
+# same length as SQUARE, different bytes: a length check alone must miss
+SQUARE3 = '{"type":"Polygon","coordinates":[[[0,0],[3,0],[3,3],[0,3],[0,0]]]}'
+HOLED = (
+    '{"type":"MultiPolygon","coordinates":[[[[-1,-1],[4,-1],[4,4],[-1,4],[-1,-1]],'
+    "[[0.5,0.5],[1.5,0.5],[1.5,1.5],[0.5,1.5],[0.5,0.5]]]]}"
+)
+# outside the strict subset (an extra key): the C parser declines it
+BBOX_KEYED = (
+    '{"type":"Polygon","coordinates":[[[0,0],[2,0],[2,2],[0,2],[0,0]]],'
+    '"bbox":[0,0,2,2]}'
+)
+
+
+def _arrow_rows(rows):
+    """Payload rows as they leave the Arrow boundary: NaN bbox -> None."""
+    return [
+        tuple(None if isinstance(v, float) and math.isnan(v) else v for v in r)
+        for r in rows
+    ]
+
+
+def _check_batch(subjects, clips, rects=None, ops=OPS, declined=(),
+                 subject_col=None, clip_cols=None):
+    """Run one batch through the C entry and the batch runner; compare both,
+    row by row, with `pair_rows` over the per-row runner. Rows in
+    `declined` must come back declined (NULL slots) from the C entry."""
+    run = resolve_pair_runner()
+    s_col = subject_col if subject_col is not None else pa.array(subjects, pa.string())
+    if rects is None:
+        c_arg = clip_cols if clip_cols is not None else pa.array(clips, pa.string())
+    else:
+        c_arg = clip_cols or [pa.array(list(b), pa.float64()) for b in zip(*rects)]
+        clips = [None if None in r else bbox_square_json(*r) for r in rects]
+    out = pair_boolean_ops_batch_native(s_col, c_arg, ops)
+    assert out is not None
+    assert out.declined == list(declined)
+    got = list(zip(*(c.to_pylist() for c in out.columns)))
+    assert len(got) == len(subjects) * len(ops)
+    k = len(ops)
+    for i, (s_json, c_json) in enumerate(zip(subjects, clips)):
+        rows = got[i * k : (i + 1) * k]
+        if i in declined:
+            assert rows == [(op,) + (None,) * 7 for op in ops]
+            continue
+        assert rows == _arrow_rows(pair_rows(run, s_json, c_json, ops)), i
+    if not declined or rects is None:
+        ref = [r for s_json, c_json in zip(subjects, clips) for r in pair_rows(run, s_json, c_json, ops)]
+        want = payload_columns(ref)
+        for got_col, want_col in zip(resolve_batch_runner()(s_col, c_arg, ops), want):
+            assert got_col.equals(want_col)
+    return out
+
+
+def test_batch_json_operands_cache_nulls_and_decline():
+    subjects = [
+        SQUARE, SQUARE, SQUARE,  # one parse for a run of equal subjects
+        SHIFTED, SQUARE,  # A, B, A: the cache must invalidate both times
+        SQUARE3, SQUARE,
+        None,  # NULL subject mid-batch
+        HOLED,
+        HOLED,  # NULL clipping below: the cache survives the row
+        BBOX_KEYED,  # declined by the C parser
+        HOLED,
+    ]
+    clips = [
+        SHIFTED, HOLED, SQUARE, SQUARE, SHIFTED, SHIFTED, SHIFTED, SQUARE,
+        SHIFTED, None, SQUARE, SHIFTED,
+    ]
+    out = _check_batch(subjects, clips, declined=[10])
+    # SQUARE, SHIFTED, SQUARE, SQUARE3, SQUARE, HOLED, BBOX_KEYED, HOLED:
+    # equal bytes at different offsets of the data buffer hit the cache
+    assert out.parses[0] == 8
+
+
+def test_batch_rectangle_operands():
+    nan = float("nan")
+    subjects = [SQUARE] * 4 + [HOLED] * 3 + [SHIFTED, SHIFTED]
+    rects = [
+        (0.5, 0.5, 1.5, 1.5),
+        (-0.0, 0.0, 1.0, 2.0),  # -0.0 survives the repr round trip
+        (1.0, 1.0, 5.0, 5.0),
+        (7.0, 7.0, 8.0, 8.0),  # disjoint: trivial result
+        (0.25, 0.25, 0.75, 0.75),
+        (0.5, None, 1.5, 1.5),  # a NULL bound mid-batch
+        (nan, 0.0, 1.0, 1.0),  # non-finite: declined
+        (0.1, 0.2, 2.0 / 3.0, 1e-5),
+        (1.0, 1.0, 1.0, 1.0),  # zero-area rectangle
+    ]
+    # a NaN coordinate does not finish the sweep on the per-row path
+    # either, so the declined row is checked for its NULL slots only
+    out = _check_batch(subjects, None, rects=rects, declined=[6])
+    assert out.parses == (3, 0)
+
+
+def test_batch_sliced_large_string_and_empty():
+    subjects = [SQUARE, SHIFTED, SHIFTED, None, HOLED, SQUARE, HOLED]
+    clips = [HOLED, SQUARE, None, SQUARE, SHIFTED, SQUARE, SQUARE]
+    s_full = pa.array(subjects, pa.string())
+    c_full = pa.array(clips, pa.string())
+    # sliced arrays: offset != 0 on both operands
+    _check_batch(subjects[2:6], clips[2:6],
+                 subject_col=s_full.slice(2, 4), clip_cols=c_full.slice(2, 4))
+    # large_string: int64 offsets
+    _check_batch(subjects, clips,
+                 subject_col=s_full.cast(pa.large_string()),
+                 clip_cols=c_full.cast(pa.large_string()))
+    rect_cols = [pa.array([0.0, 1.0, None, 0.5, 0.5, 0.5, 0.5], pa.float64())] * 2 + [
+        pa.array([2.0] * 7, pa.float64())
+    ] * 2
+    rects = list(zip(*(c.to_pylist() for c in rect_cols)))
+    _check_batch(subjects[1:], None, rects=rects[1:],
+                 subject_col=s_full.slice(1), clip_cols=[c.slice(1) for c in rect_cols])
+    out = _check_batch([], [])
+    assert [c.type for c in out.columns] == [c.type for c in payload_columns([])]
+    _check_batch([], None, rects=[], clip_cols=[pa.array([], pa.float64())] * 4)
+
+
+def test_batch_overflow_reruns_row_by_row(monkeypatch):
+    """A batch whose JSON would pass the int32-offset limit (forced here
+    by a small limit) comes back as None, and the batch runner reruns it
+    row by row: whole, never truncated."""
+    subjects = [SQUARE, HOLED, None, SHIFTED]
+    clips = [HOLED, SHIFTED, SQUARE, SQUARE]
+    s_col, c_col = pa.array(subjects), pa.array(clips)
+    monkeypatch.setattr(native, "_MAX_BATCH_BYTES", 200)
+    assert pair_boolean_ops_batch_native(s_col, c_col, OPS) is None
+    run = resolve_pair_runner()
+    want = payload_columns(
+        [r for s_json, c_json in zip(subjects, clips) for r in pair_rows(run, s_json, c_json, OPS)]
+    )
+    got = resolve_batch_runner()(s_col, c_col, OPS)
+    assert all(g.equals(w) for g, w in zip(got, want))
+    assert max(len(j) for j in got[1].to_pylist() if j) > 200
+
+
+def test_batch_runner_python_engine(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_KERNEL", "python")
+    subjects = [SQUARE, None, BBOX_KEYED]
+    clips = [HOLED, SQUARE, SQUARE]
+    want = payload_columns(
+        [r for s_json, c_json in zip(subjects, clips)
+         for r in pair_rows(pair_boolean_ops_python, s_json, c_json, OPS)]
+    )
+    got = resolve_batch_runner()(pa.array(subjects), pa.array(clips), OPS)
+    assert all(g.equals(w) for g, w in zip(got, want))
