@@ -2,7 +2,8 @@
 
 Runs every queries() entry at sf0.01 via Spark AND its oracle_sql() via
 DuckDB, compares row count, column names, and an order-insensitive value
-hash. Queries without an oracle get a rows-only check.
+hash. At any sf_dir other than sf0.01 the SF001_ONLY_ORACLES entries get a
+rows-only check (their fixtures are whole-corpus sf0.01 snapshots).
 
 Usage: python scripts/check_oracles.py [sf_dir] [only_query ...]
 """
@@ -62,15 +63,11 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    # staged queries (oracle-verified locally, awaiting a driver budget
-    # slot — __spark_entry__.STAGED_QUERIES) are graded identically here
-    qs = dict(entrymod.queries())
-    qs.update(getattr(entrymod, "STAGED_QUERIES", {}))
-    oracles = dict(entrymod.oracle_sql())
-    oracles.update(getattr(entrymod, "STAGED_ORACLE_SQL", {}))
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
     if os.path.basename(sf_dir.rstrip("/")) != "sf0.01":
         # whole-corpus snapshot fixtures only exist at the gate's sf
-        for name in getattr(entrymod, "SF001_ONLY_ORACLES", ()):  # downgrade
+        for name in entrymod.SF001_ONLY_ORACLES:  # downgrade
             oracles.pop(name, None)
     failures = []
     for name, fn in qs.items():

@@ -50,8 +50,7 @@ def main():
     from rust_geo_booleanop_spark.plans import get_spark
 
     spark = get_spark(app_name="explain", master="local[4]", shuffle_partitions=8)
-    qs = dict(entrymod.queries())
-    qs.update(getattr(entrymod, "STAGED_QUERIES", {}))
+    qs = entrymod.queries()
 
     picks = [
         ("r01_pricing_summary", "filter pushdown + partial aggregation"),

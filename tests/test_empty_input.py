@@ -6,7 +6,7 @@ produce 0-row inputs for downstream operators. A query that crashes on
 a 0-row table (driver-side ``collect()`` unpacks, pandas-UDF dtype
 inference on empty batches, divisions by aggregate counts) would crash
 in production the first time a date filter matches nothing. This
-battery runs EVERY ``queries()`` and ``STAGED_QUERIES`` entry against a
+battery runs EVERY ``queries()`` entry against a
 schema-faithful 0-row copy of the driver tables and requires a
 well-formed (usually empty, for global aggregates a single all-NULL /
 zero-count) result — never an exception.
@@ -32,7 +32,7 @@ TABLES = [
     "embeddings",
 ]
 
-ALL_QUERIES = {**entry.queries(), **entry.STAGED_QUERIES}
+ALL_QUERIES = entry.queries()
 
 
 @pytest.fixture(scope="module")

@@ -303,7 +303,8 @@ def test_run_generated_dataset_cli(tmp_path):
     r = subprocess.run(
         [sys.executable, "scripts/run_generated_dataset.py",
          "random_triangles", "--op", "xor", "--out", str(out)],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert r.returncode == 0, r.stderr
     fc = json.loads(out.read_text())

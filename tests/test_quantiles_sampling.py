@@ -468,7 +468,7 @@ class TestDailyNewUsers:
             (datetime.date(2024, 1, 2), 1, 0, 2),
             (datetime.date(2024, 1, 3), 2, 1, 3),
         ]
-        df = entry.STAGED_QUERIES["h25_daily_new_users"](spark, str(tmp_path))
+        df = entry.queries()["h25_daily_new_users"](spark, str(tmp_path))
         assert df.columns == ["d", "n_active", "n_new", "cum_users"]
         assert sorted(tuple(r) for r in df.collect()) == want
 
@@ -476,7 +476,7 @@ class TestDailyNewUsers:
         con.execute(
             f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')"
         )
-        sql = entry.STAGED_ORACLE_SQL["h25_daily_new_users"]
+        sql = entry.oracle_sql()["h25_daily_new_users"]
         assert sorted(con.execute(sql).fetchall()) == want
 
 
