@@ -12,6 +12,7 @@ from .booleanop import (
     union,
     difference,
     xor,
+    KernelInvalidInput,
     KernelLimitExceeded,
     INTERSECTION,
     UNION,
@@ -56,6 +57,7 @@ __all__ = [
     "union",
     "difference",
     "xor",
+    "KernelInvalidInput",
     "KernelLimitExceeded",
     "INTERSECTION",
     "UNION",

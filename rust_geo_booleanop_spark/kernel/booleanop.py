@@ -49,6 +49,16 @@ _INF = float("inf")
 # Queue construction (fill_queue.rs:10-85)
 # ---------------------------------------------------------------------------
 
+class KernelInvalidInput(ValueError):
+    """A segment of an operand has a NaN or infinite endpoint. Every
+    comparison with NaN is false, and inf - inf is NaN, so the event
+    orderings of the sweep and of connect_edges need not settle; the input
+    is rejected while the queue is filled, before the sweep. (A collapsed
+    edge between equal points makes no segment and is skipped as before.)
+    Callers may mark the row failed and continue, as for
+    KernelLimitExceeded."""
+
+
 def _process_ring(ring, is_subject, contour_id, queue, bbox, is_exterior_ring):
     n = len(ring)
     if n < 2:
@@ -59,6 +69,10 @@ def _process_ring(ring, is_subject, contour_id, queue, bbox, is_exterior_ring):
         ex, ey = ring[i + 1]
         if sx == ex and sy == ey:
             continue  # skip collapsed edges
+        # comparisons, not math.isfinite: an int past float range is finite
+        if not (-_INF < sx < _INF and -_INF < sy < _INF
+                and -_INF < ex < _INF and -_INF < ey < _INF):
+            raise KernelInvalidInput("segment with a non-finite endpoint")
         e1 = Event(contour_id, sx, sy, False, None, is_subject, is_exterior_ring)
         e2 = Event(contour_id, ex, ey, False, e1, is_subject, is_exterior_ring)
         e1.other = e2
@@ -571,7 +585,8 @@ def boolean_op(subject, clipping, operation):
 
     `subject`/`clipping`: multipolygon structure (see module docstring),
     rings need not be pre-closed. `operation`: one of 'intersection',
-    'union', 'diff', 'xor', 'diff_ba'.
+    'union', 'diff', 'xor', 'diff_ba'. Raises KernelInvalidInput when a
+    segment of either operand has a NaN or infinite endpoint.
     """
     if operation == "diff_ba":
         subject, clipping, operation = clipping, subject, DIFFERENCE

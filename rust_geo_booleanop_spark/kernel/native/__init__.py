@@ -17,17 +17,20 @@ Python workers build it once. Anything failing (no gcc, sandbox without
 exec) degrades to NATIVE_AVAILABLE = False and callers fall back to the
 pure-Python kernel — behavior, not just results, stays identical.
 
-Three entry points run whole (subject, clipping) pairs as GeoJSON in and
-GeoJSON + bbox + status out: `pair_boolean_ops_native` (one pair),
+One C entry point, `mz_pair_run_batch`, runs whole (subject, clipping)
+pairs as GeoJSON in and GeoJSON + bbox + status out, for n rows per
+call. Two wrappers share its argument list (`_run_batch`):
 `pair_boolean_ops_batch_native` (one Arrow batch in ONE C call — the
-Spark kernel stage's hot path) and the bbox-only `parse_bbox_native`.
-The batch entry reads the Arrow string buffers in place, parses a
-subject again only when its bytes differ from the previous row's (tile
-clips repeat a geometry over consecutive rows), builds rectangle
-clippings straight from their four doubles, and returns the result JSON
-as one C buffer that Arrow wraps without a copy. Rows it declines (and
-whole batches it cannot return) rerun on the per-row path, see
-`kernel.pairs.resolve_batch_runner`.
+Spark kernel stage's hot path) and `pair_boolean_ops_native` (one pair,
+a one-row call with no Arrow arrays). The batch entry reads the Arrow
+string buffers in place, parses a subject again only when its bytes
+differ from the previous row's (tile clips repeat a geometry over
+consecutive rows), builds rectangle clippings straight from their four
+doubles, and returns the result JSON as one C buffer that Arrow wraps
+without a copy. Rows it declines run on the Python marshalling path
+and whole batches it cannot return rerun row by row, see
+`kernel.pairs.resolve_batch_runner`. `parse_bbox_native` is the
+bbox-only parse of the extraction stage.
 
 Engine selection for the Spark operators lives in
 `kernel.resolve_boolean_op` (env: SPARK_GRAFT_KERNEL=auto|native|python).
@@ -57,6 +60,7 @@ from ..booleanop import (
     INTERSECTION,
     UNION,
     XOR,
+    KernelInvalidInput,
     KernelLimitExceeded,
     _normalize_multipolygon,
     _trivial_result,
@@ -234,19 +238,6 @@ def _build(so_path: str, f32: bool = False) -> bool:
             fcntl.flock(lock, fcntl.LOCK_UN)
 
 
-class _MzOpOut(ctypes.Structure):
-    _fields_ = [
-        ("status", c_int32),
-        ("n_polys", c_int32),
-        ("xmin", c_double),
-        ("ymin", c_double),
-        ("xmax", c_double),
-        ("ymax", c_double),
-        ("json", c_void_p),
-        ("json_len", c_int64),
-    ]
-
-
 def _load_one(f32: bool, coord_ctype, result_struct):
     so = _so_path(f32)
     if not os.path.exists(so) and not _build(so, f32):
@@ -265,13 +256,6 @@ def _load_one(f32: bool, coord_ctype, result_struct):
     lib.martinez_set_exact_sign(_EXACT_SIGN_KEEPALIVE)
     if not f32:
         # JSON pair runner (f64 build only)
-        lib.mz_pair_run.restype = c_int32
-        lib.mz_pair_run.argtypes = [
-            ctypes.c_char_p, c_int64, ctypes.c_char_p, c_int64,
-            POINTER(c_int32), c_int32, POINTER(_MzOpOut),
-        ]
-        lib.mz_pair_free.restype = None
-        lib.mz_pair_free.argtypes = [POINTER(_MzOpOut), c_int32]
         lib.mz_pair_run_batch.restype = c_int32
         lib.mz_pair_run_batch.argtypes = [
             c_int64, c_void_p,  # n rows, per-row NULL flags (uint8)
@@ -293,8 +277,6 @@ def _load_one(f32: bool, coord_ctype, result_struct):
 
 def _load() -> None:
     global _LIB, NATIVE_AVAILABLE
-    if os.environ.get("SPARK_GRAFT_NO_NATIVE"):
-        return
     try:
         _LIB = _load_one(False, c_double, _MartinezResult)
         NATIVE_AVAILABLE = _LIB is not None
@@ -307,7 +289,7 @@ def _load_f32() -> None:
     """The f32 build is loaded lazily on first f32-native call (most
     deployments never touch the narrow-width surface)."""
     global _LIB32, F32_NATIVE_AVAILABLE
-    if _LIB32 is not None or os.environ.get("SPARK_GRAFT_NO_NATIVE"):
+    if _LIB32 is not None:
         return
     try:
         _LIB32 = _load_one(True, ctypes.c_float, _MartinezResult32)
@@ -370,6 +352,8 @@ def _run_native(lib, typecode, coord_ctype, subject, clipping, operation):
             raise KernelLimitExceeded(
                 f"sweep exceeded the processed-event budget (operation={operation})"
             )
+        if status == 4:
+            raise KernelInvalidInput("segment with a non-finite endpoint")
         if status != 0:
             raise MemoryError("martinez_boolean_op out of memory")
 
@@ -429,7 +413,8 @@ def boolean_op_native(subject, clipping, operation):
     """Drop-in replacement for kernel.boolean_op backed by the C sweep.
 
     Same inputs, outputs, and exceptions (KernelLimitExceeded on the
-    degenerate-overlap pathology). Fixture-exact vs the Python kernel —
+    degenerate-overlap pathology, KernelInvalidInput on a segment with a
+    NaN or infinite endpoint). Fixture-exact vs the Python kernel —
     see tests/test_native_kernel.py.
     """
     subject, clipping, operation = _check_op(subject, clipping, operation)
@@ -477,69 +462,17 @@ PAIR_OP_CODES = {
 }
 
 _MZ_LIMIT = 2
-_MZ_OOM = 3
 _MZ_UNSUPPORTED = 4
-
-
-def pair_boolean_ops_native(s_json: str, c_json: str, ops):
-    """All `ops` of one (subject, clipping) pair through the C fast path.
-
-    Returns a list of (op, result_json, n_polys, xmin, ymin, xmax, ymax,
-    status) tuples — the per-row payload operators/boolean_join.py emits —
-    or None when the C parser declines the input (strict-GeoJSON-subset
-    miss), in which case the caller must run the Python marshalling path
-    (identical bytes, plus the original exception behavior on bad input).
-    """
-    if _LIB is None:  # pragma: no cover - guarded by NATIVE_AVAILABLE
-        raise RuntimeError("native kernel not available")
-    for op in ops:
-        if op not in PAIR_OP_CODES:
-            raise ValueError(f"unknown operation: {op!r}")
-    n = len(ops)
-    codes = (c_int32 * n)(*(PAIR_OP_CODES[op] for op in ops))
-    outs = (_MzOpOut * n)()
-    sb = s_json.encode("utf-8")
-    cb = c_json.encode("utf-8")
-    st = _LIB.mz_pair_run(sb, len(sb), cb, len(cb), codes, n, outs)
-    if st == _MZ_UNSUPPORTED:
-        return None
-    if st != 0:
-        raise MemoryError("mz_pair_run allocation failure")
-    try:
-        rows = []
-        for op, o in zip(ops, outs):
-            rows.append(
-                (
-                    op,
-                    ctypes.string_at(o.json, o.json_len).decode("ascii"),
-                    o.n_polys,
-                    o.xmin,
-                    o.ymin,
-                    o.xmax,
-                    o.ymax,
-                    "limit_exceeded" if o.status == _MZ_LIMIT else "ok",
-                )
-            )
-    finally:
-        _LIB.mz_pair_free(outs, n)
-    return rows
-
-
 # result_json carries int32 Arrow offsets: a batch whose JSON would pass
 # this many bytes is returned as None and reruns row by row.
 _MAX_BATCH_BYTES = 2**31 - 1
 _ROW_DECLINED = 2  # mz_pair_run_batch row_state: 0 ran, 1 NULL operand
 
 
-class BatchResult(NamedTuple):
-    columns: list  # the eight payload columns, len(ops) rows per input row
-    declined: list  # input rows the C parser declined (their slots are NULL)
-    parses: tuple  # (subject, clipping) parse counts
-
-
 class _CBuffer:
     """Owns one buffer malloc'd by mz_pair_run_batch and frees it when
-    the Arrow buffer wrapping it (the `base` of pa.foreign_buffer) dies."""
+    the last reference to it dies (for a batch: the Arrow buffer that
+    wraps it, as the `base` of pa.foreign_buffer)."""
 
     __slots__ = ("ptr", "_free")
 
@@ -549,6 +482,83 @@ class _CBuffer:
 
     def __del__(self):
         self._free(self.ptr)
+
+
+def _run_batch(n, null, s_offsets, s_data, c_offsets, c_data, rects, ops):
+    """The one call of mz_pair_run_batch: all `ops` of n rows. The
+    operand arguments are addresses or buffers (see martinez.c); a None
+    `c_offsets` means `rects` holds n x 4 rectangle doubles.
+
+    Returns ctypes arrays (a one-row call reads them without NumPy):
+    row_state int8[n] (0 ran, 1 NULL operand, 2 declined), then per
+    (row, op) slot the JSON offsets int32[n*k + 1], n_polys int32[n*k],
+    bbox float64[n*k*4] and status int8[n*k] (0 ok, 2 limit_exceeded),
+    then the `_CBuffer` of the JSON and the (subject, clipping) parse
+    counts. Raises ValueError on an unknown op; returns None when the
+    call returns nothing (output past `_MAX_BATCH_BYTES`, out of memory).
+    """
+    if _LIB is None:  # pragma: no cover - guarded by NATIVE_AVAILABLE
+        raise RuntimeError("native kernel not available")
+    for op in ops:
+        if op not in PAIR_OP_CODES:
+            raise ValueError(f"unknown operation: {op!r}")
+    k = len(ops)
+    m = n * k
+    outs = (
+        (ctypes.c_int8 * n)(), (c_int32 * (m + 1))(), (c_int32 * m)(),
+        (c_double * (4 * m))(), (ctypes.c_int8 * m)(),
+    )
+    codes = (c_int32 * max(k, 1))(*(PAIR_OP_CODES[op] for op in ops))
+    json_ptr = c_void_p()
+    parses = (c_int64 * 2)()
+    st = _LIB.mz_pair_run_batch(
+        n, null, s_offsets, s_data, c_offsets, c_data, rects,
+        codes, k, _MAX_BATCH_BYTES, *outs, ctypes.byref(json_ptr), parses,
+    )
+    if st != 0:
+        return None
+    return (*outs, _CBuffer(json_ptr.value), tuple(parses))
+
+
+def pair_boolean_ops_native(s_json: str, c_json: str, ops):
+    """All `ops` of one (subject, clipping) pair through the C fast path.
+
+    Returns a list of (op, result_json, n_polys, xmin, ymin, xmax, ymax,
+    status) tuples — the per-row payload operators/boolean_join.py emits —
+    or None when the C parser declines the input (strict-GeoJSON-subset
+    miss) or the call cannot return it (output past 2**31 bytes, out of
+    memory), in which case the caller must run the Python marshalling
+    path (identical bytes, plus the original exception behavior on bad
+    input).
+    """
+    sb = s_json.encode("utf-8")
+    cb = c_json.encode("utf-8")
+    out = _run_batch(
+        1, b"\0",
+        (c_int64 * 2)(0, len(sb)), sb,
+        (c_int64 * 2)(0, len(cb)), cb,
+        None, ops,
+    )
+    if out is None or out[0][0] == _ROW_DECLINED:
+        return None
+    _, offsets, n_polys, bbox, status, json, _ = out
+    text = ctypes.string_at(json.ptr, offsets[len(ops)]).decode("ascii")
+    return [
+        (
+            op,
+            text[offsets[i] : offsets[i + 1]],
+            n_polys[i],
+            *bbox[4 * i : 4 * i + 4],
+            "limit_exceeded" if status[i] == _MZ_LIMIT else "ok",
+        )
+        for i, op in enumerate(ops)
+    ]
+
+
+class BatchResult(NamedTuple):
+    columns: list  # the eight payload columns, len(ops) rows per input row
+    declined: list  # input rows the C parser declined (their slots are NULL)
+    parses: tuple  # (subject, clipping) parse counts
 
 
 def _string_operand(col):
@@ -581,18 +591,15 @@ def pair_boolean_ops_batch_native(subject, clipping, ops):
     `pairs.payload_columns` over `pair_rows(resolve_pair_runner(), ...)`
     except on the `declined` rows (NULL slots: a string outside the
     strict subset or a non-finite rectangle bound), which the caller
-    reruns on the per-row path. A NULL operand gives the op and NULLs.
-    Returns None — rerun the batch row by row — for an unknown op, an
-    output past `_MAX_BATCH_BYTES` or an allocation failure.
+    runs on the Python marshalling path. A NULL operand gives the op and
+    NULLs. Raises ValueError on an unknown op. Returns None — rerun the
+    batch row by row — for an output past `_MAX_BATCH_BYTES` or an
+    allocation failure.
     """
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    if _LIB is None:  # pragma: no cover - guarded by NATIVE_AVAILABLE
-        raise RuntimeError("native kernel not available")
-    if any(op not in PAIR_OP_CODES for op in ops):
-        return None  # the per-row path raises the usual ValueError
     n, k = len(subject), len(ops)
     is_rect = not isinstance(clipping, pa.Array)
     null = subject.is_null()
@@ -610,46 +617,36 @@ def pair_boolean_ops_batch_native(subject, clipping, ops):
     else:
         c_offsets, c_data = _string_operand(clipping)
         rects_ptr = None
-    m = n * k
-    row_state = np.zeros(n, np.int8)
-    offsets = np.zeros(m + 1, np.int32)
-    n_polys = np.zeros(m, np.int32)
-    bbox = np.empty((m, 4), np.float64)
-    status = np.zeros(m, np.int8)
-    codes = (c_int32 * max(k, 1))(*(PAIR_OP_CODES[op] for op in ops))
-    json_ptr = c_void_p()
-    parses = (c_int64 * 2)()
-    st = _LIB.mz_pair_run_batch(
-        n, null.ctypes.data,
-        s_offsets.ctypes.data, s_data,
+    # the arrays behind these addresses stay bound to locals for the call
+    out = _run_batch(
+        n, null.ctypes.data, s_offsets.ctypes.data, s_data,
         None if c_offsets is None else c_offsets.ctypes.data, c_data,
-        rects_ptr, codes, k, _MAX_BATCH_BYTES,
-        row_state.ctypes.data, offsets.ctypes.data, n_polys.ctypes.data,
-        bbox.ctypes.data, status.ctypes.data, ctypes.byref(json_ptr), parses,
+        rects_ptr, ops,
     )
-    if st != 0:
+    if out is None:
         return None
-    json_data = pa.foreign_buffer(
-        json_ptr.value, int(offsets[-1]), base=_CBuffer(json_ptr.value)
-    )
+    m = n * k
+    row_state, offsets, n_polys, bbox, status, json, parses = out
+    row_state = np.frombuffer(row_state, np.int8)
+    offsets = np.frombuffer(offsets, np.int32)
+    bbox = np.frombuffer(bbox, np.float64).reshape(m, 4)
+    json_data = pa.foreign_buffer(json.ptr, int(offsets[-1]), base=json)
     ran = np.repeat(row_state == 0, k)
     n_null = m - int(np.count_nonzero(ran))
     validity = pa.py_buffer(np.packbits(ran, bitorder="little")) if n_null else None
     not_ran = ~ran
     columns = [
         pa.array(list(ops), pa.string()).take(np.tile(np.arange(k), n)),
-        pa.StringArray.from_buffers(
-            m, pa.py_buffer(offsets), json_data, validity, n_null
-        ),
-        pa.array(n_polys, pa.int32(), mask=not_ran),
+        pa.StringArray.from_buffers(m, pa.py_buffer(offsets), json_data, validity, n_null),
+        pa.array(np.frombuffer(n_polys, np.int32), pa.int32(), mask=not_ran),
         *(pa.array(bbox[:, j], pa.float64(), from_pandas=True) for j in range(4)),
         # indexed by the C status code: MZ_OK 0, MZ_LIMIT 2
         pa.array(["ok", None, "limit_exceeded"]).take(
-            pa.array(status, mask=not_ran)
+            pa.array(np.frombuffer(status, np.int8), mask=not_ran)
         ),
     ]
     declined = np.flatnonzero(row_state == _ROW_DECLINED).tolist()
-    return BatchResult(columns, declined, (parses[0], parses[1]))
+    return BatchResult(columns, declined, parses)
 
 
 def parse_bbox_native(geom_json: str):

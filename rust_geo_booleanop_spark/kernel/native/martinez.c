@@ -72,6 +72,7 @@ typedef double real_t;
 #define STATUS_TRIVIAL 1
 #define STATUS_LIMIT 2
 #define STATUS_OOM 3
+#define STATUS_INVALID 4 /* a non-finite segment, rejected in fill_queue */
 
 /* Shewchuk's static filter bound: (3 + 16*eps) * eps for the build's
  * precision (eps = 2^-53 f64 / 2^-24 f32; the f64 constant equals the
@@ -255,6 +256,7 @@ typedef struct {
     int32_t *se;      /* sorted (processed) events */
     int32_t sen, secap;
     int oom;
+    int invalid; /* a segment with a non-finite endpoint */
 } Ctx;
 
 #define E(i) (&c->ev[(i)])
@@ -515,6 +517,12 @@ static void process_ring(Ctx *c, const real_t *coords, int32_t n,
         real_t sx = coords[(size_t)2 * i], sy = coords[(size_t)2 * i + 1];
         real_t ex = coords[(size_t)2 * i + 2], ey = coords[(size_t)2 * i + 3];
         if (sx == ex && sy == ey) continue; /* collapsed edge */
+        /* every comparison with NaN is false and inf - inf is NaN, so
+         * the sweep's event orderings need not settle on such a segment */
+        if (!(isfinite(sx) && isfinite(sy) && isfinite(ex) && isfinite(ey))) {
+            c->invalid = 1;
+            return;
+        }
         int32_t e1 = new_event(c, contour_id, sx, sy, 0, -1, is_subject,
                                is_exterior_ring);
         int32_t e2 = new_event(c, contour_id, ex, ey, 0, e1, is_subject,
@@ -1009,7 +1017,8 @@ static void ctx_free(Ctx *c) {
  *   ring_np: points per ring
  *   poly_nr: rings per polygon
  * Caller guarantees rings are closed (first == last) — the Python
- * wrapper mirrors _normalize_multipolygon before flattening. */
+ * wrapper mirrors _normalize_multipolygon before flattening. A segment
+ * with a NaN or infinite endpoint returns STATUS_INVALID. */
 MartinezResult *martinez_boolean_op(
     const real_t *s_coords, const int32_t *s_ring_np, int32_t s_nrings,
     const int32_t *s_poly_nr, int32_t s_npolys, const real_t *c_coords,
@@ -1037,9 +1046,10 @@ MartinezResult *martinez_boolean_op(
                 int32_t np = s_ring_np[ring_idx++];
                 process_ring(c, p, np, 1, contour_id, sbbox, k == 0);
                 p += (size_t)2 * np;
-                if (c->oom) {
+                if (c->oom || c->invalid) {
+                    int st = c->oom ? STATUS_OOM : STATUS_INVALID;
                     ctx_free(c);
-                    return result_with_status(STATUS_OOM);
+                    return result_with_status(st);
                 }
             }
         }
@@ -1054,9 +1064,10 @@ MartinezResult *martinez_boolean_op(
                 process_ring(c, p, np, 0, contour_id, cbbox,
                              exterior && k == 0);
                 p += (size_t)2 * np;
-                if (c->oom) {
+                if (c->oom || c->invalid) {
+                    int st = c->oom ? STATUS_OOM : STATUS_INVALID;
                     ctx_free(c);
-                    return result_with_status(STATUS_OOM);
+                    return result_with_status(st);
                 }
             }
         }
@@ -1227,12 +1238,12 @@ MartinezResult *martinez_boolean_op(
 /*    wrapper falls back to the reference marshalling, so behavior on   */
 /*    odd inputs — including which exception is raised — is unchanged.  */
 /*                                                                      */
-/* Two entry points share one per-op body (mz_op_run: sweep, then the  */
-/* one serializer): mz_pair_run runs one pair, mz_pair_run_batch one    */
-/* Arrow batch of pairs — string operands parsed once per run of equal  */
-/* consecutive rows (a last-row cache), rectangle clippings built from  */
-/* their four doubles without any JSON. The batch entry is the Spark    */
-/* kernel stage's hot path; mz_pair_run serves streaming and declines.  */
+/* One pair entry point, mz_pair_run_batch, runs an Arrow batch of     */
+/* pairs — string operands parsed once per run of equal consecutive     */
+/* rows (a last-row cache), rectangle clippings built from their four   */
+/* doubles without any JSON — through one per-op body (mz_op_run:       */
+/* sweep, then the one serializer). It is the Spark kernel stage's hot  */
+/* path; a single pair (streaming, the ceilings) is a batch of one row. */
 /*                                                                      */
 /* GIL: ctypes releases the GIL around the foreign call; the Python     */
 /* C-API calls here require it, so the entry points re-acquire it with  */
@@ -1773,30 +1784,16 @@ static int mz_sb_result(StrBuf *b, const MartinezResult *r, MzBb *bb,
     return ok;
 }
 
-/* ---------------- public entry points ---------------- */
-
-typedef struct {
-    int32_t status; /* MZ_OK | MZ_LIMIT */
-    int32_t n_polys;
-    double xmin, ymin, xmax, ymax; /* NaN when the result is empty */
-    char *json;
-    int64_t json_len;
-} MzOpOut;
-
-void mz_pair_free(MzOpOut *outs, int32_t n_ops) {
-    if (!outs) return;
-    for (int32_t i = 0; i < n_ops; i++) {
-        free(outs[i].json);
-        outs[i].json = 0;
-    }
-}
+/* ---------------- per-op body and operand parse ---------------- */
 
 #define MZ_OPC_DIFF_BA 4
 
-/* The one op body both entry points share: sweep op code `opc` (0..3,
- * or MZ_OPC_DIFF_BA) over parsed operands and append its GeoJSON to b.
- * Returns MZ_OK (then *status is MZ_OK or MZ_LIMIT, bb4 NaN when the
- * result is empty), MZ_UNSUPPORTED for a bad op code, or MZ_OOM. */
+/* The per-op body: sweep op code `opc` (0..3, or MZ_OPC_DIFF_BA) over
+ * parsed operands and append its GeoJSON to b. Returns MZ_OK (then
+ * *status is MZ_OK or MZ_LIMIT, bb4 NaN when the result is empty),
+ * MZ_UNSUPPORTED for a bad op code, or MZ_OOM. The parser and the
+ * rectangle rows admit only finite doubles, so STATUS_INVALID never
+ * comes back here. */
 static int32_t mz_op_run(const MzGeom *S, const MzGeom *C, int32_t opc,
                          StrBuf *b, int32_t *status, int32_t *n_polys,
                          double *bb4) {
@@ -1865,52 +1862,13 @@ static int32_t mz_parse_operand(const char *s, int64_t len, MzGeom *g) {
     return st == MZ_OK ? MZ_OK : (st == MZ_OOM ? MZ_OOM : MZ_UNSUPPORTED);
 }
 
-/* Run every op of a (subject, clipping) pair: parse both geometries
- * once, sweep per op, serialize per op. Returns MZ_OK (per-op statuses
- * in outs), MZ_UNSUPPORTED (caller must use the Python path; outs
- * untouched beyond zeroing), or MZ_OOM. */
-int32_t mz_pair_run(const char *s_json, int64_t s_len, const char *c_json,
-                    int64_t c_len, const int32_t *ops, int32_t n_ops,
-                    MzOpOut *outs) {
-    memset(outs, 0, (size_t)n_ops * sizeof(MzOpOut));
-    if (!mz_pyapi_init()) return MZ_UNSUPPORTED;
-    int gil = g_py.gil_ensure();
-    MzGeom S, C;
-    memset(&S, 0, sizeof(S));
-    memset(&C, 0, sizeof(C));
-    int32_t ret = mz_parse_operand(s_json, s_len, &S);
-    if (ret == MZ_OK) ret = mz_parse_operand(c_json, c_len, &C);
-    for (int32_t i = 0; i < n_ops && ret == MZ_OK; i++) {
-        StrBuf sb;
-        memset(&sb, 0, sizeof(sb));
-        double bb4[4];
-        ret = mz_op_run(&S, &C, ops[i], &sb, &outs[i].status,
-                        &outs[i].n_polys, bb4);
-        if (ret != MZ_OK) {
-            free(sb.p);
-            break;
-        }
-        outs[i].xmin = bb4[0];
-        outs[i].ymin = bb4[1];
-        outs[i].xmax = bb4[2];
-        outs[i].ymax = bb4[3];
-        outs[i].json = sb.p;
-        outs[i].json_len = sb.n;
-    }
-
-    mz_geom_free(&S);
-    mz_geom_free(&C);
-    g_py.gil_release(gil);
-    if (ret != MZ_OK) mz_pair_free(outs, n_ops);
-    return ret;
-}
-
-/* ---------------- batch entry: one call per Arrow batch ---------------- */
+/* ------------- the pair entry point: one call per batch -------------- */
 /*                                                                      */
 /* mz_pair_run_batch runs every op of n rows in one foreign call (one    */
-/* GIL acquisition). Operands arrive as Arrow string columns: int64      */
-/* value offsets (already shifted by the array's slice offset) into the */
-/* data buffer. The clipping is either a second such column or, when    */
+/* GIL acquisition); a single pair is a call with n = 1. Operands        */
+/* arrive as Arrow-layout string columns: int64 value offsets (already  */
+/* shifted by the array's slice offset) into the data buffer. The       */
+/* clipping is either a second such column or, when                     */
 /* c_offsets is NULL, an n x 4 float64 rectangle array (xmin, ymin,     */
 /* xmax, ymax) built straight into the closed 5-point ring that         */
 /* kernel/pairs.bbox_square_json writes — repr round-trips exactly, so   */
@@ -1930,7 +1888,8 @@ int32_t mz_pair_run(const char *s_json, int64_t s_len, const char *c_json,
 /* (*out_json, free with mz_buf_free). NULL and declined rows get empty */
 /* JSON, n_polys 0, NaN bbox. Returns MZ_OK, MZ_OOM, or MZ_OVERFLOW     */
 /* when the JSON would pass max_bytes (int32 Arrow offsets): nothing    */
-/* is returned then, and the caller reruns the batch row by row.        */
+/* is returned then, and the caller reruns the batch row by row         */
+/* (MZ_UNSUPPORTED: the CPython number functions did not resolve).      */
 
 #define MZ_OVERFLOW 5
 #define MZ_ROW_RAN 0

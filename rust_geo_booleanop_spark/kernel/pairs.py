@@ -18,8 +18,14 @@ The Spark kernel stage runs whole Arrow batches through
 `resolve_batch_runner`: natively, one `pair_boolean_ops_batch_native` C
 call per batch (each subject parsed once per run of equal consecutive
 rows, rectangle clippings built from their doubles), with declined rows
-rerun one at a time through `resolve_pair_runner` and spliced back; on
-the Python engine, the per-row loop over `pair_rows`.
+run one at a time through the Python composition over the native sweep
+and spliced back; on the Python engine, the per-row loop over
+`pair_rows`. A declined row is not sent to the C parser again: both C
+wrappers call the same C entry, which would decline it again.
+
+A rejected operand degrades its rows, never the task: a sweep past its
+event budget gives status 'limit_exceeded', a segment with a NaN or
+infinite endpoint status 'invalid_input', both with an empty result.
 
 `resolve_native` is the one engine selection ($SPARK_GRAFT_KERNEL = auto |
 native | python, validated) behind `resolve_pair_runner`,
@@ -32,7 +38,7 @@ from __future__ import annotations
 import functools
 import os as _os
 
-from .booleanop import KernelLimitExceeded, boolean_op
+from .booleanop import KernelInvalidInput, KernelLimitExceeded, boolean_op
 from .geojson import multipolygon_bbox, parse_multipolygon, serialize_multipolygon
 
 _NAN = float("nan")
@@ -51,8 +57,9 @@ def pair_boolean_ops_python(s_json, c_json, ops, boolean_op_fn=None):
             status = "ok"
         except KernelLimitExceeded:
             # degenerate input: mark the row, don't kill the job
-            result = []
-            status = "limit_exceeded"
+            result, status = [], "limit_exceeded"
+        except KernelInvalidInput:
+            result, status = [], "invalid_input"
         if result:
             xmin, ymin, xmax, ymax = multipolygon_bbox(result)
         else:
@@ -208,24 +215,31 @@ def resolve_batch_runner(engine: str | None = None):
     kernel call (see `pair_rows`).
 
     With the native kernel, each batch is one C call. Rows it declines
-    rerun through `resolve_pair_runner` (same bytes, same exceptions) and
-    are spliced back in; a batch it cannot return whole (an unknown op,
-    output past 2**31 bytes, out of memory) reruns row by row. The
-    Python engine runs the per-row loop.
+    run through `pair_boolean_ops_python` over the native sweep (same
+    bytes, same exceptions) and are spliced back in; a batch it cannot
+    return whole (output past 2**31 bytes, out of memory) reruns row by
+    row. An unknown op raises ValueError. The Python engine runs the
+    per-row loop.
     """
     import pyarrow as pa
 
-    pair_run = resolve_pair_runner(engine)
-    per_row = _per_row_batch(pair_run)
     native_mod = resolve_native(engine)
     if native_mod is None:
-        return per_row
+        return _per_row_batch(pair_boolean_ops_python)
+    per_row = _per_row_batch(resolve_pair_runner(engine))
     native_batch = native_mod.pair_boolean_ops_batch_native
+    native_sweep = native_mod.boolean_op_native
 
     def rerun_row(subject, clipping, ops, i):
+        # a declined row has no NULL operand
         if isinstance(clipping, pa.Array):
-            return per_row(subject.slice(i, 1), clipping.slice(i, 1), ops)
-        return per_row(subject.slice(i, 1), [c.slice(i, 1) for c in clipping], ops)
+            c_json = clipping[i].as_py()
+        else:
+            c_json = bbox_square_json(*(c[i].as_py() for c in clipping))
+        rows = pair_boolean_ops_python(
+            subject[i].as_py(), c_json, ops, boolean_op_fn=native_sweep
+        )
+        return payload_columns(rows)
 
     def run(subject, clipping, ops):
         out = native_batch(subject, clipping, ops)

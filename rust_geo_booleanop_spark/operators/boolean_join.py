@@ -195,29 +195,34 @@ def kernel_map(
         for batch in it:
             operands = batch.columns[n_carry:]
             payload = run(operands[0], operands[1:] if is_rect else operands[1], ops)
-            take = pa.array(np.repeat(np.arange(batch.num_rows), len(ops)))
-            arrays = [batch.column(i).take(take) for i in range(n_carry)]
-            yield pa.RecordBatch.from_arrays(arrays + payload, names=schema.names)
+            yield from _result_batches(batch, n_carry, payload, len(ops), schema.names)
 
     return inp.mapInArrow(batches, schema)
 
 
-def apply_boolean_ops(
-    pairs: DataFrame, ops: Sequence[str] = DEFAULT_OPS, rebalance: bool = True
-) -> DataFrame:
+def _result_batches(batch, n_carry, payload, n_ops, names) -> list:
+    """The output record batches of one input batch: its first `n_carry`
+    columns, each row repeated `n_ops` times, then the `payload` columns.
+    A payload column that pa.array chunked (past 2 GiB of strings) gives
+    several record batches instead of failing."""
+    take = pa.array(np.repeat(np.arange(batch.num_rows), n_ops))
+    arrays = [batch.column(i).take(take) for i in range(n_carry)]
+    return pa.Table.from_arrays(arrays + payload, names=names).to_batches()
+
+
+def apply_boolean_ops(pairs: DataFrame, ops: Sequence[str] = DEFAULT_OPS) -> DataFrame:
     """(case_id, *_url, *_json) pairs -> one result row per (pair, op).
 
-    `rebalance` (default ON) round-robins pairs across the cluster before
-    the kernel stage. This is load-bearing: upstream joins of small/
-    broadcastable inputs produce NO shuffle, so the pair table inherits the
-    file scan's partitioning — a single-file source would silently
-    serialize the (CPU-dominant) kernel onto one core. The extra shuffle
-    moves only the small pair rows; kernel cost per row dwarfs it.
+    Pairs are round-robined across the cluster before the kernel stage.
+    This is load-bearing: upstream joins of small/broadcastable inputs
+    produce NO shuffle, so the pair table inherits the file scan's
+    partitioning — a single-file source would silently serialize the
+    (CPU-dominant) kernel onto one core. The extra shuffle moves only the
+    small pair rows; kernel cost per row dwarfs it.
     """
-    if rebalance:
-        from .spatial_join import ensure_parallelism
+    from .spatial_join import ensure_parallelism
 
-        pairs = ensure_parallelism(pairs)
+    pairs = ensure_parallelism(pairs)
     return kernel_map(
         pairs, "subject_json", "clipping_json", ops,
         carry=("case_id", "subject_url", "clipping_url"),

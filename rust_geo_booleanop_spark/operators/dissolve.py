@@ -17,8 +17,9 @@ Degenerate-overlap caveat: re-unioning union OUTPUTS can hit the Martinez
 degenerate-overlap pathology (the reference's deactivated issue90 class).
 The kernel's termination valve converts that to KernelLimitExceeded; such
 groups degrade to status='limit_exceeded' rows instead of hanging an
-executor. Clean inputs (disjoint or simply-overlapping coverages, e.g.
-rectangle tilings) dissolve exactly.
+executor. A NaN or infinite coordinate degrades its group the same way,
+with status 'invalid_input' (KernelInvalidInput). Clean inputs (disjoint
+or simply-overlapping coverages, e.g. rectangle tilings) dissolve exactly.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernel import resolve_boolean_op
-from ..kernel.booleanop import KernelLimitExceeded
+from ..kernel.booleanop import KernelInvalidInput, KernelLimitExceeded
 from ..kernel.geojson import parse_multipolygon, serialize_multipolygon
 
 _PARTIAL_SCHEMA = "key string, geom_json string, status string"
@@ -53,14 +54,17 @@ def _partial_fn(key, pdf):
         gj, status = _fold_union(sorted(pdf["geom_json"]))
     except KernelLimitExceeded:
         gj, status = "", "limit_exceeded"
+    except KernelInvalidInput:
+        gj, status = "", "invalid_input"
     return pd.DataFrame({"key": [k], "geom_json": [gj], "status": [status]})
 
 
 def _final_fn(key, pdf):
     (k,) = key
-    if (pdf["status"] != "ok").any():
+    failed = sorted(set(pdf["status"]) - {"ok"})
+    if failed:
         return pd.DataFrame(
-            {"key": [k], "geom_json": [""], "n_polys": [0], "status": ["limit_exceeded"]}
+            {"key": [k], "geom_json": [""], "n_polys": [0], "status": [failed[0]]}
         )
     try:
         gj, status = _fold_union(sorted(pdf["geom_json"]))

@@ -28,26 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _misra_gries(values: Iterator, k: int) -> dict:
-    """Classic Misra-Gries with k counters (public-domain algorithm).
-
-    Kept as the sequential reference implementation; the Spark path uses
-    the batch-merge variant below (vectorized per Arrow batch)."""
-    counters: dict = {}
-    for v in values:
-        if v in counters:
-            counters[v] += 1
-        elif len(counters) < k:
-            counters[v] = 1
-        else:
-            dead = [key for key in counters if counters[key] == 1]
-            for key in dead:
-                del counters[key]
-            for key in counters:
-                counters[key] -= 1
-    return counters
-
-
 def _mg_merge_batch(counters: dict, batch_counts, k: int) -> dict:
     """Merge one batch's exact value->count map into an MG summary of
     capacity k (mergeable-summaries MG merge, Agarwal et al., PODS'12):

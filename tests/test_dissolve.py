@@ -5,6 +5,7 @@ import json
 import pytest
 
 from rust_geo_booleanop_spark.operators import dissolve
+from rust_geo_booleanop_spark.operators.dissolve import _final_fn, _partial_fn
 from rust_geo_booleanop_spark.kernel.geojson import parse_multipolygon
 
 
@@ -69,3 +70,20 @@ class TestDissolve:
             assert _area(parse_multipolygon(multi[k].geom_json)) == pytest.approx(
                 _area(parse_multipolygon(single[k].geom_json))
             )
+
+
+def test_non_finite_coordinate_degrades_the_group():
+    # json admits NaN tokens; the kernel rejects them before the sweep
+    # and the group becomes one invalid_input row instead of a failed task
+    import pandas as pd
+
+    rect = _rect_json(0.0, 0.0, 1.0, 1.0)
+    nan_rect = rect.replace("0.0, 0.0]", "NaN, 0.0]")
+    assert "NaN" in nan_rect
+    part = _partial_fn(("k",), pd.DataFrame({"geom_json": [rect, nan_rect]}))
+    assert part["status"].tolist() == ["invalid_input"]
+    ok = _partial_fn(("k",), pd.DataFrame({"geom_json": [rect]}))
+    final = _final_fn(("k",), pd.concat([ok, part]))
+    assert final[["geom_json", "n_polys", "status"]].values.tolist() == [
+        ["", 0, "invalid_input"]
+    ]

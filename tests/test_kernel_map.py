@@ -2,12 +2,15 @@
 
 Hand-built rows pin what Spark sees at the Python-worker boundary: a
 NaN bbox arrives as NULL, a NULL operand makes no kernel call, tile ids
-keep all 64 bits next to NULL rows in the same Arrow batch, and the
-batch C entry's subject cache and rectangle operands give every tile
-clip the bytes of the per-row Python runner.
+keep all 64 bits next to NULL rows in the same Arrow batch, the batch C
+entry's subject cache and rectangle operands give every tile clip the
+bytes of the per-row Python runner, and a chunked payload column becomes
+several output batches.
 """
 
 import json
+
+import pyarrow as pa
 
 from rust_geo_booleanop_spark.functions.cells import cell_size
 from rust_geo_booleanop_spark.kernel.pairs import pair_boolean_ops_python
@@ -17,6 +20,7 @@ from rust_geo_booleanop_spark.operators import (
     clip_to_tiles,
     tile_area_weights,
 )
+from rust_geo_booleanop_spark.operators.boolean_join import _result_batches
 from rust_geo_booleanop_spark.operators.tiling import tile_square_json
 
 EMPTY = '{"type":"MultiPolygon","coordinates":[]}'
@@ -132,6 +136,10 @@ def test_tile_area_weights_straddling_square(spark):
             (7, _square(x0, y0, x1, y1), x0, y0, x1, y1),
             # a NULL bbox covers no tile and normalizes to nothing
             (8, _square(x0, y0, x1, y1), None, None, None, None),
+            # a NaN bbox covers no tile; its padded NaN rectangle is
+            # rejected before the sweep (invalid_input) and normalizes
+            # to nothing
+            (9, _square(x0, y0, x1, y1), float("nan"), y0, x1, y1),
         ],
         "case_id long, geom_json string, xmin double, ymin double, "
         "xmax double, ymax double",
@@ -142,4 +150,21 @@ def test_tile_area_weights_straddling_square(spark):
     assert rows == [
         (7, left, area / 2, area, 0.5),
         (7, right, area / 2, area, 0.5),
+    ]
+
+
+def test_result_batches_split_a_chunked_payload():
+    # pa.array chunks a string column past 2 GiB; the output must follow
+    # the chunks instead of failing in RecordBatch.from_arrays
+    batch = pa.record_batch([pa.array([10, 20, 30])], names=["case_id"])
+    ops = ("intersection", "union")
+    payload = [
+        pa.chunked_array([["a", "b", "c", "d"], ["e", "f"]]),
+        pa.array(range(6), pa.int32()),
+    ]
+    out = _result_batches(batch, 1, payload, len(ops), ["case_id", "json", "n"])
+    assert len(out) == 2
+    assert pa.Table.from_batches(out).to_pylist() == [
+        {"case_id": c, "json": j, "n": n}
+        for c, j, n in zip([10, 10, 20, 20, 30, 30], "abcdef", range(6))
     ]

@@ -13,9 +13,13 @@ Inputs outside the strict GeoJSON subset must DECLINE (return None) so
 the wrapper falls back to the Python path and error behavior on malformed
 geometry is unchanged.
 
-The batch entry (`pair_boolean_ops_batch_native`, one C call per Arrow
-batch with a last-row operand cache and rectangle operands) must give,
-row by row, what the per-row runner gives through `pair_rows`.
+The C side has one pair entry, `mz_pair_run_batch`: the per-pair
+runner is a one-row call of it, and the batch wrapper
+(`pair_boolean_ops_batch_native`, one C call per Arrow batch with a
+last-row operand cache and rectangle operands) must give, row by row,
+what the per-row runner gives through `pair_rows`. Rows the batch
+declines run on the Python marshalling path; a NaN or infinite
+coordinate gives status 'invalid_input' on every path.
 """
 
 import glob
@@ -27,7 +31,7 @@ import struct
 import pyarrow as pa
 import pytest
 
-from rust_geo_booleanop_spark.kernel import boolean_op
+from rust_geo_booleanop_spark.kernel import KernelInvalidInput, boolean_op
 from rust_geo_booleanop_spark.kernel.geojson import (
     multipolygon_bbox,
     parse_multipolygon,
@@ -227,7 +231,8 @@ def test_unknown_op_raises_like_python():
     with pytest.raises(ValueError, match="unknown operation"):
         pair_boolean_ops_native(SQUARE, SQUARE, ("intersection", "frobnicate"))
     col = pa.array([SQUARE])
-    assert pair_boolean_ops_batch_native(col, col, ("frobnicate",)) is None
+    with pytest.raises(ValueError, match="unknown operation"):
+        pair_boolean_ops_batch_native(col, col, ("frobnicate",))
     with pytest.raises(ValueError, match="unknown operation"):
         resolve_batch_runner()(col, col, ("intersection", "frobnicate"))
 
@@ -303,9 +308,10 @@ def _arrow_rows(rows):
 
 def _check_batch(subjects, clips, rects=None, ops=OPS, declined=(),
                  subject_col=None, clip_cols=None):
-    """Run one batch through the C entry and the batch runner; compare both,
-    row by row, with `pair_rows` over the per-row runner. Rows in
-    `declined` must come back declined (NULL slots) from the C entry."""
+    """Run one batch through the C entry and the batch runner of both
+    engines; compare each, row by row, with `pair_rows` over the per-row
+    runner. Rows in `declined` must come back declined (NULL slots) from
+    the C entry."""
     run = resolve_pair_runner()
     s_col = subject_col if subject_col is not None else pa.array(subjects, pa.string())
     if rects is None:
@@ -325,15 +331,15 @@ def _check_batch(subjects, clips, rects=None, ops=OPS, declined=(),
             assert rows == [(op,) + (None,) * 7 for op in ops]
             continue
         assert rows == _arrow_rows(pair_rows(run, s_json, c_json, ops)), i
-    if not declined or rects is None:
-        ref = [r for s_json, c_json in zip(subjects, clips) for r in pair_rows(run, s_json, c_json, ops)]
-        want = payload_columns(ref)
-        for got_col, want_col in zip(resolve_batch_runner()(s_col, c_arg, ops), want):
-            assert got_col.equals(want_col)
+    ref = [r for s_json, c_json in zip(subjects, clips) for r in pair_rows(run, s_json, c_json, ops)]
+    want = payload_columns(ref)
+    for engine in ("native", "python"):
+        for got_col, want_col in zip(resolve_batch_runner(engine)(s_col, c_arg, ops), want):
+            assert got_col.equals(want_col), engine
     return out
 
 
-def test_batch_json_operands_cache_nulls_and_decline():
+def test_batch_json_operands_cache_nulls_and_decline(monkeypatch):
     subjects = [
         SQUARE, SQUARE, SQUARE,  # one parse for a run of equal subjects
         SHIFTED, SQUARE,  # A, B, A: the cache must invalidate both times
@@ -353,6 +359,19 @@ def test_batch_json_operands_cache_nulls_and_decline():
     # equal bytes at different offsets of the data buffer hit the cache
     assert out.parses[0] == 8
 
+    # the declined row goes straight to the Python marshalling path: the
+    # C parser, which declined it once, is not asked again
+    def refuse(*args):
+        raise AssertionError("declined row sent back to the C pair runner")
+
+    monkeypatch.setattr(native, "pair_boolean_ops_native", refuse)
+    want = payload_columns(
+        [r for s_json, c_json in zip(subjects, clips)
+         for r in pair_rows(pair_boolean_ops_python, s_json, c_json, OPS)]
+    )
+    got = resolve_batch_runner()(pa.array(subjects), pa.array(clips), OPS)
+    assert all(g.equals(w) for g, w in zip(got, want))
+
 
 def test_batch_rectangle_operands():
     nan = float("nan")
@@ -364,14 +383,57 @@ def test_batch_rectangle_operands():
         (7.0, 7.0, 8.0, 8.0),  # disjoint: trivial result
         (0.25, 0.25, 0.75, 0.75),
         (0.5, None, 1.5, 1.5),  # a NULL bound mid-batch
-        (nan, 0.0, 1.0, 1.0),  # non-finite: declined
+        (nan, 0.0, 1.0, 1.0),  # non-finite: declined, then invalid_input
         (0.1, 0.2, 2.0 / 3.0, 1e-5),
         (1.0, 1.0, 1.0, 1.0),  # zero-area rectangle
     ]
-    # a NaN coordinate does not finish the sweep on the per-row path
-    # either, so the declined row is checked for its NULL slots only
     out = _check_batch(subjects, None, rects=rects, declined=[6])
     assert out.parses == (3, 0)
+    rect_cols = [pa.array(list(b), pa.float64()) for b in zip(*rects)]
+    got = resolve_batch_runner()(pa.array(subjects), rect_cols, OPS)
+    nan_rows = list(zip(*(c.to_pylist() for c in got)))[6 * len(OPS) : 7 * len(OPS)]
+    empty = serialize_multipolygon([])
+    assert nan_rows == [(op, empty, 0, None, None, None, None, "invalid_input") for op in OPS]
+
+
+def test_non_finite_coordinates_return_invalid_input():
+    """A NaN or infinite coordinate is rejected before the sweep (whose
+    event orders need not settle on it): KernelInvalidInput from both
+    kernels, status 'invalid_input' from the pair runners, at once."""
+    nan, inf = float("nan"), float("inf")
+    square = [[[(0.0, 0.0), (2.0, 0.0), (2.0, 2.0), (0.0, 2.0), (0.0, 0.0)]]]
+    for bounds in ((nan, 0.5, 1.5, 1.5), (-inf, 0.5, 1.5, 1.5), (0.5, 0.5, 1.5, inf)):
+        x0, y0, x1, y1 = bounds
+        bad = [[[(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]]]
+        for fn in (boolean_op, native.boolean_op_native):
+            for op in OPS:
+                with pytest.raises(KernelInvalidInput):
+                    fn(bad, square, op)
+                with pytest.raises(KernelInvalidInput):
+                    fn(square, bad, op)
+        bad_json = bbox_square_json(*bounds)
+        assert pair_boolean_ops_native(bad_json, SQUARE, OPS) is None  # declined
+        empty = serialize_multipolygon([])
+        for run in (pair_boolean_ops_python, resolve_pair_runner()):
+            rows = _arrow_rows(run(bad_json, SQUARE, OPS))
+            assert rows == [(op, empty, 0, None, None, None, None, "invalid_input") for op in OPS]
+
+
+def test_batch_many_rows_match_per_row_runner():
+    # a batch large enough that freed operand buffers get reused: the
+    # offsets arrays must stay alive for the whole C call
+    from rust_geo_booleanop_spark.sources.corpus import case_geometry
+
+    ops = OPS[:4]
+    pairs = [tuple(map(serialize_multipolygon, case_geometry(i))) for i in range(512)]
+    out = pair_boolean_ops_batch_native(
+        pa.array([s for s, _ in pairs]), pa.array([c for _, c in pairs]), ops
+    )
+    assert out.declined == []
+    got = list(zip(*(c.to_pylist() for c in out.columns)))
+    assert got == _arrow_rows(
+        [r for s_json, c_json in pairs for r in pair_boolean_ops_native(s_json, c_json, ops)]
+    )
 
 
 def test_batch_sliced_large_string_and_empty():
