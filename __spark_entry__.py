@@ -1503,18 +1503,20 @@ def _g09_fixture_suite(spark, sf_dir):
     through Spark and byte-compares its serialized result against the
     fixture's own expected geometry (`exact_match`). The oracle fixture
     tests/oracle_fixtures/g09_expected.parquet is parsed straight from
-    /root/reference/tests/fixtures/generic_test_cases — polygon counts
-    and exact_match=true come from reference data alone; OUR kernel is
-    never involved on the oracle side (scripts/gen_geo_oracle_fixtures.py,
-    freshness pinned by tests/test_oracle_fixtures.py). A hash-green g09
-    is therefore driver-gate-level proof of fixture exactness end-to-end
-    through the distributed path."""
+    the golden suite under `kernel.geojson.REFERENCE_FIXTURES` — polygon
+    counts and exact_match=true come from reference data alone; OUR
+    kernel is never involved on the oracle side
+    (scripts/gen_geo_oracle_fixtures.py, freshness pinned by
+    tests/test_oracle_fixtures.py). A hash-green g09 is therefore
+    driver-gate-level proof of fixture exactness end-to-end through the
+    distributed path. Without the corpus the query raises
+    `reference_case_files()`'s FileNotFoundError."""
+    from rust_geo_booleanop_spark.kernel.geojson import reference_case_files
     from rust_geo_booleanop_spark.operators import apply_boolean_ops
     from rust_geo_booleanop_spark.sources import fixture_pairs, read_feature_collections
 
-    features = read_feature_collections(
-        spark, "/root/reference/tests/fixtures/generic_test_cases"
-    )
+    cases = reference_case_files()
+    features = read_feature_collections(spark, os.path.dirname(cases[0]))
     pairs = fixture_pairs(features)
     res = apply_boolean_ops(
         pairs, ops=("intersection", "union", "diff", "diff_ba", "xor")

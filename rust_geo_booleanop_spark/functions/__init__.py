@@ -1,6 +1,5 @@
 from .cells import (
     bbox_cover_cells,
-    bbox_cover_cells_batch,
     cell_bounds,
     cell_size,
     decode_cell,
@@ -14,7 +13,6 @@ from .cells import (
 
 __all__ = [
     "bbox_cover_cells",
-    "bbox_cover_cells_batch",
     "cell_bounds",
     "cell_size",
     "decode_cell",

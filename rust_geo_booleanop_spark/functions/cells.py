@@ -14,6 +14,8 @@ Arrow batches; no per-row Python in the Spark path.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 # Level-0 cell edge length in world units; level L halves it L times.
@@ -98,8 +100,11 @@ def point_cells(x: np.ndarray, y: np.ndarray, level: int) -> np.ndarray:
 
 
 def bbox_cover_cells(xmin, ymin, xmax, ymax, level: int):
-    """List of cell ids covering one bbox (python ints). NaN bbox -> []."""
-    if not (xmin <= xmax and ymin <= ymax):  # handles NaN
+    """List of cell ids covering one bbox (python ints). A NaN, infinite
+    or inverted bbox -> []."""
+    if not all(map(math.isfinite, (xmin, ymin, xmax, ymax))):
+        return []
+    if xmin > xmax or ymin > ymax:
         return []
     size = cell_size(level)
     ix0 = int(np.floor(xmin / size))
@@ -112,14 +117,6 @@ def bbox_cover_cells(xmin, ymin, xmax, ymax, level: int):
         indexing="ij",
     )
     return encode_cells(ixs.ravel(), iys.ravel(), level).tolist()
-
-
-def bbox_cover_cells_batch(xmin, ymin, xmax, ymax, level: int):
-    """Vectorized-ish cover for arrays of bboxes -> list of lists."""
-    return [
-        bbox_cover_cells(a, b, c, d, level)
-        for a, b, c, d in zip(xmin, ymin, xmax, ymax)
-    ]
 
 
 # ---------------------------------------------------------------------------

@@ -18,8 +18,8 @@ so the coordinates differ while the shape class, counts, and coordinate
 ranges match — documented divergence, deterministic run-to-run here.
 
 The fixture-backed cases load the reference's own GeoJSON operands
-read-only; a loader whose fixture is absent returns None and callers
-skip that case.
+read-only from `geojson.REFERENCE_FIXTURES`; a loader whose fixture is
+absent returns None and callers skip that case.
 """
 
 from __future__ import annotations
@@ -29,9 +29,7 @@ import os
 
 import numpy as np
 
-from .geojson import load_fixture
-
-REFERENCE_FIXTURES = "/root/reference/tests/fixtures"
+from .geojson import REFERENCE_FIXTURES, load_fixture
 
 
 # ---------------------------------------------------------------------------

@@ -9,8 +9,15 @@ rounded strtod, matching serde's arbitrary-precision-to-f64 behavior.
 
 from __future__ import annotations
 
+import glob
 import json
+import os
 from typing import Any
+
+# The reference's GeoJSON fixture corpus, read in place and never written:
+# generic_test_cases/ holds the 45-case golden suite, benchmarks/ the
+# criterion operands, and the root a few component-test inputs.
+REFERENCE_FIXTURES = "/root/reference/tests/fixtures"
 
 
 def _close(ring):
@@ -73,6 +80,23 @@ def load_fixture(path: str):
         swap_broken = bool(props.get("swap_ab_is_broken", False))
         expected.append((op, geometry_to_multipolygon(feat["geometry"]), swap_broken))
     return subject, clipping, expected
+
+
+def reference_case_files() -> list[str]:
+    """The 45 golden-suite files (generic_test_cases/*.geojson), sorted.
+
+    Raises FileNotFoundError naming REFERENCE_FIXTURES when the corpus is
+    absent or incomplete, so every reader fails (or skips) with the same
+    message instead of passing over an empty list.
+    """
+    cases_dir = os.path.join(REFERENCE_FIXTURES, "generic_test_cases")
+    files = sorted(glob.glob(os.path.join(cases_dir, "*.geojson")))
+    if len(files) != 45:
+        raise FileNotFoundError(
+            f"reference corpus absent or incomplete: {len(files)} of 45 "
+            f"*.geojson cases in {cases_dir}"
+        )
+    return files
 
 
 def multipolygon_bbox(mp):

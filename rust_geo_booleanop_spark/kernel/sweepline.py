@@ -45,42 +45,12 @@ class SweepLine:
         items.insert(lo, event)
         return lo
 
-    # Below this status width a plain C-level identity scan beats the
-    # comparator bisect: one compare_segments probe (~30x an identity
-    # check) only amortizes once log2(n) probes replace ~n/2 checks.
-    _BISECT_MIN = 512
-
     def index_of(self, event: Event) -> int:
-        """Index of `event` by IDENTITY (or -1).
-
-        Narrow status (the common case — grids, coastlines, clipped
-        tiles): linear identity scan, no comparator calls.
-
-        Wide status (continent-scale inputs with thousands of segments
-        crossing one sweep position): binary search with the same
-        comparator that placed the event. While the list order is
-        consistent with `compare_segments` for `event`, every converging
-        search path must probe the event's own slot (the identity check
-        fires before the comparator), so the bisect finds it in O(log n).
-        The comparator can be INVALIDATED mid-sweep (divide_segment
-        repoints a stored event's `other`, see module docstring); then the
-        bisect may converge without an identity hit — fall back to the
-        linear scan. Either path returns the event's unique positional
-        index, so semantics are exactly those of a full scan.
-        """
-        items = self._items
-        if len(items) >= self._BISECT_MIN:
-            lo, hi = 0, len(items)
-            while lo < hi:
-                mid = (lo + hi) // 2
-                e = items[mid]
-                if e is event:
-                    return mid
-                if compare_segments(event, e) < 0:
-                    hi = mid
-                else:
-                    lo = mid + 1
-        for i, e in enumerate(items):
+        """Index of `event` by IDENTITY (or -1): a plain scan, the same as
+        the C twin's `sl_index_of`. No comparator call, so the result
+        stays correct after divide_segment repoints a stored event's
+        `other` (see module docstring)."""
+        for i, e in enumerate(self._items):
             if e is event:
                 return i
         return -1

@@ -36,9 +36,9 @@ def cover_cells_column(xmin, ymin, xmax, ymax, level: int):
     encode are each a single JVM op on longs, and the ix x iy product is
     sequence+transform+flatten — so tile assignment costs no Python
     worker round-trip at all (it was a per-row pandas UDF through round
-    3 and timed as much as the kernel stage at the default bench). A NaN
-    or inverted bbox yields an EMPTY array (the guard fails), matching
-    the python helper's [] for degraded rows."""
+    3 and timed as much as the kernel stage at the default bench). A NaN,
+    infinite or inverted bbox yields an EMPTY array (the guard fails),
+    matching the python helper's [] for degraded rows."""
     from ..functions.cells import cell_id_expr, cell_size
 
     size = float(cell_size(level))
@@ -55,16 +55,13 @@ def cover_cells_column(xmin, ymin, xmax, ymax, level: int):
             ),
         )
     )
-    # NB: Spark SQL orders NaN (NaN <= NaN is TRUE there, unlike Python),
-    # so degraded NaN bboxes need explicit isnan guards to yield []
-    valid = (
-        (xmin <= xmax)
-        & (ymin <= ymax)
-        & ~F.isnan(xmin)
-        & ~F.isnan(ymin)
-        & ~F.isnan(xmax)
-        & ~F.isnan(ymax)
-    )
+    # NB: Spark SQL orders NaN above +inf (NaN <= NaN is TRUE there, unlike
+    # Python), so |c| < inf is the finiteness test: false for NaN and ±inf.
+    # An infinite bound would otherwise ask F.sequence for ~2^63 cells.
+    inf = F.lit(float("inf"))
+    valid = (xmin <= xmax) & (ymin <= ymax)
+    for c in (xmin, ymin, xmax, ymax):
+        valid = valid & (F.abs(c) < inf)
     return F.when(valid, cells).otherwise(F.array().cast(ArrayType(LongType())))
 
 

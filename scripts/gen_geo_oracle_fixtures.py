@@ -14,7 +14,7 @@ Two provenance classes, both committed under tests/oracle_fixtures/:
 
 - g09 (REFERENCE-DATA oracle — no kernel involved): for every expected
   feature annotated in the reference's own GeoJSON fixture corpus
-  (/root/reference/tests/fixtures/generic_test_cases, read in place),
+  (`kernel.geojson.reference_case_files()`, read in place),
   the expected polygon count and exact_match=true. The Spark query runs
   each annotated op through the kernel and compares its serialized
   result byte-for-byte against the fixture's expected geometry, so a
@@ -29,7 +29,6 @@ Usage: python scripts/gen_geo_oracle_fixtures.py
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import sys
@@ -39,7 +38,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 FIXDIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "oracle_fixtures"
 )
-REF_FIXTURES = "/root/reference/tests/fixtures/generic_test_cases"
 N_CASES = 2500  # sf0.1's documents table: doc_ids 0..4999 -> cases 0..2499
 OPS = ("intersection", "union", "diff", "xor")  # boolean_join.DEFAULT_OPS
 TILE_LEVEL = 4  # tiling.DEFAULT_TILE_LEVEL
@@ -304,10 +302,11 @@ def g09_expected_rows():
     from rust_geo_booleanop_spark.kernel.geojson import (
         geometry_to_multipolygon,
         multipolygon_to_geometry,
+        reference_case_files,
     )
 
     rows = []
-    for path in sorted(glob.glob(os.path.join(REF_FIXTURES, "*.geojson"))):
+    for path in reference_case_files():
         case_key = os.path.basename(path)[: -len(".geojson")]
         with open(path, "rb") as f:
             fc = json.loads(f.read().decode("utf-8"))

@@ -21,7 +21,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rust_geo_booleanop_spark.kernel import boolean_op, load_fixture
-from run_single_fixture import resolve  # noqa: E402
+from run_single_fixture import refuse_corpus_write, resolve  # noqa: E402
 
 PANEL = 280
 PAD = 14
@@ -88,8 +88,7 @@ def main():
         raise SystemExit(__doc__)
     path = resolve(args[0])
     out_path = os.path.abspath(args[1])
-    if out_path.startswith("/root/reference"):
-        raise SystemExit("refusing to write into the read-only reference corpus")
+    refuse_corpus_write(out_path)
 
     subject, clipping, expected = load_fixture(path)
     panels = [

@@ -33,21 +33,25 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rust_geo_booleanop_spark.kernel import boolean_op, load_fixture
-from rust_geo_booleanop_spark.kernel.geojson import multipolygon_to_geometry
-
-FIXTURE_DIR = "/root/reference/tests/fixtures/generic_test_cases"
+from rust_geo_booleanop_spark.kernel.geojson import (
+    REFERENCE_FIXTURES,
+    multipolygon_to_geometry,
+    reference_case_files,
+)
 
 
 def resolve(name: str) -> str:
     if os.path.exists(name):
         return name
-    cand = os.path.join(FIXTURE_DIR, name)
-    if os.path.exists(cand):
-        return cand
-    cand = os.path.join(FIXTURE_DIR, name + ".geojson")
-    if os.path.exists(cand):
-        return cand
-    raise SystemExit(f"fixture not found: {name!r} (looked in {FIXTURE_DIR})")
+    for path in reference_case_files():
+        if os.path.basename(path) in (name, name + ".geojson"):
+            return path
+    raise SystemExit(f"fixture not found: {name!r} (not a golden-suite case either)")
+
+
+def refuse_corpus_write(out_path: str) -> None:
+    if out_path.startswith(REFERENCE_FIXTURES):
+        raise SystemExit("refusing to write into the read-only reference corpus")
 
 
 def first_divergence(got, want):
@@ -115,8 +119,7 @@ def main():
 
     if args.regen:
         out_path = os.path.abspath(args.regen)
-        if out_path.startswith("/root/reference"):
-            raise SystemExit("refusing to write into the read-only reference corpus")
+        refuse_corpus_write(out_path)
         with open(path) as f:
             fc = json.load(f)
         feats = fc["features"][:2]

@@ -1,12 +1,27 @@
+import importlib.util
 import os
 import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-REFERENCE_FIXTURES = "/root/reference/tests/fixtures/generic_test_cases"
+from rust_geo_booleanop_spark.kernel.geojson import reference_case_files  # noqa: E402
+
 TESTDATA_SF = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+# The reference golden suite, or [] with the reason it is missing. Tests
+# that cannot say anything without it carry `requires_reference_corpus`;
+# tests that assert on it call reference_case_files() and fail.
+try:
+    REFERENCE_CASES, _corpus_missing = reference_case_files(), ""
+except FileNotFoundError as e:
+    REFERENCE_CASES, _corpus_missing = [], str(e)
+
+requires_reference_corpus = pytest.mark.skipif(
+    bool(_corpus_missing), reason=_corpus_missing
+)
 
 
 @pytest.fixture(scope="session")
@@ -16,3 +31,17 @@ def spark():
     spark = get_spark(app_name="pytest", master="local[4]", shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def soak_slice():
+    """soak_slice(mode, n) runs scripts/kernel_soak.py's `mode` (run,
+    run_pairs or run_f32) over n seeds from 777001. The range is pinned,
+    outside every swept range, so CI never fails by seed lottery; explore
+    new seeds with the script's own command line."""
+    spec = importlib.util.spec_from_file_location(
+        "kernel_soak", os.path.join(ROOT, "scripts", "kernel_soak.py")
+    )
+    soak = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(soak)
+    return lambda mode, n_cases: getattr(soak, mode)(n_cases=n_cases, seed0=777001)

@@ -21,6 +21,7 @@ from rust_geo_booleanop_spark.operators import (
     with_text_stats,
     document_fingerprint,
 )
+from tests.conftest import TESTDATA_SF
 
 BASE = (
     "the quick brown fox jumps over the lazy dog and then runs far away "
@@ -86,7 +87,7 @@ class TestMinhash:
             minhash_candidates,
         )
 
-        d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        d = spark.read.parquet(f"{TESTDATA_SF}/documents.parquet")
         got = {
             (r.id_a, r.id_b): r.jaccard
             for r in jaccard_verify(
@@ -510,12 +511,9 @@ class TestSimilarity:
         """OR-amplified LSH must recover most exact near-dup pairs (the
         single-table construction measured only ~5% recall at this
         threshold) and emit no false positives."""
-        import os
-
         from rust_geo_booleanop_spark.operators import cosine_near_dup_exact
 
-        sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-        emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+        emb = spark.read.parquet(f"{TESTDATA_SF}/embeddings.parquet")
         exact = {(r.id_a, r.id_b) for r in cosine_near_dup_exact(emb, 0.3).collect()}
         lsh = {
             (r.id_a, r.id_b)
@@ -550,12 +548,9 @@ class TestSimilarity:
         assert not any(2 in p for p in pairs)
 
     def test_kmeans_pivots_deterministic_and_better(self, spark):
-        import os
-
         from rust_geo_booleanop_spark.operators import ivf_cosine_topk, kmeans_pivots
 
-        sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-        emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+        emb = spark.read.parquet(f"{TESTDATA_SF}/embeddings.parquet")
         piv1 = sorted(
             (r.pivot_id, tuple(r.pivot_vec)) for r in kmeans_pivots(emb, k=8, iters=2).collect()
         )
@@ -880,7 +875,7 @@ class TestSemanticDedup:
             semantic_dedup,
         )
 
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        emb = spark.read.parquet(f"{TESTDATA_SF}/embeddings.parquet")
         out = semantic_dedup(emb, dim=64, threshold=0.3).collect()
         n_vecs = emb.count()
         # totality: one row per vector, keep <=> own representative

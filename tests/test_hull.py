@@ -9,6 +9,7 @@ from rust_geo_booleanop_spark.operators.hull import (
     monotone_chain,
     multipolygon_hull,
 )
+from tests.conftest import TESTDATA_SF
 
 SQUARE = [[[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0], [0.0, 0.0]]]
 
@@ -91,7 +92,7 @@ class TestConvexHullSpark:
         from rust_geo_booleanop_spark.sources import build_documents
 
         geoms = extract_geometries(
-            build_documents(spark, "/root/testdata/sf0.001")
+            build_documents(spark, TESTDATA_SF)
         ).select("case_id", "role", "geom_json")
         out = convex_hull_geometries(geoms)
         rows = out.filter(F.col("case_id") < 10).collect()

@@ -6,26 +6,17 @@ ops are re-run with swapped operands (unless swap_ab_is_broken).
 Skipped when the reference corpus is not present.
 """
 
-import glob
 import os
 
 import pytest
 
 from rust_geo_booleanop_spark.kernel import boolean_op, load_fixture
-
-FIXTURE_DIR = "/root/reference/tests/fixtures/generic_test_cases"
-
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(FIXTURE_DIR), reason="reference fixture corpus not available"
-)
+from tests.conftest import REFERENCE_CASES, requires_reference_corpus
 
 
-def fixture_files():
-    return sorted(glob.glob(f"{FIXTURE_DIR}/*.geojson"))
-
-
+@requires_reference_corpus
 @pytest.mark.parametrize(
-    "path", fixture_files(), ids=[os.path.basename(p) for p in fixture_files()]
+    "path", REFERENCE_CASES, ids=[os.path.basename(p) for p in REFERENCE_CASES]
 )
 def test_fixture_exact(path):
     subject, clipping, expected = load_fixture(path)

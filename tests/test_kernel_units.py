@@ -13,6 +13,11 @@ from rust_geo_booleanop_spark.kernel.predicates import (
 )
 from rust_geo_booleanop_spark.kernel.events import Event, event_is_before, compare_segments
 from rust_geo_booleanop_spark.kernel.booleanop import boolean_op, divide_segment
+from rust_geo_booleanop_spark.kernel.geojson import (
+    REFERENCE_FIXTURES,
+    load_fixture,
+    reference_case_files,
+)
 
 
 def sa(p0, p1, p2):
@@ -211,55 +216,16 @@ class TestBooleanOpBasics:
         assert boolean_op(a, b, "diff_ba") == boolean_op(b, a, "diff")
 
 
-class TestSweepLineBisect:
-    def test_wide_status_bisect_matches_linear_scan(self):
-        """Above _BISECT_MIN the status lookup switches to the comparator
-        bisect; results must equal the plain linear-scan implementation on
-        a wide-status input (staggered sliver stack, status width ~1400)."""
-        from rust_geo_booleanop_spark.kernel.sweepline import SweepLine
-
-        n = 700
-        a = []
-        for i in range(n):
-            xr = 60.0 + (i * 7919 % 997) / 30.0
-            y = float(3 * i)
-            a.append([[(0.0, y), (xr, y), (xr, y + 1.0), (0.0, y + 1.0), (0.0, y)]])
-        b = [[[(-1.0, -1.0), (101.0, -1.0), (101.0, 3 * n + 1.0),
-               (-1.0, 3 * n + 1.0), (-1.0, -1.0)]]]
-
-        got = boolean_op(a, b, "intersection")
-
-        def linear_index_of(self, event):
-            for i, e in enumerate(self._items):
-                if e is event:
-                    return i
-            return -1
-
-        orig = SweepLine.index_of
-        SweepLine.index_of = linear_index_of
-        try:
-            want = boolean_op(a, b, "intersection")
-        finally:
-            SweepLine.index_of = orig
-        assert got == want
-        assert len(got) == n
-
-
 class TestF32Surface:
     """f32-width mode (reference Float-trait parity: helper.rs:8-10)."""
 
     def test_f32_results_are_f32_representable_and_close_to_f64(self):
-        import glob
-
         import numpy as np
 
-        from rust_geo_booleanop_spark.kernel import boolean_op_f32, load_fixture
+        from rust_geo_booleanop_spark.kernel import boolean_op_f32
 
-        paths = sorted(
-            glob.glob("/root/reference/tests/fixtures/generic_test_cases/*.geojson")
-        )[:8]
         checked = 0
-        for path in paths:
+        for path in reference_case_files()[:8]:
             subject, clipping, expected = load_fixture(path)
             for op, exp, _swap in expected:
                 got = boolean_op_f32(subject, clipping, op)
@@ -328,9 +294,14 @@ from rust_geo_booleanop_spark.kernel.booleanop import (
     possible_intersection,
     subdivide,
 )
-from rust_geo_booleanop_spark.kernel.geojson import load_fixture
 
-_FIXDIR = "/root/reference/tests/fixtures"
+
+def _component_fixture(name):
+    # component-test inputs sit at the corpus root; without the corpus
+    # this fails on reference_case_files()'s message, not a bare open()
+    reference_case_files()
+    return load_fixture(f"{REFERENCE_FIXTURES}/{name}")
+
 
 _INF = float("inf")
 
@@ -350,7 +321,7 @@ def _make_simple(a, b, is_subject):
 class TestFillQueueGoldens:
     def test_two_polygons_pop_order(self):
         # fill_queue_test.rs:10-58 test_two_polygons
-        s, c, _ = load_fixture(f"{_FIXDIR}/two_shapes.geojson")
+        s, c, _ = _component_fixture("two_shapes.geojson")
         q = fill_queue(s, c, _fresh_bbox(), _fresh_bbox(), "intersection")
         popped = []
         while q:
@@ -375,7 +346,7 @@ class TestFillQueueGoldens:
 
     def test_fill_event_queue_two_triangles(self):
         # fill_queue_test.rs:60-115 test_fill_event_queue
-        s, c, _ = load_fixture(f"{_FIXDIR}/two_triangles.geojson")
+        s, c, _ = _component_fixture("two_triangles.geojson")
         sbbox, cbbox = _fresh_bbox(), _fresh_bbox()
         q = fill_queue(s, c, sbbox, cbbox, "intersection")
         assert sbbox == [20.0, -113.5, 226.5, 74.0]
@@ -403,7 +374,7 @@ class TestFillQueueGoldens:
 class TestPossibleIntersectionGoldens:
     def test_possible_intersection_exact_coords(self):
         # possible_intersection_test.rs:23-73 test_possible_intersection
-        s, c, _ = load_fixture(f"{_FIXDIR}/two_shapes.geojson")
+        s, c, _ = _component_fixture("two_shapes.geojson")
         s_ext = s[0][0]
         c_ext = c[0][0]
         q = []
@@ -419,7 +390,7 @@ class TestPossibleIntersectionGoldens:
 
     def test_on_two_polygons_subdivide_intervals(self):
         # possible_intersection_test.rs:76-168 test_on_two_polygons
-        s, c, _ = load_fixture(f"{_FIXDIR}/two_shapes.geojson")
+        s, c, _ = _component_fixture("two_shapes.geojson")
         sbbox, cbbox = _fresh_bbox(), _fresh_bbox()
         q = fill_queue(s, c, sbbox, cbbox, "intersection")
 

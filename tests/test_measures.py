@@ -12,6 +12,7 @@ from rust_geo_booleanop_spark.operators import (
     measures_python,
     tfidf_top_terms,
 )
+from tests.conftest import TESTDATA_SF
 
 UNIT_SQUARE = {
     "type": "MultiPolygon",
@@ -74,7 +75,7 @@ class TestGeometryMeasures:
         from rust_geo_booleanop_spark.sources import build_documents
 
         geoms = extract_geometries(
-            build_documents(spark, "/root/testdata/sf0.001")
+            build_documents(spark, TESTDATA_SF)
         ).select("case_id", "role", "geom_json")
         rows = geometry_measures(geoms).collect()
         assert len(rows) == 500
@@ -301,7 +302,7 @@ class TestShapeStats:
         from rust_geo_booleanop_spark.sources import build_documents
 
         geoms = extract_geometries(
-            build_documents(spark, "/root/testdata/sf0.001")
+            build_documents(spark, TESTDATA_SF)
         ).select("case_id", "role", "geom_json")
         rows = shape_stats(geoms).collect()
         assert len(rows) == 500

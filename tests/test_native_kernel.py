@@ -12,7 +12,6 @@ Any edit to martinez.c OR to the Python kernel must keep this file green
 probe-order drift — see the exactness contract in martinez.c's header).
 """
 
-import glob
 import os
 
 import pytest
@@ -24,6 +23,7 @@ from rust_geo_booleanop_spark.kernel import (
     resolve_boolean_op,
 )
 from rust_geo_booleanop_spark.kernel.native import NATIVE_AVAILABLE
+from tests.conftest import REFERENCE_CASES, requires_reference_corpus
 
 if NATIVE_AVAILABLE:
     from rust_geo_booleanop_spark.kernel.native import boolean_op_native
@@ -32,21 +32,12 @@ pytestmark = pytest.mark.skipif(
     not NATIVE_AVAILABLE, reason="native kernel unavailable (no gcc?)"
 )
 
-FIXTURE_DIR = "/root/reference/tests/fixtures/generic_test_cases"
 OPS = ("intersection", "union", "diff", "xor", "diff_ba")
 
 
-FIXTURE_FILES = sorted(glob.glob(os.path.join(FIXTURE_DIR, "*.geojson")))
-
-
-def _fixture_files_or_skip():
-    if not FIXTURE_FILES:
-        pytest.skip(f"reference corpus missing: no *.geojson in {FIXTURE_DIR}")
-    return FIXTURE_FILES
-
-
+@requires_reference_corpus
 @pytest.mark.parametrize(
-    "path", FIXTURE_FILES, ids=[os.path.basename(p)[:-8] for p in FIXTURE_FILES]
+    "path", REFERENCE_CASES, ids=[os.path.basename(p)[:-8] for p in REFERENCE_CASES]
 )
 def test_native_matches_python_on_fixture(path):
     subject, clipping, _ = load_fixture(path)
@@ -82,6 +73,24 @@ def test_native_matches_python_on_corpus_templates():
         s, c = case_geometry(t)
         for op in ("intersection", "union", "diff", "xor"):
             assert boolean_op_native(s, c, op) == boolean_op(s, c, op), (t, op)
+
+
+def test_native_matches_python_on_wide_status():
+    """A staggered stack of 700 slivers inside one box: ~1,400 segments
+    cross one sweep position (no corpus template or soak case passes
+    48), so both engines' status scans run on a wide status."""
+    n = 700
+    a = []
+    for i in range(n):
+        xr = 60.0 + (i * 7919 % 997) / 30.0
+        y = float(3 * i)
+        a.append([[(0.0, y), (xr, y), (xr, y + 1.0), (0.0, y + 1.0), (0.0, y)]])
+    b = [[[(-1.0, -1.0), (101.0, -1.0), (101.0, 3 * n + 1.0),
+           (-1.0, 3 * n + 1.0), (-1.0, -1.0)]]]
+
+    got = boolean_op(a, b, "intersection")
+    assert len(got) == n
+    assert boolean_op_native(a, b, "intersection") == got
 
 
 def test_native_limit_behavior_matches_python():
@@ -212,12 +221,13 @@ def _mp_area(mp):
 
 
 @f32_mark
+@requires_reference_corpus
 def test_f32_native_outputs_are_binary32_exact_and_deterministic():
     import numpy as np
 
     from rust_geo_booleanop_spark.kernel.f32 import boolean_op_f32
 
-    for path in _fixture_files_or_skip()[:10]:
+    for path in REFERENCE_CASES[:10]:
         subject, clipping, _ = load_fixture(path)
         for op in ("intersection", "union", "diff", "xor"):
             r1 = boolean_op_f32(subject, clipping, op, compute="f32")
@@ -253,6 +263,7 @@ def test_f32_native_matches_f64_storage_path_on_integer_coords():
 
 
 @f32_mark
+@requires_reference_corpus
 def test_f32_native_area_agreement_on_fixtures():
     """Across the full fixture corpus the two compute widths must agree on
     area within 1e-3 relative — EXCEPT the fatal1/fatal2 adversarial
@@ -260,7 +271,7 @@ def test_f32_native_area_agreement_on_fixtures():
     f32/f64 instantiations diverge (documented in kernel/f32.py)."""
     from rust_geo_booleanop_spark.kernel.f32 import boolean_op_f32
 
-    for path in _fixture_files_or_skip():
+    for path in REFERENCE_CASES:
         name = os.path.basename(path)
         if name.startswith("fatal"):
             continue
@@ -277,7 +288,7 @@ def test_f32_native_area_agreement_on_fixtures():
             assert abs(_mp_area(a32) - ref) <= 1e-3 * max(ref, 1e-9), (name, op)
 
 
-def test_differential_soak_sample():
+def test_differential_soak_sample(soak_slice):
     """A slice of scripts/kernel_soak.py runs in CI: seeded random cases
     weighted toward degenerate classes (integer-snapped collinear
     overlaps, coincident rectilinear boundaries, slivers, 1-ULP nudges),
@@ -285,23 +296,13 @@ def test_differential_soak_sample():
     inclusion-exclusion. The full 5000-case / 25000-op-run soak
     (230 agreed-limit-exceeded, 0 divergences) is the round-4 record;
     this pins a deterministic 60-case slice outside that swept range
-    (CI must never fail by seed lottery — explore NEW seeds via
-    SPARK_GRAFT_SOAK_SEED0 or the script directly)."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "kernel_soak",
-        os.path.join(os.path.dirname(__file__), "..", "scripts", "kernel_soak.py"),
-    )
-    soak = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(soak)
-    seed0 = int(os.environ.get("SPARK_GRAFT_SOAK_SEED0", "777001"))
-    soak.run(n_cases=60, seed0=seed0)
+    (CI must never fail by seed lottery — explore NEW seeds with the
+    script directly)."""
+    soak_slice("run", 60)
 
 
 @f32_mark
-def test_f32_soak_sample():
+def test_f32_soak_sample(soak_slice):
     """Deterministic slice of `scripts/kernel_soak.py --f32`: the
     true-binary32 native sweep over the same degenerate-class case
     generator, checked semantically (no Python twin at this width):
@@ -309,14 +310,4 @@ def test_f32_soak_sample():
     binary32-exact output coordinates, and star-vs-star
     inclusion-exclusion at f32 precision. Same seed-lottery rule as the
     f64 slice: CI pins a fixed range; explore NEW seeds via the script."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "kernel_soak",
-        os.path.join(os.path.dirname(__file__), "..", "scripts", "kernel_soak.py"),
-    )
-    soak = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(soak)
-    seed0 = int(os.environ.get("SPARK_GRAFT_SOAK_SEED0", "777001"))
-    soak.run_f32(n_cases=30, seed0=seed0)
+    soak_slice("run_f32", 30)

@@ -22,7 +22,6 @@ declines run on the Python marshalling path; a NaN or infinite
 coordinate gives status 'invalid_input' on every path.
 """
 
-import glob
 import json
 import math
 import random
@@ -35,6 +34,7 @@ from rust_geo_booleanop_spark.kernel import KernelInvalidInput, boolean_op
 from rust_geo_booleanop_spark.kernel.geojson import (
     multipolygon_bbox,
     parse_multipolygon,
+    reference_case_files,
     serialize_multipolygon,
 )
 from rust_geo_booleanop_spark.kernel.native import NATIVE_AVAILABLE
@@ -61,7 +61,6 @@ pytestmark = pytest.mark.skipif(
     not NATIVE_AVAILABLE, reason="native kernel unavailable (no gcc?)"
 )
 
-FIXTURE_DIR = "/root/reference/tests/fixtures/generic_test_cases"
 OPS = ("intersection", "union", "diff", "xor", "diff_ba")
 
 SQUARE = '{"type":"Polygon","coordinates":[[[0,0],[2,0],[2,2],[0,2],[0,0]]]}'
@@ -108,9 +107,7 @@ def test_repr_battery_matches_python_repr():
 
 
 def test_all_fixtures_both_orders_all_ops():
-    fixtures = sorted(glob.glob(f"{FIXTURE_DIR}/*.geojson"))
-    assert len(fixtures) == 45
-    for fx in fixtures:
+    for fx in reference_case_files():
         with open(fx) as f:
             fc = json.load(f)
         feats = fc["features"]
@@ -211,14 +208,12 @@ def test_limit_exceeded_rows_match():
 
 
 def test_parse_bbox_native_parity():
-    fixtures = sorted(glob.glob(f"{FIXTURE_DIR}/*.geojson"))
-    for fx in fixtures[:12]:
-        with open(fx) as f:
-            fc = json.load(f)
-        for feat in fc["features"][:2]:
-            gj = json.dumps(feat["geometry"], separators=(",", ":"))
-            bb = parse_bbox_native(gj)
-            assert bb == multipolygon_bbox(parse_multipolygon(gj))
+    from rust_geo_booleanop_spark.sources.corpus import case_geometry
+
+    corpus = [serialize_multipolygon(mp) for t in range(80) for mp in case_geometry(t)]
+    assert corpus
+    for gj in [SQUARE] + corpus:
+        assert parse_bbox_native(gj) == multipolygon_bbox(parse_multipolygon(gj))
     # empty geometry: multipolygon_bbox's (inf, inf, -inf, -inf)
     assert parse_bbox_native('{"type":"MultiPolygon","coordinates":[]}') == (
         float("inf"), float("inf"), float("-inf"), float("-inf"),
@@ -262,24 +257,14 @@ def test_resolver_engine_selection(monkeypatch):
     assert resolve_bbox_fn()(SQUARE) == (0.0, 0.0, 2.0, 2.0)
 
 
-def test_pair_runner_differential_soak_sample():
+def test_pair_runner_differential_soak_sample(soak_slice):
     """Deterministic slice of `scripts/kernel_soak.py --pairs`: random
     degenerate-weighted cases through BOTH pair runners (GeoJSON in,
     GeoJSON + bbox + status rows out), byte-exact row agreement
     (NaN-aware on empty-result bboxes). Round-4 full record: 3000 cases
-    / 15000 op-rows byte-exact, 0 divergences. New seeds via
-    SPARK_GRAFT_SOAK_SEED0."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "kernel_soak",
-        os.path.join(os.path.dirname(__file__), "..", "scripts", "kernel_soak.py"),
-    )
-    soak = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(soak)
-    seed0 = int(os.environ.get("SPARK_GRAFT_SOAK_SEED0", "777001"))
-    soak.run_pairs(n_cases=40, seed0=seed0)
+    / 15000 op-rows byte-exact, 0 divergences. New seeds via the
+    script's command line."""
+    soak_slice("run_pairs", 40)
 
 
 # --- batch entry: one C call per Arrow batch -------------------------------

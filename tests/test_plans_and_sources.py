@@ -8,9 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rust_geo_booleanop_spark.sources import raster_grid
-
-TESTDATA = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-FIXTURE_DIR = "/root/reference/tests/fixtures/generic_test_cases"
+from tests.conftest import REFERENCE_CASES, TESTDATA_SF, requires_reference_corpus
 
 
 def plan_str(df) -> str:
@@ -22,7 +20,7 @@ def plan_str(df) -> str:
 
 class TestPlanShapes:
     def test_filter_pushdown_reaches_scan(self, spark):
-        li = spark.read.parquet(f"{TESTDATA}/lineitem.parquet")
+        li = spark.read.parquet(f"{TESTDATA_SF}/lineitem.parquet")
         df = li.filter(F.col("l_quantity") >= 30.0).select("l_orderkey", "l_quantity")
         plan = plan_str(df)
         assert "PushedFilters" in plan
@@ -35,8 +33,8 @@ class TestPlanShapes:
         # NO broadcast hint: the assertion is that Catalyst AUTO-broadcasts
         # a small dim under autoBroadcastJoinThreshold — an explicit hint
         # would make this pass even if the threshold were disabled
-        o = spark.read.parquet(f"{TESTDATA}/orders.parquet")
-        c = spark.read.parquet(f"{TESTDATA}/customer.parquet")
+        o = spark.read.parquet(f"{TESTDATA_SF}/orders.parquet")
+        c = spark.read.parquet(f"{TESTDATA_SF}/customer.parquet")
         plan = plan_str(o.join(c, o.o_custkey == c.c_custkey))
         assert "BroadcastHashJoin" in plan
 
@@ -50,7 +48,7 @@ class TestPlanShapes:
         )
         from rust_geo_booleanop_spark.sources import build_documents
 
-        geoms = extract_geometries(build_documents(spark, TESTDATA))
+        geoms = extract_geometries(build_documents(spark, TESTDATA_SF))
         results = boolean_pipeline(geoms)
         for df in (results, clip_to_tiles(assign_tiles(results)), tile_area_weights(geoms)):
             plan = plan_str(df)
@@ -65,8 +63,8 @@ class TestPlanShapes:
         warehouse = str(tmp_path / "wh")
         spark.sql(f"CREATE DATABASE IF NOT EXISTS buckdemo LOCATION '{warehouse}'")
         try:
-            orders = spark.read.parquet(f"{TESTDATA}/orders.parquet")
-            li = spark.read.parquet(f"{TESTDATA}/lineitem.parquet")
+            orders = spark.read.parquet(f"{TESTDATA_SF}/orders.parquet")
+            li = spark.read.parquet(f"{TESTDATA_SF}/lineitem.parquet")
             (orders.write.format("parquet").bucketBy(8, "o_orderkey")
              .sortBy("o_orderkey").mode("overwrite")
              .saveAsTable("buckdemo.orders_b"))
@@ -101,7 +99,7 @@ class TestPlanShapes:
         from rust_geo_booleanop_spark.sources import build_documents
 
         out = str(tmp_path / "geoms")
-        geoms = extract_geometries(build_documents(spark, TESTDATA))
+        geoms = extract_geometries(build_documents(spark, TESTDATA_SF))
         geoms.write.mode("overwrite").parquet(out)
 
         back = spark.read.parquet(out).filter(
@@ -114,16 +112,16 @@ class TestPlanShapes:
         assert back.count() > 0
 
 
-@pytest.mark.skipif(not os.path.isdir(FIXTURE_DIR), reason="reference corpus missing")
+@requires_reference_corpus
 class TestGeoJsonSource:
     def test_read_feature_collections(self, spark):
         from rust_geo_booleanop_spark.sources import fixture_pairs, read_feature_collections
 
-        features = read_feature_collections(spark, FIXTURE_DIR)
+        features = read_feature_collections(spark, os.path.dirname(REFERENCE_CASES[0]))
         n_files = features.select("case_key").distinct().count()
-        assert n_files == 45
+        assert n_files == len(REFERENCE_CASES)
         pairs = fixture_pairs(features)
-        assert pairs.count() == 45
+        assert pairs.count() == len(REFERENCE_CASES)
 
     def test_roundtrip_write(self, spark, tmp_path):
         import json
@@ -135,7 +133,7 @@ class TestGeoJsonSource:
             write_feature_collection,
         )
 
-        features = read_feature_collections(spark, FIXTURE_DIR)
+        features = read_feature_collections(spark, os.path.dirname(REFERENCE_CASES[0]))
         pairs = fixture_pairs(features).filter(F.col("case_key") == "basic1_poly")
         res = apply_boolean_ops(pairs)
         out = str(tmp_path / "out.geojson")
@@ -166,18 +164,14 @@ class TestCompactGeojsonWriter:
     numbers."""
 
     def test_all_45_fixtures_roundtrip_byte_identical(self):
-        import glob
         import json
 
+        from rust_geo_booleanop_spark.kernel.geojson import reference_case_files
         from rust_geo_booleanop_spark.sources.geojson_source import (
             compact_feature_collection,
         )
 
-        files = sorted(
-            glob.glob("/root/reference/tests/fixtures/generic_test_cases/*.geojson")
-        )
-        assert len(files) == 45
-        for path in files:
+        for path in reference_case_files():
             orig = open(path).read()
             ours = compact_feature_collection(json.loads(orig)["features"])
             assert ours == orig, path
@@ -206,7 +200,7 @@ def test_flagship_plan_scans_documents_once(spark):
     )
     from rust_geo_booleanop_spark.sources import build_documents
 
-    docs = build_documents(spark, TESTDATA)
+    docs = build_documents(spark, TESTDATA_SF)
     tiled = assign_tiles(boolean_pipeline(extract_geometries(docs)))
     plan = tiled._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
@@ -274,7 +268,7 @@ def test_token_freq_score_plan_reuses_tfd(spark):
     from rust_geo_booleanop_spark.operators import token_freq_score
 
     df = token_freq_score(
-        spark.read.parquet(f"{TESTDATA}/documents.parquet")
+        spark.read.parquet(f"{TESTDATA_SF}/documents.parquet")
     )
     df.collect()  # AQE finalizes the plan only after execution
     plan = df._jdf.queryExecution().executedPlan().toString()

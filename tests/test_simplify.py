@@ -7,6 +7,7 @@ from rust_geo_booleanop_spark.operators.simplify import (
     _dp_keep_mask,
     simplify_multipolygon,
 )
+from tests.conftest import TESTDATA_SF
 
 
 def _circle_ring(n=24, r=10.0, cx=0.0, cy=0.0):
@@ -88,7 +89,7 @@ class TestSparkSimplify:
         from scripts.gen_geo_oracle_fixtures import g17_simplify_rows
 
         geoms = extract_geometries(
-            build_documents(spark, "/root/testdata/sf0.001")
+            build_documents(spark, TESTDATA_SF)
         ).select("case_id", "role", "geom_json")
         got = {
             (r.case_id, r.role): (

@@ -8,7 +8,6 @@
    boolean results equal a local kernel run on identical inputs.
 """
 
-import glob
 import json
 import os
 
@@ -29,16 +28,14 @@ from rust_geo_booleanop_spark.operators import (
     pair_candidates,
 )
 from rust_geo_booleanop_spark.sources import build_documents
-
-FIXTURE_DIR = "/root/reference/tests/fixtures/generic_test_cases"
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+from tests.conftest import REFERENCE_CASES, TESTDATA_SF, requires_reference_corpus
 
 
-@pytest.mark.skipif(not os.path.isdir(FIXTURE_DIR), reason="reference corpus missing")
+@requires_reference_corpus
 def test_fixture_suite_through_spark(spark):
     rows = []
     expect = {}
-    for path in sorted(glob.glob(f"{FIXTURE_DIR}/*.geojson")):
+    for path in REFERENCE_CASES:
         name = os.path.basename(path)
         subject, clipping, expected = load_fixture(path)
         s_json = json.dumps(multipolygon_to_geometry(subject))
@@ -67,7 +64,7 @@ def test_fixture_suite_through_spark(spark):
 
 
 def test_text_byte_identical_invariant(spark):
-    docs = build_documents(spark, SF_DIR)
+    docs = build_documents(spark, TESTDATA_SF)
     geoms = extract_geometries(docs)
     joined = (
         docs.select("url", F.col("text").alias("text_in"))
@@ -82,7 +79,7 @@ def test_text_byte_identical_invariant(spark):
 
 
 def test_spark_results_match_local_kernel(spark):
-    docs = build_documents(spark, SF_DIR)
+    docs = build_documents(spark, TESTDATA_SF)
     geoms = extract_geometries(docs)
     results = boolean_pipeline(geoms)
     collected = results.select(
@@ -101,7 +98,7 @@ def test_spark_results_match_local_kernel(spark):
 
 
 def test_pair_join_cardinality(spark):
-    docs = build_documents(spark, SF_DIR)
+    docs = build_documents(spark, TESTDATA_SF)
     geoms = extract_geometries(docs)
     n_cases = geoms.filter(F.col("role") == "subject").count()
     pairs = pair_candidates(geoms)

@@ -45,6 +45,7 @@ class TestCells:
         cells = bbox_cover_cells(0.0, 0.0, size * 1.5, size * 0.5, level)
         assert len(cells) == 2
         assert bbox_cover_cells(float("nan"), 0.0, 1.0, 1.0, level) == []
+        assert bbox_cover_cells(0.0, 0.0, float("inf"), 1.0, level) == []
 
     def test_parent(self):
         cid = int(encode_cells(np.array([10]), np.array([13]), 4)[0])
@@ -52,12 +53,12 @@ class TestCells:
 
     def test_jvm_cover_cells_match_python(self, spark):
         """cover_cells_column (pure JVM, round 4) == bbox_cover_cells on a
-        battery incl. NaN/inverted bboxes, negatives, cell-edge-exact
+        battery incl. NaN/infinite/inverted bboxes, negatives, cell-edge-exact
         coordinates, multi-cell spans, and huge coordinates."""
         from rust_geo_booleanop_spark.operators.tiling import cover_cells_column
 
         size = cell_size(4)
-        nan = float("nan")
+        nan, inf = float("nan"), float("inf")
         boxes = [
             (0.0, 0.0, 1.0, 1.0),
             (0.0, 0.0, size * 1.5, size * 0.5),
@@ -65,6 +66,8 @@ class TestCells:
             (size, size, size, size),            # degenerate point ON an edge
             (size * 0.999, 0.0, size * 1.001, 0.5),
             (nan, nan, nan, nan),                 # degraded row
+            (0.0, 0.0, inf, 1.0),                 # infinite bounds
+            (-inf, 0.0, 1.0, 1.0),
             (5.0, 5.0, 4.0, 6.0),                 # inverted
             (1e8, -1e8, 1.0000001e8, -0.9999999e8),
             (102400.0, 0.0, 102913.0, 511.0),     # replica-translated frame
@@ -81,6 +84,17 @@ class TestCells:
             got = [r.cells for r in df.collect()]
             for (a, b, c, d), jvm in zip(boxes, got):
                 assert jvm == bbox_cover_cells(a, b, c, d, level), (a, b, c, d, level)
+
+    def test_assign_tiles_leaves_infinite_bbox_untiled(self, spark):
+        """A row with an infinite bbox bound comes out of assign_tiles once,
+        with a NULL tile_id, instead of failing the job."""
+        from rust_geo_booleanop_spark.operators import assign_tiles
+
+        df = spark.createDataFrame(
+            [(0.0, 0.0, float("inf"), 1.0)],
+            "xmin double, ymin double, xmax double, ymax double",
+        )
+        assert [r.tile_id for r in assign_tiles(df).collect()] == [None]
 
     def test_tile_pyramid_matches_parent_cell(self, spark):
         """tile_pyramid's JVM parent chain == functions/cells.py::parent_cell

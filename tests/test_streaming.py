@@ -9,8 +9,7 @@ from rust_geo_booleanop_spark.streaming import (
     run_extraction_stream,
     run_windowed_counts_stream,
 )
-
-TESTDATA = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+from tests.conftest import TESTDATA_SF
 
 
 def _drop_parquet(df, drop_dir, prefix):
@@ -31,7 +30,7 @@ def test_extraction_stream_incremental(spark, tmp_path):
     os.makedirs(drop_dir)
 
     # drop 1: first half of the base docs
-    base = spark.read.parquet(f"{TESTDATA}/documents.parquet")
+    base = spark.read.parquet(f"{TESTDATA_SF}/documents.parquet")
     half1 = base.filter(F.col("doc_id") < 250)
     _drop_parquet(half1, drop_dir, "d1")
 
@@ -50,7 +49,7 @@ def test_extraction_stream_incremental(spark, tmp_path):
     from rust_geo_booleanop_spark.operators import extract_geometries
     from rust_geo_booleanop_spark.sources import build_documents
 
-    batch = extract_geometries(build_documents(spark, TESTDATA))
+    batch = extract_geometries(build_documents(spark, TESTDATA_SF))
     assert (
         out.select("url", "geom_json").exceptAll(batch.select("url", "geom_json")).count()
         == 0
@@ -316,7 +315,7 @@ def test_windowed_counts_with_watermark(spark, tmp_path):
     out_dir = str(tmp_path / "win_out")
     ckpt_dir = str(tmp_path / "win_ckpt")
 
-    events = spark.read.parquet(f"{TESTDATA}/events.parquet")
+    events = spark.read.parquet(f"{TESTDATA_SF}/events.parquet")
     events.write.parquet(drop_dir, mode="overwrite")
 
     run_windowed_counts_stream(spark, drop_dir, out_dir, ckpt_dir)
@@ -362,7 +361,7 @@ def test_streaming_boolean_tiling_matches_batch(spark, tmp_path):
     ckpt_dir = str(tmp_path / "ckpt")
     os.makedirs(drop_dir)
 
-    base = spark.read.parquet(f"{TESTDATA}/documents.parquet").filter(
+    base = spark.read.parquet(f"{TESTDATA_SF}/documents.parquet").filter(
         F.col("doc_id") < 40
     )
     # drop 1: all subjects of cases 0-9 plus BOTH sides of cases 10-14;
@@ -386,7 +385,7 @@ def test_streaming_boolean_tiling_matches_batch(spark, tmp_path):
     assert n1 > 0 and got.count() > n1
 
     expected = assign_tiles(
-        boolean_pipeline(extract_geometries(build_documents(spark, TESTDATA)))
+        boolean_pipeline(extract_geometries(build_documents(spark, TESTDATA_SF)))
     ).filter(F.col("case_id") < 20)
     cols = [
         "case_id", "subject_url", "clipping_url", "op",
@@ -411,7 +410,7 @@ def test_duplicate_side_after_completion_emits_nothing(spark, tmp_path):
     ckpt_dir = str(tmp_path / "ckpt")
     os.makedirs(drop_dir)
 
-    base = spark.read.parquet(f"{TESTDATA}/documents.parquet").filter(
+    base = spark.read.parquet(f"{TESTDATA_SF}/documents.parquet").filter(
         F.col("doc_id") < 4
     )
     # run 1: both sides of cases 0 and 1 -> both complete and emit
