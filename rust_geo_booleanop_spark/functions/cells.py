@@ -7,27 +7,66 @@ Deterministic integer cell keys over the plane, used for:
   - explicit skew handling (cell histograms -> salting hot cells).
 
 Encoding: cell_id = (level << 58) | ((ix + OFFSET) << 29) | (iy + OFFSET)
-with ix = floor(x / cell_size(level)). Parent/child relationships are
-simple index shifts, like S2 cell parents. Pure NumPy — vectorized over
-Arrow batches; no per-row Python in the Spark path.
+with ix = floor(x / cell_size(level)) and OFFSET = 2^28. Parent/child
+relationships are simple index shifts, like S2 cell parents. This module
+is the only one that knows the layout: Spark operators go through the
+`*_expr` Column twins of the NumPy helpers.
+
+Range rule: an index must lie in [-2^28, 2^28) to fit its 29-bit lane.
+Outside it (NaN and +-inf included) there is no cell: the NumPy helpers
+raise ValueError, the Column twins give NULL, and a bbox cover is empty,
+as is one over MAX_COVER_CELLS cells (untiled, no join candidates).
 """
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 
 # Level-0 cell edge length in world units; level L halves it L times.
 LEVEL0_SIZE = 4096.0
-_OFFSET = 1 << 28  # supports coordinates in +-(2^28 * cell_size)
+# Index bias; an index outside [-_OFFSET, _OFFSET) would spill into the
+# next 29-bit lane and alias another cell (the range rule above).
+_OFFSET = 1 << 28
+_LANE = (1 << 29) - 1
+# Most cells one bbox cover may list; a larger bbox gets an empty cover.
+MAX_COVER_CELLS = 1 << 16
 
 
 def cell_size(level: int) -> float:
     return LEVEL0_SIZE / (1 << level)
 
 
+def in_index_range(i):
+    """True where an index (or coord / cell_size) is in [-2^28, 2^28)."""
+    return (i >= -_OFFSET) & (i < _OFFSET)
+
+
+def in_index_range_expr(i):
+    """Column twin of `in_index_range` (Spark orders NaN above +inf)."""
+    from pyspark.sql import functions as F
+
+    return (i >= F.lit(-_OFFSET)) & (i < F.lit(_OFFSET))
+
+
+def cell_index(coord, level: int) -> np.ndarray:
+    """Cell index floor(coord / cell_size(level)) of each coordinate, as
+    float64 (`encode_cells` rejects the out-of-range ones)."""
+    return np.floor(np.asarray(coord, dtype=np.float64) / cell_size(level))
+
+
+def cell_index_expr(coord, level: int):
+    """Column twin of `cell_index`: a long Column, NULL where
+    coord / cell_size is NaN, +-inf or outside the index range."""
+    from pyspark.sql import functions as F
+
+    q = coord / F.lit(cell_size(level))
+    return F.when(in_index_range_expr(q), F.floor(q).cast("long"))
+
+
 def encode_cells(ix: np.ndarray, iy: np.ndarray, level: int) -> np.ndarray:
+    """Cell ids of index arrays; ValueError if an index is out of range."""
+    if not (in_index_range(ix).all() and in_index_range(iy).all()):
+        raise ValueError(f"cell index outside [-2^28, 2^28) at level {level}")
     return (
         (np.int64(level) << np.int64(58))
         | ((ix.astype(np.int64) + _OFFSET) << np.int64(29))
@@ -36,27 +75,35 @@ def encode_cells(ix: np.ndarray, iy: np.ndarray, level: int) -> np.ndarray:
 
 
 def cell_id_expr(ix, iy, level: int):
-    """JVM Column twin of `encode_cells`: the SINGLE definition of the
-    (level << 58) | ((ix + OFFSET) << 29) | (iy + OFFSET) bit layout for
-    Spark expressions — every codegen encode site (point cells, cover
-    cells, kNN buckets, pyramid re-encode, bench inputs) must build its
-    cell ids through this helper so a layout change cannot drift between
-    copies. `ix`/`iy` are long Columns of cell indices; `level` is a
-    plan-time int."""
+    """Column twin of `encode_cells` on long index Columns at a plan-time
+    `level`: NULL where an index is NULL or out of range."""
     from pyspark.sql import functions as F
 
-    return (
+    cell_id = (
         F.lit(int(level) << 58)
         .bitwiseOR(F.shiftleft(ix + F.lit(_OFFSET), 29))
         .bitwiseOR(iy + F.lit(_OFFSET))
     )
+    return F.when(in_index_range_expr(ix) & in_index_range_expr(iy), cell_id)
 
 
 def decode_cell(cell_id: int):
     level = int(cell_id >> 58)
-    ix = int((cell_id >> 29) & ((1 << 29) - 1)) - _OFFSET
-    iy = int(cell_id & ((1 << 29) - 1)) - _OFFSET
+    ix = int((cell_id >> 29) & _LANE) - _OFFSET
+    iy = int(cell_id & _LANE) - _OFFSET
     return level, ix, iy
+
+
+def decode_cell_expr(cell_id):
+    """Column twin of `decode_cell`: (level, ix, iy) long Columns."""
+    from pyspark.sql import functions as F
+
+    lane = F.lit(_LANE)
+    return (
+        F.shiftrightunsigned(cell_id, 58),
+        F.shiftrightunsigned(cell_id, 29).bitwiseAND(lane) - F.lit(_OFFSET),
+        cell_id.bitwiseAND(lane) - F.lit(_OFFSET),
+    )
 
 
 def cell_bounds(cell_id: int):
@@ -73,10 +120,8 @@ def cell_bounds_expr(cell_id):
     on both sides."""
     from pyspark.sql import functions as F
 
-    mask = F.lit((1 << 29) - 1)
-    size = F.lit(LEVEL0_SIZE) / F.pow(F.lit(2.0), F.shiftrightunsigned(cell_id, 58))
-    ix = F.shiftrightunsigned(cell_id, 29).bitwiseAND(mask) - F.lit(_OFFSET)
-    iy = cell_id.bitwiseAND(mask) - F.lit(_OFFSET)
+    level, ix, iy = decode_cell_expr(cell_id)
+    size = F.lit(LEVEL0_SIZE) / F.pow(F.lit(2.0), level)
     return ix * size, iy * size, (ix + 1) * size, (iy + 1) * size
 
 
@@ -93,24 +138,21 @@ def parent_cell(cell_id: int, parent_level: int) -> int:
 
 
 def point_cells(x: np.ndarray, y: np.ndarray, level: int) -> np.ndarray:
-    size = cell_size(level)
-    ix = np.floor(x / size)
-    iy = np.floor(y / size)
-    return encode_cells(ix, iy, level)
+    """Cell ids of points; ValueError if a coordinate is out of range."""
+    return encode_cells(cell_index(x, level), cell_index(y, level), level)
 
 
 def bbox_cover_cells(xmin, ymin, xmax, ymax, level: int):
-    """List of cell ids covering one bbox (python ints). A NaN, infinite
-    or inverted bbox -> []."""
-    if not all(map(math.isfinite, (xmin, ymin, xmax, ymax))):
+    """List of cell ids covering one bbox (python ints). A NaN, inverted
+    or out-of-range bbox, or one over MAX_COVER_CELLS cells -> []."""
+    if not (xmin <= xmax and ymin <= ymax):
         return []
-    if xmin > xmax or ymin > ymax:
+    idx = cell_index((xmin, ymin, xmax, ymax), level)
+    if not in_index_range(idx).all():
         return []
-    size = cell_size(level)
-    ix0 = int(np.floor(xmin / size))
-    ix1 = int(np.floor(xmax / size))
-    iy0 = int(np.floor(ymin / size))
-    iy1 = int(np.floor(ymax / size))
+    ix0, iy0, ix1, iy1 = map(int, idx)
+    if (ix1 - ix0 + 1) * (iy1 - iy0 + 1) > MAX_COVER_CELLS:
+        return []
     ixs, iys = np.meshgrid(
         np.arange(ix0, ix1 + 1, dtype=np.int64),
         np.arange(iy0, iy1 + 1, dtype=np.int64),

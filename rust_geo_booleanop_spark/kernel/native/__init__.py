@@ -32,8 +32,8 @@ and whole batches it cannot return rerun row by row, see
 `kernel.pairs.resolve_batch_runner`. `parse_bbox_native` is the
 bbox-only parse of the extraction stage.
 
-Engine selection for the Spark operators lives in
-`kernel.resolve_boolean_op` (env: SPARK_GRAFT_KERNEL=auto|native|python).
+The Spark operators use this module exactly when `NATIVE_AVAILABLE`
+(see `kernel.pairs.resolve_native`).
 """
 
 from __future__ import annotations

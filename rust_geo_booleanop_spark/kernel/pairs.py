@@ -27,16 +27,16 @@ A rejected operand degrades its rows, never the task: a sweep past its
 event budget gives status 'limit_exceeded', a segment with a NaN or
 infinite endpoint status 'invalid_input', both with an empty result.
 
-`resolve_native` is the one engine selection ($SPARK_GRAFT_KERNEL = auto |
-native | python, validated) behind `resolve_pair_runner`,
-`resolve_batch_runner`, `resolve_bbox_fn` and `kernel.resolve_boolean_op`.
-Byte-identity across engines is pinned by tests/test_native_pairs.py.
+`resolve_native` is the one engine selection behind `resolve_pair_runner`,
+`resolve_batch_runner`, `resolve_bbox_fn` and `kernel.resolve_boolean_op`:
+the C kernel exactly when it builds and loads (`native.NATIVE_AVAILABLE`),
+the pure-Python path otherwise. Byte-identity across engines is pinned by
+tests/test_native_pairs.py.
 """
 
 from __future__ import annotations
 
 import functools
-import os as _os
 
 from .booleanop import KernelInvalidInput, KernelLimitExceeded, boolean_op
 from .geojson import multipolygon_bbox, parse_multipolygon, serialize_multipolygon
@@ -70,42 +70,23 @@ def pair_boolean_ops_python(s_json, c_json, ops, boolean_op_fn=None):
     return rows
 
 
-def resolve_native(engine: str | None = None):
-    """The engine selection shared by every resolver: validate `engine`
-    (or $SPARK_GRAFT_KERNEL) as 'auto' (default), 'native' or 'python' and
-    return the loaded C kernel module, or None for the pure-Python path.
-    'native' raises when the C kernel cannot be built or loaded."""
-    eng = engine or _os.environ.get("SPARK_GRAFT_KERNEL", "auto")
-    if eng not in ("auto", "native", "python"):
-        # A typo like SPARK_GRAFT_KERNEL=pyton silently running the native
-        # kernel would be the opposite of the operator's intent.
-        raise ValueError(
-            f"unknown kernel engine {eng!r}: expected 'auto', 'native', or 'python'"
-        )
-    if eng == "python":
-        return None
+def resolve_native():
+    """The engine selection shared by every resolver: the loaded C kernel
+    module when it builds and loads, else None for the pure-Python path."""
     try:
         from . import native as native_mod  # compile-on-first-import
     except Exception:
-        native_mod = None
-    if native_mod is not None and native_mod.NATIVE_AVAILABLE:
-        return native_mod
-    if eng == "native":
-        raise RuntimeError(
-            "SPARK_GRAFT_KERNEL=native but the C kernel is unavailable"
-        )
-    return None
+        return None
+    return native_mod if native_mod.NATIVE_AVAILABLE else None
 
 
-def resolve_pair_runner(engine: str | None = None):
-    """Pick the pair-runner implementation for the kernel stage hot path.
-
-    'auto' (default) uses the full-C pair runner when available (falling
-    back per-pair to the Python composition over the native sweep when
-    the C parser declines an input); 'python' forces the pure-Python
-    reference path; 'native' requires the C kernel.
+def resolve_pair_runner():
+    """Pick the pair-runner implementation for the kernel stage hot path:
+    the full-C pair runner when the C kernel is available (falling back
+    per-pair to the Python composition over the native sweep when the C
+    parser declines an input), else the pure-Python reference path.
     """
-    native_mod = resolve_native(engine)
+    native_mod = resolve_native()
     if native_mod is None:
         return pair_boolean_ops_python
     native_pair = native_mod.pair_boolean_ops_native
@@ -204,7 +185,7 @@ def _splice(columns, k, patches):
     ]
 
 
-def resolve_batch_runner(engine: str | None = None):
+def resolve_batch_runner():
     """Pick the batch runner of the kernel stage: a callable
     (subject, clipping, ops) -> the payload columns (see
     `payload_columns`), len(ops) rows per input row, in op order.
@@ -218,15 +199,15 @@ def resolve_batch_runner(engine: str | None = None):
     run through `pair_boolean_ops_python` over the native sweep (same
     bytes, same exceptions) and are spliced back in; a batch it cannot
     return whole (output past 2**31 bytes, out of memory) reruns row by
-    row. An unknown op raises ValueError. The Python engine runs the
-    per-row loop.
+    row. An unknown op raises ValueError. Without the C kernel the batch
+    runner is the per-row loop.
     """
     import pyarrow as pa
 
-    native_mod = resolve_native(engine)
+    native_mod = resolve_native()
     if native_mod is None:
         return _per_row_batch(pair_boolean_ops_python)
-    per_row = _per_row_batch(resolve_pair_runner(engine))
+    per_row = _per_row_batch(resolve_pair_runner())
     native_batch = native_mod.pair_boolean_ops_batch_native
     native_sweep = native_mod.boolean_op_native
 
@@ -253,7 +234,7 @@ def resolve_batch_runner(engine: str | None = None):
     return run
 
 
-def resolve_bbox_fn(engine: str | None = None):
+def resolve_bbox_fn():
     """Pick the geometry-string -> bbox implementation (extraction stage).
 
     Returns a callable(geom_json) -> (xmin, ymin, xmax, ymax). The native
@@ -265,7 +246,7 @@ def resolve_bbox_fn(engine: str | None = None):
     def python_bbox(geom_json):
         return multipolygon_bbox(parse_multipolygon(geom_json))
 
-    native_mod = resolve_native(engine)
+    native_mod = resolve_native()
     if native_mod is None:
         return python_bbox
     native_bbox = native_mod.parse_bbox_native

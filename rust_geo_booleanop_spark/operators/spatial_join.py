@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import cell_id_expr, cell_size
+from ..functions.cells import cell_id_expr, cell_index_expr, cell_size
 from ..kernel.geojson import parse_multipolygon
 from ..kernel.pip import MultiPolygonEdges, points_in_multipolygon_batch
 
@@ -51,7 +51,9 @@ def with_cover_cells(df: DataFrame, level: int = DEFAULT_CELL_LEVEL, prefix: str
     values pinned equal to functions/cells.py::bbox_cover_cells): cell
     assignment is arithmetic on four doubles, exactly the kind of
     expression that belongs inside whole-stage codegen, not in an Arrow
-    round-trip to a Python worker."""
+    round-trip to a Python worker. A row whose bbox is outside the cell
+    index range or over MAX_COVER_CELLS cells (functions/cells.py) has no
+    cover and drops out."""
     from .tiling import cover_cells_column
 
     c = lambda name: F.col(f"{prefix}{name}")  # noqa: E731
@@ -65,12 +67,10 @@ def with_cover_cells(df: DataFrame, level: int = DEFAULT_CELL_LEVEL, prefix: str
 
 def with_point_cells(points: DataFrame, level: int = DEFAULT_CELL_LEVEL, x="x", y="y") -> DataFrame:
     """Point -> cell id, pure JVM (same values as functions/cells.py::
-    point_cells, pinned by the parity battery)."""
-    size = float(cell_size(level))
+    point_cells, pinned by the parity battery). A NaN, infinite or
+    out-of-range coordinate gets a NULL cell_id and joins nothing."""
     cell = cell_id_expr(
-        F.floor(F.col(x) / F.lit(size)).cast("long"),
-        F.floor(F.col(y) / F.lit(size)).cast("long"),
-        level,
+        cell_index_expr(F.col(x), level), cell_index_expr(F.col(y), level), level
     )
     return points.withColumn("cell_id", cell)
 
@@ -84,6 +84,8 @@ def candidate_pairs(
     """Bbox-overlapping (left, right) pairs, deduplicated by reference point.
 
     Inputs need (url, geom_json, xmin..ymax) columns; outputs prefixed l_/r_.
+    A row without a cover (bbox outside the cell index range or over
+    MAX_COVER_CELLS cells, see `with_cover_cells`) takes no part.
     """
     l = with_cover_cells(left, level).select(
         F.col("cell_id"),
@@ -105,17 +107,12 @@ def candidate_pairs(
 
     # Reference-point dedup: keep the pair only in the cell that contains
     # the lower-left corner of the bbox intersection.
-    size = cell_size(level)
-    ref_x = F.greatest("l_xmin", "r_xmin")
-    ref_y = F.greatest("l_ymin", "r_ymin")
-    ref_cell_ix = F.floor(ref_x / F.lit(size)).cast("long")
-    ref_cell_iy = F.floor(ref_y / F.lit(size)).cast("long")
-    cell_ix = (
-        F.shiftrightunsigned(F.col("cell_id"), 29).bitwiseAND(F.lit((1 << 29) - 1))
-        - F.lit(1 << 28)
+    ref_cell = cell_id_expr(
+        cell_index_expr(F.greatest("l_xmin", "r_xmin"), level),
+        cell_index_expr(F.greatest("l_ymin", "r_ymin"), level),
+        level,
     )
-    cell_iy = F.col("cell_id").bitwiseAND(F.lit((1 << 29) - 1)) - F.lit(1 << 28)
-    return joined.filter((ref_cell_ix == cell_ix) & (ref_cell_iy == cell_iy))
+    return joined.filter(F.col("cell_id") == ref_cell)
 
 
 _PIP_SCHEMA_SUFFIX = "point_id long, x double, y double, zone_key string"
@@ -233,30 +230,27 @@ def knn_join_bucketed(
     every unprobed point (strict bound also kills boundary-tie ambiguity).
     Queries with fewer than k such candidates fall back to the exact
     broadcast scan — results are identical to `knn_join` for every query.
+    So do queries whose probed block leaves the cell index range (a NULL
+    probe cell): a point there has no cell (`with_point_cells`) and would
+    be missed by the bucket join.
     """
     from pyspark.sql.window import Window
 
     size = cell_size(level)
     guard_sq = (ring * size) * (ring * size)
 
-    def cell_col(xcol, ycol, dx=0, dy=0):
-        ix = F.floor(xcol / F.lit(size)).cast("long") + F.lit(dx)
-        iy = F.floor(ycol / F.lit(size)).cast("long") + F.lit(dy)
-        return cell_id_expr(ix, iy, level)
-
-    pts = points.select(
-        "point_id", "x", "y", cell_col(F.col("x"), F.col("y")).alias("cell_id")
-    )
+    pts = with_point_cells(points.select("point_id", "x", "y"), level)
+    qix, qiy = cell_index_expr(F.col("qx"), level), cell_index_expr(F.col("qy"), level)
     neighbor_cells = F.array(
         *[
-            cell_col(F.col("qx"), F.col("qy"), dx, dy)
+            cell_id_expr(qix + dx, qiy + dy, level)
             for dx in range(-ring, ring + 1)
             for dy in range(-ring, ring + 1)
         ]
     )
-    q_probed = queries.select(
-        "query_id", "qx", "qy", F.explode(neighbor_cells).alias("cell_id")
-    )
+    q_probed = queries.filter(
+        F.forall(neighbor_cells, lambda c: c.isNotNull())
+    ).select("query_id", "qx", "qy", F.explode(neighbor_cells).alias("cell_id"))
 
     dx = F.col("x") - F.col("qx")
     dy = F.col("y") - F.col("qy")

@@ -31,21 +31,16 @@ def cover_cells_column(xmin, ymin, xmax, ymax, level: int):
     """Covering-cell array as a pure JVM column expression.
 
     Same values as functions/cells.py::bbox_cover_cells (pinned by
-    tests/test_plans_and_sources.py::TestTiling's parity battery): the
-    floor-divide, the +OFFSET bias, and the (level<<58)|(ix<<29)|iy
-    encode are each a single JVM op on longs, and the ix x iy product is
-    sequence+transform+flatten — so tile assignment costs no Python
-    worker round-trip at all (it was a per-row pandas UDF through round
-    3 and timed as much as the kernel stage at the default bench). A NaN,
-    infinite or inverted bbox yields an EMPTY array (the guard fails),
-    matching the python helper's [] for degraded rows."""
-    from ..functions.cells import cell_id_expr, cell_size
+    tests/test_spatial_joins.py::TestCells's parity battery): the four
+    cell indices and the encode come from the cells.py Column twins, and
+    the ix x iy product is sequence+transform+flatten — so tile
+    assignment costs no Python worker round-trip at all. A NaN, infinite,
+    inverted or out-of-range bbox, or one over MAX_COVER_CELLS cells,
+    yields an EMPTY array (the guard fails), matching the python
+    helper's [] for degraded rows."""
+    from ..functions.cells import MAX_COVER_CELLS, cell_id_expr, cell_index_expr
 
-    size = float(cell_size(level))
-    ix0 = F.floor(xmin / F.lit(size)).cast("long")
-    ix1 = F.floor(xmax / F.lit(size)).cast("long")
-    iy0 = F.floor(ymin / F.lit(size)).cast("long")
-    iy1 = F.floor(ymax / F.lit(size)).cast("long")
+    ix0, iy0, ix1, iy1 = (cell_index_expr(c, level) for c in (xmin, ymin, xmax, ymax))
     cells = F.flatten(
         F.transform(
             F.sequence(ix0, ix1),
@@ -55,13 +50,10 @@ def cover_cells_column(xmin, ymin, xmax, ymax, level: int):
             ),
         )
     )
-    # NB: Spark SQL orders NaN above +inf (NaN <= NaN is TRUE there, unlike
-    # Python), so |c| < inf is the finiteness test: false for NaN and ±inf.
-    # An infinite bound would otherwise ask F.sequence for ~2^63 cells.
-    inf = F.lit(float("inf"))
-    valid = (xmin <= xmax) & (ymin <= ymax)
-    for c in (xmin, ymin, xmax, ymax):
-        valid = valid & (F.abs(c) < inf)
+    # NULL (not true) when any index is NULL, so the guard also requires
+    # all four bounds in range before F.sequence runs.
+    n_cells = (ix1 - ix0 + 1) * (iy1 - iy0 + 1)
+    valid = (xmin <= xmax) & (ymin <= ymax) & (n_cells <= MAX_COVER_CELLS)
     return F.when(valid, cells).otherwise(F.array().cast(ArrayType(LongType())))
 
 
@@ -74,8 +66,9 @@ def assign_tiles(results: DataFrame, level: int = DEFAULT_TILE_LEVEL) -> DataFra
         ),
     )
     # explode_outer, not explode: empty-result and status='limit_exceeded'
-    # rows have a NaN bbox -> no covering tiles, and must survive (with
-    # NULL tile_id) so the degraded-row accounting is observable downstream
+    # rows (NaN bbox) and far-away or over-cap bboxes have no covering
+    # tiles, and must survive (with NULL tile_id) so the degraded-row
+    # accounting is observable downstream
     return with_cells.withColumn("tile_id", F.explode_outer("tile_ids")).drop("tile_ids")
 
 
@@ -94,12 +87,9 @@ def tile_pyramid(
     """
     if to_level > from_level:
         raise ValueError("to_level must be <= from_level")
-    from ..functions.cells import cell_id_expr
+    from ..functions.cells import cell_id_expr, decode_cell_expr
 
-    offset = F.lit(1 << 28)
-    mask = F.lit((1 << 29) - 1)
-    ix = F.shiftrightunsigned(F.col("tile_id"), 29).bitwiseAND(mask) - offset
-    iy = F.col("tile_id").bitwiseAND(mask) - offset
+    _, ix, iy = decode_cell_expr(F.col("tile_id"))
     # levels are plan-time constants: unroll the parent array in Python so
     # each shift amount is a literal (arithmetic shiftright == the floor
     # semantics of functions/cells.py::parent_cell, incl. negative indices)
@@ -193,7 +183,8 @@ def tile_area_weights(
     dissolves self-overlapping raw multipolygons, so weight =
     clip_area / geom_area is a true area fraction in [0, 1] and the
     weights of a fully covered geometry partition unity). One double
-    division.
+    division. A geometry without a tile cover (bbox outside the cell
+    index range or over MAX_COVER_CELLS tiles) takes no part.
 
     100 TB shape: tile cover is the pure-JVM cover-cells expression
     (explode is map-side), the kernel clip + the per-case normalization
@@ -315,15 +306,17 @@ def grid_clusters(
     Isolated dense cells — no dense neighbor — keep themselves as their
     own cluster rep (COALESCE), matching the recursive-CTE oracle.
 
-    Cell key packing: cid = (gx + 2^28) * 2^29 + (gy + 2^28) is
-    injective exactly for -2^28 <= gx, gy < 2^28 (at gy = 2^28 the
-    shifted gy lane reaches 2^29 and bleeds into the gx lane). Inputs
-    here are grid indices (|ix| < 2^20 in every pipeline); coordinates
-    outside the injective range raise at runtime rather than silently
-    aliasing cluster labels. Returns one row per dense cell:
+    Cell key packing: cid is the level-0 cell id of (gx, gy)
+    (functions/cells.py::cell_id_expr), injective exactly for indices in
+    [-2^28, 2^28). Inputs here are grid indices (|ix| < 2^20 in every
+    pipeline); coordinates outside the injective range raise at runtime
+    rather than silently aliasing cluster labels, and a neighbor probe
+    past the range edge has a NULL key and joins nothing. Returns one
+    row per dense cell:
     (gx, gy, n, cluster_rep) with cluster_rep = the minimum cid of the
     component.
     """
+    from ..functions.cells import cell_id_expr, in_index_range_expr
     from .dedup import dedup_clusters
 
     dense = cells.filter(F.col(val_col) >= F.lit(min_val)).select(
@@ -331,12 +324,7 @@ def grid_clusters(
         F.col(y_col).cast("long").alias("gy"),
         F.col(val_col).alias("n"),
     )
-    in_range = (
-        (F.col("gx") >= F.lit(-(1 << 28)))
-        & (F.col("gx") < F.lit(1 << 28))
-        & (F.col("gy") >= F.lit(-(1 << 28)))
-        & (F.col("gy") < F.lit(1 << 28))
-    )
+    in_range = in_index_range_expr(F.col("gx")) & in_index_range_expr(F.col("gy"))
     cid = F.when(
         ~in_range,
         F.raise_error(
@@ -345,10 +333,7 @@ def grid_clusters(
                 "packing range [-2^28, 2^28)"
             )
         ).cast("long"),
-    ).otherwise(
-        (F.col("gx") + F.lit(1 << 28)) * F.lit(1 << 29)
-        + (F.col("gy") + F.lit(1 << 28))
-    )
+    ).otherwise(cell_id_expr(F.col("gx"), F.col("gy"), 0))
     keyed = dense.withColumn("cid", cid).localCheckpoint()
     offsets = F.array(
         *[
@@ -365,8 +350,9 @@ def grid_clusters(
         F.col("gy"),
     ).select(
         "id_a",
-        ((F.col("gx") + F.col("o.dx") + F.lit(1 << 28)) * F.lit(1 << 29)
-         + (F.col("gy") + F.col("o.dy") + F.lit(1 << 28))).alias("id_b"),
+        cell_id_expr(
+            F.col("gx") + F.col("o.dx"), F.col("gy") + F.col("o.dy"), 0
+        ).alias("id_b"),
     )
     edges = probes.join(
         keyed.select(F.col("cid").alias("id_b")), on="id_b"

@@ -97,7 +97,7 @@ def g11_dissolve_rows(n_docs: int = 500):
     distributed path AND that the dissolve result is independent of fold
     grouping, not just reproducible. Returns [(template_kind, n_polys,
     status), ...]."""
-    from rust_geo_booleanop_spark.kernel import resolve_boolean_op
+    from rust_geo_booleanop_spark.kernel import boolean_op
     from rust_geo_booleanop_spark.kernel.booleanop import KernelLimitExceeded
     from rust_geo_booleanop_spark.kernel.geojson import (
         parse_multipolygon,
@@ -105,7 +105,6 @@ def g11_dissolve_rows(n_docs: int = 500):
     )
     from rust_geo_booleanop_spark.sources.corpus import case_geometry
 
-    boolean_op = resolve_boolean_op("python")
     groups: dict[str, list[str]] = {}
     for case in range(n_docs // 2):
         subject, _ = case_geometry(case)

@@ -32,11 +32,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from rust_geo_booleanop_spark.kernel import (
-    KernelLimitExceeded,
-    boolean_op,
-    resolve_boolean_op,
-)
+from rust_geo_booleanop_spark.kernel import KernelLimitExceeded, boolean_op
+from rust_geo_booleanop_spark.kernel.native import NATIVE_AVAILABLE
 
 OPS = ("intersection", "union", "diff", "diff_ba", "xor")
 
@@ -197,9 +194,10 @@ def _area(mp):
 
 
 def run(n_cases=1000, seed0=1):
-    native = resolve_boolean_op("native")
-    if native is boolean_op:
+    if not NATIVE_AVAILABLE:
         raise SystemExit("native kernel unavailable — soak needs both engines")
+    from rust_geo_booleanop_spark.kernel.native import boolean_op_native as native
+
     ran = limits = 0
     for c in range(n_cases):
         seed = seed0 + c
@@ -267,15 +265,14 @@ def run_pairs(n_cases=500, seed0=1):
     import pyarrow as pa
 
     from rust_geo_booleanop_spark.kernel import serialize_multipolygon
-    from rust_geo_booleanop_spark.kernel.native import pair_boolean_ops_batch_native
-    from rust_geo_booleanop_spark.kernel.pairs import (
-        pair_boolean_ops_python,
-        resolve_pair_runner,
-    )
+    from rust_geo_booleanop_spark.kernel.pairs import pair_boolean_ops_python
 
-    native_pairs = resolve_pair_runner("native")
-    if native_pairs is pair_boolean_ops_python:
+    if not NATIVE_AVAILABLE:
         raise SystemExit("native pair runner unavailable")
+    from rust_geo_booleanop_spark.kernel.native import (
+        pair_boolean_ops_batch_native,
+        pair_boolean_ops_native,
+    )
 
     def _arrow_row(row):
         return tuple(None if isinstance(v, float) and v != v else v for v in row)
@@ -287,7 +284,9 @@ def run_pairs(n_cases=500, seed0=1):
         s_json = serialize_multipolygon(subject)
         c_json = serialize_multipolygon(clipping)
         py_rows = pair_boolean_ops_python(s_json, c_json, OPS)
-        nat_rows = native_pairs(s_json, c_json, OPS)
+        nat_rows = pair_boolean_ops_native(s_json, c_json, OPS)
+        if nat_rows is None:
+            raise SystemExit(f"PAIR RUNNER DECLINED seed={seed}")
         ran += len(OPS)
 
         def _feq(a, b):

@@ -10,9 +10,7 @@ anything the Rust binary would have produced and feeds the same plotting
 workflow as scripts/run_single_fixture.py.
 
 Beyond the reference binary: --op selects any of the five ops (the Rust
-binary hardcodes xor), and --engine runs the native C kernel instead of
-the pure-Python one (results are bit-identical — pinned by the soak and
-the native-kernel test battery — so the flag only changes speed).
+binary hardcodes xor). The op runs on the pure-Python reference kernel.
 
 Usage:
   python scripts/run_generated_dataset.py grid
@@ -29,7 +27,7 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from rust_geo_booleanop_spark.kernel import resolve_boolean_op
+from rust_geo_booleanop_spark.kernel import boolean_op
 from rust_geo_booleanop_spark.kernel.bench_cases import (
     generate_circles_vs_rects,
     generate_grid_polygons,
@@ -54,11 +52,9 @@ def main() -> None:
                     help="boolean operation (reference binary: xor)")
     ap.add_argument("--out", default=None,
                     help="output path (default: <tmpdir>/<case>.geojson)")
-    ap.add_argument("--engine", choices=("python", "native"), default="python")
     args = ap.parse_args()
 
     a, b = GENERATORS[args.case]()
-    boolean_op = resolve_boolean_op(args.engine)
     result = boolean_op(a, b, args.op)
 
     features = [
@@ -75,7 +71,7 @@ def main() -> None:
     with open(out_path, "w") as f:
         f.write(compact_feature_collection(features))
     print(
-        f"{args.case}/{args.op} ({args.engine}): subject {len(a)} polys x "
+        f"{args.case}/{args.op}: subject {len(a)} polys x "
         f"clipping {len(b)} -> result {len(result)} polys -> {out_path}"
     )
 

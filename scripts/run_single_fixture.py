@@ -82,20 +82,7 @@ def main():
         metavar="OUT",
         help="write a FeatureCollection with computed results to OUT",
     )
-    ap.add_argument(
-        "--engine",
-        choices=("python", "native", "auto"),
-        default="python",
-        help="kernel engine (default python, the semantic reference; "
-        "use native to debug a C-kernel divergence against the fixture)",
-    )
     args = ap.parse_args()
-
-    global boolean_op
-    if args.engine != "python":
-        from rust_geo_booleanop_spark.kernel import resolve_boolean_op
-
-        boolean_op = resolve_boolean_op(args.engine)
 
     path = resolve(args.fixture)
     print(f"*** Running fixture: {path}" + (" (swapped)" if args.swap_ab else ""))

@@ -58,18 +58,25 @@ def test_clip_to_tiles_untiled_row_and_exact_tile_ids(spark):
     # level-7 tile ids need more than 53 bits; the NULL-bbox row shares
     # their Arrow batch (one partition), where a float64 detour of the
     # tile_id column would round them to a neighbouring tile
+    # u2 lies past the level-7 cell index range: untiled, never clipped
+    # against an aliased tile square
     geom = _square(40.0, 40.0, 70.0, 70.0)
+    far = 2.0**34 + 10
     results = spark.createDataFrame(
         [
             ("u0", "intersection", EMPTY, None, None, None, None),
             ("u1", "union", geom, 40.0, 40.0, 70.0, 70.0),
+            ("u2", "xor", _square(far, 0.0, far + 1, 1.0), far, 0.0, far + 1, 1.0),
         ],
         "subject_url string, op string, result_json string, "
         "xmin double, ymin double, xmax double, ymax double",
     ).coalesce(1)
     rows = clip_to_tiles(assign_tiles(results, level=7)).collect()
-    untiled = [r for r in rows if r.url == "u0"]
-    assert [tuple(r) for r in untiled] == [(None, "u0", "intersection", "", 0, "untiled")]
+    untiled = [tuple(r) for r in rows if r.url != "u1"]
+    assert sorted(untiled) == [
+        (None, "u0", "intersection", "", 0, "untiled"),
+        (None, "u2", "xor", "", 0, "untiled"),
+    ]
     tiled = sorted((r for r in rows if r.url == "u1"), key=lambda r: r.tile_id)
     assert len(tiled) == 4 and len({r.tile_id for r in tiled}) == 4
     for r in tiled:

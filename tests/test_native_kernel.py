@@ -20,7 +20,6 @@ from rust_geo_booleanop_spark.kernel import (
     KernelLimitExceeded,
     boolean_op,
     load_fixture,
-    resolve_boolean_op,
 )
 from rust_geo_booleanop_spark.kernel.native import NATIVE_AVAILABLE
 from tests.conftest import REFERENCE_CASES, requires_reference_corpus
@@ -141,26 +140,6 @@ def test_native_trivial_and_empty_paths():
         assert boolean_op_native([], rect, op) == boolean_op([], rect, op)
         assert boolean_op_native(rect, [], op) == boolean_op(rect, [], op)
         assert boolean_op_native([], [], op) == boolean_op([], [], op)
-
-
-def test_resolver_prefers_native_and_env_forces_python(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_KERNEL", raising=False)
-    assert resolve_boolean_op() is boolean_op_native
-    monkeypatch.setenv("SPARK_GRAFT_KERNEL", "python")
-    assert resolve_boolean_op() is boolean_op
-    monkeypatch.setenv("SPARK_GRAFT_KERNEL", "native")
-    assert resolve_boolean_op() is boolean_op_native
-
-
-def test_resolver_rejects_unknown_engine(monkeypatch):
-    # A typo like 'pyton' must fail loudly, not silently pick 'auto'
-    # (which would run the native kernel — the opposite of the intent).
-    monkeypatch.setenv("SPARK_GRAFT_KERNEL", "pyton")
-    with pytest.raises(ValueError, match="pyton"):
-        resolve_boolean_op()
-    monkeypatch.delenv("SPARK_GRAFT_KERNEL", raising=False)
-    with pytest.raises(ValueError, match="Native"):
-        resolve_boolean_op("Native")
 
 
 def test_secure_tmp_build_dir_refuses_foreign_dir(tmp_path, monkeypatch):

@@ -30,7 +30,7 @@ import struct
 import pyarrow as pa
 import pytest
 
-from rust_geo_booleanop_spark.kernel import KernelInvalidInput, boolean_op
+from rust_geo_booleanop_spark.kernel import KernelInvalidInput, boolean_op, resolve_boolean_op
 from rust_geo_booleanop_spark.kernel.geojson import (
     multipolygon_bbox,
     parse_multipolygon,
@@ -166,6 +166,16 @@ def test_unsupported_inputs_decline_to_python_path():
     for geom in bad:
         assert pair_boolean_ops_native(geom, SQUARE, OPS) is None
         assert pair_boolean_ops_native(SQUARE, geom, OPS) is None
+    runner = resolve_pair_runner()
+    assert runner is not pair_boolean_ops_python
+    _rows_equal(
+        pair_boolean_ops_python(SQUARE, SQUARE, OPS), runner(SQUARE, SQUARE, OPS)
+    )
+    # the native runner must fall back (not fail) on inputs the C parser
+    # declines — same exception the Python parser raises on garbage
+    with pytest.raises(ValueError):
+        runner("not json", SQUARE, OPS)
+    assert resolve_bbox_fn()(SQUARE) == (0.0, 0.0, 2.0, 2.0)
 
 
 def test_limit_exceeded_rows_match():
@@ -232,31 +242,6 @@ def test_unknown_op_raises_like_python():
         resolve_batch_runner()(col, col, ("intersection", "frobnicate"))
 
 
-def test_resolver_engine_selection(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_KERNEL", "python")
-    assert resolve_pair_runner() is pair_boolean_ops_python
-    monkeypatch.setenv("SPARK_GRAFT_KERNEL", "auto")
-    runner = resolve_pair_runner()
-    assert runner is not pair_boolean_ops_python
-    _rows_equal(
-        pair_boolean_ops_python(SQUARE, SQUARE, OPS), runner(SQUARE, SQUARE, OPS)
-    )
-    # the auto runner must fall back (not fail) on inputs the C parser
-    # declines — same exception the Python parser raises on garbage
-    with pytest.raises(ValueError):
-        runner("not json", SQUARE, OPS)
-    monkeypatch.setenv("SPARK_GRAFT_KERNEL", "pyton")
-    with pytest.raises(ValueError, match="unknown kernel engine"):
-        resolve_pair_runner()
-    with pytest.raises(ValueError, match="unknown kernel engine"):
-        resolve_bbox_fn()
-    monkeypatch.setenv("SPARK_GRAFT_KERNEL", "python")
-    bbox_fn = resolve_bbox_fn()
-    assert bbox_fn(SQUARE) == (0.0, 0.0, 2.0, 2.0)
-    monkeypatch.setenv("SPARK_GRAFT_KERNEL", "auto")
-    assert resolve_bbox_fn()(SQUARE) == (0.0, 0.0, 2.0, 2.0)
-
-
 def test_pair_runner_differential_soak_sample(soak_slice):
     """Deterministic slice of `scripts/kernel_soak.py --pairs`: random
     degenerate-weighted cases through BOTH pair runners (GeoJSON in,
@@ -293,10 +278,10 @@ def _arrow_rows(rows):
 
 def _check_batch(subjects, clips, rects=None, ops=OPS, declined=(),
                  subject_col=None, clip_cols=None):
-    """Run one batch through the C entry and the batch runner of both
-    engines; compare each, row by row, with `pair_rows` over the per-row
-    runner. Rows in `declined` must come back declined (NULL slots) from
-    the C entry."""
+    """Run one batch through the C entry and the batch runner with and
+    without the C kernel; compare each, row by row, with `pair_rows` over
+    the per-row runner. Rows in `declined` must come back declined (NULL
+    slots) from the C entry."""
     run = resolve_pair_runner()
     s_col = subject_col if subject_col is not None else pa.array(subjects, pa.string())
     if rects is None:
@@ -318,8 +303,12 @@ def _check_batch(subjects, clips, rects=None, ops=OPS, declined=(),
         assert rows == _arrow_rows(pair_rows(run, s_json, c_json, ops)), i
     ref = [r for s_json, c_json in zip(subjects, clips) for r in pair_rows(run, s_json, c_json, ops)]
     want = payload_columns(ref)
-    for engine in ("native", "python"):
-        for got_col, want_col in zip(resolve_batch_runner(engine)(s_col, c_arg, ops), want):
+    runners = {"native": resolve_batch_runner()}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(native, "NATIVE_AVAILABLE", False)
+        runners["python"] = resolve_batch_runner()
+    for engine, run_batch in runners.items():
+        for got_col, want_col in zip(run_batch(s_col, c_arg, ops), want):
             assert got_col.equals(want_col), engine
     return out
 
@@ -463,7 +452,11 @@ def test_batch_overflow_reruns_row_by_row(monkeypatch):
 
 
 def test_batch_runner_python_engine(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_KERNEL", "python")
+    # without a C compiler every resolver takes the pure-Python path
+    monkeypatch.setattr(native, "NATIVE_AVAILABLE", False)
+    assert resolve_boolean_op() is boolean_op
+    assert resolve_pair_runner() is pair_boolean_ops_python
+    assert resolve_bbox_fn()(SQUARE) == (0.0, 0.0, 2.0, 2.0)
     subjects = [SQUARE, None, BBOX_KEYED]
     clips = [HOLED, SQUARE, SQUARE]
     want = payload_columns(

@@ -14,6 +14,7 @@ from rust_geo_booleanop_spark.functions.cells import (
     encode_cells,
     parent_cell,
     point_cells,
+    MAX_COVER_CELLS,
 )
 from rust_geo_booleanop_spark.kernel.pip import point_in_multipolygon
 from rust_geo_booleanop_spark.operators import (
@@ -31,6 +32,14 @@ class TestCells:
             ids = encode_cells(np.array([-5, 0, 123]), np.array([7, -2, 99]), level)
             for cid, ix, iy in zip(ids, (-5, 0, 123), (7, -2, 99)):
                 assert decode_cell(int(cid)) == (level, ix, iy)
+
+    def test_encode_rejects_out_of_range_index(self):
+        # an index past [-2^28, 2^28) would spill into the next bit lane
+        lim = 1 << 28
+        encode_cells(np.array([-lim, lim - 1]), np.array([lim - 1, -lim]), 5)
+        for ix, iy in ((lim, 0), (0, -lim - 1)):
+            with pytest.raises(ValueError, match="outside"):
+                encode_cells(np.array([ix]), np.array([iy]), 5)
 
     def test_point_cells_and_bounds(self):
         level = 4
@@ -54,7 +63,8 @@ class TestCells:
     def test_jvm_cover_cells_match_python(self, spark):
         """cover_cells_column (pure JVM, round 4) == bbox_cover_cells on a
         battery incl. NaN/infinite/inverted bboxes, negatives, cell-edge-exact
-        coordinates, multi-cell spans, and huge coordinates."""
+        coordinates, multi-cell spans, huge coordinates, and bboxes past the
+        cell index range or over MAX_COVER_CELLS (empty covers)."""
         from rust_geo_booleanop_spark.operators.tiling import cover_cells_column
 
         size = cell_size(4)
@@ -71,6 +81,10 @@ class TestCells:
             (5.0, 5.0, 4.0, 6.0),                 # inverted
             (1e8, -1e8, 1.0000001e8, -0.9999999e8),
             (102400.0, 0.0, 102913.0, 511.0),     # replica-translated frame
+            (2.0**34 + 10, 0.0, 2.0**34 + 10, 1.0),  # past the index range at level 6
+            (0.0, 0.0, 1e12, 1.0),                # past it at every level
+            (0.0, 0.0, 255 * 64.0, 255 * 64.0),   # exactly MAX_COVER_CELLS at level 6
+            (0.0, 0.0, 256 * 64.0, 255 * 64.0),   # one column over it
         ]
         for level in (2, 4, 6):
             df = spark.createDataFrame(
@@ -84,6 +98,7 @@ class TestCells:
             got = [r.cells for r in df.collect()]
             for (a, b, c, d), jvm in zip(boxes, got):
                 assert jvm == bbox_cover_cells(a, b, c, d, level), (a, b, c, d, level)
+        assert [len(cells) for cells in got[-4:]] == [0, 0, MAX_COVER_CELLS, 0]
 
     def test_assign_tiles_leaves_infinite_bbox_untiled(self, spark):
         """A row with an infinite bbox bound comes out of assign_tiles once,
@@ -134,6 +149,16 @@ class TestCells:
             got = [r.cell_id for r in with_point_cells(df, level).collect()]
             expected = point_cells(np.array(xs), np.array(ys), level).tolist()
             assert got == expected, level
+        # no cell for a coordinate past the index range, NaN or infinite:
+        # NULL on the JVM, ValueError from the Python twin
+        nan, inf = float("nan"), float("inf")
+        bad = [2.0**34 + 10, 1e20, -1e20, nan, inf, -inf]
+        df = spark.createDataFrame([(x, 0.0) for x in bad], "x double, y double")
+        got = [r.cell_id for r in with_point_cells(df, 6).collect()]
+        assert got == [None] * len(bad)
+        for x in bad:
+            with pytest.raises(ValueError):
+                point_cells(np.array([x]), np.array([0.0]), 6)
 
 
 def _rect_geom(x0, y0, w, h):
@@ -297,6 +322,24 @@ class TestKnnBucketed:
             for r in knn_join_bucketed(points, queries, k=5, level=4).collect()
         }
         assert bucketed == brute
+
+    def test_query_at_index_range_edge_falls_back(self, spark):
+        """A query whose probed ring leaves the cell index range takes the
+        exact fallback: the nearest point, just past the range edge, has
+        no cell and is found by the broadcast scan only."""
+        from rust_geo_booleanop_spark.operators import knn_join_bucketed
+
+        edge = 2.0**28 * cell_size(4)
+        pts = [(0, edge + 50.0, 0.0), (1, edge - 300.0, 0.0), (2, 0.0, 0.0)]
+        points = spark.createDataFrame(pts, "point_id long, x double, y double")
+        queries = spark.createDataFrame(
+            [(0, edge - 100.0, 0.0), (1, 10.0, 0.0)], "query_id int, qx double, qy double"
+        )
+        got = {
+            r.query_id: r.point_id
+            for r in knn_join_bucketed(points, queries, k=1, level=4).collect()
+        }
+        assert got == {0: 0, 1: 2}
 
 
 class TestZonal:
@@ -509,6 +552,18 @@ class TestGridClusters:
         cells = [(-1, -1, 3), (0, 0, 3), (-2, 5, 3)]
         got = self._run(spark, cells, min_val=1)
         assert got == {frozenset({(-1, -1), (0, 0)}), frozenset({(-2, 5)})}
+
+    def test_out_of_range_coordinates_raise(self, spark):
+        # a cell past [-2^28, 2^28) has no injective key: fail loudly
+        with pytest.raises(Exception, match="injective packing range"):
+            self._run(spark, [(0, 0, 3), (1 << 28, 0, 3)])
+
+    def test_probe_past_range_edge_does_not_alias(self, spark):
+        # the probe (1, 2^28) of the top-edge cell (0, 2^28 - 1) has no
+        # key; packed, it would carry into (2, -2^28) and join the two
+        lim = 1 << 28
+        got = self._run(spark, [(0, lim - 1, 3), (2, -lim, 3)])
+        assert got == {frozenset({(0, lim - 1)}), frozenset({(2, -lim)})}
 
     def test_long_chain_converges(self, spark):
         # a 60-cell snake: pointer doubling must converge within max_iters
