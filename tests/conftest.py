@@ -11,9 +11,10 @@ from rust_geo_booleanop_spark.kernel.geojson import reference_case_files  # noqa
 
 TESTDATA_SF = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# The reference golden suite, or [] with the reason it is missing. Tests
-# that cannot say anything without it carry `requires_reference_corpus`;
-# tests that assert on it call reference_case_files() and fail.
+# The reference golden suite, or [] with the reason it is missing. Every
+# test that needs the golden suite carries `requires_reference_corpus`, so
+# it runs wherever the corpus is present. The component goldens in
+# test_kernel_units.py read their two inputs from tests/reference_components/.
 try:
     REFERENCE_CASES, _corpus_missing = reference_case_files(), ""
 except FileNotFoundError as e:

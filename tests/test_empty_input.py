@@ -17,7 +17,7 @@ import os
 import pytest
 
 import __spark_entry__ as entry
-from tests.conftest import TESTDATA_SF
+from tests.conftest import TESTDATA_SF, requires_reference_corpus
 
 TABLES = [
     "region",
@@ -33,6 +33,14 @@ TABLES = [
 ]
 
 ALL_QUERIES = entry.queries()
+
+# g09 reads the reference golden suite, not the driver tables
+QUERY_PARAMS = [
+    pytest.param(name, marks=requires_reference_corpus)
+    if name == "g09_fixture_suite"
+    else name
+    for name in sorted(ALL_QUERIES)
+]
 
 
 @pytest.fixture(scope="module")
@@ -52,7 +60,7 @@ def empty_sf(spark, tmp_path_factory):
     return str(d)
 
 
-@pytest.mark.parametrize("name", sorted(ALL_QUERIES))
+@pytest.mark.parametrize("name", QUERY_PARAMS)
 def test_query_is_empty_safe(spark, empty_sf, name):
     df = ALL_QUERIES[name](spark, empty_sf)
     # a well-formed result: named columns and a countable relation
@@ -79,7 +87,7 @@ def tiny_sf(spark, tmp_path_factory):
     return str(d)
 
 
-@pytest.mark.parametrize("name", sorted(ALL_QUERIES))
+@pytest.mark.parametrize("name", QUERY_PARAMS)
 def test_query_is_single_row_safe(spark, tiny_sf, name):
     df = ALL_QUERIES[name](spark, tiny_sf)
     assert df.columns

@@ -3,6 +3,7 @@
 segment_intersection.rs, divide_segment.rs tests)."""
 
 import math
+import os
 
 from rust_geo_booleanop_spark.kernel.predicates import (
     NO_INTERSECTION,
@@ -18,6 +19,7 @@ from rust_geo_booleanop_spark.kernel.geojson import (
     load_fixture,
     reference_case_files,
 )
+from tests.conftest import requires_reference_corpus
 
 
 def sa(p0, p1, p2):
@@ -219,6 +221,7 @@ class TestBooleanOpBasics:
 class TestF32Surface:
     """f32-width mode (reference Float-trait parity: helper.rs:8-10)."""
 
+    @requires_reference_corpus
     def test_f32_results_are_f32_representable_and_close_to_f64(self):
         import numpy as np
 
@@ -296,11 +299,23 @@ from rust_geo_booleanop_spark.kernel.booleanop import (
 )
 
 
+# The reference's two component-test inputs (corpus root), committed under
+# their own names. Every coordinate is fixed by the goldens' own asserted
+# values; test_component_inputs_match_reference checks the copies against
+# the reference's files wherever the corpus is present.
+COMPONENT_FIXTURES = os.path.join(os.path.dirname(__file__), "reference_components")
+
+
 def _component_fixture(name):
-    # component-test inputs sit at the corpus root; without the corpus
-    # this fails on reference_case_files()'s message, not a bare open()
-    reference_case_files()
-    return load_fixture(f"{REFERENCE_FIXTURES}/{name}")
+    return load_fixture(os.path.join(COMPONENT_FIXTURES, name))
+
+
+@requires_reference_corpus
+def test_component_inputs_match_reference():
+    for name in ("two_shapes.geojson", "two_triangles.geojson"):
+        ref_s, ref_c, _ = load_fixture(f"{REFERENCE_FIXTURES}/{name}")
+        s, c, _ = _component_fixture(name)
+        assert (s, c) == (ref_s, ref_c), name
 
 
 _INF = float("inf")

@@ -47,6 +47,7 @@ from rust_geo_booleanop_spark.kernel.pairs import (
     resolve_bbox_fn,
     resolve_pair_runner,
 )
+from tests.conftest import requires_reference_corpus
 
 if NATIVE_AVAILABLE:
     from rust_geo_booleanop_spark.kernel import native
@@ -106,6 +107,7 @@ def test_repr_battery_matches_python_repr():
         assert repr_double_native(v) == repr(v), v.hex()
 
 
+@requires_reference_corpus
 def test_all_fixtures_both_orders_all_ops():
     for fx in reference_case_files():
         with open(fx) as f:

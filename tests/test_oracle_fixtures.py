@@ -18,6 +18,8 @@ import os
 import duckdb
 import pytest
 
+from tests.conftest import requires_reference_corpus
+
 
 def _key(row):
     """None-safe total order for row sorting."""
@@ -240,6 +242,7 @@ def test_g11_fresh_flat_fold():
     assert sorted(_fix("g11_dissolve_sf001")) == sorted(g11_dissolve_rows())
 
 
+@requires_reference_corpus
 def test_g09_expected_fresh_and_reference_derived():
     """g09's fixture regenerates byte-identically from the reference's
     own fixture files — full regeneration (45 files, no kernel)."""

@@ -163,6 +163,7 @@ class TestCompactGeojsonWriter:
     files is full format parity — indentation, key order, JS-style
     numbers."""
 
+    @requires_reference_corpus
     def test_all_45_fixtures_roundtrip_byte_identical(self):
         import json
 
