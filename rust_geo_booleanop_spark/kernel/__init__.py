@@ -27,25 +27,10 @@ from .geojson import (
 )
 from .predicates import signed_area, segment_intersection
 from .f32 import boolean_op_f32, quantize_multipolygon_f32
-from .pairs import pair_boolean_ops_python, resolve_bbox_fn, resolve_native, resolve_pair_runner
-
-
-def resolve_boolean_op():
-    """Pick the boolean-op implementation for the hot path: the native C
-    kernel when it is available, else the pure-Python reference kernel.
-
-    The two implementations are bit-identical on every reference fixture,
-    both operand orders, all five operations — pinned by
-    tests/test_native_kernel.py. `boolean_op` itself stays pure Python:
-    it is the semantic reference the fixture suite graded from round 1.
-    """
-    native_mod = resolve_native()
-    return boolean_op if native_mod is None else native_mod.boolean_op_native
-
+from .pairs import pair_boolean_ops_python, resolve_bbox_fn, resolve_pair_runner
 
 __all__ = [
     "boolean_op",
-    "resolve_boolean_op",
     "pair_boolean_ops_python",
     "resolve_pair_runner",
     "resolve_bbox_fn",

@@ -1243,7 +1243,7 @@ MartinezResult *martinez_boolean_op(
 /* rows (a last-row cache), rectangle clippings built from their four   */
 /* doubles without any JSON — through one per-op body (mz_op_run:       */
 /* sweep, then the one serializer). It is the Spark kernel stage's hot  */
-/* path; a single pair (streaming, the ceilings) is a batch of one row. */
+/* path; a single pair (dissolve, the ceilings) is a batch of one row.  */
 /*                                                                      */
 /* GIL: ctypes releases the GIL around the foreign call; the Python     */
 /* C-API calls here require it, so the entry points re-acquire it with  */

@@ -1,7 +1,11 @@
 """Pair-level boolean-op runner: one (subject, clipping) JSON pair -> all ops.
 
-This is the unit of work the Spark kernel stage (operators/boolean_join.py)
-executes per candidate pair. Two engines, byte-identical outputs:
+The one kernel contract of every operator: GeoJSON in; result JSON,
+n_polys, bbox and status out, one row per op. The kernel stage
+(operators/boolean_join.py::kernel_map) runs it over Arrow batches for
+the batch and streaming boolean ops and the tiling operators; dissolve
+(operators/dissolve.py) folds its unions through `resolve_pair_runner`.
+Two engines, byte-identical outputs:
 
 - `pair_boolean_ops_python`: the reference composition — json parse
   (kernel/geojson.py), one `boolean_op` sweep per op, json serialize +
@@ -18,9 +22,9 @@ The Spark kernel stage runs whole Arrow batches through
 `resolve_batch_runner`: natively, one `pair_boolean_ops_batch_native` C
 call per batch (each subject parsed once per run of equal consecutive
 rows, rectangle clippings built from their doubles), with declined rows
-run one at a time through the Python composition over the native sweep
-and spliced back; on the Python engine, the per-row loop over
-`pair_rows`. A declined row is not sent to the C parser again: both C
+run one at a time through the per-row loop of the Python composition
+over the native sweep and spliced back; on the Python engine, the
+per-row loop over `pair_rows`. A declined row is not sent to the C parser again: both C
 wrappers call the same C entry, which would decline it again.
 
 A rejected operand degrades its rows, never the task: a sweep past its
@@ -28,9 +32,9 @@ event budget gives status 'limit_exceeded', a segment with a NaN or
 infinite endpoint status 'invalid_input', both with an empty result.
 
 `resolve_native` is the one engine selection behind `resolve_pair_runner`,
-`resolve_batch_runner`, `resolve_bbox_fn` and `kernel.resolve_boolean_op`:
-the C kernel exactly when it builds and loads (`native.NATIVE_AVAILABLE`),
-the pure-Python path otherwise. Byte-identity across engines is pinned by
+`resolve_batch_runner` and `resolve_bbox_fn`: the C kernel exactly when
+it builds and loads (`native.NATIVE_AVAILABLE`), the pure-Python path
+otherwise. Byte-identity across engines is pinned by
 tests/test_native_pairs.py.
 """
 
@@ -208,19 +212,12 @@ def resolve_batch_runner():
     if native_mod is None:
         return _per_row_batch(pair_boolean_ops_python)
     per_row = _per_row_batch(resolve_pair_runner())
-    native_batch = native_mod.pair_boolean_ops_batch_native
-    native_sweep = native_mod.boolean_op_native
-
-    def rerun_row(subject, clipping, ops, i):
-        # a declined row has no NULL operand
-        if isinstance(clipping, pa.Array):
-            c_json = clipping[i].as_py()
-        else:
-            c_json = bbox_square_json(*(c[i].as_py() for c in clipping))
-        rows = pair_boolean_ops_python(
-            subject[i].as_py(), c_json, ops, boolean_op_fn=native_sweep
+    declined_row = _per_row_batch(
+        functools.partial(
+            pair_boolean_ops_python, boolean_op_fn=native_mod.boolean_op_native
         )
-        return payload_columns(rows)
+    )
+    native_batch = native_mod.pair_boolean_ops_batch_native
 
     def run(subject, clipping, ops):
         out = native_batch(subject, clipping, ops)
@@ -228,7 +225,11 @@ def resolve_batch_runner():
             return per_row(subject, clipping, ops)
         if not out.declined:
             return out.columns
-        patches = [(i, rerun_row(subject, clipping, ops, i)) for i in out.declined]
+        is_rect = not isinstance(clipping, pa.Array)
+        patches = []
+        for i in out.declined:
+            clip = [c.slice(i, 1) for c in clipping] if is_rect else clipping.slice(i, 1)
+            patches.append((i, declined_row(subject.slice(i, 1), clip, ops)))
         return _splice(out.columns, len(ops), patches)
 
     return run

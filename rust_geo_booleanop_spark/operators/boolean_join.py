@@ -5,11 +5,12 @@ skew and coalescing), then the Martinez-Rueda kernel runs over Arrow
 batches via `kernel_map` — thousands of geometry pairs per Python worker
 call, never per-row Python. `kernel_map` is the one kernel stage: the
 boolean ops here and the tile clip, area-weight clip and region
-normalization of operators/tiling.py all go through it. With the native
-kernel each Arrow batch is one C call (`resolve_batch_runner`); the
-streaming pair completion (streaming/boolean.py) builds its rows with
-`pair_rows`, the per-row form of the same contract (both in
-kernel/pairs.py).
+normalization of operators/tiling.py all go through it, and so do the
+pairs the streaming twin completes (streaming/boolean.py). With the
+native kernel each Arrow batch is one C call (`resolve_batch_runner`).
+Every operator reaches the sweep through the one pair contract of
+kernel/pairs.py; dissolve (operators/dissolve.py) calls its pair runner
+directly.
 
 Reference semantics: the four ops of lib/src/boolean/mod.rs:21-50, with
 diff_ba = diff with swapped operands (tests/src/helper.rs:35-43).
@@ -169,8 +170,9 @@ def kernel_map(
     runner (`kernel.pairs.resolve_batch_runner`): with the native kernel
     one C call, which parses a subject once per run of equal consecutive
     rows and builds rectangle clippings straight from their doubles. A
-    NULL operand (or a NULL rectangle bound) makes no kernel call; see
-    `kernel.pairs.pair_rows`.
+    NULL operand (or a NULL rectangle bound) makes no kernel call.
+    Callers: `apply_boolean_ops`, the tiling operators and
+    `streaming.boolean.stream_boolean_pairs`.
 
     A NaN bbox (empty or limit_exceeded result) reaches Spark as NULL.
     Carried names must not clash with the result columns.

@@ -8,18 +8,21 @@ aggregate — the treeAggregate shape:
            its geometries into one partial union (applyInPandas group);
   level 2: the <= fanin partials per key fold into the final union.
 
-Both levels run the SAME fixture-exact kernel union. A key with millions of
-geometries never funnels them into one task — level 1 bounds any single
-fold to its bucket, and only `fanin` partials reach level 2. (For deeper
-skew, recurse level 1; two levels cover 10^9 rows/key at fanin 2^15.)
+Both levels run the SAME fixture-exact kernel union: each fold step is one
+call of the pair runner (kernel/pairs.py), the contract every operator
+reaches the sweep through. A key with millions of geometries never funnels
+them into one task — level 1 bounds any single fold to its bucket, and only
+`fanin` partials reach level 2. (For deeper skew, recurse level 1; two
+levels cover 10^9 rows/key at fanin 2^15.)
 
 Degenerate-overlap caveat: re-unioning union OUTPUTS can hit the Martinez
 degenerate-overlap pathology (the reference's deactivated issue90 class).
-The kernel's termination valve converts that to KernelLimitExceeded; such
-groups degrade to status='limit_exceeded' rows instead of hanging an
-executor. A NaN or infinite coordinate degrades its group the same way,
-with status 'invalid_input' (KernelInvalidInput). Clean inputs (disjoint
-or simply-overlapping coverages, e.g. rectangle tilings) dissolve exactly.
+The kernel's termination valve ends such a sweep, and the pair runner gives
+it status 'limit_exceeded'; the group degrades to one such row instead of
+hanging an executor. A NaN or infinite coordinate degrades its group the
+same way, with status 'invalid_input', at whichever level it first meets
+the sweep. Clean inputs (disjoint or simply-overlapping coverages, e.g.
+rectangle tilings) dissolve exactly.
 """
 
 from __future__ import annotations
@@ -28,49 +31,40 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernel import resolve_boolean_op
-from ..kernel.booleanop import KernelInvalidInput, KernelLimitExceeded
 from ..kernel.geojson import parse_multipolygon, serialize_multipolygon
+from ..kernel.pairs import resolve_pair_runner
 
 _PARTIAL_SCHEMA = "key string, geom_json string, status string"
 DISSOLVE_SCHEMA = "key string, geom_json string, n_polys int, status string"
 
 
-def _fold_union(jsons) -> tuple[str, str]:
-    boolean_op = resolve_boolean_op()  # native C sweep when available
-    acc = None
-    for gj in jsons:
-        mp = parse_multipolygon(gj)
-        if acc is None:
-            acc = mp
-        else:
-            acc = boolean_op(acc, mp, "union")
-    return serialize_multipolygon(acc or []), "ok"
+def _fold_union(jsons) -> tuple[str, int, str]:
+    """(geom_json, n_polys, status) of the union of `jsons`, folded left
+    through the pair runner. A lone geometry makes no kernel call; the
+    first non-ok union ends the fold with ("", 0, its status)."""
+    union = resolve_pair_runner()  # full-C pair lifecycle when available
+    first, *rest = jsons
+    mp = parse_multipolygon(first)
+    acc, n = serialize_multipolygon(mp), len(mp)
+    for gj in rest:
+        ((_, acc, n, *_, status),) = union(acc, gj, ("union",))
+        if status != "ok":
+            return "", 0, status
+    return acc, n, "ok"
 
 
 def _partial_fn(key, pdf):
-    k = key[0]
-    try:
-        gj, status = _fold_union(sorted(pdf["geom_json"]))
-    except KernelLimitExceeded:
-        gj, status = "", "limit_exceeded"
-    except KernelInvalidInput:
-        gj, status = "", "invalid_input"
-    return pd.DataFrame({"key": [k], "geom_json": [gj], "status": [status]})
+    gj, _, status = _fold_union(sorted(pdf["geom_json"]))
+    return pd.DataFrame({"key": [key[0]], "geom_json": [gj], "status": [status]})
 
 
 def _final_fn(key, pdf):
     (k,) = key
     failed = sorted(set(pdf["status"]) - {"ok"})
     if failed:
-        return pd.DataFrame(
-            {"key": [k], "geom_json": [""], "n_polys": [0], "status": [failed[0]]}
-        )
-    try:
-        gj, status = _fold_union(sorted(pdf["geom_json"]))
-        n = len(parse_multipolygon(gj))
-    except KernelLimitExceeded:
-        gj, status, n = "", "limit_exceeded", 0
+        gj, n, status = "", 0, failed[0]
+    else:
+        gj, n, status = _fold_union(sorted(pdf["geom_json"]))
     return pd.DataFrame({"key": [k], "geom_json": [gj], "n_polys": [n], "status": [status]})
 
 

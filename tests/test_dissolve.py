@@ -2,11 +2,14 @@
 
 import json
 
+import pandas as pd
 import pytest
 
+from rust_geo_booleanop_spark.kernel import native
+from rust_geo_booleanop_spark.kernel.geojson import parse_multipolygon, serialize_multipolygon
 from rust_geo_booleanop_spark.operators import dissolve
 from rust_geo_booleanop_spark.operators.dissolve import _final_fn, _partial_fn
-from rust_geo_booleanop_spark.kernel.geojson import parse_multipolygon
+from rust_geo_booleanop_spark.sources.corpus import case_geometry
 
 
 def _rect_json(x0, y0, w, h):
@@ -26,21 +29,25 @@ def _area(mp):
     return total
 
 
+def _tiling_rows():
+    rows = []
+    # key "grid": 4x4 adjacent unit squares -> one 4x4 square
+    for i in range(4):
+        for j in range(4):
+            rows.append(("grid", _rect_json(float(i), float(j), 1.0, 1.0)))
+    # key "overlap": two half-overlapping rects -> area 1.5
+    rows.append(("overlap", _rect_json(0.0, 0.0, 1.0, 1.0)))
+    rows.append(("overlap", _rect_json(0.5, 0.0, 1.0, 1.0)))
+    # key "disjoint": two separated squares -> 2 polygons
+    rows.append(("disjoint", _rect_json(0.0, 0.0, 1.0, 1.0)))
+    rows.append(("disjoint", _rect_json(5.0, 5.0, 1.0, 1.0)))
+    return rows
+
+
 class TestDissolve:
     @pytest.fixture(scope="class")
     def tiling(self, spark):
-        rows = []
-        # key "grid": 4x4 adjacent unit squares -> one 4x4 square
-        for i in range(4):
-            for j in range(4):
-                rows.append(("grid", _rect_json(float(i), float(j), 1.0, 1.0)))
-        # key "overlap": two half-overlapping rects -> area 1.5
-        rows.append(("overlap", _rect_json(0.0, 0.0, 1.0, 1.0)))
-        rows.append(("overlap", _rect_json(0.5, 0.0, 1.0, 1.0)))
-        # key "disjoint": two separated squares -> 2 polygons
-        rows.append(("disjoint", _rect_json(0.0, 0.0, 1.0, 1.0)))
-        rows.append(("disjoint", _rect_json(5.0, 5.0, 1.0, 1.0)))
-        return spark.createDataFrame(rows, "zone string, geom_json string")
+        return spark.createDataFrame(_tiling_rows(), "zone string, geom_json string")
 
     def test_union_semantics(self, tiling):
         out = {r.key: r for r in dissolve(tiling, key_col="zone", fanin=4).collect()}
@@ -75,8 +82,6 @@ class TestDissolve:
 def test_non_finite_coordinate_degrades_the_group():
     # json admits NaN tokens; the kernel rejects them before the sweep
     # and the group becomes one invalid_input row instead of a failed task
-    import pandas as pd
-
     rect = _rect_json(0.0, 0.0, 1.0, 1.0)
     nan_rect = rect.replace("0.0, 0.0]", "NaN, 0.0]")
     assert "NaN" in nan_rect
@@ -87,3 +92,50 @@ def test_non_finite_coordinate_degrades_the_group():
     assert final[["geom_json", "n_polys", "status"]].values.tolist() == [
         ["", 0, "invalid_input"]
     ]
+    # a bucket holding only the NaN rect makes no kernel call and passes
+    # as ok; the level-2 union meets the NaN and degrades the group
+    lone = _partial_fn(("k",), pd.DataFrame({"geom_json": [nan_rect]}))
+    assert lone["status"].tolist() == ["ok"]
+    final = _final_fn(("k",), pd.concat([ok, lone]))
+    assert final[["geom_json", "n_polys", "status"]].values.tolist() == [
+        ["", 0, "invalid_input"]
+    ]
+
+
+def _dissolve_groups():
+    """(key, buckets) groups: the tiling fixture in two buckets per key,
+    plus corpus shapes, overlapping (one case's subject and clipping) and
+    disjoint (shapes of several cases)."""
+    groups = {}
+    for n, (key, gj) in enumerate(_tiling_rows()):
+        groups.setdefault(key, [[], []])[n % 2].append(gj)
+    for case_idx in (3, 17, 61):
+        groups[f"case{case_idx}"] = [
+            [serialize_multipolygon(mp)] for mp in case_geometry(case_idx)
+        ]
+    groups["cases"] = [
+        [serialize_multipolygon(case_geometry(i)[i % 2]) for i in range(b, 12, 3)]
+        for b in range(3)
+    ]
+    return groups
+
+
+def _dissolve_outputs():
+    out = []
+    for key, buckets in _dissolve_groups().items():
+        parts = [
+            _partial_fn((key,), pd.DataFrame({"geom_json": b})) for b in buckets if b
+        ]
+        final = _final_fn((key,), pd.concat(parts))
+        out.append(([p.values.tolist() for p in parts], final.values.tolist()))
+    return out
+
+
+@pytest.mark.skipif(not native.NATIVE_AVAILABLE, reason="native kernel did not build")
+def test_dissolve_bytes_match_across_engines(monkeypatch):
+    # dissolve's output JSON is the same byte for byte with the C kernel
+    # loaded and on the pure-Python path
+    with_c = _dissolve_outputs()
+    assert all(final[0][3] == "ok" for _, final in with_c)
+    monkeypatch.setattr(native, "NATIVE_AVAILABLE", False)
+    assert _dissolve_outputs() == with_c

@@ -30,7 +30,7 @@ import struct
 import pyarrow as pa
 import pytest
 
-from rust_geo_booleanop_spark.kernel import KernelInvalidInput, boolean_op, resolve_boolean_op
+from rust_geo_booleanop_spark.kernel import KernelInvalidInput, boolean_op
 from rust_geo_booleanop_spark.kernel.geojson import (
     multipolygon_bbox,
     parse_multipolygon,
@@ -456,7 +456,6 @@ def test_batch_overflow_reruns_row_by_row(monkeypatch):
 def test_batch_runner_python_engine(monkeypatch):
     # without a C compiler every resolver takes the pure-Python path
     monkeypatch.setattr(native, "NATIVE_AVAILABLE", False)
-    assert resolve_boolean_op() is boolean_op
     assert resolve_pair_runner() is pair_boolean_ops_python
     assert resolve_bbox_fn()(SQUARE) == (0.0, 0.0, 2.0, 2.0)
     subjects = [SQUARE, None, BBOX_KEYED]
