@@ -446,8 +446,9 @@ def boolean_op_f32_native(subject, clipping, operation):
 
 
 # ---------------------------------------------------------------------------
-# JSON pair runner: the whole (parse once, sweep per op, serialize) pair
-# lifecycle in C. Byte-identical to the Python marshalling by construction
+# JSON pair runner: the whole (parse once, one sweep shared by the ops,
+# serialize) pair lifecycle in C, where the Python composition sweeps
+# once per op. Byte-identical to the Python marshalling by construction
 # (the C side calls CPython's own PyOS_string_to_double /
 # PyOS_double_to_string — the same functions json.loads / json.dumps use
 # on number tokens and floats); pinned by tests/test_native_pairs.py.

@@ -21,7 +21,24 @@
  *  - the exact-rational orientation fallback (filter-inconclusive
  *    orient2d) calls back into Python Fractions via a registered
  *    function pointer — the rare path stays arbitrary-precision exact;
- *  - object identity becomes arena indices; Python `is` -> index ==.
+ *  - object identity becomes arena indices; Python `is` -> index ==;
+ *  - one sweep serves several ops where the Python kernel sweeps once
+ *    per op (martinez_run). The sweep hardly depends on the op: the heap
+ *    order and the geometry (divisions, in_out, other_in_out, edge_type)
+ *    are op-free; each op keeps its own result_transition and
+ *    prev_in_result per event, updated inline at every compute_fields.
+ *    The early exits (intersection past rightbound, diff past the
+ *    subject's max x) take a copy of the arena and the sorted-event
+ *    count at the op's break event, because the sweep that goes on for
+ *    the other ops rewrites earlier events (other, left, edge_type,
+ *    in_out); that op's connect_edges reads the copy. The fill differs
+ *    for diff only in contour ids (every clipping ring gets s_npolys,
+ *    not one id per clipping polygon) and in the write-only
+ *    is_exterior_ring, and compare_segments' same-left-
+ *    point tie-break is their one reader: a shared sweep flags the first
+ *    such read of two clipping ids that differ, and a diff flagged
+ *    before its break sweeps again alone. One requested op takes no
+ *    copy and stops at its own break, exactly as the Python sweep.
  */
 
 #include <math.h>
@@ -221,20 +238,25 @@ static SegInter segment_intersection(real_t a1x, real_t a1y, real_t a2x,
 /* event arena (../events.py Event; `other` links become indices)     */
 /* ------------------------------------------------------------------ */
 
+/* One sweep serves up to SWEEP_OPS operations (intersection, union,
+ * diff, xor): each keeps its own result_transition / prev_in_result per
+ * event, in the slot of the op's position in Ctx.op. */
+#define SWEEP_OPS 4
+
 typedef struct {
     real_t x, y;
     int32_t other;             /* paired endpoint index, -1 = None */
     int32_t contour_id;
-    int32_t prev_in_result;    /* event index, -1 = None */
     int32_t other_pos;
     int32_t output_contour_id;
+    int32_t prev_in_result[SWEEP_OPS]; /* event index, -1 = None */
     uint8_t left;
     uint8_t is_subject;
     uint8_t is_exterior_ring;  /* write-only, kept for parity */
     uint8_t edge_type;
     uint8_t in_out;
     uint8_t other_in_out;
-    uint8_t result_transition;
+    uint8_t result_transition[SWEEP_OPS];
 } Event;
 
 typedef struct {
@@ -257,6 +279,13 @@ typedef struct {
     int32_t sen, secap;
     int oom;
     int invalid; /* a segment with a non-finite endpoint */
+    int32_t nops;          /* ops swept together, one slot each */
+    int32_t op[SWEEP_OPS];
+    int cid_tie; /* compare_segments read two clipping contour ids that differ */
+    int32_t view[SWEEP_OPS]; /* what each op slot reads, see VIEW_LIVE */
+    Event *snap[SWEEP_OPS];  /* arena copies taken mid-sweep ... */
+    int32_t snap_n[SWEEP_OPS], snap_sen[SWEEP_OPS]; /* ... their n, sen */
+    int32_t nsnap;
 } Ctx;
 
 #define E(i) (&c->ev[(i)])
@@ -303,16 +332,18 @@ static int32_t new_event(Ctx *c, int32_t contour_id, real_t x, real_t y,
     e->y = y;
     e->other = other;
     e->contour_id = contour_id;
-    e->prev_in_result = -1;
     e->other_pos = 0;
     e->output_contour_id = -1;
+    for (int k = 0; k < SWEEP_OPS; k++) {
+        e->prev_in_result[k] = -1;
+        e->result_transition[k] = TRANS_NONE;
+    }
     e->left = (uint8_t)left;
     e->is_subject = (uint8_t)is_subject;
     e->is_exterior_ring = (uint8_t)is_exterior_ring;
     e->edge_type = EDGE_NORMAL;
     e->in_out = 0;
     e->other_in_out = 0;
-    e->result_transition = TRANS_NONE;
     return c->n++;
 }
 
@@ -395,8 +426,15 @@ static int compare_segments(Ctx *c, int32_t se1, int32_t se2) {
     }
 
     if (E(se_old)->is_subject == E(se_new)->is_subject) {
-        if (E(se_old)->x == E(se_new)->x && E(se_old)->y == E(se_new)->y)
+        if (E(se_old)->x == E(se_new)->x && E(se_old)->y == E(se_new)->y) {
+            /* the one read of contour_id: diff numbers every clipping
+             * polygon alike, so a differing pair here is where a diff
+             * sweep could part from the union numbering's */
+            if (!E(se_old)->is_subject &&
+                E(se_old)->contour_id != E(se_new)->contour_id)
+                c->cid_tie = 1;
             return E(se_old)->contour_id < E(se_new)->contour_id ? -flip : flip;
+        }
         return -flip;
     }
     return E(se_old)->is_subject ? -flip : flip;
@@ -708,50 +746,78 @@ static int result_transition_op(Ctx *c, int32_t event, int operation) {
     return is_in ? TRANS_OUT_IN : TRANS_IN_OUT;
 }
 
-static void compute_fields(Ctx *c, int32_t event, int32_t prev, int operation) {
-    if (prev >= 0) {
-        if (E(event)->is_subject == E(prev)->is_subject) {
-            E(event)->in_out = !E(prev)->in_out;
-            E(event)->other_in_out = E(prev)->other_in_out;
-        } else if (ev_is_vertical(c, prev)) {
-            E(event)->in_out = !E(prev)->other_in_out;
-            E(event)->other_in_out = !E(prev)->in_out;
+/* The op-free fields (in_out, other_in_out) once, then each swept op's
+ * prev_in_result and result_transition in its slot. */
+static void compute_fields(Ctx *c, int32_t event, int32_t prev) {
+    Event *e = E(event);
+    Event *p = prev >= 0 ? E(prev) : 0;
+    int prev_vertical = 0;
+    if (p) {
+        prev_vertical = ev_is_vertical(c, prev);
+        if (e->is_subject == p->is_subject) {
+            e->in_out = !p->in_out;
+            e->other_in_out = p->other_in_out;
+        } else if (prev_vertical) {
+            e->in_out = !p->other_in_out;
+            e->other_in_out = !p->in_out;
         } else {
-            E(event)->in_out = !E(prev)->other_in_out;
-            E(event)->other_in_out = E(prev)->in_out;
+            e->in_out = !p->other_in_out;
+            e->other_in_out = p->in_out;
         }
-
-        if (E(prev)->result_transition != TRANS_NONE && !ev_is_vertical(c, prev))
-            E(event)->prev_in_result = prev;
-        else if (E(prev)->prev_in_result >= 0)
-            E(event)->prev_in_result = E(prev)->prev_in_result;
-        else
-            E(event)->prev_in_result = -1;
     } else {
-        E(event)->in_out = 0;
-        E(event)->other_in_out = 1;
-        E(event)->prev_in_result = -1;
+        e->in_out = 0;
+        e->other_in_out = 1;
     }
 
-    if (in_result_op(c, event, operation))
-        E(event)->result_transition =
-            (uint8_t)result_transition_op(c, event, operation);
-    else
-        E(event)->result_transition = TRANS_NONE;
+    for (int32_t k = 0; k < c->nops; k++) {
+        int32_t pir = -1;
+        if (p)
+            pir = (p->result_transition[k] != TRANS_NONE && !prev_vertical)
+                      ? prev
+                      : p->prev_in_result[k];
+        e->prev_in_result[k] = pir;
+        int op = c->op[k];
+        e->result_transition[k] =
+            in_result_op(c, event, op)
+                ? (uint8_t)result_transition_op(c, event, op)
+                : TRANS_NONE;
+    }
 }
 
 /* ------------------------------------------------------------------ */
-/* the sweep (../booleanop.py subdivide)                              */
+/* the sweep (../booleanop.py subdivide), shared by several ops        */
 /* ------------------------------------------------------------------ */
 
-static int subdivide(Ctx *c, const real_t *sbbox, const real_t *cbbox,
-                     int operation) {
+/* What op slot k reads after the sweep (Ctx.view[k]): */
+#define VIEW_LIVE -1 /* the arena as the sweep left it */
+#define VIEW_REDO -2 /* diff after a contour-id tie: sweeps again alone */
+/* view[k] >= 0: the arena copy c->snap[view[k]] */
+
+/* Every diff slot still sweeping parts from the shared sweep (a
+ * contour-id tie was read); returns how many. */
+static int32_t redo_diffs(Ctx *c, uint8_t *done) {
+    int32_t n = 0;
+    for (int32_t k = 0; k < c->nops; k++)
+        if (!done[k] && c->op[k] == OP_DIFFERENCE) {
+            done[k] = 1;
+            c->view[k] = VIEW_REDO;
+            n++;
+        }
+    return n;
+}
+
+static int subdivide(Ctx *c, const real_t *sbbox, const real_t *cbbox) {
     real_t rightbound = sbbox[2] < cbbox[2] ? sbbox[2] : cbbox[2];
     real_t sbbox_max_x = sbbox[2];
 
     long event_budget = 100L * (long)c->hn + 100000L;
+    uint8_t done[SWEEP_OPS] = {0};
+    int32_t pending = c->nops;
 
     while (c->hn) {
+        if (c->cid_tie) pending -= redo_diffs(c, done);
+        if (!pending) return STATUS_OK;
+
         int32_t event = heap_pop(c);
         if (!grow_i32(&c->se, &c->secap, (int64_t)c->sen + 1)) {
             c->oom = 1;
@@ -760,9 +826,38 @@ static int subdivide(Ctx *c, const real_t *sbbox, const real_t *cbbox,
         c->se[c->sen++] = event;
         if ((long)c->sen > event_budget) return STATUS_LIMIT;
 
-        if ((operation == OP_INTERSECTION && E(event)->x > rightbound) ||
-            (operation == OP_DIFFERENCE && E(event)->x > sbbox_max_x))
-            break;
+        /* an op's early exit: the last ops still sweeping stop the sweep
+         * and read the live arena; others take a copy and sweep on */
+        uint8_t stop[SWEEP_OPS] = {0};
+        int32_t nstop = 0;
+        for (int32_t k = 0; k < c->nops; k++) {
+            int op = c->op[k];
+            if (!done[k] &&
+                ((op == OP_INTERSECTION && E(event)->x > rightbound) ||
+                 (op == OP_DIFFERENCE && E(event)->x > sbbox_max_x))) {
+                stop[k] = 1;
+                nstop++;
+            }
+        }
+        if (nstop == pending) break;
+        if (nstop) {
+            Event *copy = (Event *)malloc((size_t)c->n * sizeof(Event));
+            if (!copy) {
+                c->oom = 1;
+                return STATUS_OOM;
+            }
+            memcpy(copy, c->ev, (size_t)c->n * sizeof(Event));
+            c->snap[c->nsnap] = copy;
+            c->snap_n[c->nsnap] = c->n;
+            c->snap_sen[c->nsnap] = c->sen;
+            for (int32_t k = 0; k < c->nops; k++)
+                if (stop[k]) {
+                    done[k] = 1;
+                    c->view[k] = c->nsnap;
+                }
+            c->nsnap++;
+            pending -= nstop;
+        }
 
         if (E(event)->left) {
             int32_t idx = sl_insert(c, event);
@@ -770,12 +865,12 @@ static int subdivide(Ctx *c, const real_t *sbbox, const real_t *cbbox,
             int32_t prev = idx > 0 ? c->sl[idx - 1] : -1;
             int32_t nxt = idx < c->sln - 1 ? c->sl[idx + 1] : -1;
 
-            compute_fields(c, event, prev, operation);
+            compute_fields(c, event, prev);
 
             if (nxt >= 0) {
                 if (possible_intersection(c, event, nxt) == 2) {
-                    compute_fields(c, event, prev, operation);
-                    compute_fields(c, nxt, event, operation);
+                    compute_fields(c, event, prev);
+                    compute_fields(c, nxt, event);
                 }
             }
             if (c->oom) return STATUS_OOM;
@@ -783,8 +878,8 @@ static int subdivide(Ctx *c, const real_t *sbbox, const real_t *cbbox,
             if (prev >= 0) {
                 if (possible_intersection(c, prev, event) == 2) {
                     int32_t prev_prev = (idx - 1) > 0 ? c->sl[idx - 2] : -1;
-                    compute_fields(c, prev, prev_prev, operation);
-                    compute_fields(c, event, prev, operation);
+                    compute_fields(c, prev, prev_prev);
+                    compute_fields(c, event, prev);
                 }
             }
             if (c->oom) return STATUS_OOM;
@@ -803,6 +898,7 @@ static int subdivide(Ctx *c, const real_t *sbbox, const real_t *cbbox,
             }
         }
     }
+    if (c->cid_tie) redo_diffs(c, done);
     return STATUS_OK;
 }
 
@@ -810,7 +906,7 @@ static int subdivide(Ctx *c, const real_t *sbbox, const real_t *cbbox,
 /* result assembly (../booleanop.py connect_edges etc.)               */
 /* ------------------------------------------------------------------ */
 
-static int32_t *order_events(Ctx *c, int32_t *out_n) {
+static int32_t *order_events(Ctx *c, int32_t k, int32_t *out_n) {
     int32_t n = 0;
     int32_t *res = (int32_t *)malloc((size_t)(c->sen ? c->sen : 1) * sizeof(int32_t));
     if (!res) {
@@ -821,10 +917,10 @@ static int32_t *order_events(Ctx *c, int32_t *out_n) {
         int32_t e = c->se[i];
         int keep;
         if (E(e)->left)
-            keep = E(e)->result_transition != TRANS_NONE;
+            keep = E(e)->result_transition[k] != TRANS_NONE;
         else
             keep = E(e)->other >= 0 &&
-                   E(E(e)->other)->result_transition != TRANS_NONE;
+                   E(E(e)->other)->result_transition[k] != TRANS_NONE;
         if (keep) res[n++] = e;
     }
 
@@ -937,10 +1033,10 @@ static int contour_push_hole(CContour *ct, int32_t hole_id) {
 
 /* _initialize_contour: fills hole_of/depth of the contour being created
  * (already appended at index contour_id) and may register it as a hole. */
-static int initialize_contour(Ctx *c, int32_t event, CContour *contours,
-                              int32_t contour_id) {
+static int initialize_contour(Ctx *c, int32_t k, int32_t event,
+                              CContour *contours, int32_t contour_id) {
     CContour *me = &contours[contour_id];
-    int32_t pir = E(event)->prev_in_result;
+    int32_t pir = E(event)->prev_in_result[k];
     if (pir < 0) {
         me->hole_of = -1;
         me->depth = 0;
@@ -954,7 +1050,7 @@ static int initialize_contour(Ctx *c, int32_t event, CContour *contours,
         me->depth = 0;
         return 1;
     }
-    if (E(pir)->result_transition == TRANS_OUT_IN) {
+    if (E(pir)->result_transition[k] == TRANS_OUT_IN) {
         if (contours[lower_id].hole_of >= 0) {
             int32_t parent_id = contours[lower_id].hole_of;
             if (!contour_push_hole(&contours[parent_id], contour_id)) return 0;
@@ -1010,94 +1106,63 @@ static void ctx_free(Ctx *c) {
     free(c->heap);
     free(c->sl);
     free(c->se);
+    for (int32_t i = 0; i < c->nsnap; i++) free(c->snap[i]);
 }
 
-/* Inputs: flattened closed rings.
+/* One operand: flattened closed rings.
  *   coords: x,y pairs for all rings of all polygons, concatenated
  *   ring_np: points per ring
- *   poly_nr: rings per polygon
- * Caller guarantees rings are closed (first == last) — the Python
- * wrapper mirrors _normalize_multipolygon before flattening. A segment
- * with a NaN or infinite endpoint returns STATUS_INVALID. */
-MartinezResult *martinez_boolean_op(
-    const real_t *s_coords, const int32_t *s_ring_np, int32_t s_nrings,
-    const int32_t *s_poly_nr, int32_t s_npolys, const real_t *c_coords,
-    const int32_t *c_ring_np, int32_t c_nrings, const int32_t *c_poly_nr,
-    int32_t c_npolys, int32_t operation) {
-    (void)s_nrings;
-    (void)c_nrings;
+ *   poly_nr: rings per polygon */
+typedef struct {
+    const real_t *coords;
+    const int32_t *ring_np;
+    const int32_t *poly_nr;
+    int32_t npolys;
+} Operand;
 
-    Ctx ctx_store;
-    Ctx *c = &ctx_store;
-    memset(c, 0, sizeof(Ctx));
-
-    real_t sbbox[4] = {INFINITY, INFINITY, -INFINITY, -INFINITY};
-    real_t cbbox[4] = {INFINITY, INFINITY, -INFINITY, -INFINITY};
-
-    /* fill_queue */
+/* fill_queue: subject polygons get contour ids 1..s_npolys; with
+ * `exterior` (every op but a lone diff) clipping polygon k gets
+ * s_npolys+1+k, without it every clipping ring keeps s_npolys. */
+static int fill_queue(Ctx *c, const Operand *s, const Operand *cl,
+                      real_t *sbbox, real_t *cbbox, int exterior) {
     int32_t contour_id = 0;
-    {
-        const real_t *p = s_coords;
-        int32_t ring_idx = 0;
-        for (int32_t poly = 0; poly < s_npolys; poly++) {
-            contour_id++;
-            int32_t nr = s_poly_nr[poly];
-            for (int32_t k = 0; k < nr; k++) {
-                int32_t np = s_ring_np[ring_idx++];
-                process_ring(c, p, np, 1, contour_id, sbbox, k == 0);
-                p += (size_t)2 * np;
-                if (c->oom || c->invalid) {
-                    int st = c->oom ? STATUS_OOM : STATUS_INVALID;
-                    ctx_free(c);
-                    return result_with_status(st);
-                }
-            }
-        }
-        p = c_coords;
-        ring_idx = 0;
-        for (int32_t poly = 0; poly < c_npolys; poly++) {
-            int exterior = operation != OP_DIFFERENCE;
-            if (exterior) contour_id++;
-            int32_t nr = c_poly_nr[poly];
-            for (int32_t k = 0; k < nr; k++) {
-                int32_t np = c_ring_np[ring_idx++];
-                process_ring(c, p, np, 0, contour_id, cbbox,
-                             exterior && k == 0);
-                p += (size_t)2 * np;
-                if (c->oom || c->invalid) {
-                    int st = c->oom ? STATUS_OOM : STATUS_INVALID;
-                    ctx_free(c);
-                    return result_with_status(st);
-                }
-            }
+    const real_t *p = s->coords;
+    int32_t ring_idx = 0;
+    for (int32_t poly = 0; poly < s->npolys; poly++) {
+        contour_id++;
+        int32_t nr = s->poly_nr[poly];
+        for (int32_t k = 0; k < nr; k++) {
+            int32_t np = s->ring_np[ring_idx++];
+            process_ring(c, p, np, 1, contour_id, sbbox, k == 0);
+            p += (size_t)2 * np;
+            if (c->oom || c->invalid) return c->oom ? STATUS_OOM : STATUS_INVALID;
         }
     }
-
-    /* trivial bbox short-circuit: the Python wrapper builds the result */
-    if (sbbox[0] > cbbox[2] || cbbox[0] > sbbox[2] || sbbox[1] > cbbox[3] ||
-        cbbox[1] > sbbox[3]) {
-        ctx_free(c);
-        return result_with_status(STATUS_TRIVIAL);
+    p = cl->coords;
+    ring_idx = 0;
+    for (int32_t poly = 0; poly < cl->npolys; poly++) {
+        if (exterior) contour_id++;
+        int32_t nr = cl->poly_nr[poly];
+        for (int32_t k = 0; k < nr; k++) {
+            int32_t np = cl->ring_np[ring_idx++];
+            process_ring(c, p, np, 0, contour_id, cbbox, exterior && k == 0);
+            p += (size_t)2 * np;
+            if (c->oom || c->invalid) return c->oom ? STATUS_OOM : STATUS_INVALID;
+        }
     }
+    return STATUS_OK;
+}
 
-    int st = subdivide(c, sbbox, cbbox, operation);
-    if (st != STATUS_OK) {
-        ctx_free(c);
-        return result_with_status(st);
-    }
-
-    /* connect_edges */
+/* connect_edges for op slot k over c's arena and sorted events, into
+ * the public result. NULL when an allocation fails. */
+static MartinezResult *connect_edges(Ctx *c, int32_t k) {
     int32_t n_res = 0;
-    int32_t *res = order_events(c, &n_res);
-    if (!res) {
-        ctx_free(c);
-        return result_with_status(STATUS_OOM);
-    }
+    int32_t *res = order_events(c, k, &n_res);
+    if (!res) return 0;
     int32_t *iter_map = precompute_iteration_order(c, res, n_res);
     if (!iter_map) {
         free(res);
-        ctx_free(c);
-        return result_with_status(STATUS_OOM);
+        return 0;
     }
     uint8_t *processed = (uint8_t *)calloc((size_t)(n_res ? n_res : 1), 1);
     CContour *contours = 0;
@@ -1122,7 +1187,7 @@ MartinezResult *martinez_boolean_op(
         }
         CContour *ct = &contours[n_contours++];
         memset(ct, 0, sizeof(CContour));
-        if (!initialize_contour(c, res[i], contours, cid)) {
+        if (!initialize_contour(c, k, res[i], contours, cid)) {
             oom = 1;
             break;
         }
@@ -1210,15 +1275,92 @@ MartinezResult *martinez_boolean_op(
         free(contours[i].holes);
     }
     free(contours);
-    ctx_free(c);
 
-    if (!out) return result_with_status(STATUS_OOM);
     return out;
+}
+
+/* Op slot k's result after a sweep that returned `st`: connect_edges on
+ * its snapshot when the sweep took one, else on the live arena (or the
+ * sweep's own status). Every op starts from a clean output_contour_id
+ * (initialize_contour trusts any id in range) and other_pos. */
+static MartinezResult *op_result(Ctx *c, int32_t k, int st) {
+    Ctx v = *c;
+    if (c->view[k] >= 0) {
+        v.ev = c->snap[c->view[k]];
+        v.n = c->snap_n[c->view[k]];
+        v.sen = c->snap_sen[c->view[k]];
+    } else if (st != STATUS_OK) {
+        return result_with_status(st);
+    }
+    for (int32_t i = 0; i < v.n; i++) {
+        v.ev[i].output_contour_id = -1;
+        v.ev[i].other_pos = 0;
+    }
+    MartinezResult *r = connect_edges(&v, k);
+    return r ? r : result_with_status(STATUS_OOM);
+}
+
+/* The one core: fill_queue and one sweep for the `nops` distinct ops in
+ * `ops`, then connect_edges per op into out[k] (NULL only when even the
+ * status result cannot be allocated). Several ops share union's contour
+ * numbering, and a diff that reads a contour-id tie before its own early
+ * exit runs again alone; a one-op call keeps its op's own numbering and
+ * stops at its own break, exactly as the Python sweep. */
+static void martinez_run(const Operand *s, const Operand *cl,
+                         const int32_t *ops, int32_t nops,
+                         MartinezResult **out) {
+    Ctx ctx_store;
+    Ctx *c = &ctx_store;
+    memset(c, 0, sizeof(Ctx));
+    c->nops = nops;
+    for (int32_t k = 0; k < nops; k++) {
+        c->op[k] = ops[k];
+        c->view[k] = VIEW_LIVE;
+    }
+
+    real_t sbbox[4] = {INFINITY, INFINITY, -INFINITY, -INFINITY};
+    real_t cbbox[4] = {INFINITY, INFINITY, -INFINITY, -INFINITY};
+    int st = fill_queue(c, s, cl, sbbox, cbbox,
+                        !(nops == 1 && ops[0] == OP_DIFFERENCE));
+
+    /* trivial bbox short-circuit: the Python wrapper builds the result */
+    if (st == STATUS_OK &&
+        (sbbox[0] > cbbox[2] || cbbox[0] > sbbox[2] || sbbox[1] > cbbox[3] ||
+         cbbox[1] > sbbox[3]))
+        st = STATUS_TRIVIAL;
+    if (st == STATUS_OK) st = subdivide(c, sbbox, cbbox);
+
+    for (int32_t k = 0; k < nops; k++) {
+        if (c->view[k] == VIEW_REDO)
+            martinez_run(s, cl, &ops[k], 1, &out[k]);
+        else
+            out[k] = op_result(c, k, st);
+    }
+    ctx_free(c);
+}
+
+/* Inputs: flattened closed rings per operand (see Operand); the ring
+ * counts are implied by poly_nr. Caller guarantees rings are closed
+ * (first == last) — the Python wrapper mirrors _normalize_multipolygon
+ * before flattening. A segment with a NaN or infinite endpoint returns
+ * STATUS_INVALID. */
+MartinezResult *martinez_boolean_op(
+    const real_t *s_coords, const int32_t *s_ring_np, int32_t s_nrings,
+    const int32_t *s_poly_nr, int32_t s_npolys, const real_t *c_coords,
+    const int32_t *c_ring_np, int32_t c_nrings, const int32_t *c_poly_nr,
+    int32_t c_npolys, int32_t operation) {
+    (void)s_nrings;
+    (void)c_nrings;
+    const Operand s = {s_coords, s_ring_np, s_poly_nr, s_npolys};
+    const Operand cl = {c_coords, c_ring_np, c_poly_nr, c_npolys};
+    MartinezResult *r = 0;
+    martinez_run(&s, &cl, &operation, 1, &r);
+    return r;
 }
 
 #ifndef MARTINEZ_F32
 /* ==================================================================== */
-/* JSON pair runner: parse-once, N sweeps, serialize-in-C.              */
+/* JSON pair runner: parse once, one shared sweep, serialize in C.      */
 /*                                                                      */
 /* The Spark kernel stage's Python marshalling (json.loads -> nested    */
 /* tuples -> per-op flatten -> sweep -> tuple rebuild -> json.dumps)    */
@@ -1241,9 +1383,12 @@ MartinezResult *martinez_boolean_op(
 /* One pair entry point, mz_pair_run_batch, runs an Arrow batch of     */
 /* pairs — string operands parsed once per run of equal consecutive     */
 /* rows (a last-row cache), rectangle clippings built from their four   */
-/* doubles without any JSON — through one per-op body (mz_op_run:       */
-/* sweep, then the one serializer). It is the Spark kernel stage's hot  */
-/* path; a single pair (dissolve, the ceilings) is a batch of one row.  */
+/* doubles without any JSON. Per row, one martinez_run sweeps the       */
+/* distinct ops among intersection, union, diff and xor together        */
+/* (diff_ba, on swapped operands, sweeps alone), then one per-op body   */
+/* (mz_op_emit) serializes each op in the requested order. It is the    */
+/* Spark kernel stage's hot path; a single pair (dissolve, the          */
+/* ceilings) is a batch of one row.                                     */
 /*                                                                      */
 /* GIL: ctypes releases the GIL around the foreign call; the Python     */
 /* C-API calls here require it, so the entry points re-acquire it with  */
@@ -1338,8 +1483,27 @@ static int sb_putc(StrBuf *b, char ch) {
 }
 
 /* Python repr bytes for a double — json.dumps' float path by
- * construction (float_repr: PyOS_double_to_string 'r' + ADD_DOT_0). */
+ * construction (float_repr: PyOS_double_to_string 'r' + ADD_DOT_0).
+ * An integral |v| < 1e16 other than -0.0 is written as its integer's
+ * digits plus ".0" without the call: that is its repr (fixed notation
+ * below 1e16, and below 2^54 no shorter digit string rounds back to an
+ * integral double), and most pipeline coordinates take this path. */
 static int sb_putd(StrBuf *b, double v) {
+    if (v > -1e16 && v < 1e16 && v == (double)(int64_t)v &&
+        !(v == 0.0 && signbit(v))) {
+        char digits[24];
+        int n = (int)sizeof(digits);
+        digits[--n] = '0';
+        digits[--n] = '.';
+        int64_t i = (int64_t)v;
+        uint64_t u = i < 0 ? (uint64_t)0 - (uint64_t)i : (uint64_t)i;
+        do {
+            digits[--n] = (char)('0' + u % 10);
+            u /= 10;
+        } while (u);
+        if (i < 0) digits[--n] = '-';
+        return sb_putsn(b, digits + n, (int64_t)sizeof(digits) - n);
+    }
     char *s = g_py.d2s(v, 'r', 0, MZ_DTSF_ADD_DOT_0, 0);
     if (!s) return 0;
     int ok = sb_putsn(b, s, (int64_t)strlen(s));
@@ -1788,28 +1952,19 @@ static int mz_sb_result(StrBuf *b, const MartinezResult *r, MzBb *bb,
 
 #define MZ_OPC_DIFF_BA 4
 
-/* The per-op body: sweep op code `opc` (0..3, or MZ_OPC_DIFF_BA) over
- * parsed operands and append its GeoJSON to b. Returns MZ_OK (then
- * *status is MZ_OK or MZ_LIMIT, bb4 NaN when the result is empty),
- * MZ_UNSUPPORTED for a bad op code, or MZ_OOM. The parser and the
- * rectangle rows admit only finite doubles, so STATUS_INVALID never
- * comes back here. */
-static int32_t mz_op_run(const MzGeom *S, const MzGeom *C, int32_t opc,
-                         StrBuf *b, int32_t *status, int32_t *n_polys,
-                         double *bb4) {
-    const MzGeom *a = S, *bg = C;
-    int32_t mop = opc;
-    if (mop == MZ_OPC_DIFF_BA) { /* diff with swapped operands */
-        a = C;
-        bg = S;
-        mop = OP_DIFFERENCE;
-    } else if (mop < 0 || mop > 3) {
-        return MZ_UNSUPPORTED;
-    }
-    MartinezResult *r = martinez_boolean_op(
-        a->coords, a->ring_np, (int32_t)a->nrings, a->poly_nr,
-        (int32_t)a->npolys, bg->coords, bg->ring_np, (int32_t)bg->nrings,
-        bg->poly_nr, (int32_t)bg->npolys, mop);
+static Operand mz_operand(const MzGeom *g) {
+    Operand o = {g->coords, g->ring_np, g->poly_nr, (int32_t)g->npolys};
+    return o;
+}
+
+/* The per-op body: append the GeoJSON of op `mop` (0..3), whose sweep
+ * over operands (a, bg) gave r, to b. Returns MZ_OK (then *status is
+ * MZ_OK or MZ_LIMIT, bb4 NaN when the result is empty) or MZ_OOM. The
+ * parser and the rectangle rows admit only finite doubles, so
+ * STATUS_INVALID never comes back here. */
+static int32_t mz_op_emit(const MzGeom *a, const MzGeom *bg, int32_t mop,
+                          const MartinezResult *r, StrBuf *b,
+                          int32_t *status, int32_t *n_polys, double *bb4) {
     if (!r) return MZ_OOM;
     MzBb bb;
     mz_bb_init(&bb);
@@ -1836,7 +1991,6 @@ static int32_t mz_op_run(const MzGeom *S, const MzGeom *C, int32_t opc,
         }
     }
     if (ok) ok = SB_LIT(b, "]}");
-    martinez_free(r);
     if (!ok) return MZ_OOM;
     *n_polys = npolys;
     if (npolys > 0) {
@@ -1945,6 +2099,20 @@ int32_t mz_pair_run_batch(int64_t n, const uint8_t *null,
     *out_json = 0;
     out_parses[0] = out_parses[1] = 0;
     if (!mz_pyapi_init()) return MZ_UNSUPPORTED;
+    /* the distinct op codes 0..3 share one sweep per row; diff_ba, on
+     * swapped operands, sweeps alone */
+    int32_t sweep_ops[SWEEP_OPS], nsweep = 0, diff_ba = 0;
+    uint8_t seen[MZ_OPC_DIFF_BA + 1] = {0};
+    for (int32_t k = 0; k < n_ops; k++) {
+        int32_t opc = ops[k];
+        if (opc < 0 || opc > MZ_OPC_DIFF_BA) return MZ_UNSUPPORTED;
+        if (seen[opc]) continue;
+        seen[opc] = 1;
+        if (opc == MZ_OPC_DIFF_BA)
+            diff_ba = 1;
+        else
+            sweep_ops[nsweep++] = opc;
+    }
     int gil = g_py.gil_ensure();
     MzCached S, C;
     memset(&S, 0, sizeof(S));
@@ -1979,12 +2147,29 @@ int32_t mz_pair_run_batch(int64_t n, const uint8_t *null,
             }
             row_state[i] = st == MZ_OK ? MZ_ROW_RAN : MZ_ROW_DECLINED;
         }
+        MartinezResult *by_op[MZ_OPC_DIFF_BA + 1] = {0}; /* by op code */
+        if (row_state[i] == MZ_ROW_RAN) {
+            const Operand so = mz_operand(&S.g), co = mz_operand(&C.g);
+            MartinezResult *swept[SWEEP_OPS] = {0};
+            if (nsweep) martinez_run(&so, &co, sweep_ops, nsweep, swept);
+            for (int32_t j = 0; j < nsweep; j++) by_op[sweep_ops[j]] = swept[j];
+            if (diff_ba) {
+                const int32_t diff = OP_DIFFERENCE;
+                martinez_run(&co, &so, &diff, 1, &by_op[MZ_OPC_DIFF_BA]);
+            }
+        }
         for (int32_t k = 0; k < n_ops; k++) {
             int64_t slot = i * n_ops + k;
             int32_t status = MZ_OK, npolys = 0;
             double *bb4 = out_bbox + 4 * slot;
             if (row_state[i] == MZ_ROW_RAN) {
-                ret = mz_op_run(&S.g, &C.g, ops[k], &sb, &status, &npolys, bb4);
+                const MartinezResult *r = by_op[ops[k]];
+                if (ops[k] == MZ_OPC_DIFF_BA)
+                    ret = mz_op_emit(&C.g, &S.g, OP_DIFFERENCE, r, &sb,
+                                     &status, &npolys, bb4);
+                else
+                    ret = mz_op_emit(&S.g, &C.g, ops[k], r, &sb, &status,
+                                     &npolys, bb4);
                 if (ret != MZ_OK) break;
                 if (sb.n > max_bytes) {
                     ret = MZ_OVERFLOW;
@@ -1997,6 +2182,7 @@ int32_t mz_pair_run_batch(int64_t n, const uint8_t *null,
             out_n_polys[slot] = npolys;
             out_offsets[slot + 1] = (int32_t)sb.n;
         }
+        for (int32_t j = 0; j <= MZ_OPC_DIFF_BA; j++) martinez_free(by_op[j]);
     }
     mz_geom_free(&S.g);
     mz_geom_free(&C.g);
@@ -2039,16 +2225,15 @@ int32_t mz_parse_bbox(const char *s_json, int64_t s_len, double *out4) {
 int32_t mz_repr_double(double v, char *out, int32_t cap) {
     if (!mz_pyapi_init()) return -1;
     int gil = g_py.gil_ensure();
-    char *s = g_py.d2s(v, 'r', 0, MZ_DTSF_ADD_DOT_0, 0);
+    StrBuf sb;
+    memset(&sb, 0, sizeof(sb));
     int32_t n = -1;
-    if (s) {
-        size_t ln = strlen(s);
-        if ((int64_t)ln < cap) {
-            memcpy(out, s, ln + 1);
-            n = (int32_t)ln;
-        }
-        g_py.pymem_free(s);
+    if (sb_putd(&sb, v) && sb.n < cap) {
+        memcpy(out, sb.p, (size_t)sb.n);
+        out[sb.n] = 0;
+        n = (int32_t)sb.n;
     }
+    free(sb.p);
     g_py.gil_release(gil);
     return n;
 }

@@ -12,11 +12,13 @@ Two engines, byte-identical outputs:
   bbox per result. The sweep itself is pluggable (pure-Python kernel or
   the native C sweep) so round-3 behavior is reproducible exactly.
 - `kernel.native.pair_boolean_ops_native`: the whole lifecycle in C —
-  parse once, sweep per op on the same flat arrays, serialize in C via
-  CPython's own float repr/strtod functions. Declines (returns None) on
-  anything outside the strict GeoJSON subset our pipelines emit, in which
-  case the resolver's wrapper falls back to the Python composition so odd
-  inputs keep their original behavior (including exception types).
+  parse once, ONE sweep shared by intersection, union, diff and xor
+  (each op's result read off it; diff_ba, on swapped operands, sweeps
+  alone), serialize in C via CPython's own float repr/strtod functions.
+  Declines (returns None) on anything outside the strict GeoJSON subset
+  our pipelines emit, in which case the resolver's wrapper falls back to
+  the Python composition so odd inputs keep their original behavior
+  (including exception types).
 
 The Spark kernel stage runs whole Arrow batches through
 `resolve_batch_runner`: natively, one `pair_boolean_ops_batch_native` C

@@ -21,11 +21,13 @@ The kernel's termination valve ends such a sweep, and the pair runner gives
 it status 'limit_exceeded'; the group degrades to one such row instead of
 hanging an executor. A NaN or infinite coordinate degrades its group the
 same way, with status 'invalid_input', at whichever level it first meets
-the sweep. Clean inputs (disjoint or simply-overlapping coverages, e.g.
+a fold. Clean inputs (disjoint or simply-overlapping coverages, e.g.
 rectangle tilings) dissolve exactly.
 """
 
 from __future__ import annotations
+
+import math
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -40,11 +42,15 @@ DISSOLVE_SCHEMA = "key string, geom_json string, n_polys int, status string"
 
 def _fold_union(jsons) -> tuple[str, int, str]:
     """(geom_json, n_polys, status) of the union of `jsons`, folded left
-    through the pair runner. A lone geometry makes no kernel call; the
-    first non-ok union ends the fold with ("", 0, its status)."""
+    through the pair runner. The first geometry makes no kernel call, so
+    a non-finite coordinate in it gives ("", 0, "invalid_input") here, as
+    the kernel would; the first non-ok union ends the fold with ("", 0,
+    its status)."""
     union = resolve_pair_runner()  # full-C pair lifecycle when available
     first, *rest = jsons
     mp = parse_multipolygon(first)
+    if not all(math.isfinite(v) for poly in mp for ring in poly for pt in ring for v in pt):
+        return "", 0, "invalid_input"
     acc, n = serialize_multipolygon(mp), len(mp)
     for gj in rest:
         ((_, acc, n, *_, status),) = union(acc, gj, ("union",))

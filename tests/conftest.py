@@ -35,14 +35,20 @@ def spark():
 
 
 @pytest.fixture(scope="session")
-def soak_slice():
-    """soak_slice(mode, n) runs scripts/kernel_soak.py's `mode` (run,
-    run_pairs or run_f32) over n seeds from 777001. The range is pinned,
-    outside every swept range, so CI never fails by seed lottery; explore
-    new seeds with the script's own command line."""
+def kernel_soak():
+    """The scripts/kernel_soak.py module (its case generator and modes)."""
     spec = importlib.util.spec_from_file_location(
         "kernel_soak", os.path.join(ROOT, "scripts", "kernel_soak.py")
     )
     soak = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(soak)
-    return lambda mode, n_cases: getattr(soak, mode)(n_cases=n_cases, seed0=777001)
+    return soak
+
+
+@pytest.fixture(scope="session")
+def soak_slice(kernel_soak):
+    """soak_slice(mode, n) runs scripts/kernel_soak.py's `mode` (run,
+    run_pairs or run_f32) over n seeds from 777001. The range is pinned,
+    outside every swept range, so CI never fails by seed lottery; explore
+    new seeds with the script's own command line."""
+    return lambda mode, n_cases: getattr(kernel_soak, mode)(n_cases=n_cases, seed0=777001)

@@ -92,10 +92,10 @@ def test_non_finite_coordinate_degrades_the_group():
     assert final[["geom_json", "n_polys", "status"]].values.tolist() == [
         ["", 0, "invalid_input"]
     ]
-    # a bucket holding only the NaN rect makes no kernel call and passes
-    # as ok; the level-2 union meets the NaN and degrades the group
+    # a bucket holding only the NaN rect makes no kernel call, yet it is
+    # an invalid_input partial, and the group degrades at level 2
     lone = _partial_fn(("k",), pd.DataFrame({"geom_json": [nan_rect]}))
-    assert lone["status"].tolist() == ["ok"]
+    assert lone["status"].tolist() == ["invalid_input"]
     final = _final_fn(("k",), pd.concat([ok, lone]))
     assert final[["geom_json", "n_polys", "status"]].values.tolist() == [
         ["", 0, "invalid_input"]

@@ -1,13 +1,15 @@
 """C JSON pair runner == Python marshalling path, byte-for-byte.
 
 The full-C pair lifecycle (kernel/native/martinez.c "JSON pair runner"
-section: parse once -> sweep per op -> serialize in C) must reproduce the
-Python composition (kernel/pairs.pair_boolean_ops_python) EXACTLY — same
+section: parse once -> one sweep shared by the ops -> serialize in C)
+must reproduce the Python composition
+(kernel/pairs.pair_boolean_ops_python, one sweep per op) EXACTLY — same
 result_json BYTES, same n_polys/bbox/status — on every reference fixture,
-both operand orders, all five operations, plus the corpus generator and
-an adversarial edge battery. Byte identity is by construction (the C side
-calls CPython's own PyOS_string_to_double / PyOS_double_to_string via
-dlsym); this file is the tripwire for that construction.
+both operand orders, all five operations and every subset of them, plus
+the corpus generator and an adversarial edge battery. Byte identity is by
+construction (the C side calls CPython's own PyOS_string_to_double /
+PyOS_double_to_string via dlsym); this file is the tripwire for that
+construction.
 
 Inputs outside the strict GeoJSON subset must DECLINE (return None) so
 the wrapper falls back to the Python path and error behavior on malformed
@@ -22,6 +24,7 @@ declines run on the Python marshalling path; a NaN or infinite
 coordinate gives status 'invalid_input' on every path.
 """
 
+import itertools
 import json
 import math
 import random
@@ -96,6 +99,8 @@ def test_repr_battery_matches_python_repr():
         9999999999999998.0, 1e-4, 1e-5, -1e-5, 5e-324, -5e-324,
         1.7976931348623157e308, 2.2250738585072014e-308, 123456.789, -0.07,
         256.0, 0.5, -2.5, 3.141592653589793,
+        # integral values: the digits + ".0" path below 1e16
+        2.0**53, -(2.0**53), -9999999999999998.0, -1e15, 2.0, -2.0,
     ]
     rng = random.Random(20260818)
     while len(vals) < 20000:
@@ -103,6 +108,10 @@ def test_repr_battery_matches_python_repr():
         if math.isnan(v) or math.isinf(v):
             continue
         vals.append(v)
+    while len(vals) < 30000:  # integral doubles of every magnitude below 1e16
+        v = float(rng.randrange(10 ** rng.randint(1, 16))) * rng.choice((1, -1))
+        if abs(v) < 1e16:
+            vals.append(v)
     for v in vals:
         assert repr_double_native(v) == repr(v), v.hex()
 
@@ -119,12 +128,74 @@ def test_all_fixtures_both_orders_all_ops():
         _assert_pair_parity(c_json, s_json)
 
 
+# --- one sweep for several ops ---------------------------------------------
+
+
+def _op_subsets():
+    """Every non-empty subset of OPS, in given and in reversed order."""
+    for r in range(1, len(OPS) + 1):
+        for ops in itertools.combinations(OPS, r):
+            yield ops
+            if r > 1:
+                yield ops[::-1]
+
+
+def _assert_subset_parity(s_json, c_json):
+    """The C runner sweeps a pair once for all of intersection, union,
+    diff and xor it is asked for: every subset of the ops, in either
+    order, must give the rows of the one-sweep-per-op Python composition
+    (computed once per pair and op)."""
+    want = dict(zip(OPS, pair_boolean_ops_python(s_json, c_json, OPS)))
+    for ops in _op_subsets():
+        nat = pair_boolean_ops_native(s_json, c_json, ops)
+        assert nat is not None, "native pair runner declined a supported input"
+        _rows_equal([want[op] for op in ops], nat)
+
+
 def test_corpus_generator_pairs():
     from rust_geo_booleanop_spark.sources.corpus import case_geometry
 
-    for t in range(80):
+    for t in range(80):  # case 61 is the heavy template
         s, c = case_geometry(t)
-        _assert_pair_parity(serialize_multipolygon(s), serialize_multipolygon(c))
+        _assert_subset_parity(serialize_multipolygon(s), serialize_multipolygon(c))
+
+
+# A long subject strip and a second subject polygon crossing it far right
+# of a narrow clipping: the crossing divides segments that intersection's
+# snapshot already sorted. Swapped, the narrow operand is the subject and
+# diff takes a snapshot too, at the same event as intersection.
+WIDE_SUBJECT = json.dumps({"type": "MultiPolygon", "coordinates": [
+    [[[0, 0], [100, 1], [100, 3], [0, 2], [0, 0]]],
+    [[[50, -5], [52, -5], [52, 10], [50, 10], [50, -5]]],
+]})
+NARROW_CLIP = '{"type":"Polygon","coordinates":[[[10,-1],[20,-1],[20,5],[10,5],[10,-1]]]}'
+# Two clipping triangles sharing their left endpoint and a collinear edge:
+# the sweep reads their contour ids, which diff numbers alike, and diff
+# over union's numbering would give another result, so diff sweeps alone.
+TIED_SUBJECT = '{"type":"Polygon","coordinates":[[[1,-1],[3,-1],[3,1],[1,1],[1,-1]]]}'
+TIED_CLIP = json.dumps({"type": "MultiPolygon", "coordinates": [
+    [[[0, 0], [4, 0], [2, 3], [0, 0]]],
+    [[[0, 0], [4, 0], [2, -3], [0, 0]]],
+]})
+# A multi-polygon clipping without such a tie.
+UNTIED_CLIP = json.dumps({"type": "MultiPolygon", "coordinates": [
+    [[[5, 0], [15, 0], [15, 3], [5, 3], [5, 0]]],
+    [[[25, 0], [35, 1], [30, 4], [25, 0]]],
+]})
+
+
+def test_shared_sweep_every_op_subset(kernel_soak):
+    """Every op subset over the pairs above, both operand orders, and
+    soak case 90509, which fails when an op's connect_edges starts from
+    the output contour ids the previous op left behind."""
+    soak_s, soak_c, _ = kernel_soak.make_case(90509)
+    for s_json, c_json in (
+        (WIDE_SUBJECT, NARROW_CLIP), (TIED_SUBJECT, TIED_CLIP),
+        (NARROW_CLIP, UNTIED_CLIP), (WIDE_SUBJECT, UNTIED_CLIP),
+        (serialize_multipolygon(soak_s), serialize_multipolygon(soak_c)),
+    ):
+        _assert_subset_parity(s_json, c_json)
+        _assert_subset_parity(c_json, s_json)
 
 
 def test_edge_inputs_supported():
