@@ -27,8 +27,9 @@ string buffers in place, parses a subject again only when its bytes
 differ from the previous row's (tile clips repeat a geometry over
 consecutive rows), builds rectangle clippings straight from their four
 doubles, and returns the result JSON as one C buffer that Arrow wraps
-without a copy. Rows it declines run on the Python marshalling path
-and whole batches it cannot return rerun row by row, see
+without a copy. Rows it declines run on the Python marshalling path,
+where the validity rule of kernel/geojson.py decides them, and whole
+batches it cannot return rerun row by row, see
 `kernel.pairs.resolve_batch_runner`. `parse_bbox_native` is the
 bbox-only parse of the extraction stage.
 
@@ -38,7 +39,9 @@ The Spark operators use this module exactly when `NATIVE_AVAILABLE`
 
 from __future__ import annotations
 
+import contextlib
 import ctypes
+import glob
 import hashlib
 import os
 import subprocess
@@ -118,9 +121,9 @@ def _secure_tmp_build_dir() -> str:
 
 
 def _build_dir() -> str:
-    """Writable build dir: next to the source when the package lives on a
-    real filesystem, else a hardened per-user tmp dir (zip/read-only
-    installs)."""
+    """Writable build dir: `_build` next to the source when the package
+    lives on a real filesystem, else a hardened per-user tmp dir
+    (zip/read-only installs)."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     cand = os.path.join(pkg_dir, "_build")
     try:
@@ -192,6 +195,20 @@ def _so_path(f32: bool = False) -> str:
     return os.path.join(_BUILD_DIR, f"{stem}-{_src_digest()}.so")
 
 
+def _prune_other_digests() -> None:
+    """Delete other source digests' builds and source copies from the
+    package-local `_build` dir, whose one source is this martinez.c. Never
+    the shared per-user tmp dir: zip installs of other versions share it."""
+    if os.path.basename(_BUILD_DIR) != "_build":
+        return
+    keep = _src_digest()
+    for pattern in ("libmartinez-*.so", "libmartinez32-*.so", "martinez-*.c"):
+        for path in glob.glob(os.path.join(_BUILD_DIR, pattern)):
+            if keep not in os.path.basename(path):
+                with contextlib.suppress(OSError):
+                    os.remove(path)
+
+
 def _build(so_path: str, f32: bool = False) -> bool:
     """Compile martinez.c once, under an flock (32 workers import at once).
 
@@ -231,6 +248,7 @@ def _build(so_path: str, f32: bool = False) -> bool:
             if proc.returncode != 0:
                 return False
             os.replace(tmp, so_path)  # atomic publish
+            _prune_other_digests()
             return True
         except Exception:
             return False
@@ -529,8 +547,8 @@ def pair_boolean_ops_native(s_json: str, c_json: str, ops):
     or None when the C parser declines the input (strict-GeoJSON-subset
     miss) or the call cannot return it (output past 2**31 bytes, out of
     memory), in which case the caller must run the Python marshalling
-    path (identical bytes, plus the original exception behavior on bad
-    input).
+    path (identical bytes; everything the C parser accepts meets the
+    validity rule of kernel/geojson.py, which decides the rest).
     """
     sb = s_json.encode("utf-8")
     cb = c_json.encode("utf-8")

@@ -1375,10 +1375,14 @@ MartinezResult *martinez_boolean_op(
 /*  - ring closing / trivial-result / contour-assembly serialization    */
 /*    replicate kernel/geojson.py and operators/boolean_join.py;        */
 /*  - anything outside the strict GeoJSON subset our pipelines emit     */
-/*    (key reorderings, non-finite numbers, huge int literals, non-     */
+/*    (other members, non-finite numbers, huge int literals, non-       */
 /*    number position members) returns MZ_UNSUPPORTED and the Python    */
-/*    wrapper falls back to the reference marshalling, so behavior on   */
-/*    odd inputs — including which exception is raised — is unchanged.  */
+/*    wrapper falls back to the reference marshalling, where the one    */
+/*    validity rule of kernel/geojson.py decides the input. Everything  */
+/*    accepted here meets that rule (finite numbers only, exactly the   */
+/*    type and coordinates members), so both engines agree on any       */
+/*    input: a rejected operand gives 'invalid_input' rows, never an    */
+/*    exception.                                                        */
 /*                                                                      */
 /* One pair entry point, mz_pair_run_batch, runs an Arrow batch of     */
 /* pairs — string operands parsed once per run of equal consecutive     */
@@ -2006,7 +2010,7 @@ static int32_t mz_op_emit(const MzGeom *a, const MzGeom *bg, int32_t mop,
 
 /* Parse one operand under the GIL. A PyOS_string_to_double error on a
  * token our scanner admitted is cleared and declines the operand, so
- * the Python parser produces the real exception. */
+ * the validity rule of kernel/geojson.py decides it. */
 static int32_t mz_parse_operand(const char *s, int64_t len, MzGeom *g) {
     int st = mz_parse_geometry(s, len, g);
     if (g_py.err_occurred()) {

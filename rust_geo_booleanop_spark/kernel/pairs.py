@@ -17,8 +17,8 @@ Two engines, byte-identical outputs:
   alone), serialize in C via CPython's own float repr/strtod functions.
   Declines (returns None) on anything outside the strict GeoJSON subset
   our pipelines emit, in which case the resolver's wrapper falls back to
-  the Python composition so odd inputs keep their original behavior
-  (including exception types).
+  the Python composition, where the validity rule of kernel/geojson.py
+  decides the input: both engines give the same rows on any input.
 
 The Spark kernel stage runs whole Arrow batches through
 `resolve_batch_runner`: natively, one `pair_boolean_ops_batch_native` C
@@ -29,9 +29,10 @@ over the native sweep and spliced back; on the Python engine, the
 per-row loop over `pair_rows`. A declined row is not sent to the C parser again: both C
 wrappers call the same C entry, which would decline it again.
 
-A rejected operand degrades its rows, never the task: a sweep past its
-event budget gives status 'limit_exceeded', a segment with a NaN or
-infinite endpoint status 'invalid_input', both with an empty result.
+A rejected operand degrades its rows, never the task: an operand the
+validity rule of kernel/geojson.py rejects gives every op status
+'invalid_input', a sweep past its event budget status 'limit_exceeded',
+both with an empty result. Only an unknown op raises (ValueError).
 
 `resolve_native` is the one engine selection behind `resolve_pair_runner`,
 `resolve_batch_runner` and `resolve_bbox_fn`: the C kernel exactly when
@@ -44,18 +45,25 @@ from __future__ import annotations
 
 import functools
 
-from .booleanop import KernelInvalidInput, KernelLimitExceeded, boolean_op
+from .booleanop import KernelLimitExceeded, boolean_op
 from .geojson import multipolygon_bbox, parse_multipolygon, serialize_multipolygon
 
 _NAN = float("nan")
+_OPS = {"intersection", "union", "diff", "xor", "diff_ba"}
+_EMPTY_JSON = serialize_multipolygon([])
 
 
 def pair_boolean_ops_python(s_json, c_json, ops, boolean_op_fn=None):
     """Reference pair runner: returns [(op, result_json, n_polys, xmin,
     ymin, xmax, ymax, status_str), ...] — one row payload per op."""
     op_fn = boolean_op_fn if boolean_op_fn is not None else boolean_op
-    subject = parse_multipolygon(s_json)
-    clipping = parse_multipolygon(c_json)
+    for op in set(ops) - _OPS:
+        raise ValueError(f"unknown operation: {op!r}")
+    try:
+        subject = parse_multipolygon(s_json)
+        clipping = parse_multipolygon(c_json)
+    except ValueError:
+        return [(op, _EMPTY_JSON, 0, _NAN, _NAN, _NAN, _NAN, "invalid_input") for op in ops]
     rows = []
     for op in ops:
         try:
@@ -64,8 +72,6 @@ def pair_boolean_ops_python(s_json, c_json, ops, boolean_op_fn=None):
         except KernelLimitExceeded:
             # degenerate input: mark the row, don't kill the job
             result, status = [], "limit_exceeded"
-        except KernelInvalidInput:
-            result, status = [], "invalid_input"
         if result:
             xmin, ymin, xmax, ymax = multipolygon_bbox(result)
         else:
@@ -203,7 +209,7 @@ def resolve_batch_runner():
 
     With the native kernel, each batch is one C call. Rows it declines
     run through `pair_boolean_ops_python` over the native sweep (same
-    bytes, same exceptions) and are spliced back in; a batch it cannot
+    bytes, same 'invalid_input' rows) and are spliced back in; a batch it cannot
     return whole (output past 2**31 bytes, out of memory) reruns row by
     row. An unknown op raises ValueError. Without the C kernel the batch
     runner is the per-row loop.
@@ -240,10 +246,10 @@ def resolve_batch_runner():
 def resolve_bbox_fn():
     """Pick the geometry-string -> bbox implementation (extraction stage).
 
-    Returns a callable(geom_json) -> (xmin, ymin, xmax, ymax). The native
-    path avoids building Python geometry objects entirely; it falls back
-    per-string when the C parser declines, so error behavior on malformed
-    geometry is identical to the Python path.
+    Returns a callable(geom_json) -> (xmin, ymin, xmax, ymax), ValueError
+    on a geometry the validity rule of kernel/geojson.py rejects. The
+    native path builds no Python geometry objects; it falls back
+    per-string when the C parser declines.
     """
 
     def python_bbox(geom_json):

@@ -31,6 +31,8 @@ from ..kernel.pairs import resolve_batch_runner
 DEFAULT_OPS = ("intersection", "union", "diff", "xor")
 
 # The columns `kernel_map` appends to the carried ones: one row per op.
+# status: 'ok', 'invalid_input' (an operand the validity rule of
+# kernel/geojson.py rejects) or 'limit_exceeded' (event budget), empty.
 KERNEL_RESULT_SCHEMA = (
     "op string, result_json string, n_polys int, "
     "xmin double, ymin double, xmax double, ymax double, status string"

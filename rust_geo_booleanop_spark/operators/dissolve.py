@@ -19,15 +19,14 @@ Degenerate-overlap caveat: re-unioning union OUTPUTS can hit the Martinez
 degenerate-overlap pathology (the reference's deactivated issue90 class).
 The kernel's termination valve ends such a sweep, and the pair runner gives
 it status 'limit_exceeded'; the group degrades to one such row instead of
-hanging an executor. A NaN or infinite coordinate degrades its group the
-same way, with status 'invalid_input', at whichever level it first meets
-a fold. Clean inputs (disjoint or simply-overlapping coverages, e.g.
-rectangle tilings) dissolve exactly.
+hanging an executor. A geometry the validity rule of kernel/geojson.py
+rejects (a Point, null, truncated JSON, a NaN or infinite coordinate)
+degrades its group the same way, with status 'invalid_input', at the
+level-1 fold that meets it. Clean inputs (disjoint or simply-overlapping
+coverages, e.g. rectangle tilings) dissolve exactly.
 """
 
 from __future__ import annotations
-
-import math
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -43,13 +42,14 @@ DISSOLVE_SCHEMA = "key string, geom_json string, n_polys int, status string"
 def _fold_union(jsons) -> tuple[str, int, str]:
     """(geom_json, n_polys, status) of the union of `jsons`, folded left
     through the pair runner. The first geometry makes no kernel call, so
-    a non-finite coordinate in it gives ("", 0, "invalid_input") here, as
-    the kernel would; the first non-ok union ends the fold with ("", 0,
-    its status)."""
+    it gives ("", 0, "invalid_input") here if the validity rule of
+    kernel/geojson.py rejects it, as the pair runner would; the first
+    non-ok union ends the fold with ("", 0, its status)."""
     union = resolve_pair_runner()  # full-C pair lifecycle when available
     first, *rest = jsons
-    mp = parse_multipolygon(first)
-    if not all(math.isfinite(v) for poly in mp for ring in poly for pt in ring for v in pt):
+    try:
+        mp = parse_multipolygon(first)
+    except ValueError:
         return "", 0, "invalid_input"
     acc, n = serialize_multipolygon(mp), len(mp)
     for gj in rest:

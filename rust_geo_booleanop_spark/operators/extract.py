@@ -14,9 +14,8 @@ regex per batch (no JVM->Python per-row round trips).
 
 from __future__ import annotations
 
-import json
-import math
 import re
+import sys
 from typing import Iterator
 
 import pandas as pd
@@ -26,42 +25,6 @@ from ..kernel.pairs import resolve_bbox_fn
 GEO_SCRIPT_RE = re.compile(rb'<script type="application/geo\+json">(.*?)</script>', re.S)
 CASE_URL_RE = re.compile(r"/case/(\d+)/(subject|clipping)$")
 
-# Everything a dirty geometry block can raise out of the bbox parse:
-# invalid JSON / wrong geometry type (ValueError), coordinates of the
-# wrong shape — null, scalars, too-short points (TypeError /
-# AttributeError / IndexError / KeyError). One bad page must fail the
-# PAGE, never the task.
-_DIRTY_GEOMETRY_ERRORS = (
-    UnicodeDecodeError,
-    ValueError,
-    TypeError,
-    AttributeError,
-    IndexError,
-    KeyError,
-)
-
-
-class _NonFiniteToken(Exception):
-    pass
-
-
-def _raise_nonfinite(_):
-    raise _NonFiniteToken
-
-
-def _has_nonfinite_token(geom_json: str) -> bool:
-    """True iff the JSON text contains a bare NaN/Infinity NUMBER TOKEN
-    (json.loads with a parse_constant hook is the only authority — a
-    substring test would also drop valid pages that merely contain
-    'NaN' inside a string member)."""
-    try:
-        json.loads(geom_json, parse_constant=_raise_nonfinite)
-    except _NonFiniteToken:
-        return True
-    except ValueError:
-        return False  # not valid JSON: the bbox parse rejects it anyway
-    return False
-
 GEOMETRIES_SCHEMA = (
     "url string, case_id long, role string, geom_json string, "
     "xmin double, ymin double, xmax double, ymax double, text string, lang string"
@@ -69,24 +32,13 @@ GEOMETRIES_SCHEMA = (
 
 
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # Resolved inside the Spark Python worker: C parse+bbox when the
-    # native kernel is available (no Python geometry objects built),
-    # parse_multipolygon + multipolygon_bbox otherwise — same values.
+    # Resolved inside the Spark Python worker: C parse+bbox with the native
+    # kernel, parse_multipolygon + multipolygon_bbox otherwise; same values.
     bbox_fn = resolve_bbox_fn()
     for pdf in batches:
         n_dirty = 0
-        out = {
-            "url": [],
-            "case_id": [],
-            "role": [],
-            "geom_json": [],
-            "xmin": [],
-            "ymin": [],
-            "xmax": [],
-            "ymax": [],
-            "text": [],
-            "lang": [],
-        }
+        out = {c: [] for c in ("url", "case_id", "role", "geom_json", "xmin",
+                               "ymin", "xmax", "ymax", "text", "lang")}
         for url, html, text, lang in zip(
             pdf["url"], pdf["html"], pdf["text"], pdf["lang"]
         ):
@@ -95,39 +47,18 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             m = GEO_SCRIPT_RE.search(bytes(html))
             if not m:
                 continue  # page without geometry: filtered out here
-            # Dirty-web tolerance: a crawl-scale corpus WILL contain
-            # pages whose geo+json block is mojibake or truncated JSON;
-            # one such page must not fail the task (and with it the
-            # job). They are filtered here, the same class as pages
-            # without a geometry block.
+            # Dirty-web tolerance: a page whose geo+json block is mojibake
+            # (UnicodeDecodeError) or a geometry the validity rule of
+            # kernel/geojson.py rejects (ValueError) is filtered like a
+            # page without one; it must not fail the task.
             try:
                 geom_json = m.group(1).decode("utf-8")
-                if "NaN" in geom_json and _has_nonfinite_token(geom_json):
-                    # a NaN coordinate can ONLY enter JSON via the
-                    # literal token (1e999-style overflow yields inf,
-                    # caught by the bbox guard below) — and the bbox
-                    # fold cannot be trusted to surface it (C fmin/fmax
-                    # skip NaN). NaN would poison the kernel's sweep
-                    # ordering, so the page is filtered up front. The
-                    # substring test is only the cheap trigger; the
-                    # token-level check keeps pages whose 'NaN' sits
-                    # inside a string member.
-                    continue
                 xmin, ymin, xmax, ymax = bbox_fn(geom_json)
-            except _DIRTY_GEOMETRY_ERRORS:
+            except ValueError:
                 n_dirty += 1
                 continue
-            # JSON number tokens admit Infinity and a MultiPolygon
-            # admits empty coordinates (bbox = inverted infinities).
-            # Non-finite coordinates would poison the kernel's sweep
-            # ordering, so they are filtered here with the other
-            # dirty-page classes.
-            if not (
-                xmin <= xmax
-                and ymin <= ymax
-                and all(map(math.isfinite, (xmin, ymin, xmax, ymax)))
-            ):
-                continue
+            if not (xmin <= xmax and ymin <= ymax):
+                continue  # empty geometry: the inverted-infinities bbox
             um = CASE_URL_RE.search(url)
             case_id = int(um.group(1)) if um else -1
             role = um.group(2) if um else "unknown"
@@ -141,14 +72,10 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             out["ymax"].append(ymax)
             out["text"].append(text)
             out["lang"].append(lang)
-        # Observability valve (round-5 advice): _DIRTY_GEOMETRY_ERRORS is
-        # deliberately broad, so a genuine bbox_fn regression would
-        # otherwise drop every page SILENTLY. One executor-log line per
-        # majority-dirty batch (never per row) makes a 100%-skip
-        # pathology visible without failing the job.
+        # Observability valve: a bbox_fn regression that rejected clean
+        # geometry would drop every page SILENTLY. One executor-log line
+        # per majority-dirty batch (never per row) makes it visible.
         if len(pdf) >= 16 and n_dirty * 2 >= len(pdf):
-            import sys
-
             print(
                 f"extract_geometries: {n_dirty}/{len(pdf)} pages skipped as "
                 "dirty in one batch - a near-100% skip rate usually means a "

@@ -5,9 +5,9 @@ The reference's I/O surface is fixture-style FeatureCollection files
 tests/src/compact_geojson.rs). The Spark equivalents:
 
 - `read_feature_collections`: a directory of *.geojson files -> DataFrame
-  with one row per feature, carrying the file stem as case key, the
-  feature index, the operation annotation (for expected results), the
-  geometry as canonical GeoJSON text, and its bbox columns.
+  with one row per feature valid under kernel/geojson.py's rule: file
+  stem as case key, feature index, operation annotation (for expected
+  results), geometry as canonical GeoJSON text, and its bbox columns.
 - `write_feature_collection`: result rows -> one FeatureCollection file
   (driver-side; per-partition sharding for big outputs).
 
@@ -66,16 +66,16 @@ def _parse_batches(batches: Iterator[pd.DataFrame], base_dir: str = "") -> Itera
                 features = fc["features"]
                 if not isinstance(features, list):
                     continue
-            except (ValueError, KeyError, TypeError, UnicodeDecodeError):
+            except (ValueError, KeyError, TypeError, RecursionError):
                 continue  # not a FeatureCollection: skip the file
             for i, feat in enumerate(features):
                 if not isinstance(feat, dict):
                     continue
-                geom = feat.get("geometry")
-                if not geom or geom.get("type") not in ("Polygon", "MultiPolygon"):
-                    continue
+                try:
+                    mp = geometry_to_multipolygon(feat.get("geometry"))
+                except ValueError:
+                    continue  # not a valid Polygon/MultiPolygon: skip it
                 props = feat.get("properties") or {}
-                mp = geometry_to_multipolygon(geom)
                 xmin, ymin, xmax, ymax = multipolygon_bbox(mp)
                 role = "subject" if i == 0 else ("clipping" if i == 1 else "expected")
                 out["case_key"].append(name)

@@ -12,6 +12,7 @@ Any edit to martinez.c OR to the Python kernel must keep this file green
 probe-order drift — see the exactness contract in martinez.c's header).
 """
 
+import ctypes
 import os
 
 import pytest
@@ -166,6 +167,25 @@ def test_secure_tmp_build_dir_refuses_foreign_dir(tmp_path, monkeypatch):
         assert native_mod._secure_tmp_build_dir() == str(cand)
     finally:
         tempfile.tempdir = None
+
+
+def test_build_prunes_other_digests(tmp_path, monkeypatch):
+    """Publishing a build deletes other source digests' files from the
+    package-local `_build` dir, and the fresh build loads; the shared
+    per-user tmp dir keeps them."""
+    import rust_geo_booleanop_spark.kernel.native as native_mod
+
+    stale = ("libmartinez-0123456789abcdef.so", "libmartinez32-0123456789abcdef.so",
+             "martinez-0123456789abcdef.c")
+    for build_dir, pruned in ((tmp_path / "_build", True), (tmp_path / "martinez-build-0", False)):
+        build_dir.mkdir()
+        for name in stale:
+            (build_dir / name).write_bytes(b"stale")
+        monkeypatch.setattr(native_mod, "_BUILD_DIR", str(build_dir))
+        lib = native_mod._load_one(False, ctypes.c_double, native_mod._MartinezResult)
+        assert lib is not None
+        assert os.path.exists(native_mod._so_path())
+        assert [os.path.exists(build_dir / name) for name in stale] == [not pruned] * 3
 
 
 # ---------------------------------------------------------------------------

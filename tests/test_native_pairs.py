@@ -12,8 +12,10 @@ PyOS_double_to_string via dlsym); this file is the tripwire for that
 construction.
 
 Inputs outside the strict GeoJSON subset must DECLINE (return None) so
-the wrapper falls back to the Python path and error behavior on malformed
-geometry is unchanged.
+the wrapper falls back to the Python path, where the one validity rule of
+kernel/geojson.py decides them: the grammar table below pins that every
+valid spelling gives the same bytes in both engines and every invalid one
+gives 'invalid_input' rows on every path.
 
 The C side has one pair entry, `mz_pair_run_batch`: the per-pair
 runner is a one-row call of it, and the batch wrapper
@@ -245,10 +247,109 @@ def test_unsupported_inputs_decline_to_python_path():
         pair_boolean_ops_python(SQUARE, SQUARE, OPS), runner(SQUARE, SQUARE, OPS)
     )
     # the native runner must fall back (not fail) on inputs the C parser
-    # declines — same exception the Python parser raises on garbage
-    with pytest.raises(ValueError):
-        runner("not json", SQUARE, OPS)
+    # declines; the validity rule turns garbage into status rows
+    empty = serialize_multipolygon([])
+    assert _arrow_rows(runner("not json", SQUARE, OPS)) == [
+        (op, empty, 0, None, None, None, None, "invalid_input") for op in OPS
+    ]
     assert resolve_bbox_fn()(SQUARE) == (0.0, 0.0, 2.0, 2.0)
+
+
+# --- one validity rule (kernel/geojson.py) in both engines ------------------
+
+_RING = "[[0,0],[2,0],[2,2],[0,2],[0,0]]"
+_BIG_INT = "1" + "0" * 299  # a 300-digit integer, finite as a double
+VALID_GRAMMAR = {
+    "type_first": '{"type":"Polygon","coordinates":[%s]}' % _RING,
+    "coordinates_first": '{"coordinates":[%s],"type":"Polygon"}' % _RING,
+    "whitespace": '{ "type" :\n"Polygon" ,\t"coordinates" : [ [ [0, 0] ,[2,0],'
+                  '[2,2] , [0,2],[0,0] ] ] }',
+    "altitude": '{"type":"Polygon","coordinates":[[[0,0,7],[2,0,7.5],[2,2,-1],[0,2,0],[0,0,7]]]}',
+    "big_integer": '{"type":"Polygon","coordinates":[[[0,0],[%s,0],[2,2],[0,2],[0,0]]]}' % _BIG_INT,
+    "bbox_member": '{"type":"Polygon","coordinates":[%s],"bbox":[0,0,2,2]}' % _RING,
+    "nan_in_a_string": '{"type":"Polygon","coordinates":[%s],"name":"NaN Ridge"}' % _RING,
+    "unclosed_ring": '{"type":"MultiPolygon","coordinates":[[[[0,0],[2,0],[2,2],[0,2]]]]}',
+}
+_DEEP = 200_000
+INVALID_GRAMMAR = {
+    "point": '{"type":"Point","coordinates":[0,0]}',
+    "null": "null",
+    "truncated": '{"type":"Polygon","coordinates":[[[0,0],[2,0],[2,',
+    "wrong_nesting": '{"type":"Polygon","coordinates":[[0,0],[2,0],[2,2],[0,0]]}',
+    "nan_token": '{"type":"Polygon","coordinates":[[[NaN,0],[2,0],[2,2],[NaN,0]]]}',
+    "nan_token_in_bbox": '{"type":"Polygon","coordinates":[%s],"bbox":[NaN,0,2,2]}' % _RING,
+    "infinity_token": '{"type":"Polygon","coordinates":[[[0,0],[Infinity,0],[2,2],[0,0]]]}',
+    "overflowing_float": '{"type":"Polygon","coordinates":[[[0,0],[1e999,0],[2,2],[0,0]]]}',
+    "overflowing_integer": '{"type":"Polygon","coordinates":[[[0,0],[%s,0],[2,2],[0,0]]]}'
+                           % ("1" * 400),
+    "nan_string": '{"type":"Polygon","coordinates":[[["nan",0],[2,0],[2,2],["nan",0]]]}',
+    "number_string": '{"type":"Polygon","coordinates":[[["2",0],[2,0],[2,2],["2",0]]]}',
+    "boolean": '{"type":"Polygon","coordinates":[[[true,0],[2,0],[2,2],[true,0]]]}',
+    "deep_nesting": '{"type":"Polygon","coordinates":%s}' % ("[" * _DEEP + "]" * _DEEP),
+}
+
+
+def _grammar_engines(monkeypatch):
+    """(engine, pair runner, batch runner, bbox fn) with the C kernel
+    loaded and without it."""
+    engines = [("native", resolve_pair_runner(), resolve_batch_runner(), resolve_bbox_fn())]
+    monkeypatch.setattr(native, "NATIVE_AVAILABLE", False)
+    engines.append(("python", resolve_pair_runner(), resolve_batch_runner(), resolve_bbox_fn()))
+    monkeypatch.undo()
+    return engines
+
+
+def _variant_rows(pair_run, batch_run, geom, ops=OPS):
+    """The variant as subject and as clipping of SQUARE, per pair and as
+    a batch (string and rectangle clippings), as Arrow-boundary rows."""
+    per_pair = _arrow_rows(pair_run(geom, SQUARE, ops) + pair_run(SQUARE, geom, ops))
+    rect = [pa.array([v], pa.float64()) for v in (0.5, 0.5, 3.0, 3.0)]
+    batches = [
+        batch_run(pa.array([geom, SQUARE]), pa.array([SQUARE, geom]), ops),
+        batch_run(pa.array([geom]), rect, ops),
+    ]
+    batch = [row for cols in batches for row in zip(*(c.to_pylist() for c in cols))]
+    return per_pair, batch
+
+
+def test_grammar_table_valid_variants_match_across_engines(monkeypatch):
+    """Each valid spelling gives the same bytes on every path of both
+    engines as the plain type-first square."""
+    engines = _grammar_engines(monkeypatch)
+    want = None
+    for name, geom in VALID_GRAMMAR.items():
+        got = {}
+        for engine, pair_run, batch_run, bbox_fn in engines:
+            got[engine] = _variant_rows(pair_run, batch_run, geom)
+            assert got[engine][0] == _arrow_rows(
+                pair_boolean_ops_python(geom, SQUARE, OPS)
+                + pair_boolean_ops_python(SQUARE, geom, OPS)
+            ), (name, engine)
+            assert all(r[7] == "ok" for rows in got[engine] for r in rows), (name, engine)
+            assert bbox_fn(geom) == multipolygon_bbox(parse_multipolygon(geom)), name
+        assert got["native"] == got["python"], name
+        if name != "big_integer":  # the same square in another spelling
+            want = want or got["native"]
+            assert got["native"] == want, name
+
+
+def test_grammar_table_invalid_variants_give_status_rows(monkeypatch):
+    """Each variant the validity rule rejects gives one invalid_input row
+    per op on every path of both engines, and a ValueError from the
+    extraction bbox parse; only an unknown op still raises."""
+    empty = serialize_multipolygon([])
+    bad_rows = [(op, empty, 0, None, None, None, None, "invalid_input") for op in OPS]
+    engines = _grammar_engines(monkeypatch)
+    for name, geom in INVALID_GRAMMAR.items():
+        assert _arrow_rows(pair_boolean_ops_python(geom, SQUARE, OPS)) == bad_rows, name
+        for engine, pair_run, batch_run, bbox_fn in engines:
+            per_pair, batch = _variant_rows(pair_run, batch_run, geom)
+            assert per_pair == 2 * bad_rows, (name, engine)
+            assert batch == 3 * bad_rows, (name, engine)
+            with pytest.raises(ValueError):
+                bbox_fn(geom)
+            with pytest.raises(ValueError, match="unknown operation"):
+                pair_run(geom, SQUARE, ("union", "frobnicate"))
 
 
 def test_limit_exceeded_rows_match():

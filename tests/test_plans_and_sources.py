@@ -112,6 +112,31 @@ class TestPlanShapes:
         assert back.count() > 0
 
 
+def test_geojson_source_skips_invalid_geometry(spark, tmp_path):
+    """A feature whose geometry the validity rule of kernel/geojson.py
+    rejects is skipped like a non-polygon feature; it does not fail the
+    read task."""
+    import json
+
+    from rust_geo_booleanop_spark.sources import read_feature_collections
+
+    square = [[[0, 0], [2, 0], [2, 2], [0, 2], [0, 0]]]
+    features = [
+        {"type": "Feature", "properties": {}, "geometry": geometry}
+        for geometry in (
+            {"type": "Polygon", "coordinates": None},
+            {"type": "Polygon", "coordinates": square},
+        )
+    ]
+    (tmp_path / "case.geojson").write_text(
+        json.dumps({"type": "FeatureCollection", "features": features})
+    )
+    # a file nested too deep for the decoder is skipped like any non-JSON
+    (tmp_path / "deep.geojson").write_text('{"features":' + "[" * 200_000 + "]" * 200_000 + "}")
+    rows = read_feature_collections(spark, str(tmp_path)).collect()
+    assert [(r.case_key, r.feature_no, r.xmax) for r in rows] == [("case", 1, 2.0)]
+
+
 @requires_reference_corpus
 class TestGeoJsonSource:
     def test_read_feature_collections(self, spark):

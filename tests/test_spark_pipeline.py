@@ -186,6 +186,26 @@ def test_extract_tolerates_dirty_pages(spark):
         ("http://x/null-in-point", page(
             b'{"type":"Polygon","coordinates":[[[null,2],[1,0],[0,1],[null,2]]]}'
         ), "t13", "en"),
+        # failed or leaked before one validity rule (kernel/geojson.py):
+        # OverflowError, RecursionError, a NaN the bbox skipped, a bool
+        # taken for 1.0, a non-finite token outside the coordinates
+        ("http://x/huge-int", page(
+            b'{"type":"Polygon","coordinates":[[[' + b"1" * 400
+            + b',0],[1,0],[0,1],[0,0]]]}'
+        ), "t15", "en"),
+        ("http://x/deep-nesting", page(
+            b'{"type":"Polygon","coordinates":' + b"[" * 200_000 + b"]" * 200_000 + b"}"
+        ), "t16", "en"),
+        ("http://x/nan-string", page(
+            b'{"type":"Polygon","coordinates":[[["nan",0],[1,0],[0,1],["nan",0]]]}'
+        ), "t17", "en"),
+        ("http://x/true-coord", page(
+            b'{"type":"Polygon","coordinates":[[[true,0],[1,0],[0,1],[true,0]]]}'
+        ), "t18", "en"),
+        ("http://x/inf-bbox", page(
+            b'{"type":"Polygon","coordinates":[[[0,0],[1,0],[0,1],[0,0]]],'
+            b'"bbox":[0,0,Infinity,1]}'
+        ), "t19", "en"),
         # clean geometry whose STRING member contains 'NaN' — must be
         # KEPT (the NaN filter is token-level, not substring-level)
         ("http://x/case/8/subject", page(
@@ -207,3 +227,45 @@ def test_extract_tolerates_dirty_pages(spark):
     assert (r.xmin, r.ymin, r.xmax, r.ymax) == (0.0, 0.0, 4.0, 4.0)
     assert r.geom_json == good_geom and r.text == "t7"
     assert (got[1].case_id, got[1].text) == (8, "t14")
+
+
+def test_dirty_operands_degrade_rows_not_jobs(spark):
+    """A Point, a JSON null or a truncated operand beside a clean one:
+    apply_boolean_ops gives the dirty pair invalid_input rows and dissolve
+    the dirty key one invalid_input row; the clean ones are unchanged and
+    no job fails."""
+    from rust_geo_booleanop_spark.operators import dissolve
+
+    square = '{"type":"Polygon","coordinates":[[[0,0],[2,0],[2,2],[0,2],[0,0]]]}'
+    shifted = '{"type":"Polygon","coordinates":[[[1,1],[3,1],[3,3],[1,3],[1,1]]]}'
+    dirty = {
+        "point": '{"type":"Point","coordinates":[1,1]}',
+        "null": "null",
+        "truncated": '{"type":"Polygon","coordinates":[[[0,0],[2,0],[2,',
+    }
+    empty = serialize_multipolygon([])
+    for name, bad in dirty.items():
+        pairs = spark.createDataFrame(
+            [(1, "clean/s", "clean/c", square, shifted),
+             (2, f"{name}/s", "dirty/c", bad, shifted),
+             (3, "dirty/s", f"{name}/c", square, bad)],
+            "case_id long, subject_url string, clipping_url string, "
+            "subject_json string, clipping_json string",
+        )
+        rows = apply_boolean_ops(pairs).collect()
+        assert len(rows) == 3 * 4, name
+        for r in rows:
+            if r.case_id == 1:
+                want = boolean_op(parse_multipolygon(square), parse_multipolygon(shifted), r.op)
+                assert (r.status, r.result_json) == ("ok", serialize_multipolygon(want))
+            else:
+                assert (r.status, r.result_json, r.n_polys, r.xmin) == (
+                    "invalid_input", empty, 0, None), name
+        geoms = spark.createDataFrame(
+            [("clean", square), ("clean", shifted), ("dirty", square), ("dirty", bad)],
+            "key string, geom_json string",
+        )
+        got = {r.key: r for r in dissolve(geoms, fanin=2).collect()}
+        assert (got["clean"].status, got["clean"].n_polys) == ("ok", 1), name
+        assert (got["dirty"].status, got["dirty"].geom_json, got["dirty"].n_polys) == (
+            "invalid_input", "", 0), name
