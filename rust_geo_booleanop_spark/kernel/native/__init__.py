@@ -27,9 +27,9 @@ string buffers in place, parses a subject again only when its bytes
 differ from the previous row's (tile clips repeat a geometry over
 consecutive rows), builds rectangle clippings straight from their four
 doubles, and returns the result JSON as one C buffer that Arrow wraps
-without a copy. Rows it declines run on the Python marshalling path,
-where the validity rule of kernel/geojson.py decides them, and whole
-batches it cannot return rerun row by row, see
+without a copy. It returns the whole batch or nothing: a batch that
+holds a row its parser declines, or that it cannot return (output past
+2**31 bytes, out of memory), runs row by row, see
 `kernel.pairs.resolve_batch_runner`. `parse_bbox_native` is the
 bbox-only parse of the extraction stage.
 
@@ -281,7 +281,7 @@ def _load_one(f32: bool, coord_ctype, result_struct):
             c_void_p, c_void_p,  # clipping int64 offsets (or NULL), data
             c_void_p,  # n x 4 float64 rectangles (or NULL)
             POINTER(c_int32), c_int32, c_int64,  # op codes, n_ops, max bytes
-            c_void_p, c_void_p, c_void_p, c_void_p, c_void_p,  # per-row/slot outs
+            c_void_p, c_void_p, c_void_p, c_void_p,  # per-slot outs
             POINTER(c_void_p), POINTER(c_int64),  # JSON buffer, parse counts
         ]
         lib.mz_buf_free.restype = None
@@ -485,7 +485,6 @@ _MZ_UNSUPPORTED = 4
 # result_json carries int32 Arrow offsets: a batch whose JSON would pass
 # this many bytes is returned as None and reruns row by row.
 _MAX_BATCH_BYTES = 2**31 - 1
-_ROW_DECLINED = 2  # mz_pair_run_batch row_state: 0 ran, 1 NULL operand
 
 
 class _CBuffer:
@@ -508,13 +507,13 @@ def _run_batch(n, null, s_offsets, s_data, c_offsets, c_data, rects, ops):
     operand arguments are addresses or buffers (see martinez.c); a None
     `c_offsets` means `rects` holds n x 4 rectangle doubles.
 
-    Returns ctypes arrays (a one-row call reads them without NumPy):
-    row_state int8[n] (0 ran, 1 NULL operand, 2 declined), then per
-    (row, op) slot the JSON offsets int32[n*k + 1], n_polys int32[n*k],
+    Returns ctypes arrays (a one-row call reads them without NumPy), per
+    (row, op) slot: the JSON offsets int32[n*k + 1], n_polys int32[n*k],
     bbox float64[n*k*4] and status int8[n*k] (0 ok, 2 limit_exceeded),
     then the `_CBuffer` of the JSON and the (subject, clipping) parse
     counts. Raises ValueError on an unknown op; returns None when the
-    call returns nothing (output past `_MAX_BATCH_BYTES`, out of memory).
+    call returns nothing (a declined row, output past
+    `_MAX_BATCH_BYTES`, out of memory).
     """
     if _LIB is None:  # pragma: no cover - guarded by NATIVE_AVAILABLE
         raise RuntimeError("native kernel not available")
@@ -524,8 +523,8 @@ def _run_batch(n, null, s_offsets, s_data, c_offsets, c_data, rects, ops):
     k = len(ops)
     m = n * k
     outs = (
-        (ctypes.c_int8 * n)(), (c_int32 * (m + 1))(), (c_int32 * m)(),
-        (c_double * (4 * m))(), (ctypes.c_int8 * m)(),
+        (c_int32 * (m + 1))(), (c_int32 * m)(), (c_double * (4 * m))(),
+        (ctypes.c_int8 * m)(),
     )
     codes = (c_int32 * max(k, 1))(*(PAIR_OP_CODES[op] for op in ops))
     json_ptr = c_void_p()
@@ -544,11 +543,12 @@ def pair_boolean_ops_native(s_json: str, c_json: str, ops):
 
     Returns a list of (op, result_json, n_polys, xmin, ymin, xmax, ymax,
     status) tuples — the per-row payload operators/boolean_join.py emits —
-    or None when the C parser declines the input (strict-GeoJSON-subset
-    miss) or the call cannot return it (output past 2**31 bytes, out of
-    memory), in which case the caller must run the Python marshalling
-    path (identical bytes; everything the C parser accepts meets the
-    validity rule of kernel/geojson.py, which decides the rest).
+    or None when the C parser declines the input (malformed, or an exotic
+    spelling, see martinez.c) or the call cannot return it (output past
+    2**31 bytes, out of memory), in which case the caller must run the
+    Python marshalling path (identical bytes; everything the C parser
+    accepts meets the validity rule of kernel/geojson.py, which decides
+    the rest).
     """
     sb = s_json.encode("utf-8")
     cb = c_json.encode("utf-8")
@@ -558,9 +558,9 @@ def pair_boolean_ops_native(s_json: str, c_json: str, ops):
         (c_int64 * 2)(0, len(cb)), cb,
         None, ops,
     )
-    if out is None or out[0][0] == _ROW_DECLINED:
+    if out is None:
         return None
-    _, offsets, n_polys, bbox, status, json, _ = out
+    offsets, n_polys, bbox, status, json, _ = out
     text = ctypes.string_at(json.ptr, offsets[len(ops)]).decode("ascii")
     return [
         (
@@ -576,7 +576,6 @@ def pair_boolean_ops_native(s_json: str, c_json: str, ops):
 
 class BatchResult(NamedTuple):
     columns: list  # the eight payload columns, len(ops) rows per input row
-    declined: list  # input rows the C parser declined (their slots are NULL)
     parses: tuple  # (subject, clipping) parse counts
 
 
@@ -607,13 +606,12 @@ def pair_boolean_ops_batch_native(subject, clipping, ops):
     `subject` is an Arrow string (or large_string) column of GeoJSON;
     `clipping` is another, or four float64 columns (xmin, ymin, xmax,
     ymax) of a rectangle. Returns a BatchResult whose `columns` equal
-    `pairs.payload_columns` over `pair_rows(resolve_pair_runner(), ...)`
-    except on the `declined` rows (NULL slots: a string outside the
-    strict subset or a non-finite rectangle bound), which the caller
-    runs on the Python marshalling path. A NULL operand gives the op and
-    NULLs. Raises ValueError on an unknown op. Returns None — rerun the
-    batch row by row — for an output past `_MAX_BATCH_BYTES` or an
-    allocation failure.
+    `pairs.payload_columns` over `pair_rows(resolve_pair_runner(), ...)`;
+    a NULL operand gives the op and NULLs. Raises ValueError on an
+    unknown op. Returns None — run the batch row by row — when the C
+    parser declines a row (see `pair_boolean_ops_native`) or a
+    rectangle bound is not finite, for an output past `_MAX_BATCH_BYTES`
+    and on an allocation failure.
     """
     import numpy as np
     import pyarrow as pa
@@ -645,12 +643,11 @@ def pair_boolean_ops_batch_native(subject, clipping, ops):
     if out is None:
         return None
     m = n * k
-    row_state, offsets, n_polys, bbox, status, json, parses = out
-    row_state = np.frombuffer(row_state, np.int8)
+    offsets, n_polys, bbox, status, json, parses = out
     offsets = np.frombuffer(offsets, np.int32)
     bbox = np.frombuffer(bbox, np.float64).reshape(m, 4)
     json_data = pa.foreign_buffer(json.ptr, int(offsets[-1]), base=json)
-    ran = np.repeat(row_state == 0, k)
+    ran = np.repeat(null == 0, k)
     n_null = m - int(np.count_nonzero(ran))
     validity = pa.py_buffer(np.packbits(ran, bitorder="little")) if n_null else None
     not_ran = ~ran
@@ -664,8 +661,7 @@ def pair_boolean_ops_batch_native(subject, clipping, ops):
             pa.array(np.frombuffer(status, np.int8), mask=not_ran)
         ),
     ]
-    declined = np.flatnonzero(row_state == _ROW_DECLINED).tolist()
-    return BatchResult(columns, declined, parses)
+    return BatchResult(columns, parses)
 
 
 def parse_bbox_native(geom_json: str):

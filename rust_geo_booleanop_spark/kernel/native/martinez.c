@@ -1374,15 +1374,16 @@ MartinezResult *martinez_boolean_op(
 /*    process at runtime via dlsym, never reimplemented;                */
 /*  - ring closing / trivial-result / contour-assembly serialization    */
 /*    replicate kernel/geojson.py and operators/boolean_join.py;        */
-/*  - anything outside the strict GeoJSON subset our pipelines emit     */
-/*    (other members, non-finite numbers, huge int literals, non-       */
-/*    number position members) returns MZ_UNSUPPORTED and the Python    */
-/*    wrapper falls back to the reference marshalling, where the one    */
-/*    validity rule of kernel/geojson.py decides the input. Everything  */
-/*    accepted here meets that rule (finite numbers only, exactly the   */
-/*    type and coordinates members), so both engines agree on any       */
-/*    input: a rejected operand gives 'invalid_input' rows, never an    */
-/*    exception.                                                        */
+/*  - the parser takes every geometry the one validity rule of          */
+/*    kernel/geojson.py accepts, save a few exotic spellings: an        */
+/*    escaped member name or type value, a repeated type or             */
+/*    coordinates, an altitude that is no finite number, an int token   */
+/*    past 640 digits, a member nested deeper than MZ_SKIP_DEPTH.       */
+/*    Those and every input the rule rejects return MZ_UNSUPPORTED,     */
+/*    and the Python wrapper runs the reference marshalling, where the  */
+/*    rule decides. Nothing the rule rejects is accepted here, so both  */
+/*    engines agree on any input: a rejected operand gives              */
+/*    'invalid_input' rows, never an exception.                         */
 /*                                                                      */
 /* One pair entry point, mz_pair_run_batch, runs an Arrow batch of     */
 /* pairs — string operands parsed once per run of equal consecutive     */
@@ -1573,7 +1574,7 @@ static int mz_push_i32(int32_t **arr, int64_t *n, int64_t *cap, int32_t v) {
     return 1;
 }
 
-/* ---------------- strict-subset GeoJSON parser ---------------- */
+/* ---------------- GeoJSON geometry parser ---------------- */
 
 typedef struct {
     const char *p, *end;
@@ -1605,11 +1606,14 @@ static int mz_lit(MzCur *c, const char *s) {
 }
 
 /* One JSON number. Token syntax per RFC 8259; value semantics per
- * json.loads followed by geojson._close's float(): int tokens go
- * through Python int->float (so "-0" is +0.0 and >305-digit ints, where
- * float(int) would raise OverflowError unlike strtod's inf, fall back);
- * float tokens through PyOS_string_to_double — the identical code path
- * json.loads itself uses. Non-finite results (1e999) fall back. */
+ * json.loads followed by geojson._position's float(): an int token goes
+ * through Python int->float, which rounds like strtod (so only "-0",
+ * +0.0 there, needs care), a float token through PyOS_string_to_double,
+ * the identical code path json.loads itself uses. A non-finite value
+ * (1e999, an int past the double range) declines, and so does an int
+ * token past 640 digits: json.loads refuses one longer than
+ * sys.get_int_max_str_digits(), which is never below 640. With out NULL
+ * only the token is checked (a member value: json.loads takes 1e999). */
 static int mz_parse_number(MzCur *c, double *out) {
     mz_ws(c);
     const char *s = c->p, *e = c->end;
@@ -1639,27 +1643,19 @@ static int mz_parse_number(MzCur *c, double *out) {
         while (p < e && *p >= '0' && *p <= '9') p++;
         has_exp = 1;
     }
-    if (!has_frac && !has_exp) {
-        if (int_end - int_start > 305) return MZ_UNSUPPORTED;
-        if (*s == '-') {
-            int all_zero = 1;
-            for (const char *q = int_start; q < int_end; q++)
-                if (*q != '0') {
-                    all_zero = 0;
-                    break;
-                }
-            if (all_zero) { /* json: int(-0) == 0 -> float +0.0 */
-                *out = 0.0;
-                c->p = p;
-                return MZ_OK;
-            }
-        }
+    int is_int = !has_frac && !has_exp;
+    if (is_int && int_end - int_start > 640) return MZ_UNSUPPORTED;
+    if (out && is_int && *s == '-' && *int_start == '0') {
+        *out = 0.0; /* json: int(-0) == 0 -> float +0.0 */
+    } else if (out) {
+        /* strtod reads on past the token: the text must go on (it does
+         * in any valid geometry) or it would read past the buffer */
+        if (p == e) return MZ_UNSUPPORTED;
+        char *endp = 0;
+        double v = g_py.s2d(s, &endp, 0);
+        if (endp != p || !isfinite(v)) return MZ_UNSUPPORTED;
+        *out = v;
     }
-    char *endp = 0;
-    double v = g_py.s2d(s, &endp, 0);
-    if (endp != p) return MZ_UNSUPPORTED;
-    if (!isfinite(v)) return MZ_UNSUPPORTED;
-    *out = v;
     c->p = p;
     return MZ_OK;
 }
@@ -1739,31 +1735,57 @@ static int mz_parse_polygon(MzCur *c, MzGeom *g) {
     return MZ_OK;
 }
 
-/* Skip one balanced coordinates array (brackets, numbers, commas and
- * whitespace only — anything else declines). Cursor must sit on '['. */
-static int mz_skip_coords_value(MzCur *c) {
-    mz_ws(c);
-    if (!(c->p < c->end && *c->p == '[')) return MZ_UNSUPPORTED;
-    int64_t depth = 0;
-    while (c->p < c->end) {
-        char ch = *c->p;
-        if (ch == '[') {
-            depth++;
-        } else if (ch == ']') {
-            depth--;
-            if (depth < 0) return MZ_UNSUPPORTED;
-            if (depth == 0) {
-                c->p++;
-                return MZ_OK;
-            }
-        } else if (!((ch >= '0' && ch <= '9') || ch == '-' || ch == '+' ||
-                     ch == '.' || ch == 'e' || ch == 'E' || ch == ',' ||
-                     ch == ' ' || ch == '\t' || ch == '\n' || ch == '\r')) {
-            return MZ_UNSUPPORTED;
+/* One JSON string: 1 with the cursor past its closing quote if
+ * json.loads takes it (valid escapes, no raw control character), else
+ * 0. *esc tells whether it holds an escape. */
+static int mz_skip_string(MzCur *c, int *esc) {
+    if (!mz_ch(c, '"')) return 0;
+    const char *p = c->p, *e = c->end;
+    *esc = 0;
+    for (; p < e && *p != '"'; p++) {
+        if ((unsigned char)*p < 0x20) return 0;
+        if (*p != '\\') continue;
+        *esc = 1;
+        if (++p == e) return 0;
+        if (*p == 'u') {
+            for (int k = 0; k < 4; k++)
+                if (++p == e || !memchr("0123456789abcdefABCDEF", *p, 22)) return 0;
+        } else if (!memchr("\"\\/bfnrt", *p, 8)) {
+            return 0;
         }
-        c->p++;
     }
-    return MZ_UNSUPPORTED;
+    if (p == e) return 0;
+    c->p = p + 1;
+    return 1;
+}
+
+/* Skip one JSON value that json.loads takes. A value nesting arrays and
+ * objects more than MZ_SKIP_DEPTH deep declines: the Python decoder's
+ * own limit, CPython's recursion limit, lies far deeper. */
+#define MZ_SKIP_DEPTH 64
+
+static int mz_skip_value(MzCur *c, int depth) {
+    int esc;
+    mz_ws(c);
+    if (c->p == c->end) return MZ_UNSUPPORTED;
+    const char open = *c->p;
+    if (open == '"') return mz_skip_string(c, &esc) ? MZ_OK : MZ_UNSUPPORTED;
+    if (open != '[' && open != '{') {
+        if (mz_lit(c, "true") || mz_lit(c, "false") || mz_lit(c, "null"))
+            return MZ_OK;
+        return mz_parse_number(c, 0);
+    }
+    const char close = open == '[' ? ']' : '}';
+    if (depth == MZ_SKIP_DEPTH) return MZ_UNSUPPORTED;
+    c->p++;
+    if (mz_ch(c, close)) return MZ_OK;
+    do {
+        if (open == '{' && !(mz_skip_string(c, &esc) && mz_ch(c, ':')))
+            return MZ_UNSUPPORTED;
+        int st = mz_skip_value(c, depth + 1);
+        if (st != MZ_OK) return st;
+    } while (mz_ch(c, ','));
+    return mz_ch(c, close) ? MZ_OK : MZ_UNSUPPORTED;
 }
 
 static int mz_parse_coordinates(MzCur *c, int multi, MzGeom *g) {
@@ -1789,19 +1811,21 @@ static int mz_parse_coordinates(MzCur *c, int multi, MzGeom *g) {
     return MZ_OK;
 }
 
-/* {"type":"Polygon"|"MultiPolygon","coordinates":...} — exactly those
- * two keys, either order (our pipelines emit type-first; reference-style
- * fixtures put coordinates first). Coordinate nesting depth depends on
- * the type, so when coordinates precede type the value span is skipped
- * with a balanced-bracket scan and re-parsed once the type is known.
- * Anything else falls back to the Python parser. */
+/* {"type":"Polygon"|"MultiPolygon","coordinates":...} plus any other
+ * members, in any order (our pipelines emit type first; reference-style
+ * fixtures put coordinates first). type and coordinates may each appear
+ * once (json.loads keeps the last); any other member's value is skipped.
+ * A member name with an escape declines: "\u0074ype" is type to
+ * json.loads. Coordinate nesting depth depends on the type, so
+ * coordinates before the type are skipped and parsed once it is known. */
 static int mz_parse_geometry(const char *s, int64_t len, MzGeom *g) {
     MzCur c = {s, s + len};
     if (!mz_geom_init(g)) return MZ_OOM;
     if (!mz_ch(&c, '{')) return MZ_UNSUPPORTED;
-    int multi = -1;
+    int multi = -1, esc, st, parsed = 0;
     const char *coords_start = 0, *coords_end = 0;
-    for (int key = 0; key < 2; key++) {
+    do {
+        st = MZ_OK;
         if (mz_lit(&c, "\"type\"")) {
             if (multi != -1 || !mz_ch(&c, ':')) return MZ_UNSUPPORTED;
             if (mz_lit(&c, "\"MultiPolygon\"")) {
@@ -1815,24 +1839,25 @@ static int mz_parse_geometry(const char *s, int64_t len, MzGeom *g) {
             if (coords_start || !mz_ch(&c, ':')) return MZ_UNSUPPORTED;
             mz_ws(&c);
             coords_start = c.p;
-            int st = mz_skip_coords_value(&c);
-            if (st != MZ_OK) return st;
+            parsed = multi != -1;
+            st = parsed ? mz_parse_coordinates(&c, multi, g) : mz_skip_value(&c, 0);
             coords_end = c.p;
+        } else if (mz_skip_string(&c, &esc) && !esc && mz_ch(&c, ':')) {
+            st = mz_skip_value(&c, 0);
         } else {
             return MZ_UNSUPPORTED;
         }
-        if (key == 0 && !mz_ch(&c, ',')) return MZ_UNSUPPORTED;
-    }
+        if (st != MZ_OK) return st;
+    } while (mz_ch(&c, ','));
     if (!mz_ch(&c, '}')) return MZ_UNSUPPORTED;
     mz_ws(&c);
-    if (c.p != c.end) return MZ_UNSUPPORTED;
-    if (multi == -1 || !coords_start) return MZ_UNSUPPORTED;
+    if (c.p != c.end || multi == -1 || !coords_start) return MZ_UNSUPPORTED;
+    if (parsed) return MZ_OK;
     MzCur cc = {coords_start, coords_end};
-    int st = mz_parse_coordinates(&cc, multi, g);
+    st = mz_parse_coordinates(&cc, multi, g);
     if (st != MZ_OK) return st;
     mz_ws(&cc);
-    if (cc.p != cc.end) return MZ_UNSUPPORTED;
-    return MZ_OK;
+    return cc.p == cc.end ? MZ_OK : MZ_UNSUPPORTED;
 }
 
 /* ---------------- serializer (byte-identical to json.dumps) ---------------- */
@@ -2038,41 +2063,36 @@ static int32_t mz_parse_operand(const char *s, int64_t len, MzGeom *g) {
 /* check + memcmp). assign_tiles emits a geometry's tiles as            */
 /* consecutive rows, so tile clips parse each geometry once.            */
 /*                                                                      */
-/* Per row, row_state gets MZ_ROW_RAN, MZ_ROW_NULL (null[i] set: no     */
-/* kernel call) or MZ_ROW_DECLINED (an operand outside the strict       */
-/* subset: the caller reruns that row on the Python path). Per (row,    */
-/* op), slot i * n_ops + k gets status/n_polys/bbox and its JSON at     */
-/* out_offsets[slot] .. out_offsets[slot + 1] in one contiguous buffer  */
-/* (*out_json, free with mz_buf_free). NULL and declined rows get empty */
-/* JSON, n_polys 0, NaN bbox. Returns MZ_OK, MZ_OOM, or MZ_OVERFLOW     */
-/* when the JSON would pass max_bytes (int32 Arrow offsets): nothing    */
-/* is returned then, and the caller reruns the batch row by row         */
-/* (MZ_UNSUPPORTED: the CPython number functions did not resolve).      */
+/* Per (row, op), slot i * n_ops + k gets status/n_polys/bbox and its   */
+/* JSON at out_offsets[slot] .. out_offsets[slot + 1] in one contiguous */
+/* buffer (*out_json, free with mz_buf_free). A row with null[i] set    */
+/* makes no kernel call and gets empty JSON, n_polys 0, NaN bbox. The   */
+/* batch comes back whole or not at all: MZ_OK returns it;              */
+/* MZ_UNSUPPORTED (the first declined row, or the CPython number        */
+/* functions did not resolve), MZ_OOM and MZ_OVERFLOW (the JSON would   */
+/* pass max_bytes, the int32 Arrow offsets) return nothing, and the     */
+/* caller runs the batch row by row.                                    */
 
 #define MZ_OVERFLOW 5
-#define MZ_ROW_RAN 0
-#define MZ_ROW_NULL 1
-#define MZ_ROW_DECLINED 2
 
 typedef struct {
     const char *key; /* bytes of the cached operand (NULL: empty cache) */
     int64_t len;
-    int32_t st; /* parse result for those bytes */
-    MzGeom g;
+    MzGeom g; /* their parse; the batch stops at a failed one */
 } MzCached;
 
 static int32_t mz_cached_parse(MzCached *c, const char *s, int64_t len,
                                int64_t *n_parses) {
     if (c->key && c->len == len && memcmp(c->key, s, (size_t)len) == 0)
-        return c->st;
+        return MZ_OK;
     mz_geom_free(&c->g);
     c->key = 0;
-    c->st = mz_parse_operand(s, len, &c->g);
-    if (c->st == MZ_OOM) return MZ_OOM; /* never cache a failed allocation */
+    int32_t st = mz_parse_operand(s, len, &c->g);
+    if (st != MZ_OK) return st;
     c->key = s;
     c->len = len;
     (*n_parses)++;
-    return c->st;
+    return MZ_OK;
 }
 
 /* The rectangle ring [(x0,y0),(x1,y0),(x1,y1),(x0,y1),(x0,y0)]. */
@@ -2096,7 +2116,7 @@ int32_t mz_pair_run_batch(int64_t n, const uint8_t *null,
                           const int64_t *c_offsets, const char *c_data,
                           const double *rects, const int32_t *ops,
                           int32_t n_ops, int64_t max_bytes,
-                          int8_t *row_state, int32_t *out_offsets,
+                          int32_t *out_offsets,
                           int32_t *out_n_polys, double *out_bbox,
                           int8_t *out_status, char **out_json,
                           int64_t *out_parses) {
@@ -2126,33 +2146,21 @@ int32_t mz_pair_run_batch(int64_t n, const uint8_t *null,
     int32_t ret = sb_need(&sb, 1) ? MZ_OK : MZ_OOM; /* never a NULL buffer */
     out_offsets[0] = 0;
     for (int64_t i = 0; i < n && ret == MZ_OK; i++) {
-        int32_t st = MZ_OK;
-        if (null[i]) {
-            row_state[i] = MZ_ROW_NULL;
-        } else {
-            st = mz_cached_parse(&S, s_data + s_offsets[i],
-                                 s_offsets[i + 1] - s_offsets[i], &out_parses[0]);
-            if (st == MZ_OK && c_offsets) {
-                st = mz_cached_parse(&C, c_data + c_offsets[i],
-                                     c_offsets[i + 1] - c_offsets[i],
-                                     &out_parses[1]);
-            } else if (st == MZ_OK) {
-                const double *r4 = rects + 4 * i;
-                if (isfinite(r4[0]) && isfinite(r4[1]) && isfinite(r4[2]) &&
-                    isfinite(r4[3])) {
-                    st = mz_rect_geom(r4, &C.g);
-                } else {
-                    st = MZ_UNSUPPORTED;
-                }
-            }
-            if (st == MZ_OOM) {
-                ret = MZ_OOM;
-                break;
-            }
-            row_state[i] = st == MZ_OK ? MZ_ROW_RAN : MZ_ROW_DECLINED;
-        }
         MartinezResult *by_op[MZ_OPC_DIFF_BA + 1] = {0}; /* by op code */
-        if (row_state[i] == MZ_ROW_RAN) {
+        if (!null[i]) {
+            ret = mz_cached_parse(&S, s_data + s_offsets[i],
+                                  s_offsets[i + 1] - s_offsets[i], &out_parses[0]);
+            if (ret == MZ_OK && c_offsets) {
+                ret = mz_cached_parse(&C, c_data + c_offsets[i],
+                                      c_offsets[i + 1] - c_offsets[i],
+                                      &out_parses[1]);
+            } else if (ret == MZ_OK) {
+                const double *r4 = rects + 4 * i;
+                int finite = isfinite(r4[0]) && isfinite(r4[1]) &&
+                             isfinite(r4[2]) && isfinite(r4[3]);
+                ret = finite ? mz_rect_geom(r4, &C.g) : MZ_UNSUPPORTED;
+            }
+            if (ret != MZ_OK) break;
             const Operand so = mz_operand(&S.g), co = mz_operand(&C.g);
             MartinezResult *swept[SWEEP_OPS] = {0};
             if (nsweep) martinez_run(&so, &co, sweep_ops, nsweep, swept);
@@ -2166,7 +2174,7 @@ int32_t mz_pair_run_batch(int64_t n, const uint8_t *null,
             int64_t slot = i * n_ops + k;
             int32_t status = MZ_OK, npolys = 0;
             double *bb4 = out_bbox + 4 * slot;
-            if (row_state[i] == MZ_ROW_RAN) {
+            if (!null[i]) {
                 const MartinezResult *r = by_op[ops[k]];
                 if (ops[k] == MZ_OPC_DIFF_BA)
                     ret = mz_op_emit(&C.g, &S.g, OP_DIFFERENCE, r, &sb,

@@ -15,19 +15,19 @@ Two engines, byte-identical outputs:
   parse once, ONE sweep shared by intersection, union, diff and xor
   (each op's result read off it; diff_ba, on swapped operands, sweeps
   alone), serialize in C via CPython's own float repr/strtod functions.
-  Declines (returns None) on anything outside the strict GeoJSON subset
-  our pipelines emit, in which case the resolver's wrapper falls back to
-  the Python composition, where the validity rule of kernel/geojson.py
-  decides the input: both engines give the same rows on any input.
+  Its parser takes every geometry the validity rule of kernel/geojson.py
+  accepts, save a few exotic spellings (see martinez.c), and declines
+  (returns None) those and malformed input; the resolver's wrapper then
+  runs the Python composition, where the rule decides the input: both
+  engines give the same rows on any input.
 
 The Spark kernel stage runs whole Arrow batches through
 `resolve_batch_runner`: natively, one `pair_boolean_ops_batch_native` C
 call per batch (each subject parsed once per run of equal consecutive
-rows, rectangle clippings built from their doubles), with declined rows
-run one at a time through the per-row loop of the Python composition
-over the native sweep and spliced back; on the Python engine, the
-per-row loop over `pair_rows`. A declined row is not sent to the C parser again: both C
-wrappers call the same C entry, which would decline it again.
+rows, rectangle clippings built from their doubles), which returns the
+whole batch or nothing; a batch it does not return runs row by row
+through `resolve_pair_runner()`. On the Python engine the batch runner
+is the per-row loop over `pair_rows`.
 
 A rejected operand degrades its rows, never the task: an operand the
 validity rule of kernel/geojson.py rejects gives every op status
@@ -106,7 +106,7 @@ def resolve_pair_runner():
 
     def runner(s_json, c_json, ops):
         rows = native_pair(s_json, c_json, ops)
-        if rows is None:  # strict-subset miss: Python marshalling path
+        if rows is None:  # declined: Python marshalling path
             return pair_boolean_ops_python(
                 s_json, c_json, ops, boolean_op_fn=native_sweep
             )
@@ -180,23 +180,6 @@ def _per_row_batch(pair_run):
     return run
 
 
-def _splice(columns, k, patches):
-    """Replace the k slots of each patched input row i, [i*k, (i+1)*k),
-    by its payload columns; `patches` is [(i, columns)] in ascending i."""
-    import pyarrow as pa
-
-    pieces = [[] for _ in columns]
-    start = 0
-    for i, patch in patches:
-        for piece, col, new in zip(pieces, columns, patch):
-            piece += (col.slice(start, i * k - start), new)
-        start = (i + 1) * k
-    return [
-        pa.concat_arrays(piece + [col.slice(start)])
-        for piece, col in zip(pieces, columns)
-    ]
-
-
 def resolve_batch_runner():
     """Pick the batch runner of the kernel stage: a callable
     (subject, clipping, ops) -> the payload columns (see
@@ -207,38 +190,22 @@ def resolve_batch_runner():
     that is serialized like `bbox_square_json`. A NULL operand makes no
     kernel call (see `pair_rows`).
 
-    With the native kernel, each batch is one C call. Rows it declines
-    run through `pair_boolean_ops_python` over the native sweep (same
-    bytes, same 'invalid_input' rows) and are spliced back in; a batch it cannot
-    return whole (output past 2**31 bytes, out of memory) reruns row by
-    row. An unknown op raises ValueError. Without the C kernel the batch
+    With the native kernel, each batch is one C call, which returns the
+    whole batch or nothing. A batch it does not return (a row its parser
+    declines, output past 2**31 bytes, out of memory) runs row by row
+    through `resolve_pair_runner()`: same bytes, same 'invalid_input'
+    rows. An unknown op raises ValueError. Without the C kernel the batch
     runner is the per-row loop.
     """
-    import pyarrow as pa
-
     native_mod = resolve_native()
     if native_mod is None:
         return _per_row_batch(pair_boolean_ops_python)
     per_row = _per_row_batch(resolve_pair_runner())
-    declined_row = _per_row_batch(
-        functools.partial(
-            pair_boolean_ops_python, boolean_op_fn=native_mod.boolean_op_native
-        )
-    )
     native_batch = native_mod.pair_boolean_ops_batch_native
 
     def run(subject, clipping, ops):
         out = native_batch(subject, clipping, ops)
-        if out is None:
-            return per_row(subject, clipping, ops)
-        if not out.declined:
-            return out.columns
-        is_rect = not isinstance(clipping, pa.Array)
-        patches = []
-        for i in out.declined:
-            clip = [c.slice(i, 1) for c in clipping] if is_rect else clipping.slice(i, 1)
-            patches.append((i, declined_row(subject.slice(i, 1), clip, ops)))
-        return _splice(out.columns, len(ops), patches)
+        return out.columns if out is not None else per_row(subject, clipping, ops)
 
     return run
 

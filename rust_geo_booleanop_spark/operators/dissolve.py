@@ -19,11 +19,12 @@ Degenerate-overlap caveat: re-unioning union OUTPUTS can hit the Martinez
 degenerate-overlap pathology (the reference's deactivated issue90 class).
 The kernel's termination valve ends such a sweep, and the pair runner gives
 it status 'limit_exceeded'; the group degrades to one such row instead of
-hanging an executor. A geometry the validity rule of kernel/geojson.py
-rejects (a Point, null, truncated JSON, a NaN or infinite coordinate)
-degrades its group the same way, with status 'invalid_input', at the
-level-1 fold that meets it. Clean inputs (disjoint or simply-overlapping
-coverages, e.g. rectangle tilings) dissolve exactly.
+hanging an executor. A NULL geometry, or one the validity rule of
+kernel/geojson.py rejects (a Point, null, truncated JSON, a NaN or
+infinite coordinate), degrades its group the same way, with status
+'invalid_input', at the level-1 fold that meets it. Clean inputs
+(disjoint or simply-overlapping coverages, e.g. rectangle tilings)
+dissolve exactly.
 """
 
 from __future__ import annotations
@@ -60,7 +61,13 @@ def _fold_union(jsons) -> tuple[str, int, str]:
 
 
 def _partial_fn(key, pdf):
-    gj, _, status = _fold_union(sorted(pdf["geom_json"]))
+    jsons = pdf["geom_json"]
+    # a NULL geometry degrades its key like the JSON literal null (and
+    # sorted() cannot order it among strings)
+    if jsons.isna().any():
+        gj, status = "", "invalid_input"
+    else:
+        gj, _, status = _fold_union(sorted(jsons))
     return pd.DataFrame({"key": [key[0]], "geom_json": [gj], "status": [status]})
 
 

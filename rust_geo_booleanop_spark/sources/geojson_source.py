@@ -75,7 +75,9 @@ def _parse_batches(batches: Iterator[pd.DataFrame], base_dir: str = "") -> Itera
                     mp = geometry_to_multipolygon(feat.get("geometry"))
                 except ValueError:
                     continue  # not a valid Polygon/MultiPolygon: skip it
-                props = feat.get("properties") or {}
+                props = feat.get("properties")
+                if not isinstance(props, dict):  # RFC 7946: an object or null
+                    props = {}
                 xmin, ymin, xmax, ymax = multipolygon_bbox(mp)
                 role = "subject" if i == 0 else ("clipping" if i == 1 else "expected")
                 out["case_key"].append(name)

@@ -102,6 +102,19 @@ def test_non_finite_coordinate_degrades_the_group():
     ]
 
 
+def test_null_geometry_degrades_the_group():
+    # a SQL NULL geometry (which sorted() cannot order among strings)
+    # degrades its key like the JSON literal null
+    rect = _rect_json(0.0, 0.0, 1.0, 1.0)
+    for jsons in ([rect, None], [None], [rect, "null"]):
+        part = _partial_fn(("k",), pd.DataFrame({"geom_json": jsons}))
+        assert part["status"].tolist() == ["invalid_input"], jsons
+        final = _final_fn(("k",), part)
+        assert final[["geom_json", "n_polys", "status"]].values.tolist() == [
+            ["", 0, "invalid_input"]
+        ]
+
+
 def _dissolve_groups():
     """(key, buckets) groups: the tiling fixture in two buckets per key,
     plus corpus shapes, overlapping (one case's subject and clipping) and

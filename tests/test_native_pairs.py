@@ -11,19 +11,21 @@ construction (the C side calls CPython's own PyOS_string_to_double /
 PyOS_double_to_string via dlsym); this file is the tripwire for that
 construction.
 
-Inputs outside the strict GeoJSON subset must DECLINE (return None) so
-the wrapper falls back to the Python path, where the one validity rule of
-kernel/geojson.py decides them: the grammar table below pins that every
-valid spelling gives the same bytes in both engines and every invalid one
-gives 'invalid_input' rows on every path.
+The C parser takes every geometry the one validity rule of
+kernel/geojson.py accepts, save a few exotic spellings, and must DECLINE
+(return None) those and every malformed input, so the wrapper falls back
+to the Python path, where the rule decides them. The grammar table below
+is the spec: valid spellings the C parser runs, valid spellings it
+declines (the same bytes on every path of both engines) and invalid
+spellings ('invalid_input' rows on every path).
 
 The C side has one pair entry, `mz_pair_run_batch`: the per-pair
 runner is a one-row call of it, and the batch wrapper
 (`pair_boolean_ops_batch_native`, one C call per Arrow batch with a
 last-row operand cache and rectangle operands) must give, row by row,
-what the per-row runner gives through `pair_rows`. Rows the batch
-declines run on the Python marshalling path; a NaN or infinite
-coordinate gives status 'invalid_input' on every path.
+what the per-row runner gives through `pair_rows`. It returns the whole
+batch or nothing: a batch holding a declined row runs row by row; a NaN
+or infinite coordinate gives status 'invalid_input' on every path.
 """
 
 import itertools
@@ -233,7 +235,6 @@ def test_unsupported_inputs_decline_to_python_path():
         '{"type":"Point","coordinates":[0,0]}',
         '{"type":"Polygon","coordinates":[[[1e999,0],[2,0],[2,2]]]}',  # non-finite
         '{"type":"Polygon","coordinates":[[[null,0],[2,0],[2,2]]]}',
-        '{"type":"Polygon","coordinates":[[[0,0],[2,0],[2,2]]],"extra":1}',
         '{"type":"Polygon"}',
         "[1,2,3]",
         "",
@@ -259,16 +260,47 @@ def test_unsupported_inputs_decline_to_python_path():
 
 _RING = "[[0,0],[2,0],[2,2],[0,2],[0,0]]"
 _BIG_INT = "1" + "0" * 299  # a 300-digit integer, finite as a double
-VALID_GRAMMAR = {
+_MAX_INT = "1" + "0" * 308  # a 309-digit integer, 1e308, still finite
+_OTHER_SHAPES = ("big_integer", "max_integer")  # not the square
+
+
+def _square_with(member):
+    """The square with one more member."""
+    return '{"type":"Polygon","coordinates":[%s],%s}' % (_RING, member)
+
+
+# valid spellings the C parser runs: no decline on any path
+VALID_C_GRAMMAR = {
     "type_first": '{"type":"Polygon","coordinates":[%s]}' % _RING,
     "coordinates_first": '{"coordinates":[%s],"type":"Polygon"}' % _RING,
     "whitespace": '{ "type" :\n"Polygon" ,\t"coordinates" : [ [ [0, 0] ,[2,0],'
                   '[2,2] , [0,2],[0,0] ] ] }',
     "altitude": '{"type":"Polygon","coordinates":[[[0,0,7],[2,0,7.5],[2,2,-1],[0,2,0],[0,0,7]]]}',
     "big_integer": '{"type":"Polygon","coordinates":[[[0,0],[%s,0],[2,2],[0,2],[0,0]]]}' % _BIG_INT,
-    "bbox_member": '{"type":"Polygon","coordinates":[%s],"bbox":[0,0,2,2]}' % _RING,
-    "nan_in_a_string": '{"type":"Polygon","coordinates":[%s],"name":"NaN Ridge"}' % _RING,
+    "max_integer": '{"type":"Polygon","coordinates":[[[0,0],[%s,0],[2,2],[0,2],[0,0]]]}' % _MAX_INT,
+    "bbox_member": _square_with('"bbox":[0,0,2,2]'),
+    "infinite_bbox": _square_with('"bbox":[0,-1e999,2,1e999]'),
+    "nan_in_a_string": _square_with('"name":"NaN Ridge"'),
+    "properties": _square_with(
+        r'"properties":{"tags":[[1,-2.5e-3,[0]],[]],"note":"a\"b\\c\/d\b\f\n\r\t\u00e9",'
+        r'"yes":true,"no":false,"none":null,"empty":{}," ":"é☃"}'
+    ),
+    "crs": '{"crs":{"type":"name","properties":{"name":"EPSG:4326"}},'
+           '"type":"Polygon","coordinates":[%s]}' % _RING,
+    "lone_surrogate": _square_with(r'"name":"\ud800"'),
     "unclosed_ring": '{"type":"MultiPolygon","coordinates":[[[[0,0],[2,0],[2,2],[0,2]]]]}',
+}
+# valid spellings the C parser declines: the Python parse decides them
+VALID_DECLINED_GRAMMAR = {
+    "escaped_type": r'{"type":"Poly\u0067on","coordinates":[%s]}' % _RING,
+    "escaped_member_name": r'{"\u0074ype":"Polygon","coordinates":[%s]}' % _RING,
+    "repeated_coordinates": '{"type":"Polygon","coordinates":[[[5,5],[6,5],[6,6]]],'
+                            '"coordinates":[%s]}' % _RING,
+    "string_altitude": '{"type":"Polygon","coordinates":[[[0,0,"a"],[2,0],[2,2],[0,2],[0,0]]]}',
+    "null_altitude": '{"type":"Polygon","coordinates":[[[0,0,null],[2,0],[2,2],[0,2],[0,0]]]}',
+    "infinite_altitude": '{"type":"Polygon","coordinates":[[[0,0,1e999],[2,0],[2,2],[0,2],[0,0]]]}',
+    "long_integer_member": _square_with('"n":%s' % ("1" * 700)),
+    "deep_member": _square_with('"x":' + "[" * 100 + "]" * 100),
 }
 _DEEP = 200_000
 INVALID_GRAMMAR = {
@@ -277,7 +309,7 @@ INVALID_GRAMMAR = {
     "truncated": '{"type":"Polygon","coordinates":[[[0,0],[2,0],[2,',
     "wrong_nesting": '{"type":"Polygon","coordinates":[[0,0],[2,0],[2,2],[0,0]]}',
     "nan_token": '{"type":"Polygon","coordinates":[[[NaN,0],[2,0],[2,2],[NaN,0]]]}',
-    "nan_token_in_bbox": '{"type":"Polygon","coordinates":[%s],"bbox":[NaN,0,2,2]}' % _RING,
+    "nan_token_in_bbox": _square_with('"bbox":[NaN,0,2,2]'),
     "infinity_token": '{"type":"Polygon","coordinates":[[[0,0],[Infinity,0],[2,2],[0,0]]]}',
     "overflowing_float": '{"type":"Polygon","coordinates":[[[0,0],[1e999,0],[2,2],[0,0]]]}',
     "overflowing_integer": '{"type":"Polygon","coordinates":[[[0,0],[%s,0],[2,2],[0,0]]]}'
@@ -286,7 +318,17 @@ INVALID_GRAMMAR = {
     "number_string": '{"type":"Polygon","coordinates":[[["2",0],[2,0],[2,2],["2",0]]]}',
     "boolean": '{"type":"Polygon","coordinates":[[[true,0],[2,0],[2,2],[true,0]]]}',
     "deep_nesting": '{"type":"Polygon","coordinates":%s}' % ("[" * _DEEP + "]" * _DEEP),
+    "retyped_point": _square_with('"type":"Point"'),
+    "raw_tab_in_a_string": _square_with('"name":"a\tb"'),
+    "trailing_comma": _square_with('"bbox":[0,0,2,2,]'),
+    "bad_escape": _square_with(r'"name":"a\xb"'),
+    "unterminated_string": _square_with('"name":"abc}'),
+    "leading_zero": _square_with('"n":01'),
+    # past sys.get_int_max_str_digits(): json.loads refuses it
+    "overlong_integer_member": _square_with('"n":%s' % ("1" * 5000)),
+    "deep_member": _square_with('"x":' + "[" * _DEEP + "]" * _DEEP),
 }
+_RECT = [pa.array([v], pa.float64()) for v in (0.5, 0.5, 3.0, 3.0)]
 
 
 def _grammar_engines(monkeypatch):
@@ -303,21 +345,38 @@ def _variant_rows(pair_run, batch_run, geom, ops=OPS):
     """The variant as subject and as clipping of SQUARE, per pair and as
     a batch (string and rectangle clippings), as Arrow-boundary rows."""
     per_pair = _arrow_rows(pair_run(geom, SQUARE, ops) + pair_run(SQUARE, geom, ops))
-    rect = [pa.array([v], pa.float64()) for v in (0.5, 0.5, 3.0, 3.0)]
     batches = [
         batch_run(pa.array([geom, SQUARE]), pa.array([SQUARE, geom]), ops),
-        batch_run(pa.array([geom]), rect, ops),
+        batch_run(pa.array([geom]), _RECT, ops),
     ]
     batch = [row for cols in batches for row in zip(*(c.to_pylist() for c in cols))]
     return per_pair, batch
 
 
+def test_grammar_table_c_parser_runs_or_declines_as_listed():
+    """Each spelling of VALID_C_GRAMMAR stays in C on every path (the pair
+    runner, the batch entry and the bbox parse decline none); each one of
+    VALID_DECLINED_GRAMMAR is declined to the Python parse."""
+    for name, geom in VALID_C_GRAMMAR.items():
+        assert pair_boolean_ops_native(geom, SQUARE, OPS) is not None, name
+        assert pair_boolean_ops_native(SQUARE, geom, OPS) is not None, name
+        assert pair_boolean_ops_batch_native(
+            pa.array([geom, SQUARE]), pa.array([SQUARE, geom]), OPS
+        ) is not None, name
+        assert pair_boolean_ops_batch_native(pa.array([geom]), _RECT, OPS) is not None, name
+        assert parse_bbox_native(geom) is not None, name
+    for name, geom in VALID_DECLINED_GRAMMAR.items():
+        assert pair_boolean_ops_native(geom, SQUARE, OPS) is None, name
+        assert parse_bbox_native(geom) is None, name
+
+
 def test_grammar_table_valid_variants_match_across_engines(monkeypatch):
-    """Each valid spelling gives the same bytes on every path of both
-    engines as the plain type-first square."""
+    """Each valid spelling, run in C or declined, gives the same bytes on
+    every path of both engines as the plain type-first square (save the
+    other shapes)."""
     engines = _grammar_engines(monkeypatch)
-    want = None
-    for name, geom in VALID_GRAMMAR.items():
+    want = _variant_rows(*engines[0][1:3], VALID_C_GRAMMAR["type_first"])
+    for name, geom in {**VALID_C_GRAMMAR, **VALID_DECLINED_GRAMMAR}.items():
         got = {}
         for engine, pair_run, batch_run, bbox_fn in engines:
             got[engine] = _variant_rows(pair_run, batch_run, geom)
@@ -328,8 +387,7 @@ def test_grammar_table_valid_variants_match_across_engines(monkeypatch):
             assert all(r[7] == "ok" for rows in got[engine] for r in rows), (name, engine)
             assert bbox_fn(geom) == multipolygon_bbox(parse_multipolygon(geom)), name
         assert got["native"] == got["python"], name
-        if name != "big_integer":  # the same square in another spelling
-            want = want or got["native"]
+        if name not in _OTHER_SHAPES:
             assert got["native"] == want, name
 
 
@@ -435,7 +493,7 @@ HOLED = (
     '{"type":"MultiPolygon","coordinates":[[[[-1,-1],[4,-1],[4,4],[-1,4],[-1,-1]],'
     "[[0.5,0.5],[1.5,0.5],[1.5,1.5],[0.5,1.5],[0.5,0.5]]]]}"
 )
-# outside the strict subset (an extra key): the C parser declines it
+# a member besides type and coordinates: the C parser runs it
 BBOX_KEYED = (
     '{"type":"Polygon","coordinates":[[[0,0],[2,0],[2,2],[0,2],[0,0]]],'
     '"bbox":[0,0,2,2]}'
@@ -450,12 +508,12 @@ def _arrow_rows(rows):
     ]
 
 
-def _check_batch(subjects, clips, rects=None, ops=OPS, declined=(),
+def _check_batch(subjects, clips, rects=None, ops=OPS, whole=True,
                  subject_col=None, clip_cols=None):
     """Run one batch through the C entry and the batch runner with and
     without the C kernel; compare each, row by row, with `pair_rows` over
-    the per-row runner. Rows in `declined` must come back declined (NULL
-    slots) from the C entry."""
+    the per-row runner. Unless `whole`, the batch holds a row the C entry
+    declines, and it must return nothing."""
     run = resolve_pair_runner()
     s_col = subject_col if subject_col is not None else pa.array(subjects, pa.string())
     if rects is None:
@@ -464,17 +522,14 @@ def _check_batch(subjects, clips, rects=None, ops=OPS, declined=(),
         c_arg = clip_cols or [pa.array(list(b), pa.float64()) for b in zip(*rects)]
         clips = [None if None in r else bbox_square_json(*r) for r in rects]
     out = pair_boolean_ops_batch_native(s_col, c_arg, ops)
-    assert out is not None
-    assert out.declined == list(declined)
-    got = list(zip(*(c.to_pylist() for c in out.columns)))
-    assert len(got) == len(subjects) * len(ops)
-    k = len(ops)
-    for i, (s_json, c_json) in enumerate(zip(subjects, clips)):
-        rows = got[i * k : (i + 1) * k]
-        if i in declined:
-            assert rows == [(op,) + (None,) * 7 for op in ops]
-            continue
-        assert rows == _arrow_rows(pair_rows(run, s_json, c_json, ops)), i
+    assert (out is not None) == whole
+    if whole:
+        got = list(zip(*(c.to_pylist() for c in out.columns)))
+        assert len(got) == len(subjects) * len(ops)
+        k = len(ops)
+        for i, (s_json, c_json) in enumerate(zip(subjects, clips)):
+            rows = got[i * k : (i + 1) * k]
+            assert rows == _arrow_rows(pair_rows(run, s_json, c_json, ops)), i
     ref = [r for s_json, c_json in zip(subjects, clips) for r in pair_rows(run, s_json, c_json, ops)]
     want = payload_columns(ref)
     runners = {"native": resolve_batch_runner()}
@@ -487,7 +542,7 @@ def _check_batch(subjects, clips, rects=None, ops=OPS, declined=(),
     return out
 
 
-def test_batch_json_operands_cache_nulls_and_decline(monkeypatch):
+def test_batch_json_operands_cache_nulls_and_decline():
     subjects = [
         SQUARE, SQUARE, SQUARE,  # one parse for a run of equal subjects
         SHIFTED, SQUARE,  # A, B, A: the cache must invalidate both times
@@ -495,30 +550,22 @@ def test_batch_json_operands_cache_nulls_and_decline(monkeypatch):
         None,  # NULL subject mid-batch
         HOLED,
         HOLED,  # NULL clipping below: the cache survives the row
-        BBOX_KEYED,  # declined by the C parser
+        BBOX_KEYED,  # an extra member: runs in C
         HOLED,
     ]
     clips = [
         SHIFTED, HOLED, SQUARE, SQUARE, SHIFTED, SHIFTED, SHIFTED, SQUARE,
         SHIFTED, None, SQUARE, SHIFTED,
     ]
-    out = _check_batch(subjects, clips, declined=[10])
+    out = _check_batch(subjects, clips)
     # SQUARE, SHIFTED, SQUARE, SQUARE3, SQUARE, HOLED, BBOX_KEYED, HOLED:
     # equal bytes at different offsets of the data buffer hit the cache
     assert out.parses[0] == 8
-
-    # the declined row goes straight to the Python marshalling path: the
-    # C parser, which declined it once, is not asked again
-    def refuse(*args):
-        raise AssertionError("declined row sent back to the C pair runner")
-
-    monkeypatch.setattr(native, "pair_boolean_ops_native", refuse)
-    want = payload_columns(
-        [r for s_json, c_json in zip(subjects, clips)
-         for r in pair_rows(pair_boolean_ops_python, s_json, c_json, OPS)]
-    )
-    got = resolve_batch_runner()(pa.array(subjects), pa.array(clips), OPS)
-    assert all(g.equals(w) for g, w in zip(got, want))
+    # one row the C parser declines, malformed or valid: the C entry
+    # returns nothing, and the batch runs row by row with the same rows
+    for bad in (INVALID_GRAMMAR["truncated"], VALID_DECLINED_GRAMMAR["escaped_type"]):
+        _check_batch(subjects[:10] + [bad] + subjects[11:], clips, whole=False)
+        _check_batch(subjects, clips[:10] + [bad] + clips[11:], whole=False)
 
 
 def test_batch_rectangle_operands():
@@ -535,8 +582,10 @@ def test_batch_rectangle_operands():
         (0.1, 0.2, 2.0 / 3.0, 1e-5),
         (1.0, 1.0, 1.0, 1.0),  # zero-area rectangle
     ]
-    out = _check_batch(subjects, None, rects=rects, declined=[6])
+    out = _check_batch(subjects[:6] + subjects[7:], None, rects=rects[:6] + rects[7:])
     assert out.parses == (3, 0)
+    # the NaN bound declines the batch, which runs row by row
+    _check_batch(subjects, None, rects=rects, whole=False)
     rect_cols = [pa.array(list(b), pa.float64()) for b in zip(*rects)]
     got = resolve_batch_runner()(pa.array(subjects), rect_cols, OPS)
     nan_rows = list(zip(*(c.to_pylist() for c in got)))[6 * len(OPS) : 7 * len(OPS)]
@@ -577,7 +626,6 @@ def test_batch_many_rows_match_per_row_runner():
     out = pair_boolean_ops_batch_native(
         pa.array([s for s, _ in pairs]), pa.array([c for _, c in pairs]), ops
     )
-    assert out.declined == []
     got = list(zip(*(c.to_pylist() for c in out.columns)))
     assert got == _arrow_rows(
         [r for s_json, c_json in pairs for r in pair_boolean_ops_native(s_json, c_json, ops)]

@@ -137,6 +137,24 @@ def test_geojson_source_skips_invalid_geometry(spark, tmp_path):
     assert [(r.case_key, r.feature_no, r.xmax) for r in rows] == [("case", 1, 2.0)]
 
 
+def test_geojson_source_non_object_properties_read_as_none():
+    """RFC 7946 allows an object or null as a feature's properties; any
+    other value reads as no properties instead of failing the read task."""
+    import json
+
+    import pandas as pd
+
+    from rust_geo_booleanop_spark.sources.geojson_source import _parse_batches
+
+    square = {"type": "Polygon", "coordinates": [[[0, 0], [2, 0], [2, 2], [0, 2], [0, 0]]]}
+    props = (["x"], "s", 7, None, {"operation": "union", "swap_ab_is_broken": True})
+    features = [{"type": "Feature", "properties": p, "geometry": square} for p in props]
+    content = json.dumps({"type": "FeatureCollection", "features": features}).encode()
+    (out,) = _parse_batches(iter([pd.DataFrame({"path": ["case.geojson"], "content": [content]})]))
+    assert out["operation"].tolist() == [None] * 4 + ["union"]
+    assert out["swap_ab_is_broken"].tolist() == [False] * 4 + [True]
+
+
 @requires_reference_corpus
 class TestGeoJsonSource:
     def test_read_feature_collections(self, spark):
