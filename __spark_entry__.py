@@ -236,7 +236,7 @@ def _g17_simplify(spark, sf_dir):
 
 def _g18_convex_hull(spark, sf_dir):
     """Convex hull per corpus geometry (operators/hull.py, Andrew
-    monotone chain in one mapInPandas stage — no shuffle). Oracle:
+    monotone chain in one Arrow stage — no shuffle). Oracle:
     committed fixture tests/oracle_fixtures/g18_hull_sf01.parquet
     computed by an INDEPENDENT Jarvis gift-wrapping implementation
     (scripts/gen_geo_oracle_fixtures.py::_jarvis_hull; same cross

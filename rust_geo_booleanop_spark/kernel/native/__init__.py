@@ -65,6 +65,7 @@ from ..booleanop import (
     XOR,
     KernelInvalidInput,
     KernelLimitExceeded,
+    _close_ring,
     _normalize_multipolygon,
     _trivial_result,
 )
@@ -404,17 +405,12 @@ def _run_native(lib, typecode, coord_ctype, subject, clipping, operation):
     finally:
         lib.martinez_free(ctypes.cast(res_ptr, c_void_p))
 
-    def close_ring(ring):
-        if ring and (ring[0][0] != ring[-1][0] or ring[0][1] != ring[-1][1]):
-            return list(ring) + [ring[0]]
-        return ring
-
     polygons = []
     for i in range(len(points)):
         if hole_of[i] == -1:
-            rings = [close_ring(points[i])]
+            rings = [_close_ring(points[i])]
             for hid in hole_ids[i]:
-                rings.append(close_ring(points[hid]))
+                rings.append(_close_ring(points[hid]))
             polygons.append(rings)
     return polygons
 

@@ -1,12 +1,13 @@
-"""Pairwise boolean operations as a Spark operator.
+"""Pairwise boolean operations as a Spark operator, and the one Arrow stage.
 
 Relational shell: subjects ⋈ clippings on case_id (one shuffle; AQE handles
 skew and coalescing), then the Martinez-Rueda kernel runs over Arrow
-batches via `kernel_map` — thousands of geometry pairs per Python worker
-call, never per-row Python. `kernel_map` is the one kernel stage: the
-boolean ops here and the tile clip, area-weight clip and region
-normalization of operators/tiling.py all go through it, and so do the
-pairs the streaming twin completes (streaming/boolean.py). With the
+batches via `kernel_map` on `arrow_stage`, the one mapInArrow scaffold
+(extraction, hull and simplify run on it too): thousands of pairs per
+Python worker call. `kernel_map` is the one kernel stage: the boolean
+ops here and the tile clip, area-weight clip and region normalization
+of operators/tiling.py all go through it, and so do the pairs the
+streaming twin completes (streaming/boolean.py). With the
 native kernel each Arrow batch is one C call (`resolve_batch_runner`).
 Every operator reaches the sweep through the one pair contract of
 kernel/pairs.py; dissolve (operators/dissolve.py) calls its pair runner
@@ -24,8 +25,10 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
 
+from ..kernel.geojson import parse_multipolygon
 from ..kernel.pairs import resolve_batch_runner
 
 DEFAULT_OPS = ("intersection", "union", "diff", "xor")
@@ -38,17 +41,13 @@ KERNEL_RESULT_SCHEMA = (
     "xmin double, ymin double, xmax double, ymax double, status string"
 )
 
-BOOLEAN_RESULTS_SCHEMA = (
-    "case_id long, subject_url string, clipping_url string, " + KERNEL_RESULT_SCHEMA
-)
-
 
 def pair_candidates(geoms: DataFrame, max_side: int = 10_000) -> DataFrame:
     """Form (subject, clipping) candidate pairs per case from ONE pass.
 
     Changed in round 3: the previous shape self-joined a subject branch
     and a clipping branch of the SAME extraction output, so Catalyst
-    planned the documents scan + extraction mapInPandas TWICE — at 100 TB
+    planned the documents scan + extraction stage TWICE — at 100 TB
     that doubles the most expensive scan+parse stage. Now a single scan
     feeds one shuffle on case_id (column-pruned to key + url + geom_json),
     and the subject x clipping cross product per case comes from exploding
@@ -155,6 +154,47 @@ def pair_candidates_salted(
     )
 
 
+def arrow_stage(df, operands, carry, batch_fn, payload_schema: str) -> DataFrame:
+    """The one Arrow stage (mapInArrow) of every Python geometry stage.
+
+    `batch_fn()` runs once inside the Python worker (after fork) and
+    returns the per-batch function: the `operands` (column names or
+    Columns) as Arrow arrays -> (index, payload). Each batch emits its
+    `carry` columns taken at `index` (Arrow take: carried values never
+    become Python objects), then the `payload_schema` columns, each an
+    Arrow array or a sequence. Carried names must not clash with them.
+    """
+    exprs = [F.col(c) if isinstance(c, str) else c for c in operands]
+    inp = df.select(*carry, *(e.alias(f"_operand{i}") for i, e in enumerate(exprs)))
+    payload = StructType.fromDDL(payload_schema)
+    schema = StructType([inp.schema[c] for c in carry] + payload.fields)
+    types = [to_arrow_type(f.dataType) for f in payload.fields]
+    n_carry = len(carry)
+
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        fn = batch_fn()
+        for batch in it:
+            index, cols = fn(*batch.columns[n_carry:])
+            arrays = [
+                c if isinstance(c, (pa.Array, pa.ChunkedArray))
+                else pa.array(c, type=t, from_pandas=True)
+                for c, t in zip(cols, types)
+            ]
+            yield from _result_batches(batch, n_carry, index, arrays, schema.names)
+
+    return inp.mapInArrow(batches, schema)
+
+
+def _result_batches(batch, n_carry, index, payload, names) -> list:
+    """The output record batches of one input batch: its first `n_carry`
+    columns taken at `index`, then the `payload` columns. A payload
+    column that pa.array chunked (past 2 GiB of strings) gives several
+    record batches instead of failing."""
+    take = pa.array(index, type=pa.int64())
+    arrays = [batch.column(i).take(take) for i in range(n_carry)]
+    return pa.Table.from_arrays(arrays + payload, names=names).to_batches()
+
+
 def kernel_map(
     df: DataFrame,
     subject: str,
@@ -163,8 +203,8 @@ def kernel_map(
     carry: Sequence[str] = (),
 ) -> DataFrame:
     """The kernel stage: run `ops` on every (subject, clipping) row of `df`
-    over Arrow batches (mapInArrow) and emit one row per (input row, op):
-    the `carry` columns, then KERNEL_RESULT_SCHEMA.
+    on `arrow_stage` and emit one row per (input row, op): the `carry`
+    columns, then KERNEL_RESULT_SCHEMA.
 
     `subject` names a GeoJSON column. `clipping` names a GeoJSON column
     or is four double columns (xmin, ymin, xmax, ymax) of a rectangle,
@@ -177,41 +217,48 @@ def kernel_map(
     `streaming.boolean.stream_boolean_pairs`.
 
     A NaN bbox (empty or limit_exceeded result) reaches Spark as NULL.
-    Carried names must not clash with the result columns.
     """
     ops = tuple(ops)
     is_rect = not isinstance(clipping, str)
-    operands = [subject] + (list(clipping) if is_rect else [clipping])
-    inp = df.select(
-        *carry,
-        *(
-            (F.col(c) if isinstance(c, str) else c).alias(f"_operand{i}")
-            for i, c in enumerate(operands)
-        ),
-    )
-    result = StructType.fromDDL(KERNEL_RESULT_SCHEMA)
-    schema = StructType([inp.schema[c] for c in carry] + result.fields)
-    n_carry = len(carry)
 
-    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # resolved inside the Python worker (after fork)
+    def batch_fn():
         run = resolve_batch_runner()
-        for batch in it:
-            operands = batch.columns[n_carry:]
-            payload = run(operands[0], operands[1:] if is_rect else operands[1], ops)
-            yield from _result_batches(batch, n_carry, payload, len(ops), schema.names)
 
-    return inp.mapInArrow(batches, schema)
+        def kernel(subject, *clipping):
+            payload = run(subject, list(clipping) if is_rect else clipping[0], ops)
+            return np.repeat(np.arange(len(subject)), len(ops)), payload
+
+        return kernel
+
+    operands = [subject] + (list(clipping) if is_rect else [clipping])
+    return arrow_stage(df, operands, carry, batch_fn, KERNEL_RESULT_SCHEMA)
 
 
-def _result_batches(batch, n_carry, payload, n_ops, names) -> list:
-    """The output record batches of one input batch: its first `n_carry`
-    columns, each row repeated `n_ops` times, then the `payload` columns.
-    A payload column that pa.array chunked (past 2 GiB of strings) gives
-    several record batches instead of failing."""
-    take = pa.array(np.repeat(np.arange(batch.num_rows), n_ops))
-    arrays = [batch.column(i).take(take) for i in range(n_carry)]
-    return pa.Table.from_arrays(arrays + payload, names=names).to_batches()
+def geometry_stage(df, geom_col, carry, row_fn, payload_schema: str) -> DataFrame:
+    """One row per input row on `arrow_stage`: the `carry` columns, then
+    `payload_schema`, whose last column is `status string` and the others
+    `row_fn(coords)` of the geometry, parsed once by parse_multipolygon.
+    One the validity rule rejects degrades its row: `row_fn([])` (zero
+    counts, the empty MultiPolygon) and 'invalid_input'. A valid one gets
+    'ok', a NULL one NULL in every payload column, as in `kernel_map`.
+    """
+
+    invalid = row_fn([]) + ("invalid_input",)
+
+    def row(gj):
+        if gj is None:
+            return (None,) * len(invalid)
+        try:
+            coords = parse_multipolygon(gj)
+        except ValueError:
+            return invalid
+        return row_fn(coords) + ("ok",)
+
+    def rows(geoms):
+        out = [row(gj) for gj in geoms.to_pylist()]
+        return np.arange(len(out)), list(zip(*out)) or [()] * len(invalid)
+
+    return arrow_stage(df, [geom_col], carry, lambda: rows, payload_schema)
 
 
 def apply_boolean_ops(pairs: DataFrame, ops: Sequence[str] = DEFAULT_OPS) -> DataFrame:

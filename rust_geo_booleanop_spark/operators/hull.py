@@ -3,7 +3,8 @@
 The footprint/coverage step of tiling analytics: a geometry's convex hull
 bounds its tile cover and gives the cheap "could these ever interact"
 test that precedes exact kernel work. `convex_hull_geometries` runs
-Andrew's monotone chain per geometry inside a mapInPandas stage.
+Andrew's monotone chain per geometry on the one Arrow stage
+(operators/boolean_join.py::geometry_stage).
 
 Semantics (the g18 oracle fixture pins them; the generator recomputes
 with an INDEPENDENT gift-wrapping / Jarvis-march implementation in
@@ -35,20 +36,28 @@ none (tiling-engine requirement, like g14/g17).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
-HULL_SCHEMA = (
-    "case_id long, role string, n_points int, n_hull_vertices int, "
-    "hull_json string"
-)
+from ..kernel.geojson import serialize_multipolygon
+from .boolean_join import geometry_stage
+
+# the payload after the carried case_id and role
+HULL_SCHEMA = "n_points int, n_hull_vertices int, hull_json string, status string"
 
 
 def _cross(ox, oy, ax, ay, bx, by):
     """Signed area of (o->a, o->b) — the shared g18 cross expression."""
     return (ax - ox) * (by - oy) - (ay - oy) * (bx - ox)
+
+
+def _chain(pts):
+    """One monotone half-hull over `pts`, popping on cross <= 0."""
+    out = []
+    for p in pts:
+        while len(out) >= 2 and _cross(*out[-2], *out[-1], *p) <= 0.0:
+            out.pop()
+        out.append(p)
+    return out
 
 
 def monotone_chain(points):
@@ -58,21 +67,7 @@ def monotone_chain(points):
     pts = sorted(set(points))
     if len(pts) < 3:
         return pts
-    lower = []
-    for p in pts:
-        while len(lower) >= 2 and _cross(
-            lower[-2][0], lower[-2][1], lower[-1][0], lower[-1][1], p[0], p[1]
-        ) <= 0.0:
-            lower.pop()
-        lower.append(p)
-    upper = []
-    for p in reversed(pts):
-        while len(upper) >= 2 and _cross(
-            upper[-2][0], upper[-2][1], upper[-1][0], upper[-1][1], p[0], p[1]
-        ) <= 0.0:
-            upper.pop()
-        upper.append(p)
-    return lower[:-1] + upper[:-1]
+    return _chain(pts)[:-1] + _chain(reversed(pts))[:-1]
 
 
 def multipolygon_hull(coords):
@@ -91,42 +86,16 @@ def multipolygon_hull(coords):
     return len(points), closed
 
 
-def convex_hull_geometries(
-    geoms: DataFrame, geom_col: str = "geom_json"
-) -> DataFrame:
+def _hull_row(coords):
+    n_points, ring = multipolygon_hull(coords)
+    hull_json = serialize_multipolygon([[ring]] if ring else [])
+    return n_points, max(len(ring) - 1, 0), hull_json
+
+
+def convex_hull_geometries(geoms: DataFrame, geom_col: str = "geom_json") -> DataFrame:
     """(case_id, role, geom_json) -> per-geometry convex hull stats + the
     hull serialized as a single-polygon MultiPolygon with the kernel's
-    byte-parity compact serializer."""
-    from rust_geo_booleanop_spark.kernel.geojson import (
-        parse_multipolygon,
-        serialize_multipolygon,
-    )
-
-    cols = ["case_id", "role", geom_col]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in (
-                    "case_id",
-                    "role",
-                    "n_points",
-                    "n_hull_vertices",
-                    "hull_json",
-                )
-            }
-            for case_id, role, gj in zip(
-                pdf["case_id"], pdf["role"], pdf[geom_col]
-            ):
-                n_points, ring = multipolygon_hull(parse_multipolygon(gj))
-                out["case_id"].append(int(case_id))
-                out["role"].append(role)
-                out["n_points"].append(n_points)
-                out["n_hull_vertices"].append(max(len(ring) - 1, 0))
-                out["hull_json"].append(
-                    serialize_multipolygon([[ring]] if ring else [])
-                )
-            yield pd.DataFrame(out)
-
-    return geoms.select(*cols).mapInPandas(batches, schema=HULL_SCHEMA)
+    byte-parity compact serializer, and a status (see `geometry_stage`:
+    a geometry the validity rule rejects gives an 'invalid_input' row
+    with zero counts and the empty MultiPolygon)."""
+    return geometry_stage(geoms, geom_col, ("case_id", "role"), _hull_row, HULL_SCHEMA)

@@ -37,17 +37,6 @@ MULTIPOLYGON_SCHEMA = (
     "struct<type:string,coordinates:array<array<array<array<double>>>>>"
 )
 
-MEASURE_COLUMNS = (
-    "n_polys",
-    "n_rings",
-    "n_vertices",
-    "area",
-    "xmin",
-    "ymin",
-    "xmax",
-    "ymax",
-)
-
 
 def _ring_shoelace(ring):
     """Left-fold sum of x_i*y_{i+1} - x_{i+1}*y_i over a closed ring.
@@ -236,9 +225,6 @@ def _structural_fold(c, ring_fn, norm):
             ),
         ).otherwise(F.lit(0.0)),
     )
-
-
-SHAPE_COLUMNS = ("region_area", "centroid_x", "centroid_y", "perimeter")
 
 
 def shape_stats(geoms: DataFrame, geom_col: str = "geom_json") -> DataFrame:

@@ -2,8 +2,9 @@
 
 The vertex-budget step of map tiling: low zoom levels don't need a
 24-vertex circle ring. `simplify_geometries` runs iterative (explicit
-stack) Douglas-Peucker per ring inside a mapInPandas stage — vectorized
-NumPy distance rows per split, no per-row Python in the driver path.
+stack) Douglas-Peucker per ring on the one Arrow stage
+(operators/boolean_join.py::geometry_stage) — vectorized NumPy distance
+rows per split, no per-row Python in the driver path.
 
 Semantics (the g17 oracle fixture pins them; the generator recomputes
 with an INDEPENDENT recursive scalar implementation in
@@ -31,19 +32,19 @@ cite the contour traversal shape of `lib/src/boolean/connect_edges.rs`.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..kernel.geojson import serialize_multipolygon
+from .boolean_join import geometry_stage
 
 # the g17 query/fixture tolerance (corpus shapes span ~100-150 units;
 # 2.0 thins the 24-vertex circle rings, leaves rectangle corners intact)
 DEFAULT_SIMPLIFY_TOL = 2.0
 
+# the payload after the carried case_id and role
 SIMPLIFY_SCHEMA = (
-    "case_id long, role string, n_vertices_in int, n_vertices_out int, "
-    "simplified_json string"
+    "n_vertices_in int, n_vertices_out int, simplified_json string, status string"
 )
 
 
@@ -101,40 +102,22 @@ def simplify_multipolygon(coords, tol: float):
     return out_polys
 
 
+def _n_vertices(coords) -> int:
+    return sum(len(r) for p in coords for r in p)
+
+
 def simplify_geometries(
     geoms: DataFrame, tol: float, geom_col: str = "geom_json"
 ) -> DataFrame:
     """(case_id, role, geom_json) -> per-geometry simplification stats +
     the simplified geometry serialized with the kernel's byte-parity
-    compact serializer (so an md5 over it is engine-independent)."""
-    from rust_geo_booleanop_spark.kernel.geojson import (
-        parse_multipolygon,
-        serialize_multipolygon,
-    )
+    compact serializer (so an md5 over it is engine-independent), and a
+    status (see `geometry_stage`: a geometry the validity rule rejects
+    gives an 'invalid_input' row with zero counts and the empty
+    MultiPolygon)."""
 
-    cols = ["case_id", "role", geom_col]
+    def simplify_row(coords):
+        out = simplify_multipolygon(coords, tol)
+        return _n_vertices(coords), _n_vertices(out), serialize_multipolygon(out)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in
-                   ("case_id", "role", "n_vertices_in", "n_vertices_out",
-                    "simplified_json")}
-            for case_id, role, gj in zip(
-                pdf["case_id"], pdf["role"], pdf[geom_col]
-            ):
-                coords = parse_multipolygon(gj)
-                simplified = simplify_multipolygon(coords, tol)
-                out["case_id"].append(int(case_id))
-                out["role"].append(role)
-                out["n_vertices_in"].append(
-                    sum(len(r) for p in coords for r in p)
-                )
-                out["n_vertices_out"].append(
-                    sum(len(r) for p in simplified for r in p)
-                )
-                out["simplified_json"].append(
-                    serialize_multipolygon(simplified)
-                )
-            yield pd.DataFrame(out)
-
-    return geoms.select(*cols).mapInPandas(batches, schema=SIMPLIFY_SCHEMA)
+    return geometry_stage(geoms, geom_col, ("case_id", "role"), simplify_row, SIMPLIFY_SCHEMA)

@@ -134,6 +134,10 @@ def point_in_polygon_join(
     `carry_cols` travel through the join so callers (e.g. zonal stats)
     don't need a second join back to the points table to recover payload
     columns.
+
+    A zone geometry the validity rule of kernel/geojson.py rejects (or a
+    NULL one) matches no point, as a zone without a cover takes no part;
+    it never fails the task.
     """
     pts = with_point_cells(points, level)
     polys = with_cover_cells(polygons, level).select(
@@ -164,7 +168,7 @@ def point_in_polygon_join(
         # points at once (one NumPy ray-cast per (geometry, batch) instead
         # of a Python loop per point — the per-row interpreter cost was the
         # dominant spatial-join term at scale).
-        geom_cache: dict[str, MultiPolygonEdges] = {}
+        geom_cache: dict[str, MultiPolygonEdges | None] = {}
         for pdf in batches:
             if len(pdf) == 0:
                 yield pdf[out_cols]
@@ -173,11 +177,14 @@ def point_in_polygon_join(
             ys = pdf["y"].to_numpy(np.float64)
             keep = np.zeros(len(pdf), dtype=bool)
             for gj, idx in pdf.groupby("geom_json", sort=False).indices.items():
-                edges = geom_cache.get(gj)
-                if edges is None:
-                    edges = MultiPolygonEdges(parse_multipolygon(gj))
-                    geom_cache[gj] = edges
-                keep[idx] = points_in_multipolygon_batch(xs[idx], ys[idx], edges=edges)
+                if gj not in geom_cache:
+                    try:
+                        geom_cache[gj] = MultiPolygonEdges(parse_multipolygon(gj))
+                    except ValueError:
+                        geom_cache[gj] = None  # rejected zone: matches nothing
+                edges = geom_cache[gj]
+                if edges is not None:
+                    keep[idx] = points_in_multipolygon_batch(xs[idx], ys[idx], edges=edges)
             yield pdf.iloc[np.flatnonzero(keep)][out_cols]
 
     return cand.mapInPandas(pip_batches, schema=schema)

@@ -38,14 +38,14 @@ def stream_documents(
 
 def stream_extract_geometries(stream_docs: DataFrame) -> DataFrame:
     """Same synthesis+extraction as batch, applied to a streaming relation
-    (stateless mapInPandas works identically on streams)."""
-    from ..operators.extract import _extract_batches, GEOMETRIES_SCHEMA
+    (both stages are stateless maps, which work identically on streams)."""
+    from ..operators.extract import extract_geometries
     from ..sources.documents import _build_batches, DOCUMENTS_SCHEMA
 
     with_html = stream_docs.select("doc_id", "text", "lang").mapInPandas(
         _build_batches, schema=DOCUMENTS_SCHEMA
     )
-    return with_html.mapInPandas(_extract_batches, schema=GEOMETRIES_SCHEMA)
+    return extract_geometries(with_html)
 
 
 def run_extraction_stream(

@@ -78,11 +78,11 @@ def main():
         ("t14_chunking", "training-window chunking: pure per-row codegen (split -> start sequence -> posexplode -> slice/join) - ZERO shuffles"),
         ("t15_decontaminate", "eval-set decontamination: codegen 4-gram explode, BROADCAST join on the gram, one map-side-partial agg"),
         ("t16_lang_balance", "mixture balancing: one exchange on the stratum + broadcast min-count target; literal-target path adds WindowGroupLimit map-side top-K"),
-        ("g17_simplify", "Douglas-Peucker simplification: single MapInPandas over the geometry column - no shuffle"),
+        ("g17_simplify", "Douglas-Peucker simplification: single MapInArrow over the geometry column (the one Arrow stage) - no shuffle"),
         ("t17_line_dedup", "within-doc line dedup: order-preserving aggregate fold in codegen - ZERO shuffles, chunking parallelism = scan parallelism"),
         ("h03_bigram_assoc", "bigram collocations: arrays_zip slice pairs (no per-element re-eval), two map-side-partial hash aggs, TakeOrderedAndProject top-k"),
         ("d09_substring_dup", "exact substring dup stats: md5 window keys, ONE hash-agg + shuffled semi join back (AQE skew-splits hot boilerplate windows), per-doc agg - no suffix array, no all-pairs"),
-        ("g18_convex_hull", "convex hull: single MapInPandas monotone-chain stage over the geometry column - no shuffle"),
+        ("g18_convex_hull", "convex hull: single MapInArrow monotone-chain stage over the geometry column (the one Arrow stage) - no shuffle"),
         ("h04_vocab_stats", "vocabulary stats: token explode -> (lang, token) map-side-partial hash agg -> tiny per-lang rollup - never a raw-token distinct"),
         ("d10_edit_pairs", "edit-verified near-dup pairs: df-bounded window-key blocking evaluated ONCE (in-row bounded pair expansion, no self-join), DISTINCT id pairs BEFORE text re-fetch, length-gap lower-bound prune, thresholded JVM levenshtein - O(k*len) verify only on candidates"),
         ("h06_zipf_histogram", "Zipf frequency histogram: token explode -> map-side-partial token hash agg -> exact base-2 digit bucket (conv, no floating log) -> ~64-row rollup"),
@@ -134,8 +134,9 @@ def main():
         "for: `PushedFilters`/`ReadSchema` at FileScans (pushdown + pruning),\n"
         "`BroadcastHashJoin` on dim joins, `WholeStageCodegen` spans around\n"
         "JVM expressions, and Python appearing only at the geometry/text\n"
-        "stages: `ArrowEvalPython`/`MapInPandas` for extraction and text work,\n"
-        "`MapInArrow` for every boolean-kernel stage.\n" % sf_dir
+        "stages: `MapInArrow` (the one Arrow stage) for extraction, hull,\n"
+        "simplify and every boolean-kernel stage, `ArrowEvalPython`/\n"
+        "`MapInPandas` for page synthesis and text work.\n" % sf_dir
     )
     for name, why in picks:
         df = qs[name](spark, sf_dir)

@@ -1,5 +1,5 @@
 """Convex hull (operators/hull.py) — monotone chain semantics + the
-Spark mapInPandas stage. The g18 fixture twin (Jarvis march) is
+Spark Arrow stage. The g18 fixture twin (Jarvis march) is
 cross-checked in tests/test_oracle_fixtures.py; these tests pin the
 semantics both implementations must share."""
 
@@ -120,4 +120,4 @@ class TestConvexHullSpark:
             ln for ln in plan.splitlines() if "Exchange" in ln
         ]
         assert all("RoundRobinPartitioning" in ln for ln in exchanges), plan
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan

@@ -10,6 +10,7 @@ several output batches.
 
 import json
 
+import numpy as np
 import pyarrow as pa
 
 from rust_geo_booleanop_spark.functions.cells import cell_size
@@ -169,7 +170,8 @@ def test_result_batches_split_a_chunked_payload():
         pa.chunked_array([["a", "b", "c", "d"], ["e", "f"]]),
         pa.array(range(6), pa.int32()),
     ]
-    out = _result_batches(batch, 1, payload, len(ops), ["case_id", "json", "n"])
+    index = np.repeat(np.arange(batch.num_rows), len(ops))
+    out = _result_batches(batch, 1, index, payload, ["case_id", "json", "n"])
     assert len(out) == 2
     assert pa.Table.from_batches(out).to_pylist() == [
         {"case_id": c, "json": j, "n": n}

@@ -233,8 +233,8 @@ class TestCompactGeojsonWriter:
 
 def test_flagship_plan_scans_documents_once(spark):
     """The round-3 single-pass pair join: the full flagship plan must hold
-    exactly ONE parquet scan of the documents table and ONE extraction +
-    ONE synthesis MapInPandas + ONE kernel MapInArrow — the pre-round-3
+    exactly ONE parquet scan of the documents table, ONE synthesis
+    MapInPandas and ONE extraction + ONE kernel MapInArrow — the pre-round-3
     self-join shape planned the scan and extraction twice, doubling the
     most expensive scan+parse stage at 100 TB."""
     from rust_geo_booleanop_spark.operators import (
@@ -248,8 +248,8 @@ def test_flagship_plan_scans_documents_once(spark):
     tiled = assign_tiles(boolean_pipeline(extract_geometries(docs)))
     plan = tiled._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
-    assert plan.count("MapInPandas") == 2  # synthesis, extraction
-    assert plan.count("MapInArrow") == 1  # kernel
+    assert plan.count("MapInPandas") == 1  # synthesis
+    assert plan.count("MapInArrow") == 2  # extraction, kernel
 
 
 class TestTileAreaWeights:

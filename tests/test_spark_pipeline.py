@@ -1,6 +1,6 @@
 """Spark-path end-to-end tests.
 
-1. The reference fixture suite THROUGH the Spark mapInPandas kernel path:
+1. The reference fixture suite THROUGH the Spark kernel stage (mapInArrow):
    JVM -> Arrow -> Python kernel -> Arrow -> JVM must be fixture-exact
    (SURVEY.md §5 test plan, layer b).
 2. The synthetic documents pipeline: extraction keeps `text`
@@ -269,3 +269,55 @@ def test_dirty_operands_degrade_rows_not_jobs(spark):
         assert (got["clean"].status, got["clean"].n_polys) == ("ok", 1), name
         assert (got["dirty"].status, got["dirty"].geom_json, got["dirty"].n_polys) == (
             "invalid_input", "", 0), name
+
+
+def test_dirty_geometries_degrade_hull_and_simplify_rows(spark):
+    """A Point, a JSON null, truncated JSON and a NaN token beside a valid
+    square: convex_hull_geometries and simplify_geometries give each
+    rejected geometry one invalid_input row (zero counts, the empty
+    MultiPolygon), a SQL NULL geometry NULL payload, and the square the
+    local twin's values; no job fails."""
+    from rust_geo_booleanop_spark.operators import (
+        convex_hull_geometries,
+        simplify_geometries,
+    )
+    from rust_geo_booleanop_spark.operators.hull import multipolygon_hull
+    from rust_geo_booleanop_spark.operators.simplify import (
+        DEFAULT_SIMPLIFY_TOL,
+        simplify_multipolygon,
+    )
+
+    square = '{"type":"Polygon","coordinates":[[[0,0],[2,0],[2,2],[0,2],[0,0]]]}'
+    geoms = spark.createDataFrame(
+        [(1, "square", square),
+         (2, "point", '{"type":"Point","coordinates":[1,1]}'),
+         (3, "null", "null"),
+         (4, "truncated", '{"type":"Polygon","coordinates":[[[0,0],[2,0],[2,'),
+         (5, "nan", '{"type":"Polygon","coordinates":[[[NaN,0],[2,0],[2,2],[NaN,0]]]}'),
+         (6, "sql-null", None)],
+        "case_id long, role string, geom_json string",
+    )
+    coords = parse_multipolygon(square)
+    n_points, ring = multipolygon_hull(coords)
+    simplified = simplify_multipolygon(coords, DEFAULT_SIMPLIFY_TOL)
+    empty = serialize_multipolygon([])
+    invalid = (0, 0, empty, "invalid_input")
+    want = {
+        "hull": {
+            1: (n_points, len(ring) - 1, serialize_multipolygon([[ring]]), "ok"),
+            6: (None,) * 4,
+        },
+        "simplify": {
+            1: (sum(len(r) for p in coords for r in p),
+                sum(len(r) for p in simplified for r in p),
+                serialize_multipolygon(simplified), "ok"),
+            6: (None,) * 4,
+        },
+    }
+    outs = {
+        "hull": convex_hull_geometries(geoms),
+        "simplify": simplify_geometries(geoms, tol=DEFAULT_SIMPLIFY_TOL),
+    }
+    for name, out in outs.items():
+        got = {r[0]: tuple(r[2:]) for r in out.collect()}
+        assert got == {i: want[name].get(i, invalid) for i in range(1, 7)}, name

@@ -203,6 +203,23 @@ class TestPipJoin:
         got = {r.point_id for r in point_in_polygon_join(points, zones).collect()}
         assert got == {1, 2}  # corner + edge inside, outside point excluded
 
+    def test_rejected_zone_matches_nothing(self, spark):
+        """A zone geometry the validity rule rejects beside a valid one
+        with the same bbox: the rejected zone matches no point and the
+        job does not fail."""
+        points = spark.createDataFrame(
+            [(1, 1.0, 1.0, 0.0), (2, 5.0, 5.0, 0.0)],
+            "point_id long, x double, y double, value double",
+        )
+        zones = spark.createDataFrame(
+            [("point", '{"type":"Point","coordinates":[1,1]}', 0.0, 0.0, 10.0, 10.0),
+             ("null", None, 0.0, 0.0, 10.0, 10.0),
+             ("z", _rect_geom(0, 0, 10, 10), 0.0, 0.0, 10.0, 10.0)],
+            "zone_key string, geom_json string, xmin double, ymin double, xmax double, ymax double",
+        )
+        got = {(r.point_id, r.zone_key) for r in point_in_polygon_join(points, zones).collect()}
+        assert got == {(1, "z"), (2, "z")}
+
     def test_batch_pip_bit_identical_to_scalar(self):
         """The vectorized batch PIP must agree with the scalar predicate on
         every point — interior, exterior, corners, edge midpoints, points
